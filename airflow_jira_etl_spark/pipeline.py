@@ -56,6 +56,19 @@ _FETCHER_DEFAULTS = {
 }
 
 
+# Entity tables start with ONE bucket. The sink sizes a bucket at about
+# one 128 MB parquet file (sinks/parquet_upsert.py), and at the
+# reference's full page counts these tables are far below that. Measured
+# on a seeded emulator of the three endpoints: ~1.7 MB of issues (200
+# pages x 100, ~83 B/row), ~0.3 MB of worklogs (20 pages x 1000 records
+# over ~9k distinct keys, ~35 B/row) and ~41 KB of users (2000, ~21
+# B/row). Every page's keys already spread over every bucket, so more
+# buckets only multiply the files and tasks per apply without rewriting
+# fewer bytes. The manifest's n_buckets stays authoritative: an existing
+# table keeps its layout until ``compact(n_buckets=...)`` re-buckets it.
+ENTITY_N_BUCKETS = 1
+
+
 @dataclass
 class Task:
     name: str
@@ -147,13 +160,16 @@ def worklog_pipeline(
     @p.task("ensure_table")
     def ensure_table(ctx: dict) -> None:
         ctx["table"] = ParquetUpsertTable(
-            spark, os.path.join(table_root, "worklogs"), key=unique_column
+            spark,
+            os.path.join(table_root, "worklogs"),
+            key=unique_column,
+            n_buckets=ENTITY_N_BUCKETS,
         )
 
     @p.task("ingest_pages", upstream=["ensure_table"])
     def ingest_pages(ctx: dict) -> None:
         # LAZY: the cursor generator flows through the context and each
-        # page becomes a (LocalRelation) DataFrame only when
+        # page becomes an (Arrow LocalRelation) DataFrame only when
         # merge_upsert reaches it — peak driver memory stays O(page),
         # matching the reference's fetch-then-persist loop
         # (worklog_processor.py:80-106). The previous list
@@ -190,7 +206,10 @@ def issues_pipeline(
     @p.task("ensure_table")
     def ensure_table(ctx: dict) -> None:
         ctx["table"] = ParquetUpsertTable(
-            spark, os.path.join(table_root, "issues"), key=unique_column
+            spark,
+            os.path.join(table_root, "issues"),
+            key=unique_column,
+            n_buckets=ENTITY_N_BUCKETS,
         )
 
     @p.task("ingest_fanout", upstream=["ensure_table"])
@@ -218,7 +237,10 @@ def users_pipeline(
     @p.task("ensure_table")
     def ensure_table(ctx: dict) -> None:
         ctx["table"] = ParquetUpsertTable(
-            spark, os.path.join(table_root, "users"), key=unique_column
+            spark,
+            os.path.join(table_root, "users"),
+            key=unique_column,
+            n_buckets=ENTITY_N_BUCKETS,
         )
 
     @p.task("ingest_page", upstream=["ensure_table"])

@@ -20,6 +20,10 @@ from __future__ import annotations
 
 import os
 import shutil
+import stat
+
+# world-writable tmpfs the default scratch root lives on
+_SHM = "/dev/shm"
 
 _REPO_SCRATCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
@@ -49,8 +53,7 @@ def _default_scratch() -> str:
     env = os.environ.get("SPARK_GRAFT_SCRATCH")
     if env:
         return os.path.abspath(env)
-    shm = "/dev/shm"
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
+    if os.path.isdir(_SHM) and os.access(_SHM, os.W_OK):
         import hashlib
 
         # /dev/shm is world-writable shared tmp, so a predictable name
@@ -58,22 +61,37 @@ def _default_scratch() -> str:
         # key the dir by UID as well, create it 0o700 up front, and
         # refuse anything that is a symlink or owned by someone else —
         # falling back to the repo-local root rather than reading or
-        # rmtree'ing through another user's plant.
+        # rmtree'ing through another user's plant. A window remains
+        # between makedirs and lstat: an entry planted in it is judged
+        # by the same lstat checks, and once our own directory exists
+        # the sticky bit on /dev/shm stops another user from swapping it.
         tag = hashlib.sha256(_REPO_SCRATCH.encode()).hexdigest()[:8]
+        _remove_own_dir(os.path.join(_SHM, f"spark_graft_scratch_{tag}"))
         root = os.path.join(
-            shm, f"spark_graft_scratch_{os.getuid()}_{tag}"
+            _SHM, f"spark_graft_scratch_{os.getuid()}_{tag}"
         )
         try:
             os.makedirs(root, mode=0o700, exist_ok=True)
             st = os.lstat(root)
         except OSError:
             return _REPO_SCRATCH
-        import stat as _stat
-
-        if not _stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid():
+        if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid():
             return _REPO_SCRATCH
         return root
     return _REPO_SCRATCH
+
+
+def _remove_own_dir(path: str) -> None:
+    """Delete ``path`` if it is a real directory owned by this uid.
+    Used for this repo's old scratch root name (without the uid), which
+    nothing reads any more but which holds tmpfs RAM until removed. A
+    symlink or another user's entry under that name is left alone."""
+    try:
+        st = os.lstat(path)
+    except OSError:
+        return
+    if stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid():
+        shutil.rmtree(path, ignore_errors=True)
 
 
 SCRATCH = _default_scratch()

@@ -11,10 +11,11 @@ Reference behavior being reproduced (SURVEY.md §2A):
   everything downstream (parse → flatten → sink).
 * A3 offset-paginated scan: page 0 discovers ``total``
   (``issue_processor.py:141-142``), then every offset is independent —
-  the scan FANS OUT across executors via ``spark.range(n_pages)`` +
-  ``mapInPandas``, the key scan-parallelism win over the reference's
-  serial loop. (The reference's ``<=`` off-by-one that refetches a
-  trailing empty page, :129, is deliberately not reproduced.)
+  the scan FANS OUT across executors via ``spark.range`` over the
+  remaining pages + ``mapInPandas``, the key scan-parallelism win over
+  the reference's serial loop. (The reference's ``<=`` off-by-one that
+  refetches a trailing empty page, :129, is deliberately not
+  reproduced.)
 * A4 single-page scan (``users_processor.py:53-95``) = offset scan
   with one page.
 * A13 retry: 5 attempts, exponential backoff 4-10 s
@@ -26,7 +27,11 @@ Reference behavior being reproduced (SURVEY.md §2A):
 Pages are exchanged as RAW JSON STRINGS: executors parse them with
 ``from_json`` against an explicit schema derived from the MAPPING
 (``mapping_to_schema``) and flatten with the compiled MAPPING plan —
-all JVM-side after the fetch.
+all JVM-side after the fetch. Records the driver already holds (a
+cursor page, the single page, offset page 0) enter Spark as an Arrow
+``LocalRelation`` (``_raw_frame``), not a Python-backed RDD, so no
+action over a batch starts a Python worker; the only Python on the
+executors is the offset fan-out's fetch kernel.
 """
 
 from __future__ import annotations
@@ -36,6 +41,7 @@ import os
 import time
 from collections.abc import Callable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -169,8 +175,14 @@ def offset_scan_parallel(
 ) -> DataFrame:
     """A3 fan-out: fetch page 0 on the driver to learn ``total`` and
     the server's ``maxResults`` stride, then fetch the remaining
-    offsets IN PARALLEL on executors (one task per page via
-    ``spark.range``), returning a DataFrame of raw JSON record strings.
+    offsets IN PARALLEL on executors, returning a DataFrame of raw
+    JSON record strings.
+
+    Page 0's records become an Arrow ``LocalRelation``. The remaining
+    offsets are ``spark.range`` ids times the stride, split into
+    ``min(page_parallelism, pages)`` partitions, so each task fetches
+    one page (or a contiguous run of them past ``page_parallelism``)
+    with no shuffle ahead of the fetch kernel.
 
     At 100 TB-scale ingest the fetch cost dominates; this turns an
     O(pages) serial wall-clock into O(pages / executors)."""
@@ -185,18 +197,16 @@ def offset_scan_parallel(
     first = with_retry(lambda: fetcher(url, params))
     total, stride = page_plan(first)  # type: ignore[arg-type]
     total = total or 0
-    first_records = [json.dumps(r) for r in first.get(records_key, [])]  # type: ignore[union-attr]
-
-    offsets = list(range(stride, total, stride))  # page 0 already fetched
-    first_df = spark.createDataFrame(
-        [(r,) for r in first_records], T.StructType([T.StructField("raw", T.StringType())])
+    first_df = _raw_frame(
+        spark, [json.dumps(r) for r in first.get(records_key, [])]  # type: ignore[union-attr]
     )
-    if not offsets:
+    n_rest = len(range(stride, total, stride))  # page 0 already fetched
+    if not n_rest:
         return first_df
 
-    offsets_df = spark.createDataFrame(
-        [(o,) for o in offsets], T.StructType([T.StructField("start_at", T.LongType())])
-    ).repartition(min(page_parallelism, len(offsets)))
+    offsets_df = spark.range(
+        1, n_rest + 1, numPartitions=min(page_parallelism, n_rest)
+    ).select((F.col("id") * stride).alias("start_at"))
 
     base_params = dict(params or {})
 
@@ -246,15 +256,23 @@ def raw_json_to_flat(
     return parsed.select(*compile_mapping(mapping, schema))
 
 
+def _raw_frame(spark: SparkSession, raws: list[str]) -> DataFrame:
+    """Driver-held JSON strings as a one-column ``raw`` frame. Built
+    from a ``pyarrow`` table, so Spark plans it as a JVM
+    ``LocalRelation`` whether or not the Arrow conf is on; a
+    ``createDataFrame(list)`` frame is a Python-backed RDD instead, and
+    every action over it starts Python worker tasks to re-pickle the
+    rows."""
+    return spark.createDataFrame(pa.table({"raw": pa.array(raws, pa.string())}))
+
+
 def records_to_flat_df(
     spark: SparkSession,
     records: list[dict],
     mapping: Mapping,
     leaf_types: dict[str, T.DataType] | None = None,
 ) -> DataFrame:
-    """Driver-collected records (a cursor page) → flat DataFrame."""
-    raw = spark.createDataFrame(
-        [(json.dumps(r),) for r in records],
-        T.StructType([T.StructField("raw", T.StringType())]),
-    )
+    """Driver-collected records (a cursor page, the single users page)
+    → flat DataFrame over an Arrow ``LocalRelation``."""
+    raw = _raw_frame(spark, [json.dumps(r) for r in records])
     return raw_json_to_flat(raw, mapping, leaf_types)

@@ -64,9 +64,9 @@ def main() -> None:
         try:
             registry.QUERIES[name](spark, tiny).count()
         except Exception as exc:
-            # flagged in the final CSV too (ADVICE r15): a query whose
-            # warmup failed absorbs codegen warmup into its first timed
-            # run, skewing min-of-N silently otherwise
+            # flagged in the final CSV's warmup_ok column too: a query
+            # whose warmup failed absorbs codegen warmup into its first
+            # timed run, skewing min-of-N silently otherwise
             warmup_failed.add(name)
             print(f"# warmup {name} failed: {exc}", file=sys.stderr)
     spark.catalog.clearCache()
@@ -105,11 +105,21 @@ def main() -> None:
         except Exception:
             pass
 
-    print("name,min,median,all")
+    print("\n".join(csv_lines(results, warmup_failed)))
+
+
+def csv_lines(results: dict[str, list[float]], warmup_failed: set[str]) -> list[str]:
+    """The result CSV: a header and one row per query, every row with
+    the same five fields. ``warmup_ok`` is false for a query whose
+    warmup failed, which puts codegen warmup into its first timed run."""
+    lines = ["name,min,median,all,warmup_ok"]
     for name, ts in results.items():
         s = sorted(ts)
-        flag = ",WARMUP_FAILED" if name in warmup_failed else ""
-        print(f"{name},{min(ts):.3f},{s[len(s)//2]:.3f},{'|'.join(f'{t:.3f}' for t in ts)}{flag}")
+        ok = "false" if name in warmup_failed else "true"
+        lines.append(
+            f"{name},{min(ts):.3f},{s[len(s)//2]:.3f},{'|'.join(f'{t:.3f}' for t in ts)},{ok}"
+        )
+    return lines
 
 
 if __name__ == "__main__":

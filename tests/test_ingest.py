@@ -39,17 +39,38 @@ def make_cursor_fetcher(n_pages: int = 3, page_size: int = 4):
 
 
 def make_offset_fetcher(total: int = 23, stride: int = 5):
-    """Issues shape: {"startAt": N, "maxResults": M, "total": T, "issues": [...]}."""
+    """Issues shape: {"startAt": N, "maxResults": M, "total": T, "issues": [...]}.
+    Each record carries the ``startAt`` it was served under, non-ASCII
+    text, and (every third record) a JSON null leaf."""
 
     def fetch(url: str, params=None):
         start = int((params or {}).get("startAt", 0))
         records = [
-            {"id": str(i), "self": f"issue-{i}"}
+            {
+                "id": str(i),
+                "self": None if i % 3 == 1 else f"issue-{i} — naïve ✓ 日本",
+                "page": start,
+            }
             for i in range(start, min(start + stride, total))
         ]
         return {"startAt": start, "maxResults": stride, "total": total, "issues": records}
 
     return fetch
+
+
+def _analyzed_leaves(df) -> list[str]:
+    """Class names of the analyzed plan's leaf nodes."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return sorted(leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size()))
+
+
+def _physical_nodes(node) -> list:
+    """``node`` and every node below it, pre-order."""
+    out = [node]
+    children = node.children()
+    for i in range(children.size()):
+        out += _physical_nodes(children.apply(i))
+    return out
 
 
 def test_cursor_scan_follows_chain_in_order():
@@ -86,19 +107,109 @@ def test_retry_policy_recovers_and_gives_up():
         with_retry(always_fails, sleep=lambda s: None)
 
 
+def _scan_like_serial_walk(spark, total: int, stride: int):
+    """Fan-out scan of an emulated offset endpoint, checked row for row
+    against a serial walk that fetches each offset once."""
+    fetch = make_offset_fetcher(total=total, stride=stride)
+    df = offset_scan_parallel(spark, fetch, "https://api/search", records_key="issues")
+    serial = [
+        json.dumps(r)
+        for start in range(0, max(total, 1), stride)
+        for r in fetch("https://api/search", {"startAt": start})["issues"]
+    ]
+    got = [r.raw for r in df.collect()]
+    assert sorted(got) == sorted(serial)
+    assert len(got) == total
+    assert {json.loads(raw)["page"] for raw in got} == set(range(0, total, stride))
+    return df
+
+
 def test_offset_fanout_equals_serial_union(spark):
     """A3 parallel fan-out must produce exactly the rows a serial walk
-    produces (order-insensitive)."""
-    fetch = make_offset_fetcher(total=23, stride=5)
-    df = offset_scan_parallel(spark, fetch, "https://api/search", records_key="issues")
-    got = sorted(json.loads(r.raw)["id"] for r in df.collect())
-    assert got == sorted(str(i) for i in range(23))
+    produces (order-insensitive). Page 0 is an Arrow LocalRelation, not
+    a Python-backed LogicalRDD, and the offsets feeding the fetch
+    kernel are a Range split one slice per remaining page, with no
+    shuffle between it and MapInPandas."""
+    for total, stride in [(23, 5), (250, 100)]:  # 250/100: offsets 100, 200
+        df = _scan_like_serial_walk(spark, total, stride)
+        assert _analyzed_leaves(df) == ["LocalRelation", "Range"]
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.inputPlan()  # the plan before any stage ran
+        kernels = [
+            n for n in _physical_nodes(plan) if n.getClass().getSimpleName() == "MapInPandasExec"
+        ]
+        assert len(kernels) == 1
+        below = _physical_nodes(kernels[0])[1:]
+        names = [n.getClass().getSimpleName() for n in below]
+        assert not [c for c in names if "Exchange" in c], names
+        ranges = [n for n in below if n.getClass().getSimpleName() == "RangeExec"]
+        assert [r.numSlices() for r in ranges] == [(total - 1) // stride]
 
 
 def test_offset_fanout_single_page(spark):
-    fetch = make_offset_fetcher(total=3, stride=5)
-    df = offset_scan_parallel(spark, fetch, "https://api/search", records_key="issues")
-    assert df.count() == 3
+    """total <= stride: page 0 alone, as a LocalRelation — no fan-out."""
+    for total, stride in [(3, 5), (100, 100), (0, 5)]:
+        df = _scan_like_serial_walk(spark, total, stride)
+        assert _analyzed_leaves(df) == ["LocalRelation"]
+
+
+_CURSOR_PAGES = {
+    "ascii": [
+        {"tempoWorklogId": "1", "self": "w1", "issue": {"id": "I1", "self": "u"},
+         "timeSpentSeconds": 60, "author": {"accountId": "A1", "self": "u"}},
+        {"tempoWorklogId": "2", "self": "w2", "description": "fixed bug"},
+    ],
+    "empty": [],
+    "non_ascii": [
+        {"tempoWorklogId": "3", "self": "w3",
+         "description": "Überstunden — naïve ✓ 日本語 🚀"},
+        {"tempoWorklogId": "4", "self": "w4", "author": {"accountId": "Zoë"}},
+    ],
+    "null_leaf": [
+        {"tempoWorklogId": "5", "self": None, "description": None,
+         "issue": {"id": None, "self": "u"}, "timeSpentSeconds": None},
+        {"tempoWorklogId": "6", "self": "w6", "issue": None},
+    ],
+}
+
+
+@pytest.mark.parametrize("page", sorted(_CURSOR_PAGES))
+def test_records_to_flat_df_is_local_relation_with_same_rows(spark, page):
+    """A driver-held page becomes an Arrow LocalRelation and flattens
+    to exactly the rows of the Python-RDD frame it replaced."""
+    from airflow_jira_etl_spark.session import scoped_conf
+    from airflow_jira_etl_spark.sources.paged_rest import raw_json_to_flat
+
+    records = _CURSOR_PAGES[page]
+    flat = records_to_flat_df(spark, records, WORKLOG_MAPPING)
+    assert _analyzed_leaves(flat) == ["LocalRelation"]
+    with scoped_conf(spark, "spark.sql.execution.arrow.pyspark.enabled", "false"):
+        no_arrow_conf = records_to_flat_df(spark, records, WORKLOG_MAPPING)
+        assert _analyzed_leaves(no_arrow_conf) == ["LocalRelation"]
+
+    rdd_raw = spark.createDataFrame([(json.dumps(r),) for r in records], "raw string")
+    assert _analyzed_leaves(rdd_raw) == ["LogicalRDD"]
+    want = raw_json_to_flat(rdd_raw, WORKLOG_MAPPING)
+    assert flat.schema == want.schema
+    assert sorted(map(tuple, flat.collect()), key=repr) == sorted(
+        map(tuple, want.collect()), key=repr
+    )
+    assert flat.count() == len(records)
+    if page == "empty":  # still every MAPPING leaf, in MAPPING order
+        assert flat.columns == [
+            "url", "tempo_worklog_id", "issue_id", "issue_url",
+            "time_spent_seconds", "billable_seconds", "start_date", "start_time",
+            "description", "created_at", "updated_at", "author_id", "author_url",
+        ]
+    rows = {r.tempo_worklog_id: r for r in flat.collect()}
+    if page == "non_ascii":
+        assert rows["3"].description == "Überstunden — naïve ✓ 日本語 🚀"
+        assert rows["4"].author_id == "Zoë"
+    if page == "null_leaf":
+        assert rows["5"].url is None and rows["5"].description is None
+        assert rows["5"].issue_id is None and rows["5"].issue_url == "u"
+        assert rows["6"].issue_id is None
 
 
 def test_ingest_replay_is_idempotent(spark, tmp_path):

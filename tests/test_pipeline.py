@@ -86,17 +86,18 @@ def test_issues_pipeline_offset_fanout(spark, tmp_path):
     assert "issue_id" in table.columns and "issue_key" in table.columns
 
 
+def _users_fetcher(url, params=None):
+    return [
+        {"self": "u1", "accountId": "a1", "displayName": "Jane", "active": "true"},
+        {"self": "u2", "accountId": "a2", "displayName": "Kai", "active": "false"},
+    ]
+
+
 def test_users_pipeline_single_page(spark, tmp_path):
     from airflow_jira_etl_spark.pipeline import users_pipeline
 
-    def fetch(url, params=None):
-        return [
-            {"self": "u1", "accountId": "a1", "displayName": "Jane", "active": "true"},
-            {"self": "u2", "accountId": "a2", "displayName": "Kai", "active": "false"},
-        ]
-
     ctx: dict = {}
-    users_pipeline(spark, fetch, "https://api/users", str(tmp_path)).run(ctx)
+    users_pipeline(spark, _users_fetcher, "https://api/users", str(tmp_path)).run(ctx)
     table = ctx["table"].read()
     assert table.count() == 2
     assert {"account_id", "display_name", "url"} <= set(table.columns)
@@ -290,3 +291,81 @@ def test_dag_specs_carry_start_date_and_key_on_both_tasks():
                 spec.dag_id,
                 t.task_id,
             )
+
+
+def test_entity_pipelines_create_one_bucket_tables(spark, tmp_path):
+    """Fresh entity tables are committed with ENTITY_N_BUCKETS (1)
+    bucket: every page dirties every bucket, so one bucket rewrites no
+    more bytes and writes one file per apply."""
+    from airflow_jira_etl_spark.pipeline import (
+        ENTITY_N_BUCKETS,
+        issues_pipeline,
+        users_pipeline,
+    )
+    from airflow_jira_etl_spark.sources import fixture_fetchers
+
+    assert ENTITY_N_BUCKETS == 1
+    runs = {
+        "worklogs": lambda: worklog_pipeline(
+            spark, _worklog_fetcher(), "https://api/worklogs?page=0", str(tmp_path)
+        ),
+        "issues": lambda: issues_pipeline(
+            spark,
+            fixture_fetchers.synthetic_issues_fetcher({}),
+            "https://api/search",
+            str(tmp_path),
+        ),
+        "users": lambda: users_pipeline(
+            spark, _users_fetcher, "https://api/users", str(tmp_path)
+        ),
+    }
+    for entity, build in runs.items():
+        ctx: dict = {}
+        build().run(ctx)
+        manifest = ctx["table"]._read_manifest()
+        assert manifest["n_buckets"] == 1, entity
+        assert list(manifest["buckets"]) == ["0"], entity
+
+
+def test_existing_bucket_layout_is_kept_until_compacted(spark, tmp_path):
+    """A worklogs table created with the sink's old 16-bucket default
+    keeps 16 buckets when the pipeline merges into it (n_buckets is
+    manifest-authoritative) and ends with a fresh run's rows;
+    compact(n_buckets=1) then migrates it with identical rows."""
+    import os
+
+    from airflow_jira_etl_spark.entities import WORKLOG_MAPPING
+    from airflow_jira_etl_spark.sinks.parquet_upsert import (
+        DEFAULT_N_BUCKETS,
+        ParquetUpsertTable,
+    )
+    from airflow_jira_etl_spark.sources.paged_rest import records_to_flat_df
+
+    assert DEFAULT_N_BUCKETS == 16
+    url = "https://api/worklogs?page=0"
+    fresh: dict = {}
+    worklog_pipeline(spark, _worklog_fetcher(), url, str(tmp_path / "fresh")).run(fresh)
+    want = sorted(map(tuple, fresh["table"].read().collect()))
+    assert len(want) == 12
+
+    # the old layout, holding stale values for the first page's keys
+    old = ParquetUpsertTable(
+        spark, os.path.join(str(tmp_path / "old"), "worklogs"), key="tempo_worklog_id"
+    )
+    stale = _worklog_fetcher()(url)["results"]
+    for r in stale:
+        r["self"] = "stale"
+    old.apply(records_to_flat_df(spark, stale, WORKLOG_MAPPING))
+    assert old._read_manifest()["n_buckets"] == 16
+
+    ctx: dict = {}
+    worklog_pipeline(spark, _worklog_fetcher(), url, str(tmp_path / "old")).run(ctx)
+    table = ctx["table"]
+    assert table._read_manifest()["n_buckets"] == 16
+    assert len(table._read_manifest()["buckets"]) > 1
+    assert sorted(map(tuple, table.read().collect())) == want
+
+    table.compact(n_buckets=1)
+    manifest = table._read_manifest()
+    assert manifest["n_buckets"] == 1 and list(manifest["buckets"]) == ["0"]
+    assert sorted(map(tuple, table.read().collect())) == want
