@@ -263,10 +263,6 @@ def conform(raw: DataFrame, declared: T.StructType) -> DataFrame:
     return raw.select(*[conv(f) for f in declared.fields])
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for the SQL API."""
     for name in TABLES:

@@ -1,12 +1,15 @@
-"""Distributed global ranking — total-order row numbers without a
-single-task window.
+"""Distributed ranking — total-order row numbers and per-group running
+sums without a single-task window.
 
 An un-partitioned ``Window.orderBy(...)`` is correct but serializes the
 ENTIRE input into one task (Spark warns: "No Partition Defined for
 Window operation"). Fine for output-sized frames (a months table);
-a scale-killer on fact tables. This operator computes the same global
-``row_number`` in two distributed phases, the classic parallel ranking
-scheme (TeraSort-style range partition + prefix-sum offsets):
+a scale-killer on fact tables. The module has two operators, both on
+the same range-tagged frame (``_range_tag``): ``global_row_number``
+computes the global ``row_number`` and ``grouped_running_sum`` a
+per-group prefix sum over low-cardinality groups. Both run in two
+distributed phases, the classic parallel ranking scheme (TeraSort-style
+range partition + prefix-sum offsets):
 
 1. **Range shuffle**: ``repartitionByRange`` on the ordering
    expressions, then ``sortWithinPartitions`` — partition *i* holds a
@@ -25,23 +28,22 @@ The tagged frame is materialized ONCE between the counts pass and the
 output pass via ``localCheckpoint`` (lineage truncation), not a plain
 ``persist``: both passes must observe the identical partitioning, and
 ``repartitionByRange`` re-SAMPLES its boundaries on every plan
-re-execution (the sampler's per-partition seeds incorporate the RDD
-id, which differs per execution), so any recompute — cache eviction,
+re-execution (the sampler's per-partition seeds incorporate the RDD id,
+which differs per execution), so any recompute — cache eviction,
 ``clearCache()`` between the operator call and the caller's action,
-executor loss at cluster scale — would land rows in different
-partitions than the counts pass measured and silently corrupt every
-rank. A persisted frame still RECOMPUTES on block loss; a
-locally-checkpointed frame cannot (its lineage is cut at the
-materialized blocks), so the failure mode becomes a loud
-block-not-found error instead of wrong answers. Round 11 reproduced
-the silent corruption empirically with persist (a mid-operator
-clearCache yielded NULL rank cells / wrong ranks) and pinned the safe
-behavior in tests/test_ranking_property.py. The blocks free when the
-returned frame is garbage-collected (ContextCleaner), not via
-clearCache. At cluster scale pass ``storage_level=DISK_ONLY`` (or rank
-off a pre-sorted bucketed table) rather than memory-caching 100 TB —
-and on clusters where executor loss is routine, prefer rerunning the
-query on failure over any scheme that recomputes a sampled shuffle.
+executor loss at cluster scale — would land rows in different partitions
+than the counts pass measured and silently corrupt every rank. A
+persisted frame still RECOMPUTES on block loss; a locally-checkpointed
+frame cannot (its lineage is cut at the materialized blocks), so the
+failure mode becomes a loud block-not-found error instead of wrong
+answers (with persist, a mid-operator clearCache yields NULL rank cells
+and wrong ranks; tests/test_ranking_property.py pins both operators
+against that clearCache). The blocks free when the returned frame is
+garbage-collected (ContextCleaner), not via clearCache. At cluster scale
+pass ``storage_level=DISK_ONLY`` (or rank off a pre-sorted bucketed
+table) rather than memory-caching 100 TB — and on clusters where
+executor loss is routine, prefer rerunning the query on failure over any
+scheme that recomputes a sampled shuffle.
 
 With a total (tie-free) ordering — callers append a unique key as the
 last sort expression — ``row_number == rank == dense_rank``, and every
@@ -57,8 +59,6 @@ Spark-first by construction.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -67,12 +67,10 @@ _LOCAL_IDX_MASK = (1 << 33) - 1
 _HELPER_COLS = (
     "_gr_pid",
     "_gr_idx",
-    "_gr_first",
     "_gr_off",
     "_gr_cnt",
     "_gr_val",
     "_gr_lsum",
-    "_gr_label",  # grouped_rank_select's pivot label column
 )
 
 
@@ -198,232 +196,6 @@ def global_row_number(
         rn_col, (off + F.col("_gr_idx") + 1).cast("long")
     ).drop("_gr_pid", "_gr_idx")
     return out, cum
-
-
-def grouped_row_number(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[Column],
-    rn_col: str = "rn",
-    n_col: str = "n",
-    num_partitions: int | None = None,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-) -> DataFrame:
-    """Per-group row_number + group size for LOW-cardinality groups —
-    the skew-proof alternative to ``Window.partitionBy(group)`` when
-    |groups| ≪ cluster parallelism.
-
-    A partitioned window caps parallelism at |groups|: ranking lineitem
-    by a 3-value flag runs the ENTIRE table through 3 tasks, and AQE
-    does not split window partitions (its skew handling is join-only).
-    Here the range shuffle keys on ``(group, order...)`` so one group
-    spans MANY partitions; within a partition a group's rows are
-    contiguous and sorted, so its local index is
-    ``local_idx - first_idx(partition, group)`` and the global per-group
-    rank adds the prefix sum of that group's counts in earlier
-    partitions. The bookkeeping pass collects one row per
-    (partition, group) — bounded by ``n_parts × |groups|``, which is
-    the operator's applicability condition (a high-cardinality group
-    column should use the plain partitioned window: |groups| is already
-    the parallelism). The group's total size rides along as ``n_col``,
-    replacing the full-frame ``count() over (partition by group)``
-    window the naive form needs.
-    """
-    from pyspark.sql import types as T
-
-    _check_names(df, (rn_col, n_col))
-    spark = df.sparkSession
-    n_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    sort_exprs = [F.col(g) for g in group_cols] + list(order_cols)
-    tagged = _range_tag(df, sort_exprs, n_parts, storage_level)
-    per = (
-        tagged.groupBy("_gr_pid", *group_cols)
-        .agg(
-            F.count("*").alias("_gr_cnt"),
-            F.min("_gr_idx").alias("_gr_first"),
-        )
-        .collect()
-    )
-    # exclusive prefix sum of each group's counts in pid order; group
-    # totals fold into the same (pid, group) meta rows so the rank pass
-    # pays ONE broadcast join, not two
-    per.sort(key=lambda r: r["_gr_pid"])
-    seen: dict[tuple, int] = {}
-    meta_rows = []
-    meta_keys = []
-    for r in per:
-        gkey = _group_key(r, group_cols)
-        off = seen.get(gkey, 0)
-        seen[gkey] = off + r["_gr_cnt"]
-        meta_rows.append(
-            [r["_gr_pid"], *(r[g] for g in group_cols), int(r["_gr_first"]), off]
-        )
-        meta_keys.append(gkey)
-    meta_schema = T.StructType(
-        [T.StructField("_gr_pid", T.IntegerType())]
-        + [tagged.schema[g] for g in group_cols]
-        + [
-            T.StructField("_gr_first", T.LongType()),
-            T.StructField("_gr_off", T.LongType()),
-            T.StructField(n_col, T.LongType()),
-        ]
-    )
-    for row, gkey in zip(meta_rows, meta_keys):
-        row.append(int(seen[gkey]))
-    meta = spark.createDataFrame(
-        [tuple(r) for r in meta_rows], meta_schema
-    )
-    return (
-        tagged.join(
-            F.broadcast(meta), _null_safe_meta_join(tagged, meta, group_cols)
-        )
-        .drop(meta["_gr_pid"], *[meta[g] for g in group_cols])
-        .withColumn(
-            rn_col,
-            (
-                F.col("_gr_off") + F.col("_gr_idx") - F.col("_gr_first") + 1
-            ).cast("long"),
-        )
-        .drop("_gr_pid", "_gr_idx", "_gr_first", "_gr_off")
-    )
-
-
-def grouped_rank_select(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[Column],
-    ranks: dict[str, Callable[[int], int]],
-    n_col: str = "n",
-    num_partitions: int | None = None,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-) -> DataFrame:
-    """Select the rows at named per-group ranks (order statistics)
-    WITHOUT materializing a rank on every row — the two-phase ranking
-    scheme specialized to rank SELECTION (exact quantiles, medians,
-    k-th order statistics).
-
-    ``order_cols`` must define a UNIQUE total order within each group
-    (append a key column as the final sort expression, as the sibling
-    ``global_row_number`` / ``grouped_running_sum`` contracts require):
-    rows tied on the full (group, order...) key can straddle a
-    range-partition boundary, making the row selected at rank r
-    partition-placement-dependent. Ties make the selection
-    NONDETERMINISTIC among the tied rows, not wrong counts.
-
-    ``ranks`` maps an output label to ``fn(n) -> int`` (1-based rank,
-    given the group's row count) — e.g. the lower-quantile convention
-    ``{"p50": lambda n: (n + 1) // 2}``; it must be non-empty (an empty
-    request raises — it would otherwise return an empty frame that is
-    indistinguishable from "no groups"). After the same bookkeeping
-    pass as ``grouped_row_number`` (one count/min-idx row per
-    (partition, group)), the DRIVER resolves each target rank to its
-    exact (partition, partition-local index) coordinate — a group's
-    rows are contiguous and sorted within each range partition, so
-    rank r lands in the partition whose exclusive prefix count first
-    covers r, at local index ``first_idx + (r - offset - 1)``. The
-    second pass is then a broadcast semi-selection of
-    ``|groups| × |ranks|`` rows (joined on the globally-unique
-    (partition, local idx) coordinate), not a full-frame rank
-    computation: where ``grouped_row_number`` pays a per-row broadcast
-    join plus rank arithmetic over the ENTIRE cached frame, this pays
-    a filter that touches every cached partition once and keeps only
-    the target rows. At 100 TB that is the difference between
-    rewriting the table and reading it.
-
-    Returns one row per group, columns ``group_cols + sorted(ranks) +
-    [n_col]`` (the rank columns come from the pivot, ``n_col`` joins on
-    last), where each rank column holds a STRUCT of the selected row's
-    non-group columns (callers project the field they want). Groups
-    whose ``fn(n)`` is out of [1, n] raise — a silent NULL would be
-    indistinguishable from data loss.
-    """
-    from pyspark.sql import types as T
-
-    if not ranks:
-        raise ValueError(
-            "grouped_rank_select: ranks must be non-empty — an empty "
-            "selection would return an empty frame indistinguishable "
-            "from an input with no groups"
-        )
-    out_names = (n_col, *ranks)
-    _check_names(df, out_names)
-    spark = df.sparkSession
-    n_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    sort_exprs = [F.col(g) for g in group_cols] + list(order_cols)
-    tagged = _range_tag(df, sort_exprs, n_parts, storage_level)
-    per = (
-        tagged.groupBy("_gr_pid", *group_cols)
-        .agg(
-            F.count("*").alias("_gr_cnt"),
-            F.min("_gr_idx").alias("_gr_first"),
-        )
-        .collect()
-    )  # bounded: one row per (partition, group)
-    per.sort(key=lambda r: r["_gr_pid"])
-    # group -> [(pid, first_idx, excl_offset, cnt)] in pid order, plus
-    # a representative raw-key row per group for the output frame
-    slices: dict[tuple, list] = {}
-    raw_keys: dict[tuple, list] = {}
-    for r in per:
-        gkey = _group_key(r, group_cols)
-        prior = slices.setdefault(gkey, [])
-        off = (prior[-1][2] + prior[-1][3]) if prior else 0
-        prior.append((r["_gr_pid"], int(r["_gr_first"]), off, r["_gr_cnt"]))
-        raw_keys.setdefault(gkey, [r[g] for g in group_cols])
-    # resolve each named rank to its (pid, local_idx) coordinate
-    targets = []  # (pid, idx, label)
-    group_meta = []  # (*group_key_cols, n)
-    for gkey, parts in slices.items():
-        n = parts[-1][2] + parts[-1][3]
-        group_meta.append([*raw_keys[gkey], n])
-        for label, fn in ranks.items():
-            r = int(fn(n))
-            if not (1 <= r <= n):
-                raise ValueError(
-                    f"grouped_rank_select: rank {label}={r} out of "
-                    f"[1, {n}] for group {raw_keys[gkey]!r}"
-                )
-            for pid, first, off, cnt in parts:
-                if off < r <= off + cnt:
-                    targets.append((pid, first + (r - off - 1), label))
-                    break
-    # (pid, local idx) is globally unique (monotonically_increasing_id
-    # is per-row), so the selection join needs no group-key equality
-    sel_meta = spark.createDataFrame(
-        targets,
-        T.StructType(
-            [
-                T.StructField("_gr_pid", T.IntegerType()),
-                T.StructField("_gr_idx", T.LongType()),
-                T.StructField("_gr_label", T.StringType()),
-            ]
-        ),
-    )
-    payload = [c for c in df.columns if c not in group_cols]
-    picked = (
-        tagged.join(F.broadcast(sel_meta), ["_gr_pid", "_gr_idx"])
-        .groupBy(*group_cols)
-        .pivot("_gr_label", sorted(ranks))
-        .agg(F.first(F.struct(*payload)))
-    )
-    n_schema = T.StructType(
-        [tagged.schema[g] for g in group_cols]
-        + [T.StructField(n_col, T.LongType())]
-    )
-    n_df = spark.createDataFrame(
-        [tuple(r) for r in group_meta], n_schema
-    )
-    cond = None
-    for g in group_cols:
-        c = picked[g].eqNullSafe(n_df[g])
-        cond = c if cond is None else cond & c
-    return picked.join(F.broadcast(n_df), cond).drop(
-        *[n_df[g] for g in group_cols]
-    )
 
 
 def grouped_running_sum(

@@ -1364,20 +1364,18 @@ def llm_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     median) rather than approx_percentile: exact integer semantics
     both engines reproduce.
 
-    r16 restructure (guide §2.3 "aggregate before you shuffle"): the
-    median VALUE at rank r depends only on per-(lang, len)
-    multiplicities — the oracle's doc_id tie-break orders rows WITHIN
-    one length, so the selected length is tie-break-invariant. The
-    corpus collapses to (lang, len) counts first (map-side partial
-    aggregation: the shuffle carries |langs × distinct lengths| rows —
-    domain-bounded at any corpus size), and every output statistic
-    (count, char volume, min/max, median by cumulative-count rank
-    selection) derives from those counts. Replaces the r9–r15
-    two-phase range-shuffle ranker (grouped_row_number), whose
-    full-table range exchange + boundary-sampling scan +
-    localCheckpoint + bookkeeping collect all disappear: ONE action,
-    nothing row-sized ever shuffles. The per-lang window runs over the
-    aggregated domain rows only."""
+    Shape ("aggregate before you shuffle"): the median VALUE at rank r
+    depends only on per-(lang, len) multiplicities — the oracle's doc_id
+    tie-break orders rows WITHIN one length, so the selected length is
+    tie-break-invariant. The corpus collapses to (lang, len) counts
+    first (map-side partial aggregation: the shuffle carries |langs ×
+    distinct lengths| rows — domain-bounded at any corpus size), and
+    every output statistic (count, char volume, min/max, median by
+    cumulative-count rank selection) derives from those counts. This
+    form is ONE action with no range exchange, sampling scan,
+    localCheckpoint or driver collect, and nothing row-sized ever
+    shuffles. The per-lang window runs over the aggregated domain rows
+    only."""
     from pyspark.sql import Window
 
     docs = catalog.load(spark, sf_dir, "documents")

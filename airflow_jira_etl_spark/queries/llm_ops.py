@@ -56,14 +56,14 @@ def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Portable MinHash family for the word-shingle dedup query: same affine
 # permutation scheme as the n-gram family below, but over WORD-3-shingle
-# hashes (operators/minhash.py's shingle domain) with the operator's
-# 16-hash / 4-band / 4-row geometry. Each word is hashed once with the
-# same length/first/last-codepoint polynomial the simhash oracle uses
-# (_word_hash_duck/_word_hash_spark — one definition, two engines) and
-# a shingle hash is an affine combine of three word hashes, so DuckDB
-# reproduces every value bit-for-bit. Production swaps in xxhash64
-# (operators/minhash.py, used by llm_dedup_clusters and the
-# planted-recall tests) — identical shape, stronger hashes.
+# hashes with a 16-hash / 4-band / 4-row geometry. Each word is hashed
+# once with the same length/first/last-codepoint polynomial the simhash
+# oracle uses (_word_hash_duck/_word_hash_spark — one definition, two
+# engines) and a shingle hash is an affine combine of three word
+# hashes, so DuckDB reproduces every value bit-for-bit. Words that
+# share (length, first codepoint, last codepoint) hash alike. This is
+# the package's only word-shingle MinHash: llm_dedup_minhash,
+# llm_containment_pairs and llm_dedup_clusters all run it.
 _MH_P = 1048573
 _MH_SEEDS = [
     (37, 126), (101, 4373), (499, 9973), (1009, 11317),
@@ -198,10 +198,9 @@ def llm_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via word-3-shingle MinHash-LSH: linear in-array
     signature pass → narrow band-bucket self-join (band_id + 4 minhash
     longs per row) → exact Jaccard verify on surviving pairs only —
-    operators/minhash.py's geometry (16 hashes, 4 bands × 4 rows) with
-    a portable affine family so the DuckDB oracle checks every value.
-    The xxhash64 production twin keeps its planted near-dup recall test
-    in tests/test_operators.py."""
+    16 hashes, 4 bands × 4 rows, from a portable affine family so the
+    DuckDB oracle checks every value. tests/test_operators.py checks
+    its recall on planted near-dups."""
     documents = catalog.load(spark, sf_dir, "documents")
     return minhash_pairs_portable(documents).select(
         "id1", "id2", fround(F.col("j")).alias("jaccard")
@@ -232,8 +231,7 @@ def _lsh_band_pairs(
     path instead of the interpreted higher-order-function evaluator
     (r16, guide §4.1: one ``array_min(transform(...))`` per seed never
     enters codegen, so the old form paid 16–18 interpreted array
-    passes per row — measured 2.2× slower on this family; same shape
-    rationale as operators/minhash.minhash_table). Minima over the
+    passes per row — measured 2.2× slower on this family). Minima over the
     distinct set equal minima over the multiset (affine maps are
     elementwise), and the distinct set is what the verify needs anyway.
     The frame is cached and filled EAGERLY because three consumers
@@ -466,9 +464,8 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # permutations (A*h + B) mod P over char-4-gram rolling hashes. P is
 # prime (2^20 - 3) so each (A, B) is a true permutation of the hash
 # domain; every constant is plain integer arithmetic DuckDB reproduces
-# bit-for-bit. Production swaps in xxhash64 (operators/minhash.py) —
-# same bands→buckets→verify shape. 3 bands × 6 rows: a pair with
-# jaccard j collides in a band with prob j^6. The row count is sized to
+# bit-for-bit. 3 bands × 6 rows: a pair with jaccard j collides in a
+# band with prob j^6. The row count is sized to
 # the corpus's BASE similarity, not just the target τ: on a
 # small-vocabulary corpus (documents is ~30 distinct words, so char
 # 4-grams repeat heavily across unrelated docs) the all-pairs mean
@@ -518,13 +515,13 @@ def ngram_jaccard_pairs(documents: DataFrame) -> DataFrame:
     """Character-4-gram Jaccard with REAL similarity blocking: MinHash
     bands (3 bands × 6 rows from a portable affine hash family) replace
     any id-window convenience key, so near-duplicates are found no
-    matter how far apart their doc_ids are. Same shape as
-    operators/minhash.py: linear signature pass → narrow band-bucket
-    self-join (band_id + 6 minhash longs per row — this family's
-    R = _NG_ROWS, not the 4 of the minhash family) → exact Jaccard
-    verify only on surviving pairs, with the gram sets re-attached
-    after the join; pairs below τ=0.5 are dropped (a dedup pair list,
-    not an all-similarities dump).
+    matter how far apart their doc_ids are. It shares the word-shingle
+    family's generator (_lsh_band_pairs): linear signature pass →
+    narrow band-bucket self-join (band_id + 6 minhash longs per row —
+    this family's R = _NG_ROWS, not the 4 of the minhash family) →
+    exact Jaccard verify only on surviving pairs, with the gram sets
+    re-attached after the join; pairs below τ=0.5 are dropped (a dedup
+    pair list, not an all-similarities dump).
 
     CONTRACT: the reported set is BAND-COLLIDED pairs with exact
     jaccard ≥ τ, not all pairs ≥ τ. The 3×6 geometry's per-band
@@ -630,8 +627,7 @@ def llm_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hyperplane LSH geometry: the bucket-bit count ADAPTS to corpus size
 # so the mean bucket stays ~_HP_TARGET rows and within-bucket candidate
 # pairs stay LINEAR in n (a fixed 64-bucket space makes them ~n²/64 —
-# the scale-killer class; the minhash band family at
-# operators/minhash.py:60-74 already sizes its geometry the same way).
+# the scale-killer class).
 # Plane j is a ±1 sign pattern over a 4-dim block: block = j % 16 (64
 # declared dims / 4), pattern = j // 16 out of the three mutually
 # orthogonal sign characters (+,+,-,-) / (+,-,+,-) / (+,-,-,+) — up to
@@ -860,24 +856,17 @@ def llm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — a k-row heap per partition merged on the
     driver, never a global sort (identical to sort_limit_topk; check
     the plan). The count-distinct doc frequency is the expand phase
-    of the same aggregate. At 100 TB with an adversarially unbounded
-    vocabulary the exact aggregate's state is linear in DISTINCT
-    grams — when that outgrows executor memory, switch to
-    operators/heavy_hitters.spacesaving_heavy_hitters (r15): a
-    per-partition Misra-Gries summary of O(capacity) counters folded
-    vectorized per Arrow batch, merged in ONE tiny shuffle, with
-    guaranteed est ≤ freq ≤ hi bounds and no false negatives above
-    N/(capacity+1) — property-tested against THIS body
-    (tests/test_heavy_hitters_sketch.py) and probed at 30× alongside
-    it (tools/heavyhitters_scale_probe). The exact form stays the
-    oracle-able reference implementation."""
+    of the same aggregate. The aggregate's state is linear in DISTINCT
+    grams, so executor memory must grow with the vocabulary; the query
+    stays exact so that the oracle can check every row."""
     documents = catalog.load(spark, sf_dir, "documents")
     return heavy_hitters(documents)
 
 
 def heavy_hitters(documents: DataFrame) -> DataFrame:
-    """Operator body — split out so tools/heavyhitters_scale_probe.py
-    can drive it on replicated corpora (see llm_heavy_hitters)."""
+    """Operator body over any (doc_id, text) frame — see
+    llm_heavy_hitters. Split out so a test can run it on replicated
+    corpora and pin how its counts scale."""
     grams = (
         documents.select(
             "doc_id", F.split(F.lower(F.col("text")), " ").alias("ws")

@@ -420,26 +420,24 @@ def agg_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality matters: ranks floor(p·(n-1))+1 (the LOWER-quantile
     convention, identical in both engines' integer division).
 
-    r16 restructure (guide §2.3 "aggregate before you shuffle"): the
-    quantile VALUE at rank r depends only on the per-(group, value)
-    multiplicity — the oracle's (l_orderkey, l_linenumber) tie-break
-    orders rows WITHIN one value, so the value selected at any rank is
-    tie-break-invariant. The query therefore collapses the table to
-    its value DOMAIN first (groupBy(flag, price) count — map-side
-    partial aggregation, so the one wide shuffle carries |distinct
-    prices per flag| rows, bounded by the price domain, not the table),
-    then selects each target rank from the cumulative counts with an
-    ordinary per-group window over the aggregated rows. Replaces the
-    r10–r15 two-phase range-shuffle ranker (grouped_rank_select),
-    whose full-table range exchange + boundary-sampling scan +
-    localCheckpoint materialization + 2 driver actions all disappear:
-    this form is ONE action, and nothing row-sized ever shuffles or
-    materializes. The window partitions by the 3-value flag, but its
-    input is the aggregated domain (≤ |price domain| rows per flag at
-    ANY table size — TPC-H prices are discrete cents with a bounded
-    range), so the 3-task cap applies to domain-sized data only; for
-    genuinely unbounded value domains the general-purpose two-phase
-    ranker (operators/ranking.py, still tested) remains the tool."""
+    Shape ("aggregate before you shuffle"): the quantile VALUE at rank r
+    depends only on the per-(group, value) multiplicity — the oracle's
+    (l_orderkey, l_linenumber) tie-break orders rows WITHIN one value,
+    so the value selected at any rank is tie-break-invariant. The query
+    therefore collapses the table to its value DOMAIN first
+    (groupBy(flag, price) count — map-side partial aggregation, so the
+    one wide shuffle carries |distinct prices per flag| rows, bounded by
+    the price domain, not the table), then selects each target rank from
+    the cumulative counts with an ordinary per-group window over the
+    aggregated rows. This form is ONE action with no range exchange,
+    sampling scan, localCheckpoint or driver collect, and nothing
+    row-sized ever shuffles or materializes. The window partitions by
+    the 3-value flag, but its input is the aggregated domain (≤ |price
+    domain| rows per flag at ANY table size — TPC-H prices are discrete
+    cents with a bounded range), so the 3-task cap applies to
+    domain-sized data only; for genuinely unbounded value domains,
+    operators/ranking.py's grouped_running_sum over a constant 1 gives
+    the per-group row number without a |groups|-task window."""
     from pyspark.sql import Window
 
     lineitem = catalog.load(spark, sf_dir, "lineitem")

@@ -64,17 +64,12 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # (a) a redundant beyond-survey query is retired to shrink a tier, or
 # (b) the driver window grows.  New capability work in r15/r16 must
 # take non-query shapes: operator-level code paths (e.g. the
-# SpaceSaving heavy-hitters and banded-Bloom degradation paths landed
-# in r15 as operators + property tests + probes, NOT as registrations),
-# sources/sinks, or drift-armor axes.
+# banded-Bloom degradation path is an operator parameter with property
+# tests and a probe, NOT a registration), sources/sinks, or drift-armor
+# axes.
 # Code-recency notes (round 15, the advisor cannot see code changes;
 # none displace an r12 row because each change is value-neutral on the
 # driver fixtures and pinned by tests):
-# - llm_heavy_hitters (r14-fresh): gained the SpaceSaving degradation
-#   operator (operators/heavy_hitters.py) — the REGISTERED query body
-#   still runs the exact one-shuffle top-k; the sketch path is
-#   property-tested against it (tests/test_heavy_hitters_sketch.py),
-#   so no promotion.
 # - llm_decontaminate_bloom (r14-fresh): gained a bands=N parameter
 #   (default 1 = the r14 single-bitset build, bit-identical output;
 #   pinned by tests/test_bloom_banding.py), so no promotion.

@@ -26,8 +26,8 @@ per-unit wall ratio wall(mult×) / (wall(1×) · mult) should sit at or
 below ~1 for any operator whose work is ∝ input rows, and a large
 ratio is the same smell the Bloom autopsy started from.
 
-Fixture construction (tpch_scale_probe's materialization, extended to
-every row-scaling table so the queries run UNCHANGED via catalog.load):
+Fixture construction (build_scaled: every row-scaling table
+replicates, so the queries run UNCHANGED via catalog.load):
 orders+lineitem replicate on a SHARED o_orderkey stride (replica
 lineitems reference their replica's orders), events on event_id,
 documents on doc_id, embeddings on vec_id; the five dimension tables

@@ -1,13 +1,14 @@
 """Shared key-stride replication for the scale probes.
 
-Both probes grow a fixture N× by self-union with per-replica key
-offsets. The stride MUST be derived from the data (max key + 1), never
-hard-coded: a fixture whose key range reaches a fixed constant would
-silently collide replica keys, merging distinct rows and corrupting
-the probe's pair/row counts. When several tables share a key domain
-(lineitem.l_orderkey references orders.o_orderkey), compute the stride
-ONCE from the referenced table and pass it to every replication so the
-foreign-key structure is preserved across replicas.
+The scale probes and registry_scale_sweep grow a fixture N× by
+self-union with per-replica key offsets. The stride MUST be derived from
+the data (max key + 1), never hard-coded: a fixture whose key range
+reaches a fixed constant would silently collide replica keys, merging
+distinct rows and corrupting the probe's pair/row counts. When several
+tables share a key domain (lineitem.l_orderkey references
+orders.o_orderkey), compute the stride ONCE from the referenced table
+and pass it to every replication so the foreign-key structure is
+preserved across replicas.
 """
 
 from __future__ import annotations

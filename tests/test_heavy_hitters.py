@@ -98,9 +98,33 @@ def test_fixture_corpus_exercises_the_limit(spark, sf_dir):
     assert df.count() == K
 
 
-def test_heavyhitters_scale_probe_smoke(spark, sf_dir):
-    """The probe (tools/heavyhitters_scale_probe) must run end-to-end,
-    including from a non-1 base multiple (ratio scaling)."""
-    from airflow_jira_etl_spark.tools.heavyhitters_scale_probe import main
+def test_topk_scales_exactly_under_replication(spark, sf_dir):
+    """Replicating the corpus (identical text, strided doc_ids) scales
+    every gram's counts uniformly, so no gram can cross the k boundary:
+    between a 2x and a 4x corpus the top-k gram set is unchanged and
+    freq and doc_freq each scale by exactly 4/2, per gram. The 2x base
+    keeps the ratio from passing trivially against an unreplicated
+    run."""
+    from airflow_jira_etl_spark import catalog
+    from airflow_jira_etl_spark.queries.llm_ops import heavy_hitters
+    from airflow_jira_etl_spark.tools.replication import (
+        key_stride,
+        replicate_with_stride,
+    )
 
-    assert main(["heavyhitters_scale_probe", sf_dir, "2,4"]) == 0
+    docs = catalog.load(spark, sf_dir, "documents").select("doc_id", "text")
+    stride = key_stride(docs, "doc_id")
+
+    def topk(mult):
+        corpus = replicate_with_stride(docs, "doc_id", mult, stride)
+        return {
+            r.gram: (r.freq, r.doc_freq)
+            for r in heavy_hitters(corpus).collect()
+        }
+
+    base, scaled = topk(2), topk(4)
+    assert len(base) == K
+    assert set(scaled) == set(base)
+    for g, (freq, doc_freq) in base.items():
+        assert scaled[g][0] * 2 == freq * 4, g
+        assert scaled[g][1] * 2 == doc_freq * 4, g

@@ -8,7 +8,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from airflow_jira_etl_spark import catalog
-from airflow_jira_etl_spark.operators.minhash import candidate_pairs
 from airflow_jira_etl_spark.operators.upsert import upsert
 
 
@@ -34,21 +33,34 @@ def test_upsert_idempotent_replay(spark):
 
 
 def test_minhash_finds_planted_near_dups(spark):
-    """Planted near-duplicates (one word changed in ~40) must be
-    recalled; unrelated docs must not flood the candidate set."""
+    """Planted near-duplicates (one word changed in 40) must be recalled
+    by the registered word-shingle MinHash kernel. Its portable word
+    hash keys only on (length, first letter, last letter), so the
+    vocabulary gives every word a distinct triple: words that share a
+    triple hash alike, and recall would then be measured on collided
+    words rather than on the vocabulary drawn."""
     import random
+    import string
+
+    from airflow_jira_etl_spark.queries.llm_ops import minhash_pairs_portable
 
     rng = random.Random(7)
-    vocab = [f"w{i}" for i in range(500)]
+    letters = string.ascii_lowercase
+    triples = rng.sample(
+        [(n, a, b) for n in (3, 4, 5, 6) for a in letters for b in letters],
+        500,
+    )
+    vocab = [a + "m" * (n - 2) + b for n, a, b in triples]
+    assert len({(len(w), w[0], w[-1]) for w in vocab + ["changed"]}) == 501
     docs = []
     for i in range(40):
         words = [rng.choice(vocab) for _ in range(40)]
         docs.append((2 * i, " ".join(words)))
         near = list(words)
-        near[5] = "CHANGED"
+        near[5] = "changed"
         docs.append((2 * i + 1, " ".join(near)))
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    pairs = candidate_pairs(df, "doc_id", "text").collect()
+    pairs = minhash_pairs_portable(df).collect()
     found = {(p.id1, p.id2) for p in pairs}
     planted = {(2 * i, 2 * i + 1) for i in range(40)}
     recall = len(found & planted) / len(planted)
@@ -56,7 +68,7 @@ def test_minhash_finds_planted_near_dups(spark):
     # jaccard of a planted pair is high; random pairs (if any) are low
     for p in pairs:
         if (p.id1, p.id2) in planted:
-            assert p.jaccard > 0.5
+            assert p.j > 0.5
 
 
 def test_approx_distinct_within_5pct(spark, sf_dir):
@@ -584,45 +596,6 @@ def test_pct_bucket_overflow_proof_for_any_int64_key(spark):
             assert b == (k * _HASH_A) % 100
 
 
-def test_minhash_array_form_matches_row_form(spark):
-    """The self-contained array-form signature (add_signature) and the
-    codegen row-form pipeline (shingle_hash_rows -> minhash_table) must
-    produce IDENTICAL signatures — the documented equivalence that lets
-    a per-row consumer reuse stored minhash tables. This parity test is
-    what keeps the claim true under future edits to either form."""
-    from airflow_jira_etl_spark.operators.minhash import (
-        N_HASHES,
-        add_signature,
-        minhash_table,
-        shingle_hash_rows,
-    )
-
-    docs = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "one two"),  # shorter than the shingle width k=3
-        (3, "single"),
-        (4, "the quick brown fox jumps over the lazy cat today"),
-        (5, ""),  # empty doc: one empty-string shingle, both forms
-        (6, None),  # NULL doc: contributes nothing, both forms
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    cols = [f"mh_{i}" for i in range(N_HASHES)]
-    arr = {r.doc_id: tuple(r[c] for c in cols) for r in add_signature(df).collect()}
-    row = {
-        r.doc_id: tuple(r[c] for c in cols)
-        for r in minhash_table(shingle_hash_rows(df, "doc_id"), "doc_id").collect()
-    }
-    # a NULL doc: the row form drops it at posexplode; the array form
-    # keeps the row but with an all-NULL signature — NOT the empty
-    # document's signature (the old behavior), which made every NULL
-    # doc a jaccard-1.0 'duplicate' of every empty doc
-    null_sig = arr.pop(6)
-    assert null_sig == (None,) * N_HASHES
-    assert 6 not in row
-    assert arr[5] != null_sig  # empty doc has a REAL signature
-    assert arr == row
-
-
 def test_ivf_rebuild_spares_previous_version_dir(spark, sf_dir, tmp_path):
     """A rebuild under a NEW key (a changed tag — the regenerated-
     fixture path) must leave the previous version's data dirs intact
@@ -791,18 +764,6 @@ def test_salted_agg_rejects_salt_column_collision(spark):
     df = spark.createDataFrame([(1, 2, 3)], "k long, v long, __salt long")
     with pytest.raises(ValueError, match="__salt"):
         salted_agg(df, ["k"], {"t": (F.sum("v"), F.sum("t"))})
-
-
-def test_add_signature_does_not_leak_shingle_array(spark):
-    """The '__sh' shingle-hash intermediate (hundreds of longs per doc)
-    must not ride along in the returned frame — downstream persists and
-    shuffles would pay its full width."""
-    from airflow_jira_etl_spark.operators.minhash import add_signature
-
-    df = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
-    out = add_signature(df)
-    assert "__sh" not in out.columns
-    assert any(c.startswith("mh_") for c in out.columns)
 
 
 def test_ivf_topk_rejects_absent_probe_id(spark):

@@ -27,7 +27,7 @@ DataFrame's plan is a trivial read of the result, not the interesting
 pipeline (their plan shapes are asserted by dedicated tests).
 
 Note: the ranking-backed queries (sort_multi_key, win_ntile_percent,
-agg_exact_quantiles, llm_corpus_stats) are NOT side-effect-free to
+win_concurrency_sweep) are NOT side-effect-free to
 build — operators/ranking.py runs its counts pass (a shuffle + a
 k-bounded collect) eagerly so the offsets can ship as plan literals.
 That is compute, not state mutation, so they stay linted; it just
@@ -140,4 +140,51 @@ def test_no_bare_persist_in_engine_source():
     assert not hits, (
         "bare .persist( in engine source — use localCheckpoint for "
         "cross-pass materialization (see docstring): " + "; ".join(hits)
+    )
+
+
+def test_every_operator_module_has_a_package_importer():
+    """Source lint: every module under operators/ must be imported by
+    some package module outside tools/ (function-local imports count;
+    the package uses absolute imports only).
+    An operator that only tests or probes import runs in no query,
+    pipeline, sink or gate, so it is dead weight: delete it with its
+    tests instead of keeping a second kernel for an algorithm."""
+    import ast
+    import os
+
+    pkg = "airflow_jira_etl_spark"
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), pkg
+    )
+    op_dir = os.path.join(root, "operators")
+    operators = {
+        fn[:-3]
+        for fn in os.listdir(op_dir)
+        if fn.endswith(".py") and fn != "__init__.py"
+    }
+    imported: set[str] = set()
+    for dirpath, _, files in os.walk(root):
+        if os.path.relpath(dirpath, root).split(os.sep)[0] == "tools":
+            continue
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            with open(os.path.join(dirpath, fn)) as f:
+                tree = ast.parse(f.read())
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Import):
+                    mods = [(a.name, []) for a in node.names]
+                elif isinstance(node, ast.ImportFrom) and node.module:
+                    mods = [(node.module, [a.name for a in node.names])]
+                else:
+                    continue
+                for mod, names in mods:
+                    parts = mod.split(".")
+                    if parts[:2] == [pkg, "operators"]:
+                        # `...operators.x import f` or `...operators import x`
+                        imported.update(parts[2:3] or names)
+    orphans = sorted(operators - imported)
+    assert not orphans, (
+        f"operators with no importer in the package outside tools/: {orphans}"
     )

@@ -44,236 +44,17 @@ def test_global_row_number_is_window_row_number(spark, vals, n_parts, desc):
     assert got == want
 
 
-values_grouped = st.lists(
-    st.tuples(
-        st.sampled_from(["a", "b", "c", None]),  # None: NULL group keys
-        st.integers(-4, 4),
-    ),
-    min_size=1,
-    max_size=40,
-)
-
-
-@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(rows=values_grouped, n_parts=st.integers(1, 8))
-def test_grouped_row_number_matches_partitioned_window(spark, rows, n_parts):
-    """grouped_row_number must equal Window.partitionBy(g).orderBy(v,k)
-    row_number AND carry the exact per-group count, on any mix of group
-    skew, duplicate values, NULL group keys (SQL windows group NULLs
-    together — a plain equi-join back would silently DROP those rows)
-    and partition counts — including groups split across many range
-    partitions and partitions holding several groups."""
-    from airflow_jira_etl_spark.operators.ranking import grouped_row_number
-
-    data = [(i, g, v) for i, (g, v) in enumerate(rows)]
-    df = spark.createDataFrame(data, "k long, g string, v long")
-    order = [F.col("v"), F.col("k")]
-    ranked = grouped_row_number(df, ["g"], order, num_partitions=n_parts)
-    got = {r.k: (r.rn, r.n) for r in ranked.collect()}
-    w = Window.partitionBy("g").orderBy(*order)
-    wp = Window.partitionBy("g")
-    want = {
-        r.k: (r.rn, r.n)
-        for r in df.select(
-            "k",
-            F.row_number().over(w).cast("long").alias("rn"),
-            F.count("*").over(wp).alias("n"),
-        ).collect()
-    }
-    assert got == want
-
-
-@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(rows=values_grouped, n_parts=st.integers(1, 8))
-def test_grouped_rank_select_matches_window_quantiles(spark, rows, n_parts):
-    """grouped_rank_select must pick EXACTLY the rows a partitioned
-    window's row_number would select at the lower-quantile ranks
-    (p25/p50/p75), and carry the exact group count — on any mix of
-    group skew, duplicate values, NULL group keys, and partition counts
-    that split one group across many range partitions. The driver-side
-    rank→(partition, local index) resolution is the part under test:
-    an off-by-one against the prefix-sum offsets would pick a
-    neighboring row, which duplicate-heavy inputs expose only when the
-    neighbor differs."""
-    from airflow_jira_etl_spark.operators.ranking import grouped_rank_select
-
-    data = [(i, g, v) for i, (g, v) in enumerate(rows)]
-    df = spark.createDataFrame(data, "k long, g string, v long")
-    order = [F.col("v"), F.col("k")]
-    ranks = {
-        "p25": lambda n: (n + 3) // 4,
-        "p50": lambda n: (n + 1) // 2,
-        "p75": lambda n: (3 * n + 1) // 4,
-    }
-    sel = grouped_rank_select(df, ["g"], order, ranks, num_partitions=n_parts)
-    got = {
-        r.g: (r.n, r.p25.v, r.p50.v, r.p75.v) for r in sel.collect()
-    }
-    w = Window.partitionBy("g").orderBy(*order)
-    wp = Window.partitionBy("g")
-    ranked = df.select(
-        "g", "v",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(wp).alias("n"),
-    )
-    want = {}
-    for r in ranked.collect():
-        n = r.n
-        cur = want.setdefault(r.g, [n, None, None, None])
-        for slot, fn in enumerate(ranks.values(), start=1):
-            if r.rn == fn(n):
-                cur[slot] = r.v
-    assert got == {g: tuple(vals) for g, vals in want.items()}
-
-
-def test_grouped_rank_select_rejects_out_of_range_rank(spark):
-    """A rank resolving outside [1, n] must raise, not emit NULL — a
-    silent NULL is indistinguishable from data loss."""
-    import pytest
-
-    from airflow_jira_etl_spark.operators.ranking import grouped_rank_select
-
-    df = spark.createDataFrame([(1, "a", 10)], "k long, g string, v long")
-    with pytest.raises(ValueError, match="out of"):
-        grouped_rank_select(
-            df, ["g"], [F.col("v"), F.col("k")], {"bad": lambda n: n + 1}
-        ).collect()
-
-
-def test_grouped_rank_select_every_rank_across_partition_boundaries(spark):
-    """Adversarial sweep of the driver-side rank→(partition, local
-    index) resolution: select EVERY rank 1..n of a single group forced
-    across many range partitions. Because every rank is selected, every
-    partition's FIRST row (r = off + 1 → idx = first) and LAST row
-    (r = off + cnt → idx = first + cnt - 1) is among the targets — the
-    exact coordinates where an off-by-one in the exclusive-prefix
-    arithmetic would select a neighboring partition's row or miss. The
-    ordering is duplicate-heavy on v (ties straddle boundaries) with a
-    unique k tiebreak, per the operator's total-order contract."""
-    from airflow_jira_etl_spark.operators.ranking import grouped_rank_select
-
-    n = 60
-    n_parts = 8
-    # v has only 5 distinct values → long tie runs crossing boundaries
-    data = [(k, "a", k % 5) for k in range(n)]
-    df = spark.createDataFrame(data, "k long, g string, v long")
-    order = [F.col("v"), F.col("k")]
-    # premise check: the group really does span >= 3 range partitions
-    # under this (data, n_parts) — otherwise the boundary sweep is void
-    spanned = (
-        df.repartitionByRange(n_parts, F.col("g"), *order)
-        .select(F.spark_partition_id().alias("pid"))
-        .distinct()
-        .count()
-    )
-    assert spanned >= 3, f"premise: group spans {spanned} partitions"
-    ranks = {f"r{i:02d}": (lambda i: lambda _n: i)(i) for i in range(1, n + 1)}
-    sel = grouped_rank_select(df, ["g"], order, ranks, num_partitions=n_parts)
-    row = sel.collect()
-    assert len(row) == 1 and row[0]["n"] == n
-    got = [row[0][f"r{i:02d}"]["k"] for i in range(1, n + 1)]
-    want = [
-        r.k
-        for r in df.select(
-            "k", F.row_number().over(Window.partitionBy("g").orderBy(*order)).alias("rn")
-        )
-        .orderBy("rn")
-        .collect()
-    ]
-    assert got == want
-
-
-def test_grouped_rank_select_coincident_ranks_and_tiny_groups(spark):
-    """Several labels resolving to the SAME (partition, index)
-    coordinate (p25 = p50 = p75 = 1 on a 1-row group) must each get the
-    row — the selection join duplicates the matched row per label and
-    the pivot routes one copy to each column. Mixed with a larger group
-    so the same pivot handles distinct and coincident targets at once."""
-    from airflow_jira_etl_spark.operators.ranking import grouped_rank_select
-
-    data = [(0, "solo", 7)] + [(k, "duo", 10 + k) for k in (1, 2)] + [
-        (k, "big", 100 - k) for k in range(3, 12)
-    ]
-    df = spark.createDataFrame(data, "k long, g string, v long")
-    ranks = {
-        "p25": lambda n: (n + 3) // 4,
-        "p50": lambda n: (n + 1) // 2,
-        "p75": lambda n: (3 * n + 1) // 4,
-    }
-    sel = grouped_rank_select(
-        df, ["g"], [F.col("v"), F.col("k")], ranks, num_partitions=5
-    )
-    got = {r.g: (r.n, r.p25.k, r.p50.k, r.p75.k) for r in sel.collect()}
-    # solo: all three ranks are 1 → the single row three times
-    assert got["solo"] == (1, 0, 0, 0)
-    # duo: p25=p50=p75=1 under the lower-quantile convention
-    # ((3*2+1)//4 = 1) — a 2-row group still lands all labels on row 1
-    assert got["duo"] == (2, 1, 1, 1)
-    # big (v descending by k): n=9 → ranks 3, 5, 7 over v ascending
-    big_sorted = sorted(range(3, 12), key=lambda k: 100 - k)
-    assert got["big"] == (9, big_sorted[2], big_sorted[4], big_sorted[6])
-
-
-def test_ranking_survives_cache_drop_between_passes(spark):
-    """Round-11 regression: the range-tagged frame must be
-    lineage-truncated (localCheckpoint), not merely persisted. A
-    re-executed repartitionByRange re-SAMPLES its boundaries (the
-    sampler's seeds incorporate the per-execution RDD id), so with a
-    plain persist a clearCache() between the operator call and the
-    caller's action recomputed the output pass under a DIFFERENT
-    partitioning than the bookkeeping pass measured — reproducibly
-    yielding NULL rank cells and wrong ranks. With lineage truncation
-    the one materialized layout serves both passes and clearCache is
-    irrelevant to it; this test drops the SQL cache mid-operator and
-    requires exact agreement with the window oracle."""
-    from airflow_jira_etl_spark.operators.ranking import (
-        grouped_rank_select,
-        grouped_row_number,
-    )
-
-    df = spark.range(20000).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 7).cast("string").alias("g"),
-        (F.col("id") % 13).alias("v"),
-    )
-    order = [F.col("v"), F.col("k")]
-    ranks = {"p50": lambda n: (n + 1) // 2}
-    sel = grouped_rank_select(df, ["g"], order, ranks, num_partitions=16)
-    spark.catalog.clearCache()  # between the passes, before the action
-    got = {r.g: (r.n, r.p50.k) for r in sel.collect()}
-    w = Window.partitionBy("g").orderBy(*order)
-    wp = Window.partitionBy("g")
-    want = {}
-    for r in df.select(
-        "g", "k",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(wp).alias("n"),
-    ).collect():
-        if r.rn == (r.n + 1) // 2:
-            want[r.g] = (r.n, r.k)
-    assert got == want
-
-    rn = grouped_row_number(df, ["g"], order, num_partitions=16)
-    spark.catalog.clearCache()
-    got_rn = {r.k: r.rn for r in rn.collect()}
-    want_rn = {
-        r.k: r.rn
-        for r in df.select(
-            "k", F.row_number().over(w).cast("long").alias("rn")
-        ).collect()
-    }
-    assert got_rn == want_rn
-
-
 def test_running_sum_and_global_rn_survive_cache_drop(spark):
-    """Completes the round-11 cache-drop matrix over the _range_tag
-    family: grouped_running_sum and global_row_number must also hold
-    exact window-oracle agreement when the SQL cache is dropped between
-    the operator call and the caller's action — all four operators
-    share _range_tag's localCheckpoint, but each consumes the tagged
-    frame through different bookkeeping (prefix SUMS vs counts vs
-    coordinate selection), so each deserves its own pin against a
-    future refactor reintroducing a recomputable materialization."""
+    """The range-tagged frame must be lineage-truncated
+    (localCheckpoint), not merely persisted: a re-executed
+    repartitionByRange re-samples its boundaries, so a clearCache()
+    between the operator call and the caller's action would recompute
+    the output pass under a different partitioning than the bookkeeping
+    pass measured. grouped_running_sum and global_row_number must hold
+    exact window-oracle agreement across that clearCache — both share
+    _range_tag's localCheckpoint, but each consumes the tagged frame
+    through different bookkeeping (prefix sums vs counts), so each
+    gets its own pin."""
     from airflow_jira_etl_spark.operators.ranking import (
         global_row_number,
         grouped_running_sum,
@@ -318,46 +99,6 @@ def test_running_sum_and_global_rn_survive_cache_drop(spark):
         ).collect()
     }
     assert got_rn == want_rn
-
-
-def test_grouped_rank_select_empty_ranks_rejected(spark):
-    """ranks={} must raise, not return an empty frame — an empty
-    selection result would be indistinguishable from an input with no
-    groups (and would silently drop the documented n_col row too)."""
-    import pytest
-
-    from airflow_jira_etl_spark.operators.ranking import grouped_rank_select
-
-    df = spark.createDataFrame([(1, "a", 10)], "k long, g string, v long")
-    with pytest.raises(ValueError, match="non-empty"):
-        grouped_rank_select(df, ["g"], [F.col("v"), F.col("k")], {})
-
-
-def test_grouped_rank_select_group_absent_after_filter(spark):
-    """A group emptied by an upstream filter must simply not appear in
-    the output (no bookkeeping row → no rank resolution → no crash);
-    surviving groups keep exact coordinates even when the filter
-    perforates their partition-local index space (min-idx per slice is
-    re-measured AFTER the filter, not inherited)."""
-    from airflow_jira_etl_spark.operators.ranking import grouped_rank_select
-
-    data = [(k, "dead" if k % 2 else "live", k) for k in range(40)]
-    df = spark.createDataFrame(data, "k long, g string, v long").filter(
-        F.col("g") != "dead"
-    )
-    sel = grouped_rank_select(
-        df,
-        ["g"],
-        [F.col("v"), F.col("k")],
-        {"p50": lambda n: (n + 1) // 2},
-        num_partitions=6,
-    )
-    rows = sel.collect()
-    assert {r.g for r in rows} == {"live"}
-    (r,) = rows
-    live_keys = sorted(k for k in range(40) if k % 2 == 0)
-    assert r.n == len(live_keys)
-    assert r.p50.k == live_keys[(len(live_keys) + 1) // 2 - 1]
 
 
 rsum_rows = st.lists(
@@ -492,19 +233,15 @@ def test_ranking_rejects_colliding_column_names(spark):
 
     from airflow_jira_etl_spark.operators.ranking import (
         global_row_number,
-        grouped_row_number,
         grouped_running_sum,
     )
 
     df = spark.createDataFrame([(1, "a", 2)], "rn long, g string, v long")
     with pytest.raises(ValueError, match="collide"):
         global_row_number(df, [F.col("v")])
-    df2 = spark.createDataFrame([(1, "a", 2)], "n long, g string, v long")
+    df2 = spark.createDataFrame([(1, "a", 2)], "rsum long, g string, v long")
     with pytest.raises(ValueError, match="collide"):
-        grouped_row_number(df2, ["g"], [F.col("v")])
-    df3 = spark.createDataFrame([(1, "a", 2)], "rsum long, g string, v long")
-    with pytest.raises(ValueError, match="collide"):
-        grouped_running_sum(df3, ["g"], [F.col("v")], F.col("v"))
+        grouped_running_sum(df2, ["g"], [F.col("v")], F.col("v"))
     ok = spark.createDataFrame([(1, "a", 2)], "k long, g string, v long")
     # a helper-named OUTPUT would be eaten by the final helper drop
     with pytest.raises(ValueError, match="reserved"):
@@ -512,16 +249,6 @@ def test_ranking_rejects_colliding_column_names(spark):
     with pytest.raises(ValueError, match="distinct"):
         grouped_running_sum(
             ok, ["g"], [F.col("v")], F.col("v"), sum_col="s", total_col="s"
-        )
-    from airflow_jira_etl_spark.operators.ranking import grouped_rank_select
-
-    # a rank LABEL colliding with an input column would shadow it in
-    # the pivoted output; n_col duplicating a label breaks distinctness
-    with pytest.raises(ValueError, match="collide"):
-        grouped_rank_select(ok, ["g"], [F.col("v")], {"v": lambda n: 1})
-    with pytest.raises(ValueError, match="distinct"):
-        grouped_rank_select(
-            ok, ["g"], [F.col("v")], {"p50": lambda n: 1}, n_col="p50"
         )
 
 
@@ -531,28 +258,11 @@ def test_grouped_forms_handle_nan_group_keys(spark):
     miss — without sentinel normalization the driver-side prefix would
     silently restart at every range-partition boundary. Forcing many
     partitions over a NaN-heavy group makes the group span partitions."""
-    from airflow_jira_etl_spark.operators.ranking import (
-        grouped_row_number,
-        grouped_running_sum,
-    )
+    from airflow_jira_etl_spark.operators.ranking import grouped_running_sum
 
     nan = float("nan")
     data = [(i, nan if i % 3 else 1.5, 1) for i in range(30)]
     df = spark.createDataFrame(data, "k long, g double, x long")
-    ranked = grouped_row_number(
-        df, ["g"], [F.col("k")], num_partitions=7
-    )
-    got = {r.k: (r.rn, r.n) for r in ranked.collect()}
-    w = Window.partitionBy("g").orderBy("k")
-    want = {
-        r.k: (r.rn, r.n)
-        for r in df.select(
-            "k",
-            F.row_number().over(w).cast("long").alias("rn"),
-            F.count("*").over(Window.partitionBy("g")).alias("n"),
-        ).collect()
-    }
-    assert got == want
     summed = grouped_running_sum(
         df, ["g"], [F.col("k")], F.col("x"), total_col="t", num_partitions=7
     )
@@ -571,30 +281,6 @@ def test_grouped_forms_handle_nan_group_keys(spark):
         ).collect()
     }
     assert got_s == want_s
-    # rank selection: the driver's _group_key sentinel must also keep
-    # the NaN group's slices accumulated as ONE group, and the raw-NaN
-    # n_df join back must match via eqNullSafe (NaN <=> NaN is true)
-    from airflow_jira_etl_spark.operators.ranking import grouped_rank_select
-
-    sel = grouped_rank_select(
-        df,
-        ["g"],
-        [F.col("k")],
-        {"p50": lambda n: (n + 1) // 2},
-        num_partitions=7,
-    )
-    got_q = {
-        ("nan" if r.g != r.g else r.g): (r.n, r.p50.k) for r in sel.collect()
-    }
-    want_q = {}
-    for r in df.select(
-        "g", "k",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("g")).alias("n"),
-    ).collect():
-        if r.rn == (r.n + 1) // 2:
-            want_q[("nan" if r.g != r.g else r.g)] = (r.n, r.k)
-    assert got_q == want_q
 
 
 def test_ivf_scale_probe_smoke(spark, sf_dir):

@@ -55,15 +55,11 @@ DEFERRED: set[str] = set()
 # inside it.
 STALE_ROUND = 12
 
-# Round 15 has NO code-recency promotions. Three round-15 code changes
+# Round 15 has NO code-recency promotions. Two round-15 code changes
 # touch registered-query modules but are all value-neutral on the
 # driver fixtures and pinned by tests, so none displaces an r12 row
 # (documented demotions, same rationale as llm_dedup_paragraph in
 # r14):
-# - llm_heavy_hitters: the SpaceSaving degradation path landed as a
-#   SEPARATE operator (operators/heavy_hitters.py) property-tested
-#   against the registered exact body — the registered query is
-#   unchanged.
 # - llm_decontaminate_bloom: gained bands=N with default 1 == the r14
 #   single-bitset build (bit-identical; tests/test_bloom_banding.py).
 # - llm_dedup_paragraph: ADVICE-r14 guard-shape fix (abs() → explicit
