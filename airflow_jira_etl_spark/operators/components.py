@@ -38,13 +38,14 @@ MAX_ITERS = 50
 # size rule as a broadcast join's small side. Dup-pair edges are a tiny
 # fraction of any corpus (they only exist where near-duplicates exist),
 # so in practice most dedup runs take this path; the distributed loop
-# is the correctness rail for adversarial corpora. Boundary probed in
-# r12 (`components_scale_probe boundary`, PLANS.md): a limit-sized
-# collect peaks at ~91 MB driver heap (~0.45 MB per 1k edges), and the
-# local[32] wall crossover sits near 100k — the limit stays above it
-# because local mode gives the distributed fixpoint free scheduling
-# (the one cost a real cluster multiplies per round), while the driver
-# path's collect + Python union-find costs the same everywhere.
+# is the correctness rail for adversarial corpora. Measured at the
+# cutover (PLANS.md, "components SMALL_EDGE_LIMIT boundary"): a
+# limit-sized collect peaks at ~91 MB driver heap (~0.45 MB per 1k
+# edges), and the local[32] wall crossover sits near 100k — the limit
+# stays above it because local mode gives the distributed fixpoint
+# free scheduling (the one cost a real cluster multiplies per round),
+# while the driver path's collect + Python union-find costs the same
+# everywhere.
 SMALL_EDGE_LIMIT = 200_000
 
 
@@ -134,7 +135,7 @@ def _union_find_local(spark, pairs: DataFrame, edges: DataFrame) -> DataFrame:
     schema = StructType(
         [StructField("id", id_type), StructField("component", id_type)]
     )
-    # broadcast-hinted (r15): this path is SIZE-GATED (≤ SMALL_EDGE_LIMIT
+    # broadcast-hinted: this path is SIZE-GATED (≤ SMALL_EDGE_LIMIT
     # edges → ≤ 2·limit label rows, the same order as a broadcast join's
     # small side), but the planner only sees an estimate-less local
     # relation and picked a SortMergeJoin for dedup_clusters' label
@@ -269,7 +270,7 @@ def dedup_clusters(pairs: DataFrame, all_ids: DataFrame, id_col: str) -> DataFra
     Ids with no duplicate edge are their own singleton component; the
     canonical member of each component is its minimum id.
 
-    NULL ids are dropped (r14 docs-drift armor): an identity-less row
+    NULL ids are dropped (docs-drift armor): an identity-less row
     can neither be labeled nor be a label, and the family convention
     (paragraph dedup, decontaminate's %-split) is that NULL-keyed docs
     fall out of key-driven operators on both engines. Ids are assumed

@@ -187,7 +187,7 @@ def llm_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The probe is min(vec_id), not a hard-coded 0 — a renumbered
     fixture regen would have degraded the old probe to a vacuous
     0-row green on both engines; asc_nulls_last matches min()'s
-    NULL-skipping (r14 embeddings-drift axis, see llm_sim_topk)."""
+    NULL-skipping (embeddings-drift axis, see llm_sim_topk)."""
     from airflow_jira_etl_spark.functions.similarity import cosine
 
     # rows without an embedding cannot participate in similarity search
@@ -249,7 +249,7 @@ def _py_cos(a: list, b: list) -> float:
     # NO recall floor against the global top-10 is honest at 2/8
     # probes. What IVF does guarantee, on any data distribution, is
     # probed-subset exactness, and Spark self-verifies that claim
-    # WITHOUT leaving the probed partitions (the r07 comparator
+    # WITHOUT leaving the probed partitions (a comparator that
     # re-assigned the whole corpus per run — a full-table scan per
     # probe at scale):
     #   subset_exact  — the pruned search == brute-force top-k over
@@ -306,12 +306,12 @@ def llm_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from airflow_jira_etl_spark.scratch import SCRATCH
 
     # un-embeddable rows cannot be indexed: a NULL vector AND a vector
-    # carrying a NULL (or, since r12, NaN) ELEMENT all cosine to NULL
+    # carrying a NULL (or NaN) ELEMENT all cosine to NULL
     # against every centroid under the guard ladder, so the assignment
     # argmax has no meaning (the stored cluster would be arbitrary and
     # assign_parity's re-argmax could never reproduce it); mirrored in
     # the oracle's probe-id subquery. A NULL vec_id row is equally
-    # un-indexable (r14 NULL-key convention: it cannot be returned as
+    # un-indexable (NULL-key convention: it cannot be returned as
     # an identifiable neighbor, and the driver-resident anchor int()s
     # the id) — min(vec_id) in the oracle skips NULLs natively.
     emb = catalog.load(spark, sf_dir, "embeddings").where(
@@ -559,7 +559,7 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max(n_bytes//4, 1), frame i covers bytes [i*step, i*step+step).
     # The frame payload is emitted as UPPERCASE HEX on both engines —
     # byte-exact, and hashable by every canonicalizer (the driver's
-    # pandas factorize crashes on raw bytearray: r06 ERR) — and slicing
+    # pandas factorize crashes on raw bytearray) — and slicing
     # hex is correct even when a slice lands mid-codepoint (a real
     # media payload has no codepoints; byte boundaries are the
     # contract).
@@ -719,7 +719,7 @@ def llm_dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         vec_norm,
     )
 
-    # per-ROW cosine invariants ride the cached signature pass (r15) —
+    # per-ROW cosine invariants ride the cached signature pass —
     # same hoist as llm_sim_pairs_threshold, see similarity.vec_norm
     sig = emb.where(F.col("embedding").isNotNull()).select(
         "vec_id",
@@ -877,8 +877,7 @@ def llm_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     token array — no explode, no shuffle), and bigrams are built
     in-array with transform(sequence(...)) before the one explode the
     per-doc mode genuinely needs (a global (doc_id, gram) count is a
-    groupBy, not a window sort — round 2's explode + window-lead pass
-    is gone). n_bigrams is size(ws)-1 by construction, so the bigram
+    groupBy, not a window sort — no explode + window-lead pass). n_bigrams is size(ws)-1 by construction, so the bigram
     side only carries max(count). Exact rational arithmetic → full
     cross-engine oracle."""
     docs = catalog.load(spark, sf_dir, "documents")
@@ -930,7 +929,7 @@ def _doc_distinct_grams(
     The tokenize + gram map is CPU-heavy per input byte: repartition
     decouples parallelism from file layout (same rationale as
     ngram_jaccard_pairs). 5-grams are built in-array over the FILTERED
-    token array — round 2's explode + 4× window-lead shuffle is gone.
+    token array — no explode + 4× window-lead shuffle.
     The size(ws) >= 5 guard both keeps sequence() ascending and drops
     <5-word docs, matching the oracle (its out-of-range list index
     NULLs the gram and the IN-filter drops it). Grams are deduped per
@@ -944,7 +943,7 @@ def _doc_distinct_grams(
     REQUIRED when the caller's first action reads grams from two
     subtrees at once (the exact path's one-job eval⋈train join would
     otherwise race both sides into computing the gram pass twice
-    concurrently). The Bloom path passes eager=False (r16): its
+    concurrently). The Bloom path passes eager=False: its
     bitset-sizing ``eval_grams.count()`` necessarily runs BEFORE any
     two-subtree action and already materializes every cached grams
     partition on the way — the extra fill job bought nothing there
@@ -1013,8 +1012,8 @@ def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def exact_decontaminate(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """Operator body — split out so tools/bloom_scale_probe.py can
-    diff the Bloom path against the exact path on replicated corpora."""
+    """Operator body over any (doc_id BIGINT, text STRING, ...) frame —
+    the exact path ``bloom_decontaminate`` is diffed against."""
     grams = _doc_distinct_grams(spark, docs)
     eval_grams = (
         grams.where(F.col("doc_id") % 97 == 0).select("g").distinct()
@@ -1096,32 +1095,6 @@ def _bloom_member_sql(m_bits: int) -> str:
     )
 
 
-def _bloom_member_banded_sql(m_bits: int, bands: int, w_band: int) -> str:
-    """Banded membership — the SAME bit tests as _bloom_member_sql,
-    but the dense bitset is stored as ``bands`` word-range slices
-    (columns bits_0..bits_{bands-1}, band b holding word indices
-    [b·w_band, (b+1)·w_band)). Each probe routes to the one slice its
-    word index falls in via a flat CASE on (w DIV w_band) — still
-    unrolled codegen, no lambdas — so the verdict is BIT-IDENTICAL to
-    the single-array form; banding changes only how the filter is
-    broadcast (N pieces each under the per-broadcast cap), never what
-    it answers. Pinned by tests/test_bloom_banding.py."""
-    tests = []
-    for i in range(_BLOOM_K):
-        w = f"(({_bloom_pos_sql(i, m_bits)}) DIV 64)"
-        arms = " ".join(
-            f"WHEN {b} THEN element_at(bits_{b},"
-            f" CAST({w} - {b * w_band} AS INT) + 1)"
-            for b in range(bands)
-        )
-        tests.append(
-            f"((CASE CAST({w} DIV {w_band} AS INT) {arms} END)"
-            f" & shiftleft(CAST(1 AS BIGINT),"
-            f" CAST(({_bloom_pos_sql(i, m_bits)}) % 64 AS INT))) != 0"
-        )
-    return " AND ".join(tests)
-
-
 @query(
     "llm_decontaminate_bloom",
     oracle="""
@@ -1186,26 +1159,11 @@ def llm_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bloom_decontaminate(spark, docs)
 
 
-def bloom_decontaminate(
-    spark: SparkSession, docs: DataFrame, bands: int = 1
-) -> DataFrame:
-    """Operator body over any (doc_id BIGINT, text STRING, ...) frame —
-    split out so tools/bloom_scale_probe.py can drive it on replicated
+def bloom_decontaminate(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """Operator body over any (doc_id BIGINT, text STRING, ...) frame,
+    so tests can diff it against ``exact_decontaminate`` on replicated
     corpora (see llm_decontaminate_bloom for semantics and the plan
-    narrative).
-
-    ``bands`` is the >2^33-gram degradation path (r15, the PLANS.md
-    promise made code): the dense bitset is built and broadcast as N
-    word-range slices instead of one array, each probe routing to its
-    slice via a flat CASE (see _bloom_member_banded_sql). The verdict
-    is BIT-IDENTICAL at any band count — same m_bits, same hash
-    family, same bits — so the FP analysis is untouched; what banding
-    buys is that no single broadcast piece exceeds the per-broadcast
-    cap when the eval corpus pushes the bitset into the GBs (16 GiB at
-    2^33 grams — 8 bands of 2 GiB each clear Spark's limits). Default
-    bands=1 is exactly the r14 single-array build."""
-    if not 1 <= bands <= 64:
-        raise ValueError(f"bands must be in [1, 64], got {bands}")
+    narrative)."""
     # eager=False: the n_eval sizing count below is this query's first
     # action and fills the shared grams cache itself (see
     # _doc_distinct_grams) — the default eager fill would be a
@@ -1257,42 +1215,24 @@ def bloom_decontaminate(
     )
     dense = "transform(array_sort(collect_list(struct(w, word))), " \
         "e -> coalesce(e.word, CAST(0 AS BIGINT)))"
-    if bands == 1:
-        band_frames = [
-            spark.range(n_words)
-            .select(F.col("id").alias("w"))
-            .join(sparse, "w", "left")
-            .agg(F.expr(dense).alias("bits"))
-        ]
-        member_sql = _bloom_member_sql(m_bits)
-    else:
-        # word-range slices: band b holds [b·w_band, (b+1)·w_band).
-        # The sparse OR-aggregate is shared by every band's densify
-        # join, so cache it (≤ n_words rows — broadcast-sized).
-        w_band = -(-n_words // bands)
-        sparse = sparse.cache()
-        band_frames = [
-            spark.range(b * w_band, min((b + 1) * w_band, n_words))
-            .select(F.col("id").alias("w"))
-            .join(sparse, "w", "left")
-            .agg(F.expr(dense).alias(f"bits_{b}"))
-            for b in range(bands)
-        ]
-        member_sql = _bloom_member_banded_sql(m_bits, bands, w_band)
+    bitset = (
+        spark.range(n_words)
+        .select(F.col("id").alias("w"))
+        .join(sparse, "w", "left")
+        .agg(F.expr(dense).alias("bits"))
+    )
 
     # (2) probe: every train gram tests k bits of the ONE-ROW
     # broadcast bitset (its UnsafeArrayData gives O(1) unboxed
     # element_at — see _bloom_member_sql for why not an F.lit array)
     # with the unrolled codegen predicate; the exact join rides the
     # same pass to flag true matches
-    train = grams.where(F.col("doc_id") % 97 != 0)
-    for bf in band_frames:  # one broadcast per band slice
-        train = train.crossJoin(F.broadcast(bf))
     flagged = (
-        train
+        grams.where(F.col("doc_id") % 97 != 0)
+        .crossJoin(F.broadcast(bitset))
         .withColumn("h1", F.expr(h1_sql))
         .withColumn("h2", F.expr(h2_sql))
-        .withColumn("bloom_hit", F.expr(member_sql))
+        .withColumn("bloom_hit", F.expr(_bloom_member_sql(m_bits)))
         .join(
             eval_grams.withColumn("exact_hit", F.lit(True)), "g", "left"
         )
@@ -1539,8 +1479,8 @@ def llm_quality_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     same map-only pass at 100 TB. The oracle recomputes it the
     relational way (unnest → group → window), pinning the in-array
     lowering against an independent formulation, not just an
-    independent engine. NULL doc_id rows drop on BOTH engines (r14
-    docs-drift armor): the engine's map is row-wise, but the oracle's
+    independent engine. NULL doc_id rows drop on BOTH engines
+    (docs-drift armor): the engine's map is row-wise, but the oracle's
     relational reconstruction needs the key to regroup characters —
     two identity-less docs would merge into one NULL group and score
     garbage, so the differential surface is defined over keyed rows
@@ -1730,17 +1670,16 @@ def llm_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin overflow-free (the INT32-edge doc_ids in the adversarial
     corpus sit at 2^31); the contract is ENFORCED at runtime — the
     encoding raises on the first out-of-range row instead of silently
-    corrupting first-occurrence order (ADVICE r13; see
-    paragraph_dedup and tests/test_paragraph_dedup.py)."""
+    corrupting first-occurrence order (see paragraph_dedup and
+    tests/test_paragraph_dedup.py)."""
     docs = catalog.load(spark, sf_dir, "documents")
     return paragraph_dedup(docs)
 
 
 def paragraph_dedup(docs: DataFrame) -> DataFrame:
-    """Operator body over any (doc_id BIGINT, text STRING, ...) frame —
-    split out so tools/paragraph_scale_probe.py can drive it on
-    replicated corpora (see llm_dedup_paragraph for semantics and the
-    plan narrative)."""
+    """Operator body over any (doc_id BIGINT, text STRING, ...) frame,
+    so tests can drive it on replicated corpora (see
+    llm_dedup_paragraph for semantics and the plan narrative)."""
     # NULL doc_id drops with NULL text (both engines): a document
     # without an identity cannot hold a place in (doc_id, seg_idx)
     # first-occurrence order — and filtering it FIRST keeps the range
@@ -1770,13 +1709,12 @@ def paragraph_dedup(docs: DataFrame) -> DataFrame:
     # predicate in the already-linear segment stage (no extra scan,
     # no extra shuffle) and raises on the FIRST violating row rather
     # than letting encodings collide across doc_ids and silently
-    # reorder first occurrences (ADVICE r13). A >= 2^20 seg_idx means
+    # reorder first occurrences. A >= 2^20 seg_idx means
     # a ~4M-word document — at that point the right fix is widening
     # to a struct argmin, and a loud error is what forces it. The
     # |doc_id| bound is an explicit two-sided compare, NOT abs():
     # under ANSI mode abs(INT64_MIN) raises an overflow error, which
-    # would replace the contract message at that one extreme input
-    # (ADVICE r14).
+    # would replace the contract message at that one extreme input.
     enc = F.when(
         (F.col("seg_idx") < F.lit(1 << 20))
         & (F.col("doc_id") < F.lit(1 << 43))

@@ -229,9 +229,9 @@ def _lsh_band_pairs(
     by doc_id from both callers, so the aggregate needs NO exchange,
     and every (h·a+b) mod p + min combine runs in the JVM aggregate
     path instead of the interpreted higher-order-function evaluator
-    (r16, guide §4.1: one ``array_min(transform(...))`` per seed never
-    enters codegen, so the old form paid 16–18 interpreted array
-    passes per row — measured 2.2× slower on this family). Minima over the
+    (one ``array_min(transform(...))`` per seed never enters codegen,
+    so a per-seed form pays 16–18 interpreted array passes per row —
+    measured 2.2× slower on this family). Minima over the
     distinct set equal minima over the multiset (affine maps are
     elementwise), and the distinct set is what the verify needs anyway.
     The frame is cached and filled EAGERLY because three consumers
@@ -241,7 +241,7 @@ def _lsh_band_pairs(
     candidate traffic: the band self-join carries band_id + n_rows
     minhash longs per row, candidates are deduped before the verify
     re-attach, and no stage is ever all-pairs — growth is bounded by
-    true band collisions (see the 30× probes in tools/scale_probe.py).
+    true band collisions.
 
     NULL-doc note: a NULL document's hs is [NULL] in both callers;
     explode keeps the NULL element and min() skips it, so such a doc
@@ -301,7 +301,7 @@ def _jaccard_verify(cand: DataFrame, tau: float) -> DataFrame:
     pairs at/above τ with their true Jaccard as `j`. h1/h2 are DISTINCT
     sets by construction (_lsh_band_pairs), so |A∪B| = |A|+|B|-|A∩B| —
     the union is pure arithmetic, not a second interpreted array pass
-    over both sets per pair (r16, guide §4.1)."""
+    over both sets per pair."""
     inter = F.size(F.array_intersect("h1", "h2")).cast("double")
     union = (F.size("h1") + F.size("h2")).cast("double") - inter
     j = inter / union
@@ -603,7 +603,7 @@ def llm_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     0-row green on both engines (the crash-prone sibling was fixed the
     same way — see llm_sim_ivf_topk). asc_nulls_last on the probe pick
     mirrors the oracle's min(vec_id), which skips NULL ids — a NULL
-    vec_id row must never become the probe (r14 embeddings-drift axis:
+    vec_id row must never become the probe (embeddings-drift axis:
     Spark's default ASC is NULLS FIRST, and a NULL-id NULL-embedding
     probe silently degrades the whole query to zero rows)."""
     emb = catalog.load(spark, sf_dir, "embeddings")
@@ -755,7 +755,7 @@ def llm_sim_pairs_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize it and the scan + bucket projection runs twice
     # concurrently (same pattern as the minhash band join — PLANS.md
     # documents the 2× race there). The per-ROW cosine invariants
-    # (norm, corrupt flag) ride the same cached pass (r15): hoisting
+    # (norm, corrupt flag) ride the same cached pass: hoisting
     # them out of the per-PAIR expression cuts the interpreted
     # higher-order-function passes per candidate pair from ~7 to 2 —
     # see functions/similarity.vec_norm.
@@ -1011,9 +1011,9 @@ def udf_pandas_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udaf_grouped_agg",
-    # the NaN wrap pins the PANDAS-BRIDGE convention (round 12,
-    # measured): a NaN aggregate value crossing the Arrow transfer
-    # back from a pandas UDAF arrives in Spark as NULL (pandas uses
+    # the NaN wrap pins the PANDAS-BRIDGE convention (measured): a
+    # NaN aggregate value crossing the Arrow transfer back from a
+    # pandas UDAF arrives in Spark as NULL (pandas uses
     # NaN as its missing-value sentinel), while DuckDB's algebraic
     # form keeps NaN — one NaN `value` in a drifted fixture (NaN > 0
     # is TRUE on both engines, so the filter admits it) would
@@ -1058,7 +1058,7 @@ def udaf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udtf_explode_kv",
-    # json_valid gate (r12 JSON-drift sweep): DuckDB's json_keys /
+    # json_valid gate (JSON-drift sweep): DuckDB's json_keys /
     # json_extract_string HARD-ERROR on malformed JSON while the UDTF
     # yields no rows — one corrupt props string in a drifted fixture
     # would crash the oracle. The type check pins the non-object
@@ -1093,7 +1093,7 @@ def udtf_explode_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # malformed JSON or a valid non-object (array/scalar)
                 # contributes NO rows — a drifted fixture with one
                 # corrupt props crashed the whole Python worker here
-                # (r12 JSON-drift sweep); the oracle mirrors with
+                # (JSON-drift sweep); the oracle mirrors with
                 # json_valid + json_type = 'OBJECT'
                 try:
                     obj = json.loads(props)

@@ -233,7 +233,7 @@ def llm_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def reservoir_sample(documents: DataFrame) -> DataFrame:
-    """Operator body — split out so tools/reservoir_scale_probe.py can
+    """Operator body over any documents-shaped frame, so tests can
     drive it on replicated corpora (see llm_reservoir_sample)."""
     from pyspark.sql import Window
 

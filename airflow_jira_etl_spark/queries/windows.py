@@ -477,8 +477,8 @@ def concurrency_points(events: DataFrame) -> DataFrame:
     """The sweep-line point-set: each event's 5-minute half-open
     interval (clipped at its day's end) as +1/-1 endpoint rows in pure
     BIGINT epoch-micros — the SINGLE construction shared by the
-    registered query, the rehearsal test, and tools/rsum_scale_probe,
-    so the three cannot drift apart. Columns: (day_idx, pt_us, delta)."""
+    registered query and its window-form cross-check test, so the two
+    cannot drift apart. Columns: (day_idx, pt_us, delta)."""
     day_us = F.lit(86_400_000_000)
     us = F.unix_micros(F.col("ts"))
     ev = events.select(us.alias("us"))
@@ -561,19 +561,17 @@ def win_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     this fixture, and still only ~36 500 on a century of data while a
     100 TB fact table wants thousands-wide stages. The two-phase form
     keeps every stage at full cluster width regardless of calendar
-    span (adoption rehearsed r09 under
-    ``test_concurrency_sweep_rehearsal_on_running_sum``, swapped r10
-    after the pinned driver row confirmed green twice; the window form
-    remains the test's independent cross-check).
+    span. ``test_concurrency_sweep_rehearsal_on_running_sum`` keeps
+    the window form as an independent cross-check.
 
     ALL arithmetic is BIGINT epoch-microseconds on both engines — the
     single timestamp touchpoint is unix_micros / epoch_ns//1000; day
     bucketing, the 5-minute interval add, and the end-of-day clip are
     pure integer math, and the output day is rebuilt by DATE
     arithmetic from the epoch-day index. No date_trunc, no INTERVAL,
-    no timezone-bearing cast survives (driver hash-reds r05+r06 under
-    two timestamp-typed oracle variants while local stayed green —
-    this removes the entire semantics class). The per-day n_points /
+    no timezone-bearing cast survives: timestamp-typed oracle variants
+    hashed differently on the driver while matching locally, and
+    integer math removes that whole semantics class. The per-day n_points /
     min_pt_us / max_pt_us diagnostics localize any future mismatch to
     point-set vs running-sum."""
     from airflow_jira_etl_spark.operators.ranking import grouped_running_sum

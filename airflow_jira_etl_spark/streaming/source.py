@@ -52,9 +52,8 @@ def _staged_events_dir(sf_dir: str) -> str:
     directory-shaped events.parquet (Spark-style part-file output — a
     layout a future fixture regeneration could ship) must be staged as
     one link per data file; linking the directory itself makes the
-    stream silently read ZERO rows (measured while building the
-    streaming scale probe). Both layouts re-stage whenever the expected
-    link set changes."""
+    stream silently read ZERO rows. Both layouts re-stage whenever the
+    expected link set changes."""
     d = os.path.join(_SCRATCH, "stream_src", _sf_tag(sf_dir))
     os.makedirs(d, exist_ok=True)
     # absolute targets: a RELATIVE sf_dir would store the relative
@@ -153,7 +152,7 @@ def write_event_pages(
     rewrites the table once, so total work is O(n_pages · n), not the
     O(n²/page_size) a fixed-size page would cost. Returns the page
     size (rows per page). Rows with a NULL event_id are dropped — they
-    have no position in the id-derived layout (the r15 NULL entity-key
+    have no position in the id-derived layout (the NULL entity-key
     convention; every consumer's oracle filters event_id IS NOT NULL
     to match — see the in-body comment).
 
@@ -203,7 +202,7 @@ def write_event_pages(
 
     from airflow_jira_etl_spark import catalog
 
-    # NULL-key convention (r15, the entity-key analog of the docs
+    # NULL-key convention (the entity-key analog of the docs
     # corpus's NULL doc_id rule): a row with a NULL event_id has no
     # position in the id-derived page layout — it cannot be paged,
     # cursor-addressed, or upsert-addressed (the reference's unique-key
@@ -303,7 +302,7 @@ STREAM_STATE_PARTITIONS = "4"
 
 def py_stateful_state_partitions(spark) -> str:
     """Shard count for PYTHON-stateful streaming stages
-    (applyInPandasWithState), r15: the per-group update function runs
+    (applyInPandasWithState): the per-group update function runs
     in Python workers, so the stage is compute-bound in Python and its
     wall scales with how many workers run in parallel — unlike the
     JVM stateful operators, where per-shard state-commit fixed cost
@@ -314,7 +313,7 @@ def py_stateful_state_partitions(spark) -> str:
     local[$SPARK_GRAFT_CPUS] here and executor slots on a cluster),
     never below the state default — the driver's low-core bench runs
     keep the old shard count. The // 4 divisor means the count only
-    rises above the default of 4 past 16 cores (ADVICE r15): that is
+    rises above the default of 4 past 16 cores: that is
     deliberate — the measured win is at 32 cores, 16 shards measured
     flat-to-worse there, and 8-16-core sessions keeping the default is
     exactly the behavior the low-core bench validated; a gentler

@@ -7,8 +7,8 @@ Usage::
         [sf_dir] [mult] [out.json] [shuffle_partitions]
 
 (default sf0.1, 4×). The optional 4th arg forces MULTI-WAVE
-scheduling (r15): local[32] at the default 32 shuffle partitions runs
-every shuffle in one wave, which hides the skew-at-shuffle effects a
+scheduling: local[32] at the default 32 shuffle partitions runs every
+shuffle in one wave, which hides the skew-at-shuffle effects a
 1000-executor cluster sees — one straggling partition stalls a whole
 wave there. Passing e.g. 256 sets spark.sql.shuffle.partitions=256
 AND drops the AQE advisory partition size to 1 MB; the advisory drop
@@ -16,15 +16,18 @@ matters because at sweep data volumes AQE's coalescer would otherwise
 merge 256 small partitions straight back to one wave — on a real
 cluster the data (not a conf) keeps partition counts high, and a tiny
 advisory emulates exactly that data≫advisory regime while keeping
-AQE (including its skew-join splitter) active, the production config. Round-14 origin: the Bloom decontamination
-operator shipped oracle-green, plan-lint-green and bench-flat while
-hiding TWO scale-killers (interpreted lambda probes; an O(n²)
-map-lookup densification) that only a replicated-corpus TIMING run
-exposed. Per-family probes assert exact invariants for the operators
-they cover; this sweep is the coarse net for everything else — the
+AQE (including its skew-join splitter) active, the production config.
+
+Why a timing sweep: an operator can be oracle-green, plan-lint-green
+and bench-flat while hiding a scale-killer (the Bloom decontamination
+operator once hid interpreted lambda probes and an O(n²) map-lookup
+densification) that only a replicated-corpus timing run exposes. The
 per-unit wall ratio wall(mult×) / (wall(1×) · mult) should sit at or
 below ~1 for any operator whose work is ∝ input rows, and a large
-ratio is the same smell the Bloom autopsy started from.
+ratio is the smell to bisect. Exact invariants under replication
+(Bloom vs exact, reservoir cap, paragraph survivors, SCD2 forms) live
+in the tests, which drive the operators on ``replicate_with_stride``
+output directly.
 
 Fixture construction (build_scaled: every row-scaling table
 replicates, so the queries run UNCHANGED via catalog.load):
@@ -35,18 +38,16 @@ symlink. Replica content is IDENTICAL — which is exactly why the
 pair-emitting similarity/dedup families are SKIPPED here: under
 identical replicas their candidate space grows ∝ mult² BY DESIGN
 (every replica pairs with every other), so a wall blow-up is the
-correct answer, not a defect. Each of those families has its own
-invariant-checked probe (scale_probe, components_scale_probe,
-paragraph/bloom probes, hp-adaptive-bits geometry) — the skip list
-below names the probe that covers each skipped query.
+correct answer, not a defect. The skip list below names the tests
+that pin each skipped query's output; no tool measures their wall
+growth.
 
-Reading the report: ratios are single-pass walls on a shared-host
-local[32]; treat < ~1.5 as linear-ish noise, and investigate anything
-above that WITH a repro before calling it a regression (the Bloom
-workflow: bisect the operator body stage by stage at the same
-multiple). Queries with sub-second walls at both scales are reported
-but never flagged — their ratios are dominated by job-scheduling
-constants.
+Reading the report: ratios are single-pass walls on a shared host;
+treat < ~1.5 as linear-ish noise, and investigate anything above that
+WITH a repro before calling it a regression (bisect the operator body
+stage by stage at the same multiple). Queries with sub-second walls at
+both scales are reported but never flagged — their ratios are
+dominated by job-scheduling constants.
 """
 
 from __future__ import annotations
@@ -65,17 +66,28 @@ from airflow_jira_etl_spark.tools.replication import (
     replicate_with_stride,
 )
 
-# query -> the invariant-checked probe that owns its scale story
+# query -> why its output grows ∝ mult² here, and the tests that pin it
 SKIP_OUTPUT_BOUND = {
-    "llm_dedup_minhash": "tools/scale_probe.py (candidate pruning)",
-    "llm_dedup_simhash": "tools/scale_probe.py (bucket pair space)",
-    "llm_dedup_ngram_jaccard": "tools/scale_probe.py (banded pairs)",
-    "llm_containment_pairs": "tools/scale_probe.py (shared candidates)",
-    "llm_sim_pairs_threshold": "blocked self-join; pair space ∝ mult²",
-    "llm_sim_lsh_topk": "hyperplane buckets; test_hp_adaptive_bits",
-    "llm_dedup_clusters": "tools/components_scale_probe.py",
-    "llm_dedup_semantic_clusters": "tools/components_scale_probe.py",
-    "join_self_dedup_pairs": "within-bucket self-join pair space",
+    "llm_dedup_minhash": "band-join candidates; "
+    "test_minhash_finds_planted_near_dups, "
+    "test_minhash_portable_parity_on_generated_corpus",
+    "llm_dedup_simhash": "bucket pair space; "
+    "test_oracle_match[llm_dedup_simhash]",
+    "llm_dedup_ngram_jaccard": "banded pairs; "
+    "test_ngram_jaccard_finds_distant_id_near_dups, "
+    "test_ngram_jaccard_parity_on_generated_corpus",
+    "llm_containment_pairs": "shared MinHash candidates; "
+    "test_oracle_match[llm_containment_pairs]",
+    "llm_sim_pairs_threshold": "blocked self-join; "
+    "test_pairs_threshold_hash_matches_above_4096",
+    "llm_sim_lsh_topk": "hyperplane buckets; "
+    "test_hyperplane_bucket_blocks_by_similarity_not_id",
+    "llm_dedup_clusters": "pair edges into components; "
+    "test_connected_components_distributed_path_matches_local",
+    "llm_dedup_semantic_clusters": "pair edges into components; "
+    "test_semantic_clusters_hash_matches_above_4096",
+    "join_self_dedup_pairs": "within-bucket self-join; "
+    "test_oracle_match[join_self_dedup_pairs]",
 }
 
 # thresholds for flagging (see module docstring)

@@ -1,10 +1,7 @@
-"""Banded Bloom decontamination (r15): the >2^33-gram degradation
-path — the bitset built and broadcast as N word-range slices — must be
-BIT-IDENTICAL in verdicts to the r14 single-array form at any band
-count, including a band count that does not divide the word count
-(uneven last slice). Identity, not similarity: same m_bits, same hash
-family, same bits — banding changes only how the filter ships, so the
-FP analysis carries over unchanged."""
+"""Bloom decontamination on the sf0.001 fixture: the one-bitset build's
+matched-gram counts must equal the exact path's, so the Bloom query's
+n_matched_grams column is grounded on real fixture data as well as on
+the planted-leak corpus of tests/test_bloom_decontaminate.py."""
 
 from __future__ import annotations
 
@@ -17,53 +14,27 @@ registry.load_all_queries()
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _run(spark, bands: int):
+@pytest.fixture(scope="module")
+def bloom_rows(spark):
     from airflow_jira_etl_spark.queries.llm_extras import bloom_decontaminate
 
     docs = catalog.load(spark, SF_DIR, "documents")
-    rows = bloom_decontaminate(spark, docs, bands=bands).collect()
     return sorted(
         (r.doc_id, r.n_matched_grams, r.no_false_negatives, r.fp_rate_ok)
-        for r in rows
+        for r in bloom_decontaminate(spark, docs).collect()
     )
 
 
-@pytest.fixture(scope="module")
-def single_band(spark):
-    return _run(spark, 1)
-
-
-@pytest.mark.parametrize("bands", [2, 3, 8])
-def test_banded_equals_single_band(spark, single_band, bands):
-    """The fixture's bitset is 256+ words; bands=3 leaves an uneven
-    last slice, bands=8 exercises deep CASE routing — every variant
-    must reproduce the single-array output row-for-row, with the
-    contract booleans (no_false_negatives, fp_rate_ok) TRUE
-    throughout."""
-    got = _run(spark, bands)
-    assert got == single_band
-    assert got, "fixture must actually have contaminated docs"
-    assert all(r[2] and r[3] for r in got)
-
-
-def test_single_band_matches_exact_oracle_contract(spark, single_band):
-    """Ground the comparison baseline itself: the single-band output's
-    matched-gram counts equal the exact unhinted join's
-    (llm_decontaminate's body is the semantic anchor both forms hang
-    off)."""
+def test_single_band_matches_exact_oracle_contract(spark, bloom_rows):
+    """The Bloom output's matched-gram counts equal the exact unhinted
+    join's (llm_decontaminate's body is the semantic anchor), with the
+    contract booleans TRUE on every row."""
     exact = {
         (r.doc_id, r.n_matched_grams)
         for r in registry.QUERIES["llm_decontaminate"](
             spark, SF_DIR
         ).collect()
     }
-    assert {(d, n) for d, n, _nf, _fp in single_band} == exact
-
-
-def test_bands_validation(spark):
-    from airflow_jira_etl_spark.queries.llm_extras import bloom_decontaminate
-
-    docs = catalog.load(spark, SF_DIR, "documents")
-    for bad in (0, -1, 65):
-        with pytest.raises(ValueError, match="bands"):
-            bloom_decontaminate(spark, docs, bands=bad)
+    assert bloom_rows, "fixture must actually have contaminated docs"
+    assert {(d, n) for d, n, _nf, _fp in bloom_rows} == exact
+    assert all(nf and fp for _d, _n, nf, fp in bloom_rows)

@@ -6,8 +6,9 @@ geometry, agreement with the exact path, and the empty-eval edge."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
-from airflow_jira_etl_spark import registry
+from airflow_jira_etl_spark import catalog, registry
 from airflow_jira_etl_spark.queries.llm_extras import (
     _BLOOM_FP_BOUND,
     _BLOOM_K,
@@ -15,6 +16,12 @@ from airflow_jira_etl_spark.queries.llm_extras import (
     _bloom_hash_cols,
     _bloom_member_sql,
     _bloom_positions_sql,
+    bloom_decontaminate,
+    exact_decontaminate,
+)
+from airflow_jira_etl_spark.tools.replication import (
+    key_stride,
+    replicate_with_stride,
 )
 from tests.docsfix import write_docs_fixture
 from tests.oracle_check import compare, duckdb_conn
@@ -110,7 +117,6 @@ def test_bitset_geometry_no_false_negatives_and_fp_bound(spark):
         m_bits <<= 1
     n_words = m_bits // 64
 
-    from pyspark.sql import functions as F
 
     h1_sql, h2_sql = _bloom_hash_cols(m_bits)
     members = spark.range(n).select(
@@ -163,9 +169,40 @@ def test_bitset_geometry_no_false_negatives_and_fp_bound(spark):
     assert _BLOOM_K == 7  # geometry the bound was derived for
 
 
-def test_bloom_scale_probe_smoke(spark, sf_dir):
-    """The probe (tools/bloom_scale_probe) must run end-to-end at a
-    tiny scale and report zero diff vs the exact path."""
-    from airflow_jira_etl_spark.tools.bloom_scale_probe import main
-
-    assert main(["bloom_scale_probe", sf_dir, "1,2"]) == 0
+def test_bloom_matches_exact_under_replication(spark, sf_dir):
+    """At 1× and 2× replication: replicas keep their text but get
+    strided doc_ids, so each multiple has a different eval slice
+    (doc_id % 97 re-scatters per replica) and the operator re-sizes its
+    bitset. The Bloom path's (doc_id, n_matched_grams) set must equal
+    the exact path's — a per-gram false positive is the sketch's
+    contract, but the output counts are exact, so any drift means the
+    shared gram builder or the sizing rule broke — and both contract
+    booleans must hold on every row."""
+    docs = catalog.load(spark, sf_dir, "documents").select("doc_id", "text")
+    stride = key_stride(docs, "doc_id")
+    for mult in (1, 2):
+        corpus = replicate_with_stride(docs, "doc_id", mult, stride)
+        bloom = bloom_decontaminate(spark, corpus)
+        exact = exact_decontaminate(spark, corpus)
+        diff = (
+            bloom.select("doc_id", "n_matched_grams")
+            .join(
+                exact.withColumnRenamed("n_matched_grams", "exact_cnt"),
+                "doc_id",
+                "full_outer",
+            )
+            .where(
+                F.col("n_matched_grams").isNull()
+                | F.col("exact_cnt").isNull()
+                | (F.col("n_matched_grams") != F.col("exact_cnt"))
+            )
+            .count()
+        )
+        assert diff == 0, f"bloom vs exact diff at {mult}x"
+        contract = bloom.agg(
+            F.count("*").alias("rows"),
+            F.min("no_false_negatives").alias("nfn"),
+            F.min("fp_rate_ok").alias("fp"),
+        ).first()
+        assert contract["rows"] > 0, "fixture must have contaminated docs"
+        assert contract["nfn"] and contract["fp"], f"contract at {mult}x"

@@ -44,3 +44,12 @@ def test_tz_aware_oracle_fails_locally(con):
     assert rows[0][0].tzinfo is not None  # precondition: DuckDB gives tz-aware
     with pytest.raises(TypeError, match="tz-aware"):
         canon_rows(["t"], rows)
+
+
+def test_every_registered_query_has_an_oracle():
+    """The driver has no rows-only mode (it records err=no_oracle), so
+    an oracle-less registration would silently forfeit its correctness
+    evidence. Engine-specific outputs belong behind a boolean-contract
+    oracle (see agg_approx_distinct / llm_sim_ivf_topk), not behind a
+    missing one."""
+    assert not ROWS_ONLY, f"queries without a SQL oracle: {ROWS_ONLY}"

@@ -24,6 +24,35 @@ def test_exact_twin_reassembles_to_empty(spark):
     assert out[2].clean_text == ""
 
 
+def test_replication_keeps_survivors_and_doubles_segments(spark, sf_dir):
+    """The fixture replicated 2× with identical text and strided
+    doc_ids: every replica-1 segment loses the first-occurrence race to
+    its replica-0 twin, so sum(n_kept) equals the 1× value while
+    sum(n_segs) exactly doubles. A drift means the argmin tie-break
+    leaked across replicas (the encoded-BIGINT ordering broke)."""
+    from pyspark.sql import functions as F
+
+    from airflow_jira_etl_spark import catalog
+    from airflow_jira_etl_spark.tools.replication import (
+        key_stride,
+        replicate_with_stride,
+    )
+
+    docs = catalog.load(spark, sf_dir, "documents").select("doc_id", "text")
+    stride = key_stride(docs, "doc_id")
+    kept, segs = zip(
+        *(
+            paragraph_dedup(replicate_with_stride(docs, "doc_id", m, stride))
+            .agg(F.sum("n_kept"), F.sum("n_segs"))
+            .first()
+            for m in (1, 2)
+        )
+    )
+    assert kept[0] > 0
+    assert kept[1] == kept[0]
+    assert segs[1] == 2 * segs[0]
+
+
 def test_first_occurrence_is_doc_then_segment_order(spark):
     """A segment seen twice WITHIN one doc keeps its first position;
     across docs the lower doc_id wins regardless of segment index."""
@@ -67,13 +96,13 @@ def test_int32_edge_doc_id_keeps_encoded_argmin_exact(spark):
 
 
 def test_encoding_contract_is_runtime_enforced(spark):
-    """ADVICE r13: |doc_id| >= 2^43 (and seg_idx >= 2^20) must RAISE,
-    not silently collide encodings across doc_ids. The guard lives
-    inside the encoding expression, so any consumer path trips it."""
+    """|doc_id| >= 2^43 (and seg_idx >= 2^20) must RAISE, not silently
+    collide encodings across doc_ids. The guard lives inside the
+    encoding expression, so any consumer path trips it."""
     import pytest
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
-    # INT64_MIN is the ADVICE-r14 edge: the guard compares the range
+    # INT64_MIN is the edge case: the guard compares the range
     # explicitly instead of abs(), so the extreme still raises the
     # CONTRACT message, not an ANSI abs() overflow error.
     for bad_doc in (1 << 43, -(1 << 43), -(1 << 63)):

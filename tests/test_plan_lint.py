@@ -12,10 +12,10 @@ Three anti-patterns are linted:
   pay the per-row Python round-trip; everything else must stay JVM or
   Arrow-batched.
 - un-partitioned ``Window`` — a Window node with an empty partition
-  spec serializes its entire input through ONE task. Since round 9 the
-  fact-scale global ranks go through the distributed two-phase ranker
-  (operators/ranking.py); since round 13 the allowlist is EMPTY — the
-  last survivor (report_monthly_growth's |months| lag) now partitions
+  spec serializes its entire input through ONE task. The fact-scale
+  global ranks go through the distributed two-phase ranker
+  (operators/ranking.py), and the allowlist is EMPTY — the last
+  survivor (report_monthly_growth's |months| lag) now partitions
   on (month IS NULL), which both isolates the NULL bucket from the
   chain and clears the lint. Node format: ``Window [funcs],
   [partSpec], [orderSpec]`` — two top-level bracket groups instead of
@@ -44,9 +44,9 @@ registry.load_all_queries()
 
 _EXCLUDED_PREFIXES = ("stream_", "sink_", "source_", "mv_", "cdc_")
 _ROW_UDF_ALLOWED = {"udf_python_scalar", "udtf_explode_kv"}
-# empty since round 13 (report_monthly_growth's |months| lag now
-# partitions on (month IS NULL)); a future entry needs an
-# output-sized-frame justification reviewed in PLANS.md
+# empty (report_monthly_growth's |months| lag partitions on
+# (month IS NULL)); a future entry needs an output-sized-frame
+# justification reviewed in PLANS.md
 _GLOBAL_WINDOW_ALLOWED: set[str] = set()
 
 
@@ -104,13 +104,13 @@ def test_no_scale_antipatterns_in_plan(name, spark, sf_dir):
 
 
 def test_no_bare_persist_in_engine_source():
-    """Source lint (round 11): `.persist(` is BANNED in engine source.
+    """Source lint: `.persist(` is BANNED in engine source.
     Twice this engine shipped a two-pass operator whose driver-side
     bookkeeping silently desynced from a RECOMPUTED second pass — a
     persisted frame recomputes through its (re-sampling or
     nondeterministic) lineage on block loss or cache clearing, which is
     exactly when the bookkeeping's coordinates stop describing the data
-    (operators/ranking.py round 11, sinks/parquet_upsert.py round 11).
+    (operators/ranking.py, sinks/parquet_upsert.py).
     Cross-pass materialization must use localCheckpoint (lineage
     truncation: recompute impossible, loss loud). Read-once `.cache()`
     over DETERMINISTIC expressions remains fine and is not linted; a
@@ -188,3 +188,33 @@ def test_every_operator_module_has_a_package_importer():
     assert not orphans, (
         f"operators with no importer in the package outside tools/: {orphans}"
     )
+
+
+def test_every_tools_reference_names_an_existing_module():
+    """Source lint: every ``tools/<name>.py`` or ``tools.<name>``
+    reference in package source, tests and README.md must name a module
+    that exists under the package's tools/ directory. A deleted tool
+    otherwise lives on in usage lines, docstrings and skip reasons that
+    point readers at code that is gone."""
+    import os
+    import re
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tools_dir = os.path.join(repo, "airflow_jira_etl_spark", "tools")
+    modules = {fn[:-3] for fn in os.listdir(tools_dir) if fn.endswith(".py")}
+    ref = re.compile(r"\btools[/.](\w+)")
+    paths = [os.path.join(repo, "README.md")]
+    for sub in ("airflow_jira_etl_spark", "tests"):
+        for dirpath, _, files in os.walk(os.path.join(repo, sub)):
+            paths += [
+                os.path.join(dirpath, f) for f in files if f.endswith(".py")
+            ]
+    stale = []
+    for path in paths:
+        with open(path, encoding="utf-8") as f:
+            for i, line in enumerate(f, 1):
+                for name in ref.findall(line):
+                    if name not in modules:
+                        rel = os.path.relpath(path, repo)
+                        stale.append(f"{rel}:{i}: tools/{name}")
+    assert not stale, f"references to missing tools modules: {stale}"

@@ -283,38 +283,14 @@ def test_grouped_forms_handle_nan_group_keys(spark):
     assert got_s == want_s
 
 
-def test_ivf_scale_probe_smoke(spark, sf_dir):
-    """The IVF scale probe (tools/ivf_scale_probe) must run end-to-end
-    at sf0.001 — it is the evidence artifact behind the PLANS.md claim
-    that warm search cost tracks the probed directories, not the
-    corpus."""
-    from airflow_jira_etl_spark.tools.ivf_scale_probe import main
-
-    assert main(["ivf_scale_probe", sf_dir, "1"]) == 0
-
-
-def test_rsum_scale_probe_smoke(spark, sf_dir):
-    """The running-sum scale probe (tools/rsum_scale_probe) must run
-    end-to-end at sf0.001 on BOTH axes — points-per-day multiples and
-    the round-11 growing-|days| axis: the two forms (registered window
-    shape vs grouped_running_sum) are equality-asserted per multiple
-    inside main(), so a green exit IS the at-scale equivalence check
-    (including that the hash-assigned day-block shift preserves
-    per-day semantics)."""
-    from airflow_jira_etl_spark.tools.rsum_scale_probe import main
-
-    assert main(["rsum_scale_probe", sf_dir, "1,2", "1,3"]) == 0
-
-
 def test_concurrency_sweep_rehearsal_on_running_sum(spark, sf_dir):
-    """Cross-check for the r10 swap: win_concurrency_sweep is now
-    REGISTERED on grouped_running_sum (the distributed form that
-    removed the |days|-cardinality window partition — adopted after
-    the r08/r09 pinned driver rows confirmed green twice). This test
-    keeps the ORIGINAL ``PARTITION BY day_idx`` window formulation as
-    the independent reference plan and asserts exact output equality
-    on the real events fixture, so any drift between the two-phase
-    prefix sum and plain window semantics fails here first."""
+    """win_concurrency_sweep is REGISTERED on grouped_running_sum (the
+    distributed form that removed the |days|-cardinality window
+    partition). This test keeps the ORIGINAL ``PARTITION BY day_idx``
+    window formulation as the independent reference plan and asserts
+    exact output equality on the real events fixture, so any drift
+    between the two-phase prefix sum and plain window semantics fails
+    here first."""
     from pyspark.sql import Window
 
     from airflow_jira_etl_spark import catalog
@@ -325,7 +301,7 @@ def test_concurrency_sweep_rehearsal_on_running_sum(spark, sf_dir):
 
     events = catalog.load(spark, sf_dir, "events")
     pts = concurrency_points(events)
-    # the pre-swap registered plan: per-day window running sum
+    # the window form: per-day window running sum
     w = (
         Window.partitionBy("day_idx")
         .orderBy("pt_us", "delta")

@@ -1,8 +1,8 @@
 """Unit gate for tools/replication.py — the stride-offset self-union
-both scale probes build on. The invariant that matters: replica key
-spaces are DISJOINT (collisions would silently merge rows and corrupt
-every probe's pair/row counts) and foreign-key structure survives when
-two tables share one stride."""
+that registry_scale_sweep and the replication tests build on. The
+invariant that matters: replica key spaces are DISJOINT (collisions
+would silently merge rows and corrupt every checked pair/row count) and
+foreign-key structure survives when two tables share one stride."""
 
 from __future__ import annotations
 
@@ -36,19 +36,3 @@ def test_shared_stride_preserves_foreign_keys(spark):
     assert orphans == 0
     assert c4.count() == 120 and p4.count() == 40
 
-
-def test_transform_applies_per_replica(spark):
-    from pyspark.sql import functions as F
-
-    df = spark.range(0, 5).select(F.col("id").alias("k"))
-    out = replicate_with_stride(
-        df,
-        "k",
-        3,
-        key_stride(df, "k"),
-        transform=lambda d, r: d.withColumn("tag", F.lit(r)),
-    )
-    tags = {r.tag for r in out.collect()}
-    assert tags == {0, 1, 2}
-    # replica tag always matches the key's stride band
-    assert all(r.k // 5 == r.tag for r in out.collect())

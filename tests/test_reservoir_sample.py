@@ -123,9 +123,60 @@ def test_weight_preference_is_monotone(spark, tmp_path):
         assert r.priority <= _py_priority(r.doc_id, 1)
 
 
-def test_reservoir_scale_probe_smoke(spark, sf_dir):
-    """The probe (tools/reservoir_scale_probe) must run end-to-end at
-    a tiny scale with the cap and displacement checks green."""
-    from airflow_jira_etl_spark.tools.reservoir_scale_probe import main
+def test_cap_and_displacement_hold_under_replication(spark, sf_dir):
+    """The fixture at 1× and 2× replication with strided doc_ids (fresh
+    hash draws per replica): every language holds exactly
+    min(k, group size) rows with rn a dense 1..cap prefix, and the
+    base-replica documents (doc_id < stride) still selected at 2× are a
+    SUBSET of the 1× selection — growth only pushes members off the
+    boundary, never admits a base doc that was not already in."""
+    from pyspark.sql import functions as F
 
-    assert main(["reservoir_scale_probe", sf_dir, "1,2"]) == 0
+    from airflow_jira_etl_spark import catalog
+    from airflow_jira_etl_spark.queries.sampling import reservoir_sample
+    from airflow_jira_etl_spark.tools.replication import (
+        key_stride,
+        replicate_with_stride,
+    )
+
+    docs = catalog.load(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "n_chars"
+    )
+    stride = key_stride(docs, "doc_id")
+    picked = {}
+    for mult in (1, 2):
+        corpus = replicate_with_stride(docs, "doc_id", mult, stride)
+        sample = reservoir_sample(corpus)
+        # NULL lang is a real reservoir group, so the join is null-safe
+        # and the counters are coalesced to distinct sentinels: a group
+        # present on one side only counts as a violation instead of
+        # nulling the predicate
+        want = corpus.groupBy("lang").agg(F.count("*").alias("n"))
+        got = sample.groupBy(F.col("lang").alias("s_lang")).agg(
+            F.count("*").alias("got"), F.max("rn").alias("max_rn")
+        )
+        bad = (
+            want.join(
+                got, F.col("lang").eqNullSafe(F.col("s_lang")), "full_outer"
+            )
+            .where(
+                (
+                    F.coalesce(F.col("got"), F.lit(-1))
+                    != F.least(
+                        F.coalesce(F.col("n"), F.lit(-2)),
+                        F.lit(_RESERVOIR_K),
+                    )
+                )
+                | (
+                    F.coalesce(F.col("max_rn"), F.lit(-1))
+                    != F.coalesce(F.col("got"), F.lit(-2))
+                )
+            )
+            .count()
+        )
+        assert bad == 0, f"cap violated at {mult}x"
+        picked[mult] = {
+            (r.lang, r.doc_id)
+            for r in sample.where(F.col("doc_id") < stride).collect()
+        }
+    assert picked[1] and picked[2] <= picked[1]

@@ -5,12 +5,19 @@ broadcast-join plan shape."""
 from __future__ import annotations
 
 import datetime
+from functools import reduce
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from airflow_jira_etl_spark.operators.scd2 import scd2_merge
+from airflow_jira_etl_spark.operators.scd2 import VERSION_COLS, scd2_merge
+from airflow_jira_etl_spark.operators.upsert import upsert
+from airflow_jira_etl_spark.tools.replication import (
+    key_stride,
+    replicate_with_stride,
+)
 
 D = datetime.date
 
@@ -210,10 +217,6 @@ def test_scd2_rejects_empty_attrs(spark):
     """attrs=[] has nothing to diff — no change could ever close or
     open a version. The old code crashed in reduce() with an opaque
     TypeError; the contract error must name the requirement."""
-    import pytest
-
-    from airflow_jira_etl_spark.operators.scd2 import scd2_merge
-
     dim = spark.createDataFrame(
         [(1, "2020-01-01", None, True)],
         "k long, valid_from string, valid_to string, is_current boolean",
@@ -293,7 +296,7 @@ def test_scd2_duplicate_keys_last_writer_identical_is_noop(spark):
 
 
 def test_scd2_duplicate_keys_null_diff_both_paths(spark):
-    """The verdict-r11 combined attack: duplicates + NULL attribute
+    """The combined attack: duplicates + NULL attribute
     diffs across BOTH scan paths in one batch. k=1 exists with seg
     NULL and the last duplicate re-sends NULL (null-safe no-op even
     though the earlier duplicate differed); k=2 is brand-new with a
@@ -319,8 +322,6 @@ def test_scd2_rejects_malformed_effective_date(spark):
     contract named: under ANSI it otherwise surfaces as a generic cast
     error mid-execution, and with ANSI disabled it casts to NULL —
     closed rows get valid_to=NULL, silently corrupting history."""
-    import pytest
-
     dim = _dim(spark, [(1, "A", D(2024, 1, 1), None, True)])
     ch = _ch(spark, [(1, "B")])
     with pytest.raises(ValueError, match="YYYY-MM-DD"):
@@ -334,8 +335,6 @@ def test_scd2_rejects_helper_column_collision(spark):
     __in_upd) would ambiguate or shadow the diff columns — the raw
     failure is an AMBIGUOUS_REFERENCE deep in analysis; the guard
     names the actual problem."""
-    import pytest
-
     dim = _dim(spark, [(1, "A", D(2024, 1, 1), None, True)])
     ch = _ch(spark, [(1, "B")])
     with pytest.raises(ValueError, match="collide"):
@@ -421,41 +420,115 @@ def test_scd2_history_key_resent_in_batch_stays_inert(spark):
     assert cur[0].valid_from == D(2024, 6, 1)
 
 
-def test_scd2_scale_probe_smoke(spark):
-    """The probe (tools/scd2_scale_probe) must run end-to-end at a
-    small multiple, agree between the two merge forms, and show the
-    plan contrast its PLANS numbers rest on. The contrast is asserted
-    under autoBroadcastJoinThreshold=-1 — the cluster-scale statistics
+def _full_outer_merge(dim, changes, key, attrs, effective):
+    """Reference implementation: the retired single full-outer-join
+    merge. Spark ignores broadcast hints on a full outer join
+    (BroadcastHashJoin does not support that join type), so this form
+    shuffles and sorts the whole dimension per merge; scd2_merge
+    composes broadcast-supported shapes instead."""
+    eff = F.lit(effective).cast("date")
+    cur = dim.where(F.col("is_current").eqNullSafe(F.lit(True))).withColumn(
+        "__in_dim", F.lit(True)
+    )
+    hist = dim.where(~F.col("is_current").eqNullSafe(F.lit(True)))
+    deduped = upsert(changes.limit(0), changes, key)
+    upd = deduped.select(
+        F.col(key),
+        *[F.col(a).alias(f"__u_{a}") for a in attrs],
+        F.lit(True).alias("__in_upd"),
+    )
+    j = cur.join(F.broadcast(upd), on=key, how="full_outer")
+    in_dim = F.col("__in_dim").isNotNull()
+    in_upd = F.col("__in_upd").isNotNull()
+    differs = reduce(
+        lambda a, b: a | b,
+        [~F.col(a).eqNullSafe(F.col(f"__u_{a}")) for a in attrs],
+    )
+    changed = in_dim & in_upd & differs
+    passthrough = j.where(in_dim & ~changed).select(key, *attrs, *VERSION_COLS)
+    closed = j.where(changed & in_dim).select(
+        key, *attrs, "valid_from", eff.alias("valid_to"),
+        F.lit(False).alias("is_current"),
+    )
+    opened = j.where(in_upd & (~in_dim | differs)).select(
+        key,
+        *[F.col(f"__u_{a}").alias(a) for a in attrs],
+        eff.alias("valid_from"),
+        F.lit(None).cast("date").alias("valid_to"),
+        F.lit(True).alias("is_current"),
+    )
+    return (
+        hist.select(key, *attrs, *VERSION_COLS)
+        .unionByName(passthrough)
+        .unionByName(closed)
+        .unionByName(opened)
+    )
+
+
+def _summary(df):
+    """Order-free digest: row count and checksum per (is_current,
+    valid_to-nullness) class."""
+    return sorted(
+        tuple(r)
+        for r in df.groupBy("is_current", F.col("valid_to").isNull())
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.hash("k", "attr", "valid_from").cast("long")).alias("chk"),
+        )
+        .collect()
+    )
+
+
+def test_broadcast_merge_equals_full_outer_form_under_replication(spark):
+    """A 25k-row dimension at 1× and 2× replication (strided keys),
+    merged with 1 000 updates to existing keys and 1 000 brand-new
+    keys: both merge forms must agree. The plan contrast is asserted
+    under autoBroadcastJoinThreshold=-1, the cluster-scale statistics
     where the dimension is too big for AQE to volunteer a broadcast:
-    the rewritten form's EXPLICIT hints survive the disabled threshold
-    (its join shapes support broadcast), while the retired full-outer
-    form's ignored hint leaves at least one dimension-side
-    SortMergeJoin. (At tiny row counts with the threshold on, Catalyst
-    eliminates the outer join per filtered branch and broadcasts
-    everything, so the contrast only shows under the scale confs.)"""
-    from airflow_jira_etl_spark.operators.scd2 import scd2_merge
-    from airflow_jira_etl_spark.tools import scd2_scale_probe as P
-
-    dim = P.build_dim(spark, 1).limit(50_000)
-    changes = P.build_changes(spark, 1)
-
-    bc = scd2_merge(dim, changes, "k", ["attr"], P.EFFECTIVE)
-    fo = P.full_outer_merge(dim, changes, "k", ["attr"], P.EFFECTIVE)
-    assert P._summary(bc) == P._summary(fo)
-
+    scd2_merge's explicit hints survive (its join shapes support
+    broadcast), while the full-outer form's ignored hint leaves at
+    least one dimension-side SortMergeJoin. (At tiny row counts with
+    the threshold on, Catalyst eliminates the outer join per filtered
+    branch and broadcasts everything.)"""
+    base = spark.range(25_000).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 97).cast("string").alias("attr"),
+        F.lit("2020-01-01").cast("date").alias("valid_from"),
+        F.lit(None).cast("date").alias("valid_to"),
+        F.lit(True).alias("is_current"),
+    )
+    stride = key_stride(base, "k")
+    eff = "2024-06-01"
     key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "-1")
-        bc_plan = (
-            scd2_merge(dim, changes, "k", ["attr"], P.EFFECTIVE)
-            ._jdf.queryExecution().executedPlan().toString()
+    for mult in (1, 2):
+        dim = replicate_with_stride(base, "k", mult, stride)
+        n = stride * mult
+        changes = spark.range(1_000).select(
+            (F.col("id") * (n // 1_000)).alias("k"),
+            F.lit("changed").alias("attr"),
+        ).unionByName(
+            spark.range(1_000).select(
+                (F.col("id") + n).alias("k"), F.lit("brand-new").alias("attr")
+            )
         )
-        fo_plan = (
-            P.full_outer_merge(dim, changes, "k", ["attr"], P.EFFECTIVE)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        spark.conf.set(key, old)
-    assert "SortMergeJoin" not in bc_plan and "BroadcastHashJoin" in bc_plan
-    assert "SortMergeJoin" in fo_plan
+
+        def merges():
+            return (
+                scd2_merge(dim, changes, "k", ["attr"], eff),
+                _full_outer_merge(dim, changes, "k", ["attr"], eff),
+            )
+
+        bc, fo = merges()
+        assert _summary(bc) == _summary(fo), f"forms diverge at {mult}x"
+
+        old = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "-1")
+            bc_plan, fo_plan = (
+                m._jdf.queryExecution().executedPlan().toString()
+                for m in merges()
+            )
+        finally:
+            spark.conf.set(key, old)
+        assert "SortMergeJoin" not in bc_plan and "BroadcastHashJoin" in bc_plan
+        assert "SortMergeJoin" in fo_plan

@@ -138,21 +138,6 @@ def test_stateful_streams_green_under_rocksdb_state_store(
         assert "RocksDB" not in (spark.conf.get(_PROVIDER_KEY, "") or ""), name
 
 
-def test_stream_cost_probe_decomposition_smoke(spark, tmp_path):
-    """The cost-decomposition probe (tools/stream_cost_probe) must run
-    end-to-end at sf0.001 and return a wall for every variant, with
-    the floor variant present — it is the denominator every PLANS.md
-    streaming claim divides by."""
-    from airflow_jira_etl_spark.tools.stream_cost_probe import run_probe
-
-    steady = run_probe(
-        "/root/testdata/sf0.001", runs=1, scratch=str(tmp_path)
-    )
-    assert "floor" in steady
-    assert set(steady) >= {"floor", "pystate_profile", "window_tumbling", "dedup_keys"}
-    assert all(w > 0 for w in steady.values())
-
-
 def test_stateful_profile_all_null_values_emit_sql_null(spark):
     """SQL aggregate semantics on NULLs for the custom stateful
     operator: a user whose values are ALL null must emit NULL
@@ -226,7 +211,7 @@ def test_stateful_profile_all_null_values_emit_sql_null(spark):
 
 
 def test_write_event_pages_drops_null_ids_rejects_negative(spark, tmp_path):
-    """Page ids derive from event_id. The r15 NULL entity-key
+    """Page ids derive from event_id. The NULL entity-key
     convention: a NULL-id row has no position in the id-derived layout
     (the reference's unique-key contract — db_ops.py:29-43 — makes it
     unaddressable by MERGE), so it is DROPPED from the paged stream,
