@@ -22,6 +22,8 @@ TIME-of-day note (SURVEY.md §1.3): the worklogs DDL has a TIME column
 
 from __future__ import annotations
 
+from pyspark.sql import types as T
+
 # Nested key -> flat name (str) or nested mapping (dict). Flat names
 # follow the reference's prefixing rule: raw parent keys joined by '_',
 # leaf renamed per mapping (jira_base_processor.py:94-104).
@@ -55,6 +57,13 @@ USER_MAPPING: dict = {
     },
     "displayName": "display_name",
     "active": "active",
+}
+
+# List-valued issue leaves: from_json must read them as arrays for the
+# reference's '//' join (A7) — under the StringType default a JSON
+# array would land as its raw text (mapping.mapping_to_schema).
+ISSUE_LEAF_TYPES: dict[str, T.DataType] = {
+    "fields_labels": T.ArrayType(T.StringType()),
 }
 
 ISSUE_MAPPING: dict = {

@@ -59,7 +59,7 @@ def connected_components(pairs: DataFrame, max_iters: int = MAX_ITERS) -> DataFr
     in memory. Larger graphs run the distributed label-propagation +
     pointer-jumping loop under scoped shuffle partitions."""
     spark = pairs.sparkSession
-    from airflow_jira_etl_spark.session import scoped_shuffle_partitions
+    from airflow_jira_etl_spark.session import scoped_conf
 
     # NULL edge ids fail LOUDLY here, the same contract as the merge
     # operators' key guard: without it the two paths diverge on one
@@ -102,7 +102,7 @@ def connected_components(pairs: DataFrame, max_iters: int = MAX_ITERS) -> DataFr
             spark.sparkContext.defaultParallelism,
             max(8, n_edges // 100_000),
         )
-        with scoped_shuffle_partitions(spark, str(width)):
+        with scoped_conf(spark, "spark.sql.shuffle.partitions", str(width)):
             return _connected_components(edges, max_iters)
     finally:
         edges.unpersist()

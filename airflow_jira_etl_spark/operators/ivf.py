@@ -180,7 +180,7 @@ def _build_index_files(
     """The rebuild body of build_index — caller holds the flock."""
     import shutil
 
-    from airflow_jira_etl_spark.session import scoped_shuffle_partitions
+    from airflow_jira_etl_spark.session import scoped_conf
 
     if emb.head(1) == []:
         raise ValueError(
@@ -195,7 +195,9 @@ def _build_index_files(
         keep_prev = None
     # small-key shuffles throughout (k clusters × dims scalars);
     # repartition by cluster so each directory gets ONE file
-    with scoped_shuffle_partitions(spark, max(8, k_clusters)):
+    with scoped_conf(
+        spark, "spark.sql.shuffle.partitions", str(max(8, k_clusters))
+    ):
         emb_c = emb.cache()  # read the source once across Lloyd's passes
         centroids = train_quantizer(emb_c, k_clusters).cache()
         assign_clusters(emb_c, centroids).repartition(

@@ -45,7 +45,6 @@ def compile_mapping(
     schema: T.StructType | None = None,
     path: str = "",
     parent: str = "",
-    join_char: str = JOIN_CHAR,
 ) -> list[Column]:
     """Compile a declarative MAPPING dict into select expressions.
 
@@ -96,9 +95,7 @@ def compile_mapping(
                 continue
             child_schema = field.dataType if field is not None else None
             cols.extend(
-                compile_mapping(
-                    mapped, child_schema, child_path, _chain(parent, key), join_char
-                )
+                compile_mapping(mapped, child_schema, child_path, _chain(parent, key))
             )
         else:
             name = _leaf_name(parent, mapped)
@@ -113,7 +110,7 @@ def compile_mapping(
                 # alone would silently DROP them, losing positions
                 arr = F.col(child_path)
                 joined = F.concat_ws(
-                    join_char,
+                    JOIN_CHAR,
                     F.transform(
                         arr,
                         lambda x: F.coalesce(x.cast("string"), F.lit("None")),
@@ -159,9 +156,9 @@ def _null_leaves(mapping: Mapping, parent: str) -> list[Column]:
     return out
 
 
-def flatten(df: DataFrame, mapping: Mapping, join_char: str = JOIN_CHAR) -> DataFrame:
+def flatten(df: DataFrame, mapping: Mapping) -> DataFrame:
     """Apply a compiled MAPPING to a DataFrame of (possibly nested) rows."""
-    return df.select(*compile_mapping(mapping, df.schema, join_char=join_char))
+    return df.select(*compile_mapping(mapping, df.schema))
 
 
 def mapping_to_schema(

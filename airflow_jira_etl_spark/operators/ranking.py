@@ -39,11 +39,12 @@ failure mode becomes a loud block-not-found error instead of wrong
 answers (with persist, a mid-operator clearCache yields NULL rank cells
 and wrong ranks; tests/test_ranking_property.py pins both operators
 against that clearCache). The blocks free when the returned frame is
-garbage-collected (ContextCleaner), not via clearCache. At cluster scale
-pass ``storage_level=DISK_ONLY`` (or rank off a pre-sorted bucketed
-table) rather than memory-caching 100 TB — and on clusters where
-executor loss is routine, prefer rerunning the query on failure over any
-scheme that recomputes a sampled shuffle.
+garbage-collected (ContextCleaner), not via clearCache. The blocks are
+stored MEMORY_AND_DISK, so a tagged frame larger than executor memory
+spills rather than fails; at cluster scale rank off a pre-sorted
+bucketed table rather than checkpointing 100 TB — and on clusters where
+executor loss is routine, prefer rerunning the query on failure over
+any scheme that recomputes a sampled shuffle.
 
 With a total (tie-free) ordering — callers append a unique key as the
 last sort expression — ``row_number == rank == dense_rank``, and every
@@ -113,7 +114,6 @@ def _range_tag(
     df: DataFrame,
     sort_exprs: list[Column],
     n_parts: int,
-    storage_level: StorageLevel,
     extra: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Phase 1 shared by every two-phase form: range shuffle on the
@@ -137,7 +137,7 @@ def _range_tag(
         .alias("_gr_idx"),
     ] + [c.alias(n) for n, c in (extra or {}).items()]
     return ranged.select("*", *cols).localCheckpoint(
-        eager=False, storageLevel=storage_level
+        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
 
 
@@ -160,7 +160,6 @@ def global_row_number(
     order_cols: list[Column],
     rn_col: str = "rn",
     num_partitions: int | None = None,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
 ) -> tuple[DataFrame, int]:
     """Attach a 1-based global row number over a total ordering.
 
@@ -177,7 +176,7 @@ def global_row_number(
     n_parts = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
-    tagged = _range_tag(df, list(order_cols), n_parts, storage_level)
+    tagged = _range_tag(df, list(order_cols), n_parts)
     counts = dict(
         tagged.groupBy("_gr_pid").count().collect()
     )  # k-bounded: one row per shuffle partition
@@ -206,7 +205,6 @@ def grouped_running_sum(
     sum_col: str = "rsum",
     total_col: str | None = None,
     num_partitions: int | None = None,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
 ) -> DataFrame:
     """Per-group running sum (``sum(value) OVER (PARTITION BY group
     ORDER BY order ROWS UNBOUNDED PRECEDING..CURRENT ROW)``) for
@@ -251,9 +249,7 @@ def grouped_running_sum(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
     sort_exprs = [F.col(g) for g in group_cols] + list(order_cols)
-    tagged = _range_tag(
-        df, sort_exprs, n_parts, storage_level, extra={"_gr_val": value}
-    )
+    tagged = _range_tag(df, sort_exprs, n_parts, extra={"_gr_val": value})
     per_df = tagged.groupBy("_gr_pid", *group_cols).agg(
         F.sum("_gr_val").alias("_gr_cnt")
     )

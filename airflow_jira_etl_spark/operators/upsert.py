@@ -48,10 +48,9 @@ def _check_merge_inputs(
 ) -> None:
     """Shared input guards for the merge operators.
 
-    Key columns must exist on BOTH sides — under evolve_schema a
-    missing key would be NULL-backfilled by unionByName, putting every
-    update row in ONE NULL window partition: the merge silently
-    degrades to 'base unchanged plus one arbitrary NULL-key row'.
+    Key columns must exist on BOTH sides: the merge cannot resolve
+    rows without its key, and the error should name the side that
+    lacks it rather than surface as an opaque union mismatch.
     Helper-column collisions must raise too: withColumn would REPLACE
     a same-named input column and drop() would then delete the user's
     data from the output (the ranking module's _check_names class)."""
@@ -60,8 +59,7 @@ def _check_merge_inputs(
         if missing:
             raise ValueError(
                 f"key column(s) {missing} absent from {side} — a merge "
-                f"cannot resolve rows without its key (evolve_schema "
-                f"only evolves VALUE columns)"
+                f"cannot resolve rows without its key"
             )
         clash = [c for c in _HELPER_COLS if c in df.columns]
         if clash:
@@ -113,7 +111,6 @@ def upsert(
     key: str | list[str],
     ordinal_col: str | None = None,
     cluster_cols: list[str] | None = None,
-    evolve_schema: bool = False,
 ) -> DataFrame:
     """Last-writer-wins merge of ``updates`` into ``base`` on ``key``.
 
@@ -134,11 +131,8 @@ def upsert(
     output by those columns, so a downstream ``partitionBy`` write
     needs no second shuffle.
 
-    ``evolve_schema``: when True, columns present on only one side are
-    added to the other as NULLs (ADD COLUMN evolution — the merge
-    succeeds when a batch carries new fields and old rows read back
-    NULL for them). When False (default), a schema mismatch raises,
-    the safe behavior for fixed-DDL sinks.
+    Both sides must carry the same column set (fixed-DDL sinks): a
+    mismatch raises.
     """
     keys = [key] if isinstance(key, str) else list(key)
     _check_merge_inputs(base, updates, keys)
@@ -157,9 +151,7 @@ def upsert(
     for k in keys:  # NULL keys fail loudly at execution, never collapse
         base_tagged = base_tagged.withColumn(k, _null_key_guard(k, "base"))
         upd_tagged = upd_tagged.withColumn(k, _null_key_guard(k, "updates"))
-    merged = base_tagged.unionByName(
-        upd_tagged, allowMissingColumns=evolve_schema
-    )
+    merged = base_tagged.unionByName(upd_tagged)
     return (
         merged.withColumn(_RN, F.row_number().over(w))
         .where(F.col(_RN) == 1)
@@ -176,7 +168,6 @@ def merge_aggregate(
     key: str | list[str],
     combine: dict[str, str],
     cluster_cols: list[str] | None = None,
-    evolve_schema: bool = False,
     null_keys: str = "reject",
 ) -> DataFrame:
     """Combining MERGE — ``WHEN MATCHED THEN UPDATE SET c = f(old, new)``
@@ -195,12 +186,8 @@ def merge_aggregate(
     recorded page cursor) — same contract as any incremental MV.
     ``cluster_cols`` as in :func:`upsert`: key-derived columns prepended
     to the grouping so the merge's one shuffle also clusters the output
-    for a partitioned write. ``evolve_schema`` as in :func:`upsert`:
-    when True a column present on only one side is backfilled NULL on
-    the other, which every supported combiner simply ignores — a
-    freshly-added metric's running aggregate starts from the batches
-    that carry it, the only meaningful ADD COLUMN semantics for an
-    incremental MV.
+    for a partitioned write. Both sides must carry the same column set,
+    as in :func:`upsert`.
 
     ``null_keys``: ``"reject"`` (default) raises on a NULL key — right
     for ENTITY keys, where NULL is corruption and the groupBy would
@@ -248,6 +235,6 @@ def merge_aggregate(
         for k in keys:  # NULL keys fail loudly at execution
             base = base.withColumn(k, _null_key_guard(k, "base"))
             updates = updates.withColumn(k, _null_key_guard(k, "updates"))
-    union = base.unionByName(updates, allowMissingColumns=evolve_schema)
+    union = base.unionByName(updates)
     aggs = [_COMBINE_FNS[f](c).alias(c) for c, f in combine.items()]
     return union.groupBy(*group).agg(*aggs)

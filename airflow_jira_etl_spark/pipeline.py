@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from airflow_jira_etl_spark.entities import (
+    ISSUE_LEAF_TYPES,
     ISSUE_MAPPING,
     USER_MAPPING,
     WORKLOG_MAPPING,
@@ -215,7 +216,7 @@ def issues_pipeline(
     @p.task("ingest_fanout", upstream=["ensure_table"])
     def ingest_fanout(ctx: dict) -> None:
         raw = offset_scan_parallel(spark, fetcher, url, records_key="issues")
-        ctx["flat"] = raw_json_to_flat(raw, ISSUE_MAPPING)
+        ctx["flat"] = raw_json_to_flat(raw, ISSUE_MAPPING, ISSUE_LEAF_TYPES)
 
     @p.task("merge_upsert", upstream=["ingest_fanout"])
     def merge_upsert(ctx: dict) -> None:

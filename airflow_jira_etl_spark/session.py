@@ -24,13 +24,20 @@ import weakref
 
 _CONFED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
-# Runtime (non-static) confs the engine depends on. Applied defensively
-# to ANY session the engine is handed (the grading driver builds its
-# own SparkSession without our builder): nanos parquet reads, UTC
-# timestamp semantics for oracle comparison, Python-source pushdown.
+# Runtime (non-static) confs the engine depends on. Applied by
+# get_spark and defensively to ANY session the engine is handed (a
+# caller may build its own SparkSession without our builder).
 RUNTIME_CONFS = {
+    # timestamp semantics agree with columnar engines that store
+    # naive-UTC (parquet readers, DuckDB) for oracle comparison
     "spark.sql.session.timeZone": "UTC",
+    # some fixture generations store events.ts as TIMESTAMP(NANOS),
+    # which the Spark parquet reader otherwise rejects; with this conf
+    # the column surfaces as long and catalog.load converts
+    # (catalog.events_ts_is_nanos sniffs the unit per file)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # custom Python DataSources (sources/rest_datasource) receive
+    # pushed filters
     "spark.sql.python.filterPushdown.enabled": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -57,8 +64,8 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
     exit — including the truly-UNSET state (ADVICE r15: ``conf.get``
     raises for a key with no session value and no default, and blindly
     re-setting a string would leave a previously-unset key set).
-    Session-wide while held (same caveat as scoped_shuffle_partitions:
-    the engine runs queries sequentially per session)."""
+    Session-wide while held: the engine runs queries sequentially per
+    session."""
     old = spark.conf.get(key, None)
     spark.conf.set(key, value)
     try:
@@ -70,43 +77,15 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
             spark.conf.set(key, old)
 
 
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: str | int):
-    """Temporarily size shuffle partitions to a job's actual
-    parallelism need (state cardinality for streaming, fixpoint-loop
-    overhead for iterative algorithms) instead of the global CPU-count
-    default; restores the previous value on exit."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def get_spark(app_name: str = "airflow_jira_etl_spark") -> SparkSession:
-    """Build (or reuse) the engine's SparkSession.
-
-    Session timezone is pinned to UTC so timestamp semantics agree with
-    columnar engines that store naive-UTC (parquet readers, DuckDB).
-    """
+    """Build (or reuse) the engine's SparkSession with RUNTIME_CONFS
+    applied."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
+        .config(map=RUNTIME_CONFS)
         .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # some fixture generations store events.ts as TIMESTAMP(NANOS),
-        # which the Spark parquet reader otherwise rejects; with this
-        # conf the column surfaces as long and catalog.load converts
-        # (catalog.events_ts_is_nanos sniffs the unit per file).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # allow custom Python DataSources (sources/rest_datasource) to
-        # receive pushed filters
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Local checkpoint I/O without Hadoop's ChecksumFs wrapper (r16,
         # guide §6): streaming offset-WAL/commit-log writes and state
@@ -119,9 +98,9 @@ def get_spark(app_name: str = "airflow_jira_etl_spark") -> SparkSession:
         # (walCommit/commitOffsets/latestOffset each ~30%). Scoped to
         # the FileContext binding of file:// ONLY — the FileSystem-API
         # binding (fs.file.impl) stays LocalFileSystem because
-        # RocksDBFileManager casts to it (swapping it fails the
-        # SPARK_GRAFT_STATE_STORE=rocksdb path with a ClassCastException
-        # at state commit), and hdfs:///s3a:// checkpoints on a real
+        # RocksDBFileManager casts to it (swapping it fails the RocksDB
+        # state store provider with a ClassCastException at state
+        # commit), and hdfs:///s3a:// checkpoints on a real
         # cluster are untouched either way.
         .config(
             "spark.hadoop.fs.AbstractFileSystem.file.impl",

@@ -143,7 +143,6 @@ class ParquetUpsertTable:
         key: str | list[str],
         n_buckets: int = DEFAULT_N_BUCKETS,
         bucketer: Bucketer = hash_bucketer,
-        evolve_schema: bool = False,
         null_keys: str = "reject",
     ):
         if null_keys not in ("reject", "group"):
@@ -162,10 +161,6 @@ class ParquetUpsertTable:
         # apply(). The default hash bucketer routes NULL to a stable
         # valid bucket, so the NULL group merges consistently.
         self.null_keys = null_keys
-        # ADD COLUMN evolution: merges accept batches carrying new
-        # columns (old rows read back NULL); reads schema-merge across
-        # generations so old bucket files and new ones coexist
-        self.evolve_schema = evolve_schema
         os.makedirs(root, exist_ok=True)
 
     # ------------------------------------------------------ commit log
@@ -227,10 +222,8 @@ class ParquetUpsertTable:
 
     def _read_paths(self, manifest: dict, paths: list[str]) -> DataFrame:
         """Read bucket files under the MANIFEST's schema — the persisted
-        contract, not any in-memory flag: files written before a column
-        was added simply surface NULLs for it, and every reader of an
-        evolved table sees the full column set regardless of how its
-        own ParquetUpsertTable instance was constructed."""
+        contract: every bucket file is read with the column names and
+        types the table committed, not whatever its footer infers."""
         schema = manifest.get("schema")
         reader = self.spark.read
         if schema:
@@ -244,12 +237,11 @@ class ParquetUpsertTable:
     def apply(
         self,
         updates: DataFrame,
-        ordinal_col: str | None = None,
         combine: dict[str, str] | None = None,
     ) -> None:
         """MERGE a batch of updates. Default semantics: last-writer-wins
-        on the key (``ordinal_col`` breaks intra-batch duplicate-key
-        ties — see operators/upsert.py). With ``combine`` (a column →
+        on the key (intra-batch duplicate keys resolve in batch order —
+        see operators/upsert.py). With ``combine`` (a column →
         sum/min/max map), the merge FOLDS the batch into the stored rows
         instead — the incremental-materialized-view refresh (see
         operators/upsert.merge_aggregate; replays are not idempotent in
@@ -301,9 +293,9 @@ class ParquetUpsertTable:
         if table_schema is not None:
             old_names = {nm for nm, _ in table_schema}
             upd_names = set(updates.columns)
-            if upd_names != old_names and not self.evolve_schema:
+            if upd_names != old_names:
                 raise ValueError(
-                    f"schema mismatch (evolve_schema=False): table has "
+                    f"schema mismatch: table has "
                     f"{sorted(old_names)}, batch has {sorted(upd_names)}"
                 )
             # early same-name compat gate: identical, or numeric→numeric
@@ -382,13 +374,6 @@ class ParquetUpsertTable:
                         "GROUP-BY keys where NULL is a domain value, "
                         "open the table with null_keys='group'"
                     )
-                if combine is None:
-                    raise ValueError(
-                        "null_keys='group' requires a combining merge "
-                        "(combine=...): the NULL group is aggregation "
-                        "semantics — last-writer-wins over a NULL "
-                        "ENTITY key would still collapse unrelated rows"
-                    )
             if any(r[0] is None for r in raw):
                 # a NULL bucket (range_bucketer on a non-numeric key:
                 # CAST AS BIGINT yields NULL silently) would write to
@@ -422,27 +407,18 @@ class ParquetUpsertTable:
                     self.keys,
                     combine,
                     cluster_cols=[_BUCKET],
-                    evolve_schema=self.evolve_schema,
                     null_keys=self.null_keys,
                 )
             else:
-                merged = upsert(
-                    base,
-                    upd,
-                    self.keys,
-                    ordinal_col=ordinal_col,
-                    cluster_cols=[_BUCKET],
-                    evolve_schema=self.evolve_schema,
-                )
+                merged = upsert(base, upd, self.keys, cluster_cols=[_BUCKET])
 
             # type contract, checked on what the files WILL hold: the
             # merged plan's schema (union widening already reconciled a
             # stored-bigint/batch-int pair; a genuinely incompatible
             # batch — string vs stored numeric — surfaces here as a
             # changed resolved type). Same-name/different-type raises;
-            # evolve_schema appends batch-only columns (ADD COLUMN —
-            # removed-in-batch columns stay, new ones backfill NULL on
-            # old rows via the manifest-schema read).
+            # the column set already matched above, so once the types
+            # are proven equal the stored schema IS the merged one.
             merged_fields = [
                 [f.name, f.dataType.simpleString()]
                 for f in merged.schema.fields
@@ -450,15 +426,13 @@ class ParquetUpsertTable:
             ]
             if table_schema is not None:
                 old_t, new_t = dict(table_schema), dict(merged_fields)
-                for nm in set(old_t) & set(new_t):
+                for nm in old_t:
                     if old_t[nm] != new_t[nm]:
                         raise ValueError(
                             f"type change for column {nm!r}: "
                             f"{old_t[nm]} -> {new_t[nm]} (unsupported)"
                         )
-                merged_schema = list(table_schema) + [
-                    [nm, ty] for nm, ty in merged_fields if nm not in old_t
-                ]
+                merged_schema = table_schema
             else:
                 merged_schema = merged_fields
             gen_name, staging = self._next_generation()

@@ -87,9 +87,8 @@ SINGLE_PAGE_N = 7
 def totalless_fetcher(options: dict):
     """Factory: an endpoint that reports NO ``total`` (the A4
     single-page shape) — all records live in page 0, later offsets
-    return empty pages. The batch reader must emit one partition; the
-    stream reader must ingest page 0 exactly once, not stay empty
-    forever (nor loop)."""
+    return empty pages. The batch reader must emit one partition, never
+    zero."""
 
     def fetch(url: str, params: dict | None = None) -> dict:
         start = int((params or {}).get("startAt", 0))

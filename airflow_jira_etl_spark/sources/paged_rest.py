@@ -59,6 +59,10 @@ RETRY_ATTEMPTS = 5
 RETRY_MIN_S = 4.0
 RETRY_MAX_S = 10.0
 
+# upper bound on the offset fan-out's fetch tasks (one page per task
+# below it, contiguous runs of pages above it)
+PAGE_PARALLELISM = 32
+
 
 def with_retry(
     fn: Callable[[], object],
@@ -85,9 +89,9 @@ def page_plan(page: dict) -> tuple[int | None, int]:
     """The offset-pagination facts of one response: (total, stride).
     ``total`` is None when the endpoint does not report one (the A4
     single-page shape) — callers must not conflate that with an empty
-    result set. ONE parse shared by every offset scanner (batch
-    DataSource, stream reader, the fan-out scan below); the total=0
-    guard diverged between two hand-rolled copies once already."""
+    result set. ONE parse shared by both offset scanners (the batch
+    DataSource and the fan-out scan below); the total=0 guard diverged
+    between two hand-rolled copies once already."""
     total = page.get("total")
     stride = int(page.get("maxResults", 100) or 100)
     if stride <= 0:
@@ -171,7 +175,6 @@ def offset_scan_parallel(
     url: str,
     params: dict | None = None,
     records_key: str = "issues",
-    page_parallelism: int = 32,
 ) -> DataFrame:
     """A3 fan-out: fetch page 0 on the driver to learn ``total`` and
     the server's ``maxResults`` stride, then fetch the remaining
@@ -180,8 +183,8 @@ def offset_scan_parallel(
 
     Page 0's records become an Arrow ``LocalRelation``. The remaining
     offsets are ``spark.range`` ids times the stride, split into
-    ``min(page_parallelism, pages)`` partitions, so each task fetches
-    one page (or a contiguous run of them past ``page_parallelism``)
+    ``min(PAGE_PARALLELISM, pages)`` partitions, so each task fetches
+    one page (or a contiguous run of them past ``PAGE_PARALLELISM``)
     with no shuffle ahead of the fetch kernel.
 
     At 100 TB-scale ingest the fetch cost dominates; this turns an
@@ -205,7 +208,7 @@ def offset_scan_parallel(
         return first_df
 
     offsets_df = spark.range(
-        1, n_rest + 1, numPartitions=min(page_parallelism, n_rest)
+        1, n_rest + 1, numPartitions=min(PAGE_PARALLELISM, n_rest)
     ).select((F.col("id") * stride).alias("start_at"))
 
     base_params = dict(params or {})

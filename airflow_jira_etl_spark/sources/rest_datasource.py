@@ -25,6 +25,9 @@ Options:
                 record fields are read by field name, missing -> NULL
   records_key   key holding the record list (default "issues")
   param_columns comma-separated columns eligible for pushdown
+
+Batch reads only: the stream queries page through file-backed sources
+(streaming/source.py), so this source has no stream reader.
 """
 
 from __future__ import annotations
@@ -39,7 +42,6 @@ from pyspark.sql.datasource import (
     EqualTo,
     Filter,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StringType, StructType
 
@@ -54,29 +56,8 @@ def _load_fetcher(spec: str, options: dict):
 
 def _string_cell(v):
     """The ONE flatten rule for a STRING-typed cell: None and str pass
-    through, anything structured lands as its JSON text. Shared by the
-    row encoder and the Arrow fast path so the two transports can never
-    encode the same record differently."""
+    through, anything structured lands as its JSON text."""
     return v if v is None or isinstance(v, str) else json.dumps(v)
-
-
-def _row_encoder(schema: StructType):
-    """record dict -> row tuple under the declared schema: STRING fields
-    go through ``_string_cell`` (the flatten contract — a nested object
-    lands as its JSON text), while TYPED fields pass raw values through
-    for Spark's own verification. JSON-encoding a typed cell (the old
-    behavior) handed "5" to an IntegerType field — a type-verification
-    error at best, silent corruption at worst."""
-    names = schema.fieldNames()
-    is_str = [isinstance(f.dataType, StringType) for f in schema.fields]
-
-    def encode(rec: dict) -> tuple:
-        return tuple(
-            _string_cell(v) if s else v
-            for v, s in zip((rec.get(n) for n in names), is_str)
-        )
-
-    return encode
 
 
 class _OffsetPartition(InputPartition):
@@ -141,164 +122,25 @@ class PagedRestReader(DataSourceReader):
             params["startAt"] = partition.start_at
             page = with_retry(lambda: fetch(self.url, params))
             records = page.get(self.records_key, [])
-        names = self.schema.fieldNames()
-
-        if not all(isinstance(f.dataType, StringType) for f in self.schema.fields):
-            # generic fallback for non-string DDLs: row tuples, typed
-            # cells passed raw (see _row_encoder)
-            encode = _row_encoder(self.schema)
-            for rec in records:
-                yield encode(rec)
-            return
         # One Arrow batch per page instead of per-row tuple yields: the
         # harness then ships the whole page through one Arrow transfer
         # (tuple rows are individually pickled — the slow path once
-        # pages are thousands of rows). All declared fields are strings
-        # (non-string record values are JSON-encoded), matching the
-        # string-typed DDL this source accepts.
+        # pages are thousands of rows). STRING fields go through
+        # _string_cell (a nested object lands as its JSON text); TYPED
+        # fields pass raw values to Arrow's conversion, which refuses a
+        # value of the wrong type (e.g. "5" for an int) instead of
+        # coercing it.
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
+        arrow_schema = to_arrow_schema(self.schema)
         cols = []
-        for n in names:
-            cols.append(
-                pa.array(
-                    [_string_cell(rec.get(n)) for rec in records],
-                    pa.string(),
-                )
-            )
-        yield pa.RecordBatch.from_arrays(cols, names=list(names))
-
-
-class PagedRestStreamReader(SimpleDataSourceStreamReader):
-    """The reference's cursor/offset page loop as an UNBOUNDED
-    Structured Streaming source: each micro-batch reads the pages that
-    appeared since the last committed offset, and the offset (the next
-    ``startAt``) lives in the CHECKPOINT — exactly the resume-where-
-    you-left-off state the reference keeps on ``self``
-    (``worklog_processor.py:106``, ``issue_processor.py:103-104``), but
-    crash-safe and replayable. Combined with the idempotent upsert sink
-    this gives end-to-end exactly-once page ingestion.
-
-    Page reads happen on the driver (SimpleDataSourceStreamReader
-    contract) — appropriate here because a cursor API is inherently a
-    serial, low-rate source; the heavy lifting (parse/flatten/merge)
-    stays distributed downstream."""
-
-    def __init__(self, schema: StructType, options: dict):
-        self.schema = schema
-        self.options = dict(options)
-        self.url = options["url"]
-        self.fetcher_spec = options["fetcher"]
-        self.records_key = options.get("records_key", "issues")
-        self.max_pages_per_batch = int(options.get("max_pages_per_batch", 1))
-        # same contract (and default) as Spark's Kafka source: a replay
-        # that cannot reconstruct its committed range FAILS unless the
-        # operator explicitly opts into tolerating upstream data loss
-        self.fail_on_data_loss = (
-            str(options.get("fail_on_data_loss", "true")).lower() != "false"
-        )
-
-    def initialOffset(self) -> dict:  # noqa: N802
-        return {"startAt": 0}
-
-    def _fetch_page(self, start_at: int) -> dict:
-        fetch = _load_fetcher(self.fetcher_spec, self.options)
-        params = {"startAt": start_at}
-        return with_retry(lambda: fetch(self.url, params))
-
-    def _rows(self, page: dict):
-        encode = _row_encoder(self.schema)
-        for rec in page.get(self.records_key, []):
-            yield encode(rec)
-
-    def read(self, start: dict):
-        """Live page loop. INVARIANT (replay correctness): the offset
-        advances by exactly the number of records EMITTED, never by the
-        server's advertised stride — ``readBetweenOffsets``
-        reconstructs a committed range by consumed-record count, so an
-        offset delta larger than the emitted rows (a short page, or an
-        A4 page smaller than its maxResults) would make every replay
-        of that range over-read: against a pathological server that
-        echoes records for any startAt, the replay re-consumes the
-        same page until the count is filled — silent duplicates."""
-        start_at = int(start["startAt"])
-        rows: list[tuple] = []
-        stride = int(start.get("stride", 0))
-        for _ in range(self.max_pages_per_batch):
-            page = self._fetch_page(start_at)
-            total, stride = page_plan(page)
-            before = len(rows)
-            if total is None:
-                # A4 single-page shape (no reported total): page 0 is
-                # the whole dataset — ingest it once (matching the
-                # batch reader's one-partition behavior), advance the
-                # offset by the records consumed, and never trust a
-                # pathological server that keeps echoing records for
-                # later startAts
-                if start_at == 0:
-                    rows.extend(self._rows(page))
-                    start_at += len(rows) - before
-                break
-            if start_at >= total:
-                break
-            rows.extend(self._rows(page))
-            got = len(rows) - before
-            if got == 0:
-                # the server reported total > start_at yet returned no
-                # records: stall WITHOUT advancing (the next trigger
-                # retries) — advancing by stride would commit offsets
-                # no replay could ever reconstruct
-                break
-            start_at += got
-        # the stride rides in the offset for continuation bookkeeping
-        # (and as a diagnostic of what the original read paged with);
-        # replay correctness does NOT depend on it — readBetweenOffsets
-        # reconstructs [start, end) by consumed-record count, which the
-        # emitted-count offset advance above guarantees is exact
-        return iter(rows), {"startAt": start_at, "stride": stride}
-
-    def readBetweenOffsets(self, start: dict, end: dict):  # noqa: N802
-        """Deterministic replay for recovery: emit EXACTLY the records
-        at offsets [start, end) — never a function of the server's LIVE
-        page size. Each fetch returns records from ``startAt`` onward;
-        we consume as many as fall inside the committed range and fetch
-        again at the first uncovered offset, so a server whose
-        maxResults grew since the original batch cannot leak later
-        offsets' rows into this one (duplicates downstream), and one
-        whose maxResults shrank just takes more round trips. (The old
-        form advanced by a pinned stride but extended EVERY fetched
-        record — overlapping replays whenever live page size exceeded
-        the pin.) If the source itself shrank below the committed range
-        (a nondeterministic upstream), the replay RAISES by default —
-        silently committing a partial batch downstream would break the
-        exactly-once promise with no signal anywhere; pass
-        ``fail_on_data_loss=false`` to tolerate the truncation instead
-        (the Kafka-source convention, and the same default)."""
-        start_at = int(start["startAt"])
-        end_at = int(end["startAt"])
-        rows: list[tuple] = []
-        while start_at < end_at:
-            page = self._fetch_page(start_at)
-            recs = list(self._rows(page))
-            if not recs:
-                if self.fail_on_data_loss:
-                    raise RuntimeError(
-                        f"replay of committed range [{start['startAt']}, "
-                        f"{end_at}) could only reconstruct "
-                        f"{len(rows)} of {end_at - int(start['startAt'])} "
-                        f"records (source returned no records at offset "
-                        f"{start_at}) — the upstream shrank or drifted; "
-                        f"set fail_on_data_loss=false to tolerate "
-                        f"truncated replays"
-                    )
-                break  # tolerated: source shrank below the range
-            take = min(len(recs), end_at - start_at)
-            rows.extend(recs[:take])
-            start_at += take
-        return iter(rows)
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the checkpoint; the API holds no state
+        for f, af in zip(self.schema.fields, arrow_schema):
+            cells = [rec.get(f.name) for rec in records]
+            if isinstance(f.dataType, StringType):
+                cells = [_string_cell(v) for v in cells]
+            cols.append(pa.array(cells, af.type))
+        yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
 
 class PagedRestDataSource(DataSource):
@@ -311,9 +153,6 @@ class PagedRestDataSource(DataSource):
 
     def reader(self, schema: StructType) -> PagedRestReader:
         return PagedRestReader(schema, self.options)
-
-    def simpleStreamReader(self, schema: StructType) -> PagedRestStreamReader:  # noqa: N802
-        return PagedRestStreamReader(schema, self.options)
 
 
 def register(spark) -> None:

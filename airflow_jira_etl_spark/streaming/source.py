@@ -15,7 +15,6 @@ micro-batch — a faithful, testable stand-in for the cursor loop.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import shutil
 
@@ -29,6 +28,7 @@ from airflow_jira_etl_spark.catalog import (
     table_path,
 )
 from airflow_jira_etl_spark.scratch import SCRATCH as _SCRATCH
+from airflow_jira_etl_spark.session import scoped_conf
 
 
 def _sf_tag(sf_dir: str) -> str:
@@ -326,52 +326,6 @@ def py_stateful_state_partitions(spark) -> str:
     )
 
 
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-
-
-@contextlib.contextmanager
-def scoped_shuffle_partitions(spark, n: str = STREAM_STATE_PARTITIONS):
-    """Stateful streaming shard count = shuffle partitions at query
-    start, and every shard costs a state directory + task per
-    micro-batch. Scope it to the state size (keys/windows — hundreds
-    to thousands here), not CPU count. Delegates to the generic helper
-    in session.py.
-
-    Also the engine's state-store selection point (every streaming
-    start site passes through here): ``SPARK_GRAFT_STATE_STORE=rocksdb``
-    swaps the default heap-backed provider — which keeps each shard's
-    ENTIRE state in executor memory — for RocksDB, which spills state
-    to executor-local disk. The default is right for the test fixtures;
-    RocksDB is the 100 TB path, where per-shard keyed state (billions of
-    keys × windows) cannot live on-heap. Both providers are exercised
-    against the same oracles (tests/test_streaming.py)."""
-    from airflow_jira_etl_spark.session import (
-        scoped_shuffle_partitions as generic,
-    )
-
-    want = os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower()
-    with generic(spark, n):
-        if want != "rocksdb":
-            yield
-            return
-        try:
-            old = spark.conf.get(_PROVIDER_KEY)
-        except Exception:
-            old = None
-        spark.conf.set(_PROVIDER_KEY, ROCKSDB_PROVIDER)
-        try:
-            yield
-        finally:
-            if old:
-                spark.conf.set(_PROVIDER_KEY, old)
-            else:
-                spark.conf.unset(_PROVIDER_KEY)
-
-
 def run_to_completion(
     spark, checkpoint: str, start, state_partitions: str | None = None
 ) -> None:
@@ -385,8 +339,13 @@ def run_to_completion(
     other."""
     shutil.rmtree(checkpoint, ignore_errors=True)
     try:
-        with scoped_shuffle_partitions(
-            spark, state_partitions or STREAM_STATE_PARTITIONS
+        # stateful streaming shard count = shuffle partitions at query
+        # start, and every shard costs a state directory + task per
+        # micro-batch: scope it to the state size, not the CPU count
+        with scoped_conf(
+            spark,
+            "spark.sql.shuffle.partitions",
+            state_partitions or STREAM_STATE_PARTITIONS,
         ):
             start(checkpoint).awaitTermination()
     finally:

@@ -309,7 +309,7 @@ def test_default_write_width_is_capped(spark, tmp_path):
     import os
     import uuid
 
-    from airflow_jira_etl_spark.session import scoped_shuffle_partitions
+    from airflow_jira_etl_spark.session import scoped_conf
     from airflow_jira_etl_spark.sinks.jdbc_dialects import (
         _DEFAULT_MAX_WRITE_PARTITIONS,
         write_upsert_jdbc,
@@ -336,7 +336,7 @@ def test_default_write_width_is_capped(spark, tmp_path):
             pass
 
     df = spark.range(300).withColumn("v", F.col("id").cast("string"))
-    with scoped_shuffle_partitions(spark, 200):
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "200"):
         write_upsert_jdbc(df, "postgres", "t", "id", CountingConn)
     # 300 distinct keys over an uncapped 200-partition write would
     # open ~150+ connections; the cap bounds it

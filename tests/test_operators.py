@@ -695,11 +695,9 @@ def test_udf_scalar_and_udtf_handle_null_and_typed_json(spark):
 
 
 def test_upsert_rejects_missing_key_and_helper_collisions(spark):
-    """A key column absent from one side must raise — under
-    evolve_schema unionByName would NULL-backfill it and the window
-    would put EVERY update row in one NULL partition (merge silently
-    degrades to 'base unchanged + one arbitrary NULL-key row'). Helper
-    -column collisions must raise too (withColumn would replace the
+    """A key column absent from one side must raise with an error that
+    names the side, before the union is planned. Helper-column
+    collisions must raise too (withColumn would replace the
     user's data and drop() would delete it from the output)."""
     import pytest
 
@@ -708,13 +706,13 @@ def test_upsert_rejects_missing_key_and_helper_collisions(spark):
     base = spark.createDataFrame([(1, "a")], "k long, v string")
     no_key = spark.createDataFrame([("b",)], "v string")
     with pytest.raises(ValueError, match="key column"):
-        upsert(base, no_key, "k", evolve_schema=True)
+        upsert(base, no_key, "k")
     with pytest.raises(ValueError, match="key column"):
-        merge_aggregate(no_key, base, "k", {"v": "max"}, evolve_schema=True)
+        merge_aggregate(no_key, base, "k", {"v": "max"})
 
     clash = spark.createDataFrame([(1, "a", 9)], "k long, v string, __rn long")
     with pytest.raises(ValueError, match="helper"):
-        upsert(base, clash, "k", evolve_schema=True)
+        upsert(base, clash, "k")
 
 
 def test_upsert_null_keys_raise_at_execution(spark):

@@ -86,6 +86,33 @@ def test_issues_pipeline_offset_fanout(spark, tmp_path):
     assert "issue_id" in table.columns and "issue_key" in table.columns
 
 
+def test_issues_pipeline_joins_labels_like_the_reference(spark, tmp_path):
+    """``fields.labels`` is a JSON list: the stored column follows the
+    reference's A7 rule ``'//'.join(map(str, value))`` — NULL elements
+    render as 'None' and an empty list as '' — not the list's JSON
+    text."""
+    from airflow_jira_etl_spark.pipeline import issues_pipeline
+
+    issues = [
+        {"id": "1", "key": "P-1", "fields": {"labels": ["a", "b", None]}},
+        {"id": "2", "key": "P-2", "fields": {"labels": []}},
+    ]
+
+    def fetch(url, params=None):
+        start = int((params or {}).get("startAt", 0))
+        return {
+            "startAt": start,
+            "maxResults": 50,
+            "total": len(issues),
+            "issues": issues[start : start + 50],
+        }
+
+    ctx: dict = {}
+    issues_pipeline(spark, fetch, "https://api/search", str(tmp_path)).run(ctx)
+    got = {r.issue_id: r.fields_labels for r in ctx["table"].read().collect()}
+    assert got == {"1": "a//b//None", "2": ""}
+
+
 def _users_fetcher(url, params=None):
     return [
         {"self": "u1", "accountId": "a1", "displayName": "Jane", "active": "true"},

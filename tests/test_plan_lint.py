@@ -218,3 +218,77 @@ def test_every_tools_reference_names_an_existing_module():
                         rel = os.path.relpath(path, repo)
                         stale.append(f"{rel}:{i}: tools/{name}")
     assert not stale, f"references to missing tools modules: {stale}"
+
+
+def test_package_env_reads_are_deployment_settings():
+    """Source lint: the package reads the environment only for
+    deployment settings — the scratch root, the CPU count, the driver
+    memory, the HTTP fetcher's caller-named ``token_env`` and (tools
+    only) the fixture SF dir. A behaviour switch read from the
+    environment is an option no API passes and no plan shows; select
+    behaviour with a parameter or a Spark conf instead."""
+    import ast
+    import os
+
+    allowed = {"SPARK_GRAFT_SCRATCH", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+    tools_allowed = allowed | {"SPARK_GRAFT_SF_DIR"}
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "airflow_jira_etl_spark",
+    )
+
+    def key_of(node, parent, grand):
+        """The variable an ``os.environ``/``os.getenv`` node reads, as
+        a name: a string literal, ``token_env``, or None (unrecognised
+        form — flagged)."""
+        if node.attr == "environ" and isinstance(parent, ast.Subscript):
+            arg = parent.slice
+        elif node.attr == "getenv" and isinstance(parent, ast.Call):
+            arg = parent.args[0] if parent.args else None
+        elif (
+            node.attr == "environ"
+            and isinstance(parent, ast.Attribute)
+            and parent.attr == "get"
+            and isinstance(grand, ast.Call)
+        ):
+            arg = grand.args[0] if grand.args else None
+        else:
+            return None
+        if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+            return arg.value
+        if isinstance(arg, ast.Name) and arg.id == "token_env":
+            return "token_env"
+        return None
+
+    bad = []
+    for dirpath, _, files in os.walk(root):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, root)
+            ok = tools_allowed if rel.split(os.sep)[0] == "tools" else allowed
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            parents = {
+                child: node
+                for node in ast.walk(tree)
+                for child in ast.iter_child_nodes(node)
+            }
+            for node in ast.walk(tree):
+                if isinstance(node, ast.ImportFrom) and node.module == "os":
+                    names = {a.name for a in node.names} & {"environ", "getenv"}
+                    if names:
+                        bad.append(f"{rel}:{node.lineno}: from os import {names}")
+                if not (
+                    isinstance(node, ast.Attribute)
+                    and node.attr in ("environ", "getenv")
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "os"
+                ):
+                    continue
+                parent = parents.get(node)
+                key = key_of(node, parent, parents.get(parent))
+                if key != "token_env" and key not in ok:
+                    bad.append(f"{rel}:{node.lineno}: {key or 'unrecognised read'}")
+    assert not bad, f"environment reads that are not deployment settings: {bad}"

@@ -59,39 +59,6 @@ def test_residual_filter_still_applied(spark):
     assert all(r.key.startswith("PROJ-1") and r.priority == "low" for r in df.collect())
 
 
-def test_streaming_source_resumes_from_checkpoint(spark, tmp_path):
-    """The cursor loop as a streaming source: each availableNow run
-    ingests the pages one read() reports, the next ``startAt`` offset
-    lives in the CHECKPOINT, and every restart resumes exactly where
-    the previous run stopped — the reference's mid-scan resume
-    (cursor kept on ``self``, worklog_processor.py:106) made
-    crash-safe. Repeated restarts drain the API with no duplicates
-    and no gaps."""
-    opts = dict(OPTS, max_pages_per_batch="2")
-    out = spark.readStream.format("paged_rest").options(**opts).load()
-    ck = str(tmp_path / "ck")
-    sink = str(tmp_path / "sink")
-
-    n_runs = 0
-    for _ in range(12):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        n_runs += 1
-        ids = [int(r.id) for r in spark.read.parquet(sink).collect()]
-        if len(ids) >= fixture_fetchers.TOTAL:
-            break
-    assert sorted(ids) == list(range(fixture_fetchers.TOTAL))  # no dups, no gaps
-    # it genuinely took multiple restarts (2 pages = 50 records per run)
-    assert n_runs >= 3
-
-
 def test_typed_ddl_passes_raw_values_through(spark):
     """Non-string DDLs: typed record values (int, bool) must reach Spark
     RAW — the old encoder JSON-stringified every non-string value, so an
@@ -116,11 +83,9 @@ def test_typed_ddl_passes_raw_values_through(spark):
     assert json.loads(rows[3].fields) == {"rank": 30}
 
 
-def test_totalless_endpoint_single_page(spark, tmp_path):
+def test_totalless_endpoint_single_page(spark):
     """An endpoint reporting no ``total`` (A4 single-page shape): the
-    batch read returns page 0 in one partition; the STREAM ingests page
-    0 exactly once — previously it computed total=0, broke before
-    emitting, and stayed empty forever."""
+    batch read returns page 0 in one partition, never zero."""
     opts = {
         "url": "https://api/users",
         "fetcher": "airflow_jira_etl_spark.sources.fixture_fetchers:totalless_fetcher",
@@ -130,45 +95,6 @@ def test_totalless_endpoint_single_page(spark, tmp_path):
     batch = spark.read.format("paged_rest").options(**opts).load()
     assert batch.count() == fixture_fetchers.SINGLE_PAGE_N
     assert batch.rdd.getNumPartitions() == 1
-
-    stream = spark.readStream.format("paged_rest").options(**opts).load()
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("totalless_stream")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = spark.sql("SELECT id FROM totalless_stream").collect()
-    ids = sorted(int(r.id) for r in got)
-    assert ids == list(range(fixture_fetchers.SINGLE_PAGE_N))  # once, no dup
-
-
-def test_stream_offsets_pin_the_page_stride(spark):
-    """read() must record the stride it paged with in the returned
-    offset, so a recovery replay re-pages under the ORIGINAL stride even
-    if the server's maxResults changed between read and replay."""
-    from pyspark.sql.types import StructType
-
-    from airflow_jira_etl_spark.sources.rest_datasource import (
-        PagedRestStreamReader,
-    )
-
-    schema = StructType.fromDDL("id string, key string")
-    r = PagedRestStreamReader(
-        schema,
-        {
-            "url": "https://api/search",
-            "fetcher": "airflow_jira_etl_spark.sources.fixture_fetchers:synthetic_issues_fetcher",
-        },
-    )
-    rows, off = r.read({"startAt": 0})
-    assert off == {"startAt": fixture_fetchers.STRIDE, "stride": fixture_fetchers.STRIDE}
-    assert len(list(rows)) == fixture_fetchers.STRIDE
-    # replay honors the pinned stride over the live response's
-    replay = list(r.readBetweenOffsets({"startAt": 0}, off))
-    assert len(replay) == fixture_fetchers.STRIDE
 
 
 def test_single_page_scan_rejects_object_response(spark):
@@ -225,167 +151,6 @@ def test_conform_rejects_missing_declared_column(spark):
     raw = spark.createDataFrame([(1,)], "v long")
     with pytest.raises(ValueError, match="lacks declared columns"):
         conform(raw, declared)
-
-
-def test_replay_emits_exactly_the_committed_range(spark):
-    """readBetweenOffsets must emit EXACTLY offsets [start, end) no
-    matter what page size the server serves at replay time: a GROWN
-    maxResults must not leak later offsets' rows into the batch
-    (duplicates downstream of recovery), and a SHRUNK one just takes
-    more round trips."""
-    from pyspark.sql.types import StructType
-
-    from airflow_jira_etl_spark.sources.rest_datasource import (
-        PagedRestStreamReader,
-    )
-
-    schema = StructType.fromDDL("id string")
-    r = PagedRestStreamReader(
-        schema,
-        {
-            "url": "https://api/x",
-            "fetcher": "airflow_jira_etl_spark.sources.fixture_fetchers:synthetic_issues_fetcher",
-        },
-    )
-    data = [{"id": str(i)} for i in range(20)]
-
-    def fake_pages(page_size):
-        def fetch(start_at):
-            return {
-                "total": 20,
-                "maxResults": page_size,
-                "issues": data[start_at : start_at + page_size],
-            }
-
-        return fetch
-
-    # committed batch was [0, 5); server now serves 25-row pages
-    r._fetch_page = fake_pages(25)
-    grown = [t[0] for t in r.readBetweenOffsets({"startAt": 0}, {"startAt": 5, "stride": 5})]
-    assert grown == ["0", "1", "2", "3", "4"]
-
-    # server now serves 2-row pages: same exact range, more fetches
-    r._fetch_page = fake_pages(2)
-    shrunk = [t[0] for t in r.readBetweenOffsets({"startAt": 0}, {"startAt": 5, "stride": 5})]
-    assert shrunk == ["0", "1", "2", "3", "4"]
-
-    # a mid-stream range replays correctly too
-    r._fetch_page = fake_pages(3)
-    mid = [t[0] for t in r.readBetweenOffsets({"startAt": 7, "stride": 5}, {"startAt": 12, "stride": 5})]
-    assert mid == ["7", "8", "9", "10", "11"]
-
-    # the source shrank below the committed range: FAIL by default
-    # (silently committing a partial batch breaks exactly-once with no
-    # signal — the Kafka-source failOnDataLoss contract), tolerate
-    # only on explicit opt-in
-    def empty_fetch(start_at):
-        return {"total": 0, "maxResults": 5, "issues": []}
-
-    r._fetch_page = empty_fetch
-    with pytest.raises(RuntimeError, match="could only reconstruct"):
-        list(r.readBetweenOffsets({"startAt": 0}, {"startAt": 5}))
-    r.fail_on_data_loss = False
-    assert list(r.readBetweenOffsets({"startAt": 0}, {"startAt": 5})) == []
-
-
-def _stream_reader():
-    from pyspark.sql.types import StructType
-
-    from airflow_jira_etl_spark.sources.rest_datasource import (
-        PagedRestStreamReader,
-    )
-
-    return PagedRestStreamReader(
-        StructType.fromDDL("id string"),
-        {
-            "url": "https://api/x",
-            "fetcher": "airflow_jira_etl_spark.sources.fixture_fetchers:synthetic_issues_fetcher",
-        },
-    )
-
-
-def test_replay_partial_shrink_raises_with_counts(spark):
-    """The source shrank BETWEEN commit and replay but not to zero: a
-    committed range [0, 5) against a server that now holds only 3
-    records must reconstruct the surviving prefix and then FAIL loudly
-    (naming how many of how many records it recovered) — the
-    empty-at-first-offset case alone doesn't pin this path, and a
-    partial batch silently committed downstream is the worst form of
-    the data-loss hazard (some rows present, no signal which are
-    missing). With the explicit opt-in the truncated prefix flows."""
-    r = _stream_reader()
-    data = [{"id": str(i)} for i in range(3)]  # was 20 at commit time
-    r._fetch_page = lambda start_at: {
-        "total": 3,
-        "maxResults": 5,
-        "issues": data[start_at : start_at + 5],
-    }
-    with pytest.raises(RuntimeError, match="3 of 5"):
-        list(r.readBetweenOffsets({"startAt": 0}, {"startAt": 5}))
-    r.fail_on_data_loss = False
-    got = [t[0] for t in r.readBetweenOffsets({"startAt": 0}, {"startAt": 5})]
-    assert got == ["0", "1", "2"]
-
-
-def test_offset_advance_equals_emitted_count(spark):
-    """read() must advance the committed offset by exactly the number
-    of records EMITTED — the invariant readBetweenOffsets reconstructs
-    a range by. Advancing by the server's advertised stride instead
-    (the old behavior) breaks replay in two ways this test pins:
-
-    1. A4 (total-less) page smaller than its maxResults: the old code
-       committed [0, maxResults) for a 3-record page, and a replay
-       against a pathological server that echoes records for ANY
-       startAt re-consumed the page until maxResults rows were
-       filled — silent duplicates after recovery.
-    2. A3 short mid-scan page (server hiccup returns fewer than
-       stride): the old code skipped the offsets between got and
-       stride AND committed a range wider than the emitted rows.
-    """
-    # --- A4 echo server: 3 records, maxResults=100, no total, and it
-    # echoes the same records for every startAt (the pathological
-    # shape read()'s A4 branch explicitly distrusts)
-    data = [{"id": str(i)} for i in range(3)]
-
-    r = _stream_reader()
-    r._fetch_page = lambda start_at: {"maxResults": 100, "issues": data}
-    rows, off = r.read({"startAt": 0})
-    assert len(list(rows)) == 3
-    assert off["startAt"] == 3  # emitted count, NOT maxResults
-    replay = [t[0] for t in r.readBetweenOffsets({"startAt": 0}, off)]
-    assert replay == ["0", "1", "2"]  # exactly once, no echo-refill
-
-    # --- A3 short mid-scan page: total=20, stride=5, but the page at
-    # startAt=0 carries only 3 records
-    r = _stream_reader()
-    r._fetch_page = lambda start_at: {
-        "total": 20,
-        "maxResults": 5,
-        "issues": data if start_at == 0 else [],
-    }
-    rows, off = r.read({"startAt": 0})
-    assert len(list(rows)) == 3
-    assert off["startAt"] == 3  # next fetch resumes at the first
-    # unserved offset — no skipped records, no over-wide commit
-    replay = [t[0] for t in r.readBetweenOffsets({"startAt": 0}, off)]
-    assert replay == ["0", "1", "2"]
-
-
-def test_zero_record_page_stalls_without_advancing(spark):
-    """A server reporting total > startAt yet returning no records is
-    upstream-broken: read() must stall (offset unchanged, retried next
-    trigger) rather than advance — advancing would commit offsets no
-    replay could ever reconstruct (and silently skip the records if
-    they appear later)."""
-    r = _stream_reader()
-    r._fetch_page = lambda start_at: {
-        "total": 20,
-        "maxResults": 5,
-        "issues": [],
-    }
-    rows, off = r.read({"startAt": 10, "stride": 5})
-    assert list(rows) == []
-    assert off["startAt"] == 10
 
 
 def test_page_plan_rejects_non_positive_stride():

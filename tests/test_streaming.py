@@ -110,32 +110,35 @@ def test_stream_reads_directory_shaped_events_fixture(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_stateful_streams_green_under_rocksdb_state_store(
-    spark, sf_dir, monkeypatch
-):
-    """SPARK_GRAFT_STATE_STORE=rocksdb swaps the heap-backed state
-    store for RocksDB (the 100 TB path — keyed state on executor-local
-    disk instead of on-heap). The stateful query family must stay
-    oracle-green under it, and the provider conf must be restored after
-    each run (the scope must not leak into later batch queries)."""
-    from airflow_jira_etl_spark.streaming.source import _PROVIDER_KEY
+def test_stateful_streams_green_under_rocksdb_state_store(spark, sf_dir):
+    """Spark's own ``stateStore.providerClass`` conf swaps the
+    heap-backed state store for RocksDB (the 100 TB path — keyed state
+    on executor-local disk instead of on-heap). The stateful query
+    family must stay oracle-green under it, and the scoped provider
+    conf must be restored afterwards (no leak into later queries)."""
+    from airflow_jira_etl_spark.session import scoped_conf
     from tests.oracle_check import compare, duckdb_conn
 
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "rocksdb")
+    key = "spark.sql.streaming.stateStore.providerClass"
+    rocksdb = (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    )
     con = duckdb_conn(sf_dir)
-    for name in (
-        "stream_tumbling_count",
-        "stream_session_window",
-        "stream_stateful_profile",
-    ):
-        r = compare(
-            registry.QUERIES[name](spark, sf_dir),
-            con,
-            registry.ORACLES[name],
-        )
-        assert not r["errors"], (name, r["errors"])
-        # restored to the pre-run effective provider, not left on rocksdb
-        assert "RocksDB" not in (spark.conf.get(_PROVIDER_KEY, "") or ""), name
+    with scoped_conf(spark, key, rocksdb):
+        for name in (
+            "stream_tumbling_count",
+            "stream_session_window",
+            "stream_stateful_profile",
+        ):
+            r = compare(
+                registry.QUERIES[name](spark, sf_dir),
+                con,
+                registry.ORACLES[name],
+            )
+            assert not r["errors"], (name, r["errors"])
+    # restored to the pre-run effective provider, not left on rocksdb
+    assert "RocksDB" not in (spark.conf.get(key, "") or "")
 
 
 def test_stateful_profile_all_null_values_emit_sql_null(spark):

@@ -299,25 +299,11 @@ def test_combine_merge_folds_partials(spark, tmp_path):
 
 
 def test_schema_evolution_adds_column_with_nulls(spark, tmp_path):
-    t = ParquetUpsertTable(
-        spark, str(tmp_path / "ev"), key="k", n_buckets=4, evolve_schema=True
-    )
-    t.apply(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"))
-    # later batch carries a NEW column; merge must succeed and old rows
-    # read back NULL for it
+    """Fixed-DDL sink: a batch whose column set differs from the
+    stored schema raises instead of evolving the table."""
     evolved = spark.createDataFrame(
         [(2, "b2", "extra2"), (3, "c", "extra3")], "k long, v string, note string"
     )
-    t.apply(evolved)
-    got = {r.k: (r.v, r.note) for r in t.read().collect()}
-    assert got == {1: ("a", None), 2: ("b2", "extra2"), 3: ("c", "extra3")}
-    # a DIFFERENT reader instance with the default flag must see the
-    # same evolved schema — the contract lives in the manifest, not in
-    # whichever constructor arguments this process happened to use
-    t_other = ParquetUpsertTable(spark, str(tmp_path / "ev"), key="k", n_buckets=4)
-    got2 = {r.k: (r.v, r.note) for r in t_other.read().collect()}
-    assert got2 == got
-    # without evolution the same merge raises (fixed-DDL safety)
     t2 = ParquetUpsertTable(spark, str(tmp_path / "fx"), key="k", n_buckets=4)
     t2.apply(spark.createDataFrame([(1, "a")], "k long, v string"))
     with pytest.raises(Exception):
@@ -666,26 +652,6 @@ def test_custom_bucketer_requires_explicit_fingerprint(spark, tmp_path):
     bucketer.fingerprint = "const:0"
     t.apply(spark.createDataFrame([(1, "a")], "k long, v string"))
     assert {r.k: r.v for r in t.read().collect()} == {1: "a"}
-
-
-def test_combine_merge_evolves_schema(spark, tmp_path):
-    """combine mode + evolve_schema: a batch adding a new metric column
-    must fold, with the new metric's running aggregate starting from
-    the batches that carry it (old rows contribute NULL, which every
-    combiner ignores)."""
-    t = ParquetUpsertTable(
-        spark, str(tmp_path / "t"), key="k", evolve_schema=True
-    )
-    t.apply(
-        spark.createDataFrame([(1, 10), (2, 20)], "k long, views long"),
-        combine={"views": "sum"},
-    )
-    t.apply(
-        spark.createDataFrame([(1, 5, 7)], "k long, views long, clicks long"),
-        combine={"views": "sum", "clicks": "sum"},
-    )
-    got = {r.k: (r.views, r.clicks) for r in t.read().collect()}
-    assert got == {1: (15, 7), 2: (20, None)}
 
 
 def test_merge_aggregate_validation(spark):
