@@ -63,7 +63,7 @@ def _entity_dag(entity: str, unique_column: str) -> DagSpec:
             ),
             TaskSpec(
                 # merge_upsert is each pipeline's terminal task; --task
-                # runs it plus its upstream closure (ingest), mirroring
+                # runs the chain up to it (ingest, then merge), mirroring
                 # the reference's create_table >> fetch_and_save split
                 task_id="ingest_and_merge",
                 entry_point="airflow_jira_etl_spark.pipeline",

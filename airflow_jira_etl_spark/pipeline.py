@@ -4,11 +4,11 @@ The reference wires ``create_table >> fetch`` per entity in Airflow
 (``/root/reference/dags/fetch_jira_tempo_worklogs.py:97-114``; defaults
 :15-26). Production deployments keep Airflow and submit these as Spark
 jobs (one ``SparkSubmitOperator`` per pipeline — the BASELINE.json
-"spark_approach"); the engine itself only needs a thin, dependency-
-ordered task runner so pipelines are testable without a scheduler.
+"spark_approach"); the engine itself only runs each pipeline's fixed
+task chain, so pipelines are testable without a scheduler.
 
-A pipeline here = ordered tasks over a shared context:
-  ensure_table >> ingest (paginated scan → flatten) >> merge (upsert)
+Every pipeline is the same chain over a shared context:
+  ensure_table >> ingest (paginated scan → flatten) >> merge_upsert
 which is exactly the reference's task graph, with the fetch/persist
 loop replaced by the engine's distributed operators.
 """
@@ -16,8 +16,7 @@ loop replaced by the engine's distributed operators.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
-from dataclasses import dataclass, field
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -70,80 +69,60 @@ _FETCHER_DEFAULTS = {
 ENTITY_N_BUCKETS = 1
 
 
-@dataclass
-class Task:
-    name: str
-    fn: Callable[[dict], None]
-    upstream: list[str] = field(default_factory=list)
-
-
 class Pipeline:
-    """Minimal dependency-ordered task runner (topological execution,
-    fail-fast). Airflow's retry/schedule layer sits above this in
-    production; correctness does not depend on it (idempotent tasks)."""
+    """One entity pipeline: the fixed chain ``ensure_table >> ingest >>
+    merge_upsert`` over a shared context. Airflow's retry/schedule layer
+    sits above this in production; correctness does not depend on it
+    (idempotent tasks).
 
-    def __init__(self, name: str):
+    ``ingest`` returns an iterable of flat batches; ``merge_upsert``
+    applies them in order to the keyed table ``ensure_table`` opened
+    (``context["table"]``)."""
+
+    tasks = ("ensure_table", "ingest", "merge_upsert")
+
+    def __init__(
+        self,
+        name: str,
+        spark: SparkSession,
+        table_path: str,
+        key: str,
+        ingest: Callable[[], Iterable[DataFrame]],
+    ):
         self.name = name
-        self.tasks: dict[str, Task] = {}
+        self._spark = spark
+        self._table_path = table_path
+        self._key = key
+        self._ingest = ingest
 
-    def task(self, name: str, upstream: list[str] | None = None):
-        def deco(fn: Callable[[dict], None]):
-            if name in self.tasks:
-                # silent overwrite would replace the task's fn and edges
-                # and run a different DAG than authored
-                raise ValueError(
-                    f"duplicate task {name!r} in pipeline {self.name}"
-                )
-            self.tasks[name] = Task(name, fn, upstream or [])
-            return fn
+    def ensure_table(self, ctx: dict) -> None:
+        ctx["table"] = ParquetUpsertTable(
+            self._spark, self._table_path, key=self._key, n_buckets=ENTITY_N_BUCKETS
+        )
 
-        return deco
+    def ingest(self, ctx: dict) -> None:
+        ctx["batches"] = self._ingest()
 
-    def upstream_closure(self, name: str) -> set[str]:
-        """``name`` plus every transitive upstream task."""
-        if name not in self.tasks:
-            raise KeyError(
-                f"unknown task {name!r} in {self.name}; have {sorted(self.tasks)}"
-            )
-        seen: set[str] = set()
-        stack = [name]
-        while stack:
-            t = stack.pop()
-            if t not in seen:
-                seen.add(t)
-                for u in self.tasks[t].upstream:
-                    if u not in self.tasks:
-                        # the scheduler-facing --task path must get the
-                        # same diagnostic a full run() produces, not a
-                        # bare KeyError
-                        raise RuntimeError(
-                            f"task {t!r} declares unknown upstream {u!r} "
-                            f"in {self.name}; have {sorted(self.tasks)}"
-                        )
-                stack.extend(self.tasks[t].upstream)
-        return seen
+    def merge_upsert(self, ctx: dict) -> None:
+        for batch in ctx["batches"]:
+            ctx["table"].apply(batch)
 
     def run(self, context: dict, only: str | None = None) -> list[str]:
-        """Execute the DAG (topological, fail-fast). With ``only``, run
-        just that task and its upstream closure — the scheduler-facing
-        ``--task`` contract."""
-        wanted = self.upstream_closure(only) if only else set(self.tasks)
-        done: list[str] = []
-        remaining = {n: t for n, t in self.tasks.items() if n in wanted}
-        while remaining:
-            ready = [
-                t for t in remaining.values() if all(u in done for u in t.upstream)
-            ]
-            if not ready:
-                raise RuntimeError(
-                    f"dependency cycle or missing upstream in {self.name}: "
-                    f"{sorted(remaining)}"
-                )
-            for t in sorted(ready, key=lambda t: t.name):
-                t.fn(context)
-                done.append(t.name)
-                del remaining[t.name]
-        return done
+        """Run the chain, fail-fast. With ``only``, stop after that task
+        — the scheduler-facing ``--task`` contract."""
+        if only is not None and only not in self.tasks:
+            raise KeyError(
+                f"unknown task {only!r} in {self.name}; have {list(self.tasks)}"
+            )
+        chain = self.tasks[: self.tasks.index(only or self.tasks[-1]) + 1]
+        for name in chain:
+            getattr(self, name)(context)
+        return list(chain)
+
+
+# The builders below call the scan and flatten functions through this
+# module's globals at call time, so a wrapper installed on the module
+# (a tracer) sees every call.
 
 
 def worklog_pipeline(
@@ -156,40 +135,25 @@ def worklog_pipeline(
     """The worklogs DAG re-expressed: ensure table >> paginated ingest
     >> keyed merge (unique key ``tempo_worklog_id``, mirroring the DDL's
     UNIQUE column at ``fetch_jira_tempo_worklogs.py:81``)."""
-    p = Pipeline("fetch_jira_tempo_worklogs")
 
-    @p.task("ensure_table")
-    def ensure_table(ctx: dict) -> None:
-        ctx["table"] = ParquetUpsertTable(
-            spark,
-            os.path.join(table_root, "worklogs"),
-            key=unique_column,
-            n_buckets=ENTITY_N_BUCKETS,
-        )
-
-    @p.task("ingest_pages", upstream=["ensure_table"])
-    def ingest_pages(ctx: dict) -> None:
-        # LAZY: the cursor generator flows through the context and each
-        # page becomes an (Arrow LocalRelation) DataFrame only when
-        # merge_upsert reaches it — peak driver memory stays O(page),
-        # matching the reference's fetch-then-persist loop
-        # (worklog_processor.py:80-106). The previous list
-        # comprehension exhausted the whole cursor up front, pinning
-        # EVERY page's rows in driver-held plans until the merge task
-        # finished: O(total extract) driver memory, an OOM on a long
-        # backfill.
-        ctx["batches"] = (
+    def ingest():
+        # LAZY: each cursor page becomes an (Arrow LocalRelation)
+        # DataFrame only when merge_upsert reaches it, so peak driver
+        # memory stays O(page), matching the reference's
+        # fetch-then-persist loop (worklog_processor.py:80-106)
+        return (
             records_to_flat_df(spark, page, WORKLOG_MAPPING)
             for page in cursor_scan(fetcher, initial_url)
             if page
         )
 
-    @p.task("merge_upsert", upstream=["ingest_pages"])
-    def merge_upsert(ctx: dict) -> None:
-        for batch in ctx["batches"]:
-            ctx["table"].apply(batch)
-
-    return p
+    return Pipeline(
+        "fetch_jira_tempo_worklogs",
+        spark,
+        os.path.join(table_root, "worklogs"),
+        unique_column,
+        ingest,
+    )
 
 
 def issues_pipeline(
@@ -202,27 +166,14 @@ def issues_pipeline(
     """The issues DAG: offset pagination fans out across executors
     (A3 parallelism, ``issue_processor.py:114-167``); the whole extract
     lands as ONE distributed DataFrame and ONE merge."""
-    p = Pipeline("fetch_jira_issues")
 
-    @p.task("ensure_table")
-    def ensure_table(ctx: dict) -> None:
-        ctx["table"] = ParquetUpsertTable(
-            spark,
-            os.path.join(table_root, "issues"),
-            key=unique_column,
-            n_buckets=ENTITY_N_BUCKETS,
-        )
-
-    @p.task("ingest_fanout", upstream=["ensure_table"])
-    def ingest_fanout(ctx: dict) -> None:
+    def ingest():
         raw = offset_scan_parallel(spark, fetcher, url, records_key="issues")
-        ctx["flat"] = raw_json_to_flat(raw, ISSUE_MAPPING, ISSUE_LEAF_TYPES)
+        return [raw_json_to_flat(raw, ISSUE_MAPPING, ISSUE_LEAF_TYPES)]
 
-    @p.task("merge_upsert", upstream=["ingest_fanout"])
-    def merge_upsert(ctx: dict) -> None:
-        ctx["table"].apply(ctx["flat"])
-
-    return p
+    return Pipeline(
+        "fetch_jira_issues", spark, os.path.join(table_root, "issues"), unique_column, ingest
+    )
 
 
 def users_pipeline(
@@ -233,27 +184,13 @@ def users_pipeline(
     unique_column: str = "account_id",
 ) -> Pipeline:
     """The users DAG: single-page scan (A4, ``users_processor.py:53-95``)."""
-    p = Pipeline("fetch_jira_users")
 
-    @p.task("ensure_table")
-    def ensure_table(ctx: dict) -> None:
-        ctx["table"] = ParquetUpsertTable(
-            spark,
-            os.path.join(table_root, "users"),
-            key=unique_column,
-            n_buckets=ENTITY_N_BUCKETS,
-        )
+    def ingest():
+        return [records_to_flat_df(spark, single_page_scan(fetcher, url), USER_MAPPING)]
 
-    @p.task("ingest_page", upstream=["ensure_table"])
-    def ingest_page(ctx: dict) -> None:
-        records = single_page_scan(fetcher, url)
-        ctx["flat"] = records_to_flat_df(spark, records, USER_MAPPING)
-
-    @p.task("merge_upsert", upstream=["ingest_page"])
-    def merge_upsert(ctx: dict) -> None:
-        ctx["table"].apply(ctx["flat"])
-
-    return p
+    return Pipeline(
+        "fetch_jira_users", spark, os.path.join(table_root, "users"), unique_column, ingest
+    )
 
 
 def parse_args(argv: list[str] | None = None):
@@ -268,7 +205,7 @@ def parse_args(argv: list[str] | None = None):
     ap.add_argument(
         "--task",
         default="all",
-        help="run only this task and its upstream closure ('all' = whole DAG)",
+        help="run the chain up to and including this task ('all' = whole chain)",
     )
     ap.add_argument("--url", default="https://api/search")
     ap.add_argument(

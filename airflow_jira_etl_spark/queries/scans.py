@@ -163,8 +163,8 @@ def sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Table-free oracle: the API emulator is deterministic
     # (sources/fixture_fetchers.py — ids 0..136, priority 'high' for
     # even ids, key 'PROJ-{id}'), so its contract restates exactly in
-    # SQL. A drifted page size, a broken pushdown, or a dropped page in
-    # the source all hash-diverge from this.
+    # SQL. A drifted page size, a dropped filter param, or a dropped
+    # page in the source all hash-diverge from this.
     oracle="""
     SELECT CAST(i AS VARCHAR) AS id,
            'PROJ-' || CAST(i AS VARCHAR) AS "key",
@@ -174,35 +174,26 @@ def sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def source_rest_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The custom paginated-REST DataSource as a first-class scan:
-    ``spark.read.format('paged_rest')`` against the deterministic API
-    emulator, with an EqualTo filter pushed down INTO the API query
-    params (sources/rest_datasource.py). One InputPartition per offset
-    page — the A3 fan-out as a real Spark source."""
-    from airflow_jira_etl_spark.session import ensure_runtime_confs
-    from airflow_jira_etl_spark.sources.rest_datasource import PagedRestDataSource
-
-    ensure_runtime_confs(spark)
-    try:
-        spark.dataSource.register(PagedRestDataSource)
-    except Exception:
-        pass  # already registered in this session
-    return (
-        spark.read.format("paged_rest")
-        .options(
-            url="https://api/search",
-            fetcher=(
-                "airflow_jira_etl_spark.sources.fixture_fetchers"
-                ":synthetic_issues_fetcher"
-            ),
-            schema_ddl="id string, self string, key string, priority string, project_id string",
-            records_key="issues",
-            param_columns="priority,project_id",
-        )
-        .load()
-        .where(F.col("priority") == "high")
-        .select("id", "key", "priority")
+    """The A3 offset fan-out as a registered scan: ``offset_scan_parallel``
+    against the deterministic API emulator, with the ``priority`` filter
+    forwarded as an API query param (the reference forwards its filters
+    the same way, ``fetch_jira_tempo_worklogs.py:60-63``), then the
+    flat MAPPING's one JVM select."""
+    from airflow_jira_etl_spark.sources.fixture_fetchers import (
+        synthetic_issues_fetcher,
     )
+    from airflow_jira_etl_spark.sources.paged_rest import (
+        offset_scan_parallel,
+        raw_json_to_flat,
+    )
+
+    raw = offset_scan_parallel(
+        spark,
+        synthetic_issues_fetcher({}),
+        "https://api/search",
+        params={"priority": "high"},
+    )
+    return raw_json_to_flat(raw, {"id": "id", "key": "key", "priority": "priority"})
 
 
 @query(

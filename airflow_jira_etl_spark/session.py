@@ -1,7 +1,8 @@
 """SparkSession factory.
 
-Local-mode defaults are tuned for the test harness (local[32],
-single JVM); the same builder settings are what we would submit to a
+Local mode runs one JVM with ``local[$SPARK_GRAFT_CPUS]`` (32 when
+unset; set it to the host's core count, e.g. ``local[4]`` on a 4-core
+host); the same builder settings are what we would submit to a
 1000-executor cluster, minus ``master`` — AQE, skew-join handling and
 partition coalescing are the scale levers, and they are runtime
 (adaptive) rather than hand-tuned so the plan survives a 100× data
@@ -36,9 +37,6 @@ RUNTIME_CONFS = {
     # the column surfaces as long and catalog.load converts
     # (catalog.events_ts_is_nanos sniffs the unit per file)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # custom Python DataSources (sources/rest_datasource) receive
-    # pushed filters
-    "spark.sql.python.filterPushdown.enabled": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

@@ -1,4 +1,4 @@
-"""Deterministic in-process API emulators for the REST data source.
+"""Deterministic in-process API emulators for the paged REST scans.
 
 These stand in for the live Jira/Tempo endpoints (no HTTP stack in
 this environment) and mirror the offset-page response shape the
@@ -37,7 +37,8 @@ def synthetic_issues_fetcher(options: dict):
         params = params or {}
         start = int(params.get("startAt", 0))
         records = [_record(i) for i in range(TOTAL)]
-        # server-side filter delegation (predicate pushdown target)
+        # server-side filter delegation: the scans forward these as
+        # API query params
         for col in ("priority", "project_id"):
             if col in params:
                 records = [r for r in records if r[col] == params[col]]
@@ -52,43 +53,14 @@ def synthetic_issues_fetcher(options: dict):
     return fetch
 
 
-def typed_issues_fetcher(options: dict):
-    """Factory: records carry RAW TYPED values (int id, bool flag, dict
-    payload) — the emulator for non-string DDLs, where typed cells must
-    pass through to Spark's verification and only STRING fields
-    JSON-encode structured values."""
-
-    def fetch(url: str, params: dict | None = None) -> dict:
-        params = params or {}
-        start = int(params.get("startAt", 0))
-        records = [
-            {
-                "id": i,
-                "key": f"PROJ-{i}",
-                "flagged": i % 2 == 0,
-                "fields": {"rank": i * 10},
-            }
-            for i in range(TOTAL)
-        ]
-        page = records[start : start + STRIDE]
-        return {
-            "startAt": start,
-            "maxResults": STRIDE,
-            "total": TOTAL,
-            "issues": page,
-        }
-
-    return fetch
-
-
 SINGLE_PAGE_N = 7
 
 
 def totalless_fetcher(options: dict):
     """Factory: an endpoint that reports NO ``total`` (the A4
     single-page shape) — all records live in page 0, later offsets
-    return empty pages. The batch reader must emit one partition, never
-    zero."""
+    return empty pages. The offset scan must return page 0, never zero
+    rows."""
 
     def fetch(url: str, params: dict | None = None) -> dict:
         start = int((params or {}).get("startAt", 0))

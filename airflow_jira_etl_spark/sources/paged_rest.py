@@ -89,17 +89,14 @@ def page_plan(page: dict) -> tuple[int | None, int]:
     """The offset-pagination facts of one response: (total, stride).
     ``total`` is None when the endpoint does not report one (the A4
     single-page shape) — callers must not conflate that with an empty
-    result set. ONE parse shared by both offset scanners (the batch
-    DataSource and the fan-out scan below); the total=0 guard diverged
-    between two hand-rolled copies once already."""
+    result set."""
     total = page.get("total")
     stride = int(page.get("maxResults", 100) or 100)
     if stride <= 0:
         # e.g. the common 'maxResults: -1 = unlimited' convention —
-        # as a range() step it silently yields ZERO offset partitions
-        # (the whole scan, prefetched page 0 included, returns 0 rows)
-        # or an empty parallel fan-out; no caller can paginate on a
-        # non-positive stride, so the ONE shared parse refuses it
+        # as a range() step it yields no further offsets, so the
+        # fan-out would silently return page 0 alone; no caller can
+        # paginate on a non-positive stride, so the parse refuses it
         raise ValueError(
             f"paged response reports non-positive maxResults {stride} "
             f"— cannot derive a pagination stride (an 'unlimited' "
@@ -136,11 +133,10 @@ def http_fetcher(auth_scheme: str, token_env: str) -> Fetcher:
 
 
 def http_fetcher_factory(options: dict) -> Fetcher:
-    """Factory with the custom-DataSource ``(options) -> fetch`` shape
-    (rest_datasource's ``fetcher`` option is a dotted path to one of
-    these): reads ``auth_scheme``/``token_env`` from the source options
-    with the reference's defaults (Bearer auth, token from env —
-    jira_fetcher.py:14-16)."""
+    """Factory with the ``(options) -> fetch`` shape that the pipeline
+    CLI's ``--fetcher`` loads by dotted path: reads ``auth_scheme``/
+    ``token_env`` from the options with the reference's defaults (Bearer
+    auth, token from env — jira_fetcher.py:14-16)."""
     return http_fetcher(
         options.get("auth_scheme", "Bearer"),
         options.get("token_env", "API_TOKEN"),

@@ -288,6 +288,25 @@ def test_load_missing_declared_column_fails_loudly(spark, tmp_path):
         catalog.load(spark, sf, "region")
 
 
+def test_conform_rejects_missing_declared_column(spark):
+    """conform() is shared by the batch loader AND the streaming source
+    — a drifted frame lacking a declared column must raise the explicit
+    ValueError from conform itself, not a KeyError."""
+    from pyspark.sql import types as T
+
+    from airflow_jira_etl_spark.catalog import conform
+
+    declared = T.StructType(
+        [
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("v", T.LongType()),
+        ]
+    )
+    raw = spark.createDataFrame([(1,)], "v long")
+    with pytest.raises(ValueError, match="lacks declared columns"):
+        conform(raw, declared)
+
+
 def test_load_casts_drifted_array_element_type(spark, tmp_path):
     """Embeddings shipping list<double> instead of the declared
     list<float> must conform (array-element casts are the drift mode

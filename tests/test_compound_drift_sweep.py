@@ -147,7 +147,7 @@ def test_rest_datasource_contract_is_fixture_independent(
 ):
     """source_rest_datasource reads the deterministic API emulator, not
     the parquet fixtures — its fully-hashed contract (69 even ids with
-    pushed-down priority filter) must be identical no matter how the
+    the priority filter forwarded to the API) must be identical no matter how the
     fixture dir drifts. The fourth r07 oracle conversion, armored here
     without DuckDB in the loop."""
     rows = registry.QUERIES["source_rest_datasource"](

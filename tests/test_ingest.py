@@ -10,6 +10,7 @@ import os
 import pytest
 
 from airflow_jira_etl_spark.entities import WORKLOG_MAPPING
+from airflow_jira_etl_spark.sources import fixture_fetchers
 from airflow_jira_etl_spark.sources.paged_rest import (
     cursor_scan,
     offset_scan_parallel,
@@ -148,10 +149,39 @@ def test_offset_fanout_equals_serial_union(spark):
 
 
 def test_offset_fanout_single_page(spark):
-    """total <= stride: page 0 alone, as a LocalRelation — no fan-out."""
+    """total <= stride: page 0 alone, as a LocalRelation — no fan-out.
+    An endpoint that reports no ``total`` (the A4 single-page shape)
+    returns its page 0, never zero rows."""
     for total, stride in [(3, 5), (100, 100), (0, 5)]:
         df = _scan_like_serial_walk(spark, total, stride)
         assert _analyzed_leaves(df) == ["LocalRelation"]
+    df = offset_scan_parallel(
+        spark, fixture_fetchers.totalless_fetcher({}), "https://api/users"
+    )
+    assert _analyzed_leaves(df) == ["LocalRelation"]
+    ids = sorted(int(json.loads(r.raw)["id"]) for r in df.collect())
+    assert ids == list(range(fixture_fetchers.SINGLE_PAGE_N))
+
+
+def test_offset_scan_forwards_filter_params(spark):
+    """Filter params reach every page fetch, page 0 on the driver and
+    the fanned-out pages on executors alike, so the server filters
+    (the reference forwards its filters as API params,
+    fetch_jira_tempo_worklogs.py:60-63) and its filtered ``total``
+    sizes the fan-out."""
+    serve = fixture_fetchers.synthetic_issues_fetcher({})
+
+    def fetch(url, params=None):
+        if (params or {}).get("priority") != "high":
+            raise ValueError(f"fetch without priority=high: {params}")
+        return serve(url, params)
+
+    df = offset_scan_parallel(
+        spark, fetch, "https://api/search", params={"priority": "high"}
+    )
+    ids = sorted(int(json.loads(r.raw)["id"]) for r in df.collect())
+    assert ids == list(range(0, fixture_fetchers.TOTAL, 2))
+    assert len(ids) == 69
 
 
 _CURSOR_PAGES = {
@@ -285,3 +315,52 @@ def test_corrupt_quarantine_preserves_raw_lines(spark, sf_dir):
     # raw line survives verbatim for replay/debugging
     assert all(r._malformed.startswith('{"event_id": ') for r in rows)
     assert all(r._malformed.endswith(', "user_') for r in rows)
+
+
+def test_single_page_scan_rejects_object_response(spark):
+    """A dict response (an API error body under HTTP 200) must raise,
+    not silently become a list of key strings."""
+    from airflow_jira_etl_spark.sources.paged_rest import single_page_scan
+
+    err_body = {"errorMessages": ["boom"], "errors": {}}
+    with pytest.raises(TypeError, match="object, not a list"):
+        single_page_scan(lambda url, params=None: err_body, "https://api/x")
+
+
+def test_offset_scan_parallel_rejects_caller_start_at(spark):
+    """The fan-out scan owns startAt (pages cover from 0); a caller-
+    supplied offset would silently skip or double-fetch pages."""
+    from airflow_jira_etl_spark.sources.fixture_fetchers import (
+        synthetic_issues_fetcher,
+    )
+    from airflow_jira_etl_spark.sources.paged_rest import offset_scan_parallel
+
+    with pytest.raises(ValueError, match="startAt"):
+        offset_scan_parallel(
+            spark,
+            synthetic_issues_fetcher({}),
+            "https://api/search",
+            params={"startAt": 50},
+        )
+
+
+def test_http_fetcher_factory_has_datasource_shape():
+    """The documented production wiring is (options) -> fetch: the
+    factory must accept one options dict (the raw http_fetcher takes
+    two positional strings and crashed when wired as documented)."""
+    from airflow_jira_etl_spark.sources.paged_rest import http_fetcher_factory
+
+    fetch = http_fetcher_factory({"auth_scheme": "Basic", "token_env": "T"})
+    assert callable(fetch)
+
+
+def test_page_plan_rejects_non_positive_stride():
+    """A server replying maxResults=-1 ('unlimited' convention) would
+    yield no further offsets (range step -1) — the fan-out silently
+    returns page 0 alone. The parse refuses; maxResults=0 keeps the
+    documented fall-back to the default stride."""
+    from airflow_jira_etl_spark.sources.paged_rest import page_plan
+
+    with pytest.raises(ValueError, match="non-positive maxResults"):
+        page_plan({"total": 137, "maxResults": -1, "issues": []})
+    assert page_plan({"total": 10, "maxResults": 0}) == (10, 100)

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from airflow_jira_etl_spark.pipeline import Pipeline, worklog_pipeline
+from airflow_jira_etl_spark.pipeline import worklog_pipeline
 from tests.test_ingest import make_cursor_fetcher
 
 
@@ -28,7 +28,7 @@ def test_worklog_pipeline_end_to_end(spark, tmp_path):
         spark, _worklog_fetcher(), "https://api/worklogs?page=0", str(tmp_path)
     )
     order = p.run({})
-    assert order == ["ensure_table", "ingest_pages", "merge_upsert"]
+    assert order == ["ensure_table", "ingest", "merge_upsert"]
     # run a fresh pipeline again (the Airflow retry-from-scratch path):
     # state must be unchanged (idempotent replay)
     ctx2: dict = {}
@@ -39,14 +39,6 @@ def test_worklog_pipeline_end_to_end(spark, tmp_path):
     assert table.count() == 12
     cols = set(table.columns)
     assert {"tempo_worklog_id", "issue_id", "author_id", "url"} <= cols
-
-
-def test_pipeline_cycle_detection():
-    p = Pipeline("bad")
-    p.task("a", upstream=["b"])(lambda ctx: None)
-    p.task("b", upstream=["a"])(lambda ctx: None)
-    with pytest.raises(RuntimeError, match="cycle"):
-        p.run({})
 
 
 def test_dag_specs_mirror_reference_shape():
@@ -166,7 +158,7 @@ def test_run_only_executes_upstream_closure(spark, tmp_path):
     assert p.run({}, only="ensure_table") == ["ensure_table"]
     p2 = users_pipeline(spark, fetch, "https://api/users", str(tmp_path / "b"))
     done = p2.run({}, only="merge_upsert")
-    assert done == ["ensure_table", "ingest_page", "merge_upsert"]
+    assert done == ["ensure_table", "ingest", "merge_upsert"]
     with pytest.raises(KeyError, match="unknown task"):
         p2.run({}, only="nope")
 
@@ -278,32 +270,6 @@ def test_cli_defaults_run_every_entity_end_to_end(spark, tmp_path):
         assert t.read().count() == n, entity
 
 
-def test_pipeline_rejects_duplicate_task_and_unknown_upstream(spark):
-    """Silent task overwrite would run a different DAG than authored;
-    a typo'd upstream on the --task path must get the diagnostic error,
-    not a bare KeyError."""
-    from airflow_jira_etl_spark.pipeline import Pipeline
-
-    p = Pipeline("t")
-
-    @p.task("a")
-    def a(ctx):
-        pass
-
-    with pytest.raises(ValueError, match="duplicate task"):
-
-        @p.task("a")
-        def a2(ctx):
-            pass
-
-    @p.task("b", upstream=["ghost"])
-    def b(ctx):
-        pass
-
-    with pytest.raises(RuntimeError, match="unknown upstream"):
-        p.upstream_closure("b")
-
-
 def test_dag_specs_carry_start_date_and_key_on_both_tasks():
     """The reference's start_date default must materialize (a scheduled
     Airflow DAG without one never runs), and --unique-column must reach
@@ -396,3 +362,39 @@ def test_existing_bucket_layout_is_kept_until_compacted(spark, tmp_path):
     manifest = table._read_manifest()
     assert manifest["n_buckets"] == 1 and list(manifest["buckets"]) == ["0"]
     assert sorted(map(tuple, table.read().collect())) == want
+
+
+def test_benchmark_trace_hooks_see_every_layer(spark, tmp_path, monkeypatch):
+    """The benchmark's per-layer metrics come from wrappers that
+    ``perfbench.tracing.install`` puts on ``pipeline``'s scan and
+    flatten functions and on ``ParquetUpsertTable.apply``. A pipeline
+    that bound those functions at import, or went round them, would
+    report zero pages, records or mapping calls while still passing
+    every other test."""
+    from airflow_jira_etl_spark import pipeline
+    from airflow_jira_etl_spark.sinks.parquet_upsert import ParquetUpsertTable
+    from perfbench import emulator, tracing, workloads
+
+    for name in (
+        "cursor_scan",
+        "single_page_scan",
+        "offset_scan_parallel",
+        "records_to_flat_df",
+        "raw_json_to_flat",
+    ):
+        monkeypatch.setattr(pipeline, name, getattr(pipeline, name))
+    monkeypatch.setattr(ParquetUpsertTable, "apply", ParquetUpsertTable.apply)
+    tracer = tracing.Tracer(spark)
+    tracer.traced = True
+    tracing.install(tracer)
+
+    sizes = emulator.Sizes(2, 10, 2, 20, 10)
+    workloads.EtlRun(spark, seed=3, table_root=str(tmp_path), sizes=sizes).run_pass()
+    # issues: one fanned-out extract, one flatten, one apply; worklogs:
+    # one of each per cursor page; users: one of each
+    assert tracer.counts["sources.pages"] == sizes.issue_pages + sizes.worklog_pages + 1
+    assert tracer.counts["sources.records"] == (
+        sizes.issues + sizes.worklog_pages * sizes.worklogs_per_page + sizes.users
+    )
+    assert tracer.counts["mapping.calls"] == 1 + sizes.worklog_pages + 1
+    assert sum(s.kind == "apply" for s in tracer.spans) == 1 + sizes.worklog_pages + 1
