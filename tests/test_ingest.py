@@ -149,12 +149,15 @@ def test_offset_fanout_equals_serial_union(spark):
 
 
 def test_offset_fanout_single_page(spark):
-    """total <= stride: page 0 alone, as a LocalRelation — no fan-out.
-    An endpoint that reports no ``total`` (the A4 single-page shape)
-    returns its page 0, never zero rows."""
+    """total <= stride: page 0 alone, as a LocalRelation — no fan-out."""
     for total, stride in [(3, 5), (100, 100), (0, 5)]:
         df = _scan_like_serial_walk(spark, total, stride)
         assert _analyzed_leaves(df) == ["LocalRelation"]
+
+
+def test_totalless_endpoint_single_page(spark):
+    """An endpoint that reports no ``total`` (the A4 single-page shape)
+    returns its page 0 as a LocalRelation, never zero rows."""
     df = offset_scan_parallel(
         spark, fixture_fetchers.totalless_fetcher({}), "https://api/users"
     )
