@@ -163,9 +163,9 @@ def issues_pipeline(
     table_root: str,
     unique_column: str = "issue_id",
 ) -> Pipeline:
-    """The issues DAG: offset pagination fans out across executors
-    (A3 parallelism, ``issue_processor.py:114-167``); the whole extract
-    lands as ONE distributed DataFrame and ONE merge."""
+    """The issues DAG: offset pagination fetches its pages concurrently
+    on driver threads (A3 parallelism, ``issue_processor.py:114-167``);
+    the whole extract lands as ONE DataFrame and ONE merge."""
 
     def ingest():
         raw = offset_scan_parallel(spark, fetcher, url, records_key="issues")

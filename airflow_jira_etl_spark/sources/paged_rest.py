@@ -11,10 +11,10 @@ Reference behavior being reproduced (SURVEY.md §2A):
   everything downstream (parse → flatten → sink).
 * A3 offset-paginated scan: page 0 discovers ``total``
   (``issue_processor.py:141-142``), then every offset is independent —
-  the scan FANS OUT across executors via ``spark.range`` over the
-  remaining pages + ``mapInPandas``, the key scan-parallelism win over
-  the reference's serial loop. (The reference's ``<=`` off-by-one that
-  refetches a trailing empty page, :129, is deliberately not
+  the remaining pages are fetched CONCURRENTLY on a driver thread pool
+  (a fetch waits on I/O, not on a CPU), the key scan-parallelism win
+  over the reference's serial loop. (The reference's ``<=`` off-by-one
+  that refetches a trailing empty page, :129, is deliberately not
   reproduced.)
 * A4 single-page scan (``users_processor.py:53-95``) = offset scan
   with one page.
@@ -27,11 +27,10 @@ Reference behavior being reproduced (SURVEY.md §2A):
 Pages are exchanged as RAW JSON STRINGS: executors parse them with
 ``from_json`` against an explicit schema derived from the MAPPING
 (``mapping_to_schema``) and flatten with the compiled MAPPING plan —
-all JVM-side after the fetch. Records the driver already holds (a
-cursor page, the single page, offset page 0) enter Spark as an Arrow
-``LocalRelation`` (``_raw_frame``), not a Python-backed RDD, so no
-action over a batch starts a Python worker; the only Python on the
-executors is the offset fan-out's fetch kernel.
+all JVM-side after the fetch. Every fetch runs on the driver, and the
+records it returns (a cursor page, the single page, the offset scan's
+pages) enter Spark as an Arrow ``LocalRelation`` (``_raw_frame``), not
+a Python-backed RDD, so no ingest batch starts a Python worker.
 """
 
 from __future__ import annotations
@@ -40,6 +39,7 @@ import json
 import os
 import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -52,15 +52,17 @@ from airflow_jira_etl_spark.operators.mapping import (
     mapping_to_schema,
 )
 
-# fetch(url, params) -> parsed JSON (dict or list)
+# fetch(url, params) -> parsed JSON (dict or list). The offset scan
+# calls one fetcher from up to PAGE_PARALLELISM driver threads at once,
+# so it must be thread-safe; it never leaves the driver, so it need not
+# pickle.
 Fetcher = Callable[[str, dict | None], object]
 
 RETRY_ATTEMPTS = 5
 RETRY_MIN_S = 4.0
 RETRY_MAX_S = 10.0
 
-# upper bound on the offset fan-out's fetch tasks (one page per task
-# below it, contiguous runs of pages above it)
+# upper bound on the offset scan's fetch threads (pages in flight at once)
 PAGE_PARALLELISM = 32
 
 
@@ -172,57 +174,52 @@ def offset_scan_parallel(
     params: dict | None = None,
     records_key: str = "issues",
 ) -> DataFrame:
-    """A3 fan-out: fetch page 0 on the driver to learn ``total`` and
-    the server's ``maxResults`` stride, then fetch the remaining
-    offsets IN PARALLEL on executors, returning a DataFrame of raw
-    JSON record strings.
+    """A3 fan-out: fetch page 0 to learn ``total`` and the server's
+    ``maxResults`` stride, then fetch the remaining offsets CONCURRENTLY
+    on at most ``PAGE_PARALLELISM`` driver threads, returning a
+    DataFrame of raw JSON record strings.
 
-    Page 0's records become an Arrow ``LocalRelation``. The remaining
-    offsets are ``spark.range`` ids times the stride, split into
-    ``min(PAGE_PARALLELISM, pages)`` partitions, so each task fetches
-    one page (or a contiguous run of them past ``PAGE_PARALLELISM``)
-    with no shuffle ahead of the fetch kernel.
+    Every page fetch carries the caller's filter params plus its own
+    ``startAt`` and is retried on its own. Rows come out in page order
+    (page 0, then ascending ``startAt``), so a key served on two pages
+    resolves to the later page in the upsert. A page that exhausts its
+    retries raises out of the scan: the pages not yet started are
+    cancelled and no partial extract is returned.
 
-    At 100 TB-scale ingest the fetch cost dominates; this turns an
-    O(pages) serial wall-clock into O(pages / executors)."""
+    All pages become ONE Arrow ``LocalRelation``, so nothing downstream
+    starts a Python worker. The cost is that the driver holds the raw
+    extract: ~22 MB of JSON at the reference's full 200 x 100 issue
+    pages (measured on the seeded emulator), the same bytes the
+    ``LocalRelation`` holds anyway. A fetch waits on the server, not on
+    a CPU, so the threads turn an O(pages) serial wall-clock into
+    O(pages / PAGE_PARALLELISM)."""
     if params and "startAt" in params:
-        # the offset range below assumes coverage begins at 0; a caller-
+        # the offsets below assume coverage begins at 0; a caller-
         # supplied startAt would skip [0, startAt) and double-fetch the
-        # page the range re-derives — refuse rather than silently do so
+        # page the offsets re-derive — refuse rather than silently do so
         raise ValueError(
             "offset_scan_parallel owns the startAt parameter (pages fan "
             "out from offset 0); pass only filter params"
         )
     first = with_retry(lambda: fetcher(url, params))
     total, stride = page_plan(first)  # type: ignore[arg-type]
-    total = total or 0
-    first_df = _raw_frame(
-        spark, [json.dumps(r) for r in first.get(records_key, [])]  # type: ignore[union-attr]
+    offsets = range(stride, total or 0, stride)  # page 0 already fetched
+    pages = [first]
+    if offsets:
+
+        def fetch_page(start_at: int) -> object:
+            p = {**(params or {}), "startAt": start_at}
+            return with_retry(lambda: fetcher(url, p))
+
+        # map yields in submission (= page) order; a raising page
+        # cancels the pages not yet started, and leaving the block
+        # joins the threads still running
+        with ThreadPoolExecutor(min(PAGE_PARALLELISM, len(offsets))) as pool:
+            pages += pool.map(fetch_page, offsets)
+    return _raw_frame(
+        spark,
+        [json.dumps(r) for page in pages for r in page.get(records_key, [])],  # type: ignore[union-attr]
     )
-    n_rest = len(range(stride, total, stride))  # page 0 already fetched
-    if not n_rest:
-        return first_df
-
-    offsets_df = spark.range(
-        1, n_rest + 1, numPartitions=min(PAGE_PARALLELISM, n_rest)
-    ).select((F.col("id") * stride).alias("start_at"))
-
-    base_params = dict(params or {})
-
-    def fetch_pages(batches):  # executor-side: one fetch per offset row
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            rows = []
-            for start_at in pdf["start_at"]:
-                p = dict(base_params)
-                p["startAt"] = int(start_at)
-                page = with_retry(lambda p=p: fetcher(url, p))
-                rows.extend(json.dumps(r) for r in page.get(records_key, []))
-            yield pd.DataFrame({"raw": rows})
-
-    rest_df = offsets_df.mapInPandas(fetch_pages, schema="raw string")
-    return first_df.unionByName(rest_df)
 
 
 def single_page_scan(fetcher: Fetcher, url: str, params: dict | None = None) -> list[dict]:

@@ -114,8 +114,8 @@ def main() -> None:
     write_event_pages(spark, SF_DIR, pages_dir_for(SCRATCH, SF_DIR), n_pages=4)
     registry.QUERIES["llm_sim_ivf_topk"](spark, SF_DIR).count()
     registry.QUERIES["join_bucketed_colocated"](spark, SF_DIR).count()
-    # warm the Python worker pool: the first Python-backed query (the
-    # offset fan-out's fetch kernel or a pandas UDF) otherwise absorbs
+    # warm the Python worker pool: the first Python-backed query (a
+    # pandas UDF or an Arrow-batched kernel) otherwise absorbs
     # the pool spin-up — session infrastructure, same class as JVM
     # warmup, and reported in warmup_sec rather than hidden
     spark.range(0, 1024, 1, 32).mapInPandas(

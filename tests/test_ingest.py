@@ -74,6 +74,17 @@ def _physical_nodes(node) -> list:
     return out
 
 
+def python_nodes(df) -> list[str]:
+    """Class names of the executed plan's Python-evaluating nodes
+    (MapInPandas, ArrowEvalPython, PythonMapInArrow, ...): any of them
+    starts a Python worker when the frame runs."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.inputPlan()  # the plan before any stage ran
+    names = [n.getClass().getSimpleName() for n in _physical_nodes(plan)]
+    return [n for n in names if any(k in n for k in ("Python", "InPandas", "InArrow"))]
+
+
 def test_cursor_scan_follows_chain_in_order():
     pages = list(cursor_scan(make_cursor_fetcher(), "https://api/worklogs?page=0"))
     assert len(pages) == 3
@@ -127,25 +138,101 @@ def _scan_like_serial_walk(spark, total: int, stride: int):
 
 def test_offset_fanout_equals_serial_union(spark):
     """A3 parallel fan-out must produce exactly the rows a serial walk
-    produces (order-insensitive). Page 0 is an Arrow LocalRelation, not
-    a Python-backed LogicalRDD, and the offsets feeding the fetch
-    kernel are a Range split one slice per remaining page, with no
-    shuffle between it and MapInPandas."""
+    produces. All pages land in ONE Arrow LocalRelation, and the
+    executed plan evaluates no Python: the pages are fetched on driver
+    threads, not in a pandas kernel on executors."""
     for total, stride in [(23, 5), (250, 100)]:  # 250/100: offsets 100, 200
         df = _scan_like_serial_walk(spark, total, stride)
-        assert _analyzed_leaves(df) == ["LocalRelation", "Range"]
-        plan = df._jdf.queryExecution().executedPlan()
-        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            plan = plan.inputPlan()  # the plan before any stage ran
-        kernels = [
-            n for n in _physical_nodes(plan) if n.getClass().getSimpleName() == "MapInPandasExec"
-        ]
-        assert len(kernels) == 1
-        below = _physical_nodes(kernels[0])[1:]
-        names = [n.getClass().getSimpleName() for n in below]
-        assert not [c for c in names if "Exchange" in c], names
-        ranges = [n for n in below if n.getClass().getSimpleName() == "RangeExec"]
-        assert [r.numSlices() for r in ranges] == [(total - 1) // stride]
+        assert _analyzed_leaves(df) == ["LocalRelation"]
+        assert python_nodes(df) == []
+
+
+def test_offset_fanout_rows_in_page_order(spark):
+    """Rows come out page 0 first, then by ascending startAt, even when
+    later pages answer first — the order the upsert's last-writer-wins
+    rule relies on."""
+    import time
+
+    total, stride = 40, 4
+    serve = make_offset_fetcher(total=total, stride=stride)
+
+    def fetch(url, params=None):  # the later the page, the sooner it answers
+        time.sleep(0.01 * (total - int((params or {}).get("startAt", 0))) / stride)
+        return serve(url, params)
+
+    df = offset_scan_parallel(spark, fetch, "https://api/search", records_key="issues")
+    got = [json.loads(r.raw) for r in df.collect()]
+    assert [r["id"] for r in got] == [str(i) for i in range(total)]
+    assert [r["page"] for r in got] == [i - i % stride for i in range(total)]
+
+
+def test_offset_fanout_concurrency_is_bounded(spark):
+    """More pages than PAGE_PARALLELISM: pages are fetched concurrently,
+    never more than PAGE_PARALLELISM at once. The short switch interval
+    makes the threads interleave as often as the interpreter allows."""
+    import sys
+    import threading
+    import time
+
+    from airflow_jira_etl_spark.sources.paged_rest import PAGE_PARALLELISM
+
+    lock = threading.Lock()
+    in_flight = {"now": 0, "peak": 0}
+    serve = make_offset_fetcher(total=2 * PAGE_PARALLELISM + 5, stride=1)
+
+    def fetch(url, params=None):
+        with lock:
+            in_flight["now"] += 1
+            in_flight["peak"] = max(in_flight["peak"], in_flight["now"])
+        try:
+            time.sleep(0.05)
+            return serve(url, params)
+        finally:
+            with lock:
+                in_flight["now"] -= 1
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        df = offset_scan_parallel(spark, fetch, "https://api/search", records_key="issues")
+    finally:
+        sys.setswitchinterval(interval)
+    ids = [json.loads(r.raw)["id"] for r in df.collect()]
+    assert ids == [str(i) for i in range(2 * PAGE_PARALLELISM + 5)]
+    assert 1 < in_flight["peak"] <= PAGE_PARALLELISM
+
+
+class _PageDown(BaseException):
+    """Escapes ``with_retry`` (which retries only ``Exception``), so the
+    error test never sleeps through the backoff."""
+
+
+def test_offset_fanout_page_error_fails_the_scan(spark):
+    """A page whose fetch fails raises that error out of the scan — no
+    short extract — and the pages not yet started are never fetched."""
+    import threading
+    import time
+
+    from airflow_jira_etl_spark.sources.paged_rest import PAGE_PARALLELISM
+
+    n_pages = 3 * PAGE_PARALLELISM
+    serve = make_offset_fetcher(total=n_pages, stride=1)
+    lock = threading.Lock()
+    calls = {"n": 0}
+
+    def fetch(url, params=None):
+        with lock:
+            calls["n"] += 1
+        start = int((params or {}).get("startAt", 0))
+        if start == 1:
+            raise _PageDown(f"page at startAt={start}")
+        if start:
+            time.sleep(0.1)
+        return serve(url, params)
+
+    with pytest.raises(_PageDown, match="startAt=1"):
+        offset_scan_parallel(spark, fetch, "https://api/search", records_key="issues")
+    assert calls["n"] < n_pages  # cancelled pages were never fetched
 
 
 def test_offset_fanout_single_page(spark):
@@ -167,8 +254,8 @@ def test_totalless_endpoint_single_page(spark):
 
 
 def test_offset_scan_forwards_filter_params(spark):
-    """Filter params reach every page fetch, page 0 on the driver and
-    the fanned-out pages on executors alike, so the server filters
+    """Filter params reach every page fetch, page 0 and the
+    concurrently fetched pages alike, so the server filters
     (the reference forwards its filters as API params,
     fetch_jira_tempo_worklogs.py:60-63) and its filtered ``total``
     sizes the fan-out."""

@@ -105,6 +105,60 @@ def test_issues_pipeline_joins_labels_like_the_reference(spark, tmp_path):
     assert got == {"1": "a//b//None", "2": ""}
 
 
+def test_issues_pipeline_later_page_wins(spark, tmp_path):
+    """A key served on page 0 and again on page 2 keeps page 2's value:
+    the reference persists records in page order (issue_processor.py
+    :114-167), so the later page is the last writer."""
+    from airflow_jira_etl_spark.pipeline import issues_pipeline
+
+    stride = 2
+    pages = {
+        0: [{"id": "7", "fields": {"timespent": 100}}, {"id": "1"}],
+        2: [{"id": "2"}, {"id": "3"}],
+        4: [{"id": "7", "fields": {"timespent": 300}}, {"id": "4"}],
+    }
+
+    def fetch(url, params=None):
+        start = int((params or {}).get("startAt", 0))
+        return {"startAt": start, "maxResults": stride, "total": 6, "issues": pages[start]}
+
+    ctx: dict = {}
+    issues_pipeline(spark, fetch, "https://api/search", str(tmp_path)).run(ctx)
+    got = {r.issue_id: r.fields_timespent for r in ctx["table"].read().collect()}
+    assert sorted(got) == ["1", "2", "3", "4", "7"]
+    assert str(got["7"]) == "300"
+
+
+def test_ingest_starts_no_python_worker(spark, tmp_path):
+    """Every ingest batch of the three entity pipelines runs on the
+    JVM: its plan reads an Arrow LocalRelation and evaluates no Python
+    (no pandas/Arrow kernel, no Python UDF)."""
+    from airflow_jira_etl_spark.pipeline import issues_pipeline, users_pipeline
+    from airflow_jira_etl_spark.sources import fixture_fetchers
+    from tests.test_ingest import _analyzed_leaves, python_nodes
+
+    builds = {
+        "worklogs": worklog_pipeline(
+            spark, _worklog_fetcher(), "https://api/worklogs?page=0", str(tmp_path)
+        ),
+        "issues": issues_pipeline(
+            spark,
+            fixture_fetchers.synthetic_issues_fetcher({}),
+            "https://api/search",
+            str(tmp_path),
+        ),
+        "users": users_pipeline(spark, _users_fetcher, "https://api/users", str(tmp_path)),
+    }
+    for entity, p in builds.items():
+        ctx: dict = {}
+        assert p.run(ctx, only="ingest") == ["ensure_table", "ingest"]
+        batches = list(ctx["batches"])
+        assert batches, entity
+        for batch in batches:
+            assert python_nodes(batch) == [], entity
+            assert _analyzed_leaves(batch) == ["LocalRelation"], entity
+
+
 def _users_fetcher(url, params=None):
     return [
         {"self": "u1", "accountId": "a1", "displayName": "Jane", "active": "true"},
