@@ -2,7 +2,9 @@
 
 The engine lineage-truncates frames whose recompute would be a
 correctness hazard (``operators/ranking._range_tag``'s sampled range
-partitioning, ``sinks/parquet_upsert.apply``'s twice-evaluated batch):
+partitioning, ``sinks/parquet_upsert.apply``'s twice-evaluated batch
+on multi-bucket tables — a one-bucket table reads its batch once and
+takes no checkpoint):
 ``localCheckpoint`` makes recompute impossible — block loss fails
 loudly instead of silently recomputing through a nondeterministic
 source. The flip side is lifecycle: ``DataFrame.unpersist`` is a no-op

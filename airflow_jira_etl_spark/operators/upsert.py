@@ -105,12 +105,28 @@ def _null_key_guard(col_name: str, side: str = "updates"):
     ).otherwise(F.col(col_name))
 
 
+def null_key_violation(exc: Exception, keys: list[str]) -> str | None:
+    """The _null_key_guard message ``exc`` carries, or None when ``exc``
+    is any other failure. Lets a caller that runs the merge inside a
+    write report the guard's USER_RAISED_EXCEPTION as the key-contract
+    violation it is, without swallowing unrelated errors."""
+    text = str(exc)
+    if "USER_RAISED_EXCEPTION" not in text:
+        return None
+    for k in keys:
+        for msg in _NULL_KEY_MESSAGES.values():
+            if msg.format(k=k) in text:
+                return msg.format(k=k)
+    return None
+
+
 def upsert(
     base: DataFrame,
     updates: DataFrame,
     key: str | list[str],
     ordinal_col: str | None = None,
     cluster_cols: list[str] | None = None,
+    single_partition: bool = False,
 ) -> DataFrame:
     """Last-writer-wins merge of ``updates`` into ``base`` on ``key``.
 
@@ -130,6 +146,14 @@ def upsert(
     one row — but it makes the merge's single shuffle also CLUSTER the
     output by those columns, so a downstream ``partitionBy`` write
     needs no second shuffle.
+
+    ``single_partition``: coalesce the base ∪ updates union to ONE
+    partition before the window, which then needs no shuffle (a single
+    partition already clusters every key) — the merge runs as one task.
+    Only for inputs small enough for one task; its one caller is
+    ``ParquetUpsertTable.apply`` on a one-bucket table, whose whole
+    state is one file by construction. The ordinal is still computed
+    below the union, so batch order is unaffected.
 
     Both sides must carry the same column set (fixed-DDL sinks): a
     mismatch raises.
@@ -152,6 +176,8 @@ def upsert(
         base_tagged = base_tagged.withColumn(k, _null_key_guard(k, "base"))
         upd_tagged = upd_tagged.withColumn(k, _null_key_guard(k, "updates"))
     merged = base_tagged.unionByName(upd_tagged)
+    if single_partition:
+        merged = merged.coalesce(1)
     return (
         merged.withColumn(_RN, F.row_number().over(w))
         .where(F.col(_RN) == 1)

@@ -64,8 +64,11 @@ _FETCHER_DEFAULTS = {
 # over ~9k distinct keys, ~35 B/row) and ~41 KB of users (2000, ~21
 # B/row). Every page's keys already spread over every bucket, so more
 # buckets only multiply the files and tasks per apply without rewriting
-# fewer bytes. The manifest's n_buckets stays authoritative: an existing
-# table keeps its layout until ``compact(n_buckets=...)`` re-buckets it.
+# fewer bytes. One bucket also makes each apply a single Spark job: the
+# sink skips its dirty-set job and batch checkpoint and merges in one
+# task with no shuffle. The manifest's n_buckets stays authoritative: an
+# existing table keeps its layout until ``compact(n_buckets=...)``
+# re-buckets it.
 ENTITY_N_BUCKETS = 1
 
 

@@ -17,6 +17,16 @@ is Delta-style copy-on-write at FILE granularity:
 * readers resolve ``_CURRENT`` → manifest → file list, so they always
   see one complete, consistent generation.
 
+Per batch, a table of several buckets runs three Spark jobs: a
+``localCheckpoint`` of the batch, a collect of its dirty-bucket set
+(and NULL-key flag), and the merge write, which shuffles on the key.
+A table of ONE hash bucket knows its dirty set up front (every key
+hashes to bucket 0), so it skips the checkpoint and the collect and
+merges in a single partition: the apply is one job of one task with
+no shuffle, the entity pipelines' case (``pipeline.ENTITY_N_BUCKETS``).
+Either way the commit re-points exactly the bucket directories the
+write produced.
+
 Bytes written per batch ≈ ``|dirty buckets| × table_bytes / n_buckets``
 — proportional to the batch's key spread, not to table size (size
 ``n_buckets`` so a bucket ≈ one target parquet file, e.g. 128 MB, at
@@ -41,7 +51,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airflow_jira_etl_spark.checkpoint import release_local_checkpoint
-from airflow_jira_etl_spark.operators.upsert import merge_aggregate, upsert
+from airflow_jira_etl_spark.operators.upsert import (
+    merge_aggregate,
+    null_key_violation,
+    upsert,
+)
 
 _POINTER = "_CURRENT"
 _MANIFEST = "_MANIFEST.json"
@@ -130,6 +144,30 @@ def _gen_number(gen: str | None) -> int:
     an empty table. The ONE parse — read(), _next_generation() and
     vacuum() must agree on it or their committedness checks drift."""
     return int(os.path.basename(gen).split("_")[1]) if gen else -1
+
+
+def _written_buckets(staging: str) -> list[int]:
+    """Bucket ids a ``partitionBy(__bucket)`` write produced under
+    ``staging`` — the set a commit re-points, shared by apply() and
+    compact(). A NULL bucket id (range_bucketer over a non-numeric
+    key: CAST AS BIGINT yields NULL silently; a custom bucketer) lands
+    in ``__HIVE_DEFAULT_PARTITION__``, which no manifest entry can
+    name: those rows would silently vanish, so the staged write is
+    removed and the merge refused."""
+    if os.path.exists(
+        os.path.join(staging, f"{_BUCKET}=__HIVE_DEFAULT_PARTITION__")
+    ):
+        shutil.rmtree(staging, ignore_errors=True)
+        raise ValueError(
+            "bucketer produced NULL bucket ids — upsert keys must be "
+            "non-null and bucket to integers (a range_bucketer over a "
+            "non-numeric key CASTs to NULL silently)"
+        )
+    return sorted(
+        int(d.split("=")[1])
+        for d in os.listdir(staging)
+        if d.startswith(f"{_BUCKET}=")
+    )
 
 
 class ParquetUpsertTable:
@@ -316,85 +354,49 @@ class ParquetUpsertTable:
                         f"type change for column {f.name!r}: "
                         f"{ot} -> {nt} (unsupported)"
                     )
-        # materialized ONCE (localCheckpoint — lineage truncation), not
-        # just lazily tagged or persisted: the batch is evaluated for
-        # the dirty-bucket set AND again for the merge write — without
-        # one materialization, a nondeterministic source (API read,
-        # sampled/limited upstream) could land rows in a bucket absent
-        # from the collected dirty set, whose files the manifest loop
-        # below would then never re-point (committed but invisible).
-        # A plain persist does NOT guarantee that: an evicted/uncached
-        # block RECOMPUTES through the source (the ranking family hit
-        # exactly this class, operators/ranking.py round 11); a
-        # checkpointed block cannot recompute — loss fails loudly.
-        upd = updates.withColumn(
-            _BUCKET, self.bucketer(updates, self.keys, n_buckets)
-        ).localCheckpoint(eager=False)
+        # A table of ONE hash bucket knows its dirty set before it reads
+        # the batch: every key, NULL included, hashes to bucket 0. It
+        # skips the batch checkpoint and the dirty-set job below, and
+        # coalesces the merge's base ∪ batch union into one partition,
+        # which satisfies the window's clustering without an Exchange —
+        # the whole apply is the merge write, one job of one task that
+        # reads the batch once. NULL keys still fail inside that write
+        # through upsert()'s in-plan guard (mapped to ValueError below).
+        one_bucket = (
+            combine is None
+            and n_buckets == 1
+            and fingerprint == hash_bucketer.fingerprint
+        )
+
+        def bucket_of(df: DataFrame) -> Column:
+            if one_bucket:
+                return F.lit(0)
+            return self.bucketer(df, self.keys, n_buckets)
+
+        upd = updates.withColumn(_BUCKET, bucket_of(updates))
+        if not one_bucket:
+            # Multi-bucket tables evaluate the batch twice, for the
+            # dirty-bucket set and for the merge write, so it is
+            # materialized ONCE (localCheckpoint — lineage truncation),
+            # not just lazily tagged or persisted: without it a
+            # nondeterministic source (API read, sampled/limited
+            # upstream) could land rows in a bucket absent from the
+            # collected dirty set, whose stored rows the merge would
+            # then never read as its base. A plain persist does NOT
+            # guarantee that: an evicted/uncached block RECOMPUTES
+            # through the source (the ranking family hit exactly this
+            # class, operators/ranking.py round 11); a checkpointed
+            # block cannot recompute — loss fails loudly.
+            upd = upd.localCheckpoint(eager=False)
         try:
-            # the dirty-bucket set is <= n_buckets small (bucket,
-            # has_null_key) rows — a scalar collect, same class as a
-            # COUNT, not a data collect. The null-KEY flag rides the
-            # same job: with the default hash_bucketer a NULL key still
-            # hashes to a valid bucket (xxhash64 of NULL is the seed),
-            # so without this check all NULL-key rows would pass the
-            # bucket guard and then silently COLLAPSE to one arbitrary
-            # row in the upsert window — data loss, not an error.
-            from functools import reduce
-            from operator import or_
-
-            null_key = reduce(
-                or_, [F.col(k).isNull() for k in self.keys]
-            )
-            # AQE off for THIS statement only (r15, guide §1.2/§2):
-            # the dirty-set aggregate's output is bounded by n_buckets
-            # rows at any scale, so AQE's runtime replanning buys
-            # nothing here while its per-query-stage materialization
-            # adds one scheduling round-trip per MERGE batch (measured
-            # ~0.1 s per 4 applies at sf0.1). The merge WRITE below
-            # keeps AQE — there the partition coalescing genuinely
-            # sizes output files.
-            from airflow_jira_etl_spark.session import scoped_conf
-
-            with scoped_conf(
-                self.spark, "spark.sql.adaptive.enabled", "false"
-            ):
-                raw = (
-                    upd.groupBy(_BUCKET)
-                    .agg(F.max(null_key).alias("has_null_key"))
-                    .collect()
-                )
-            if any(r["has_null_key"] for r in raw):
-                if self.null_keys == "reject":
-                    raise ValueError(
-                        "upsert keys must be non-null: the batch carries "
-                        "NULL in a key column — NULL keys would silently "
-                        "collapse to one arbitrary row in the merge "
-                        "(reference db_ops.py treats the key as a primary "
-                        "key, which is NOT NULL by definition); for "
-                        "GROUP-BY keys where NULL is a domain value, "
-                        "open the table with null_keys='group'"
-                    )
-            if any(r[0] is None for r in raw):
-                # a NULL bucket (range_bucketer on a non-numeric key:
-                # CAST AS BIGINT yields NULL silently) would write to
-                # __HIVE_DEFAULT_PARTITION__ while the manifest records
-                # ".../__bucket=None" — a dir that never exists,
-                # wedging every subsequent read of the table
-                raise ValueError(
-                    "bucketer produced NULL bucket ids — upsert keys "
-                    "must bucket to integers (a range_bucketer over a "
-                    "non-numeric key CASTs to NULL silently)"
-                )
-            dirty = sorted(r[0] for r in raw)
+            dirty = [0] if one_bucket else self._dirty_buckets(upd)
             if manifest is not None:
                 base_paths = self._bucket_paths(manifest, dirty)
             else:
                 base_paths = []
             if base_paths:
                 base = self._read_paths(manifest, base_paths)
-                base = base.withColumn(
-                    _BUCKET, self.bucketer(base, self.keys, n_buckets)
-                )
+                base = base.withColumn(_BUCKET, bucket_of(base))
             else:
                 # first write (or all-new buckets): dedup within the batch
                 base = upd.limit(0)
@@ -410,7 +412,13 @@ class ParquetUpsertTable:
                     null_keys=self.null_keys,
                 )
             else:
-                merged = upsert(base, upd, self.keys, cluster_cols=[_BUCKET])
+                merged = upsert(
+                    base,
+                    upd,
+                    self.keys,
+                    cluster_cols=[_BUCKET],
+                    single_partition=one_bucket,
+                )
 
             # type contract, checked on what the files WILL hold: the
             # merged plan's schema (union widening already reconciled a
@@ -436,18 +444,35 @@ class ParquetUpsertTable:
             else:
                 merged_schema = merged_fields
             gen_name, staging = self._next_generation()
-            merged.write.partitionBy(_BUCKET).mode("overwrite").parquet(staging)
+            try:
+                merged.write.partitionBy(_BUCKET).mode("overwrite").parquet(
+                    staging
+                )
+            except Exception as e:
+                # a failed write must not leave its staging dir behind
+                # (it would linger until vacuum()); the in-plan NULL-key
+                # guard surfaces as the key-contract ValueError, every
+                # other failure unchanged
+                shutil.rmtree(staging, ignore_errors=True)
+                msg = null_key_violation(e, self.keys)
+                if msg is not None:
+                    raise ValueError(msg) from e
+                raise
         finally:
-            # deterministic per-batch free (DataFrame.unpersist is a
-            # no-op on checkpoint blocks; without this they linger
-            # until the ContextCleaner's periodic GC — ~30 min of
-            # accumulation for a foreachBatch driver running many
-            # batches). Safe here: the write above was `upd`'s last
-            # consumer, and a buggy later access fails loudly rather
-            # than silently recomputing.
-            release_local_checkpoint(upd)
+            if not one_bucket:
+                # deterministic per-batch free (DataFrame.unpersist is a
+                # no-op on checkpoint blocks; without this they linger
+                # until the ContextCleaner's periodic GC — ~30 min of
+                # accumulation for a foreachBatch driver running many
+                # batches). Safe here: the write above was `upd`'s last
+                # consumer, and a buggy later access fails loudly rather
+                # than silently recomputing.
+                release_local_checkpoint(upd)
+        # re-point exactly the buckets the write produced: a bucket the
+        # merge left empty (an empty batch into a fresh table) has no
+        # directory, and a manifest entry for it would fail every read
         new_buckets = dict(manifest["buckets"]) if manifest else {}
-        for b in dirty:
+        for b in _written_buckets(staging):
             new_buckets[str(b)] = f"{gen_name}/{_BUCKET}={b}"
         self._commit(
             gen_name,
@@ -460,6 +485,48 @@ class ParquetUpsertTable:
             },
             expected_base=base_gen,
         )
+
+    def _dirty_buckets(self, upd: DataFrame) -> list[int]:
+        """The buckets a (checkpointed) multi-bucket batch hashes into:
+        <= n_buckets small (bucket, has_null_key) rows — a scalar
+        collect, same class as a COUNT, not a data collect. The null-KEY
+        flag rides the same job: with the default hash_bucketer a NULL
+        key still hashes to a valid bucket (xxhash64 of NULL is the
+        seed), so without this check all NULL-key rows would pass the
+        bucket guard and then silently COLLAPSE to one arbitrary row in
+        the upsert window — data loss, not an error. A NULL bucket id
+        is left to _written_buckets, which refuses the written
+        __HIVE_DEFAULT_PARTITION__ dir before commit."""
+        from functools import reduce
+        from operator import or_
+
+        from airflow_jira_etl_spark.session import scoped_conf
+
+        null_key = reduce(or_, [F.col(k).isNull() for k in self.keys])
+        # AQE off for THIS statement only (r15, guide §1.2/§2): the
+        # dirty-set aggregate's output is bounded by n_buckets rows at
+        # any scale, so AQE's runtime replanning buys nothing here while
+        # its per-query-stage materialization adds one scheduling
+        # round-trip per MERGE batch (measured ~0.1 s per 4 applies at
+        # sf0.1). The merge WRITE keeps AQE — there the partition
+        # coalescing genuinely sizes output files.
+        with scoped_conf(self.spark, "spark.sql.adaptive.enabled", "false"):
+            raw = (
+                upd.groupBy(_BUCKET)
+                .agg(F.max(null_key).alias("has_null_key"))
+                .collect()
+            )
+        if self.null_keys == "reject" and any(r["has_null_key"] for r in raw):
+            raise ValueError(
+                "upsert keys must be non-null: the batch carries "
+                "NULL in a key column — NULL keys would silently "
+                "collapse to one arbitrary row in the merge "
+                "(reference db_ops.py treats the key as a primary "
+                "key, which is NOT NULL by definition); for "
+                "GROUP-BY keys where NULL is a domain value, "
+                "open the table with null_keys='group'"
+            )
+        return sorted(r[0] for r in raw if r[0] is not None)
 
     # ------------------------------------------------- generation commit
 
@@ -626,21 +693,6 @@ class ParquetUpsertTable:
 
         gen_name, staging = self._next_generation()
         df.write.partitionBy(_BUCKET).mode("overwrite").parquet(staging)
-        if os.path.exists(
-            os.path.join(staging, f"{_BUCKET}=__HIVE_DEFAULT_PARTITION__")
-        ):
-            # NULL bucket ids (see apply()'s guard) — those rows would
-            # silently vanish from the manifest's written set below
-            shutil.rmtree(staging, ignore_errors=True)
-            raise ValueError(
-                "compaction bucketer produced NULL bucket ids — see "
-                "apply(): keys must be non-null and bucket to integers"
-            )
-        written = {
-            int(d.split("=")[1])
-            for d in os.listdir(staging)
-            if d.startswith(f"{_BUCKET}=")
-        }
         self._commit(
             gen_name,
             staging,
@@ -648,7 +700,7 @@ class ParquetUpsertTable:
                 "n_buckets": new_n,
                 "buckets": {
                     str(b): f"{gen_name}/{_BUCKET}={b}"
-                    for b in sorted(written)
+                    for b in _written_buckets(staging)
                 },
                 "schema": manifest["schema"],
                 "bucketer": _bucketer_fingerprint(new_bucketer),

@@ -1,9 +1,11 @@
-"""Property tests: the distributed upsert agrees with sequential dict
-semantics (the reference's per-record execute order) on random batches,
-and the TIME-of-day helpers round-trip every second of the day."""
+"""Property tests: the distributed upsert — the bare operator and the
+parquet sink's apply() — agrees with sequential dict semantics (the
+reference's per-record execute order) on random batches, and the
+TIME-of-day helpers round-trip every second of the day."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -36,6 +38,33 @@ def test_upsert_matches_sequential_dict_semantics(spark, base_rows, update_rows)
     upd_df = spark.createDataFrame(update_rows or [], schema)
     got = {r.k: r.v for r in upsert(base_df, upd_df, "k").collect()}
     assert got == expected
+
+
+@pytest.mark.parametrize("n_buckets", [1, 4])
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(batches=st.lists(kv_lists, min_size=1, max_size=3))
+def test_sink_apply_matches_sequential_dict_semantics(
+    spark, tmp_path_factory, n_buckets, batches
+):
+    """A random sequence of batches (empty ones included) pushed through
+    ParquetUpsertTable.apply equals sequential last-writer-wins over
+    every row in batch order, on the one-bucket single-task merge and
+    the multi-bucket path alike; replaying the last batch leaves the
+    state unchanged."""
+    from airflow_jira_etl_spark.sinks.parquet_upsert import ParquetUpsertTable
+
+    t = ParquetUpsertTable(
+        spark, str(tmp_path_factory.mktemp("lww")), key="k", n_buckets=n_buckets
+    )
+    expected: dict[int, str] = {}
+    schema = "k int, v string"
+    for rows in batches:
+        t.apply(spark.createDataFrame(rows, schema))
+        expected.update(rows)
+    got = {r.k: r.v for r in t.read().collect()}
+    assert got == expected
+    t.apply(spark.createDataFrame(batches[-1], schema))
+    assert {r.k: r.v for r in t.read().collect()} == got
 
 
 @settings(max_examples=30, deadline=None, suppress_health_check=list(HealthCheck))

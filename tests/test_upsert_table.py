@@ -462,18 +462,25 @@ def test_unlocked_commit_refuses_manifest_bearing_gen(
     assert {r.k: r.v for r in t.read().collect()} == {1: "a", 2: "b"}
 
 
-def test_apply_nondeterministic_batch_single_evaluation(spark, tmp_path):
-    """apply() evaluates the update batch for the dirty-bucket set AND
-    for the merge write; a nondeterministic source evaluated twice
-    could land rows in buckets absent from the dirty set — files the
-    manifest never points at (committed but invisible). Round 11 moved
-    the batch materialization to localCheckpoint (a persist can evict
-    and silently recompute through the source — the ranking family hit
-    that exact class); this pins the visibility invariant: with an
+@pytest.mark.parametrize("n_buckets", [1, 8])
+def test_apply_nondeterministic_batch_single_evaluation(
+    spark, tmp_path, n_buckets
+):
+    """A multi-bucket apply() evaluates the update batch for the
+    dirty-bucket set AND for the merge write; a nondeterministic source
+    evaluated twice could land rows in buckets absent from the dirty
+    set — files the manifest never points at (committed but invisible).
+    Round 11 moved the batch materialization to localCheckpoint (a
+    persist can evict and silently recompute through the source — the
+    ranking family hit that exact class). A one-bucket table reads the
+    batch once, inside the merge write, so the invariant holds by
+    construction there. This pins it on both paths: with an
     unseeded-random key column, every written row is readable back and
     every bucket directory in the new generation is manifest-referenced,
     across repeated merges."""
-    t = ParquetUpsertTable(spark, str(tmp_path / "t"), key="k", n_buckets=8)
+    t = ParquetUpsertTable(
+        spark, str(tmp_path / "t"), key="k", n_buckets=n_buckets
+    )
     for batch in range(4):
         upd = spark.range(50).select(
             (F.rand() * 1000).cast("long").alias("k"),  # nondeterministic
@@ -798,3 +805,106 @@ def test_interval_batch_column_hits_the_clear_type_gate():
     assert not _is_numeric_type("interval day")
     assert not _is_numeric_type("interval")
     assert not _is_numeric_type("string")
+
+
+def _staging_dirs(root: str) -> list[str]:
+    return [d for d in os.listdir(root) if d.startswith(".staging_")]
+
+
+@pytest.mark.parametrize("n_buckets", [1, 4])
+def test_empty_first_batch_commits_no_bucket_dir(spark, tmp_path, n_buckets):
+    """An empty first batch (an issues endpoint with total = 0, an empty
+    users list) writes no bucket directory. The commit must re-point
+    only the buckets the write produced: a manifest entry for a bucket
+    that was never written would fail every later read."""
+    t = ParquetUpsertTable(
+        spark, str(tmp_path / "t"), key="k", n_buckets=n_buckets
+    )
+    t.apply(spark.createDataFrame([], "k long, v string"))
+    assert t._read_manifest()["buckets"] == {}
+    assert t.read().count() == 0
+    t.apply(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"))
+    assert {r.k: r.v for r in t.read().collect()} == {1: "a", 2: "b"}
+    assert os.path.basename(t.current_generation()) == "gen_000001"
+
+
+def test_failed_one_bucket_write_leaves_no_staging(spark, tmp_path):
+    """On a one-bucket table the NULL-key guard fires inside the merge
+    write, after the staging path was chosen. The failure must surface
+    as the key-contract ValueError, leave no .staging_* dir and no new
+    generation, and leave the table accepting a clean batch."""
+    root = str(tmp_path / "t")
+    t = ParquetUpsertTable(spark, root, key="k", n_buckets=1)
+    t.apply(spark.createDataFrame([(1, "a")], "k long, v string"))
+    bad = spark.createDataFrame([(2, "b"), (None, "c")], "k long, v string")
+    with pytest.raises(ValueError, match="non-null"):
+        t.apply(bad)
+    assert _staging_dirs(root) == []
+    assert t.generations() == ["gen_000000"]
+    t.apply(spark.createDataFrame([(2, "b")], "k long, v string"))
+    assert {r.k: r.v for r in t.read().collect()} == {1: "a", 2: "b"}
+
+
+def test_null_bucket_write_is_refused_without_staging(spark, tmp_path):
+    """A bucketer that yields NULL bucket ids for non-NULL keys writes
+    its rows to __HIVE_DEFAULT_PARTITION__, which no manifest entry can
+    name. apply() refuses the staged write, removes it and commits
+    nothing."""
+    def null_bucketer(df, keys, n):
+        return F.lit(None).cast("int")
+
+    null_bucketer.fingerprint = "null:test"
+    root = str(tmp_path / "t")
+    t = ParquetUpsertTable(spark, root, key="k", bucketer=null_bucketer)
+    with pytest.raises(ValueError, match="NULL bucket"):
+        t.apply(spark.createDataFrame([(1, "a")], "k long, v string"))
+    assert _staging_dirs(root) == []
+    assert t.read() is None
+
+
+def _apply_counts(spark, t, batch, group):
+    """(jobs, stages, tasks) of one apply() run under job group
+    ``group``, read through statusTracker, and the physical plan of the
+    last SQL execution it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "count the jobs of one apply")
+    try:
+        t.apply(batch)
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = [sid for j in jobs for sid in st.getJobInfo(j).stageIds]
+    tasks = sum(st.getStageInfo(sid).numCompletedTasks for sid in stages)
+    store = spark._jsparkSession.sharedState().statusStore()
+    last = store.executionsList(store.executionsCount() - 1, 1).apply(0)
+    return len(jobs), len(stages), tasks, last.physicalPlanDescription()
+
+
+def test_one_bucket_apply_is_one_job_without_exchange(spark, tmp_path):
+    """Job-count contract of the sink. On a one-bucket table that
+    already holds a generation, an apply is its merge write alone: one
+    job of one stage and one task, and the written plan has no Exchange.
+    A 4-bucket table keeps its dirty-bucket job (and the shuffle of its
+    merge), so more than one job runs there."""
+    rows = [(k, "a") for k in range(200)]
+    upd = [(k, "b") for k in range(100, 300)]
+    schema = "k long, v string"
+    t1 = ParquetUpsertTable(spark, str(tmp_path / "t1"), key="k", n_buckets=1)
+    t1.apply(spark.createDataFrame(rows, schema))
+    jobs, stages, tasks, plan = _apply_counts(
+        spark, t1, spark.createDataFrame(upd, schema), "apply-one-bucket"
+    )
+    assert (jobs, stages, tasks) == (1, 1, 1), (jobs, stages, tasks)
+    assert "InsertIntoHadoopFsRelationCommand" in plan
+    assert "Exchange" not in plan, plan
+    got = {r.k: r.v for r in t1.read().collect()}
+    assert len(got) == 300 and got[0] == "a" and got[100] == "b"
+
+    t4 = ParquetUpsertTable(spark, str(tmp_path / "t4"), key="k", n_buckets=4)
+    t4.apply(spark.createDataFrame(rows, schema))
+    jobs, _, _, _ = _apply_counts(
+        spark, t4, spark.createDataFrame(upd, schema), "apply-four-buckets"
+    )
+    assert jobs > 1
