@@ -150,8 +150,8 @@ def source_stamp(path: str) -> str:
     size) — the directory's own stat does not change when a part file
     is rewritten in place, so stat'ing just the dir would serve stale
     caches after a fixture regeneration. The ONE staleness rule:
-    file_schema's cache key and every per-source scratch cache (IVF
-    index, staged streams) delegate here."""
+    file_schema's cache key and the ident of every
+    scratch.source_cache artifact delegate here."""
     if os.path.isdir(path):
         parts = tuple(
             (f, s.st_mtime_ns, s.st_size)

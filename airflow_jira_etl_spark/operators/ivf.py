@@ -13,7 +13,8 @@ is queries/llm_extras.llm_sim_lsh_topk). Structure:
 2. **Index**: every vector gets its nearest-centroid id and the
    assignments are MATERIALIZED ``partitionBy("cluster_id")`` — each
    cluster is a directory at rest, built once and reused across
-   searches (meta-file keyed, like the streaming page cache).
+   searches (a scratch.source_cache artifact, like the streaming page
+   cache).
 3. **Search**: score the probe against k centroids (k rows — tiny,
    driver-side by design), then scan only the ``n_probe`` nearest
    clusters. Because the index is partitioned by cluster_id the
@@ -29,7 +30,6 @@ testable (rows-only; float scoring is engine-specific).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -90,96 +90,57 @@ def build_index(
     spark: SparkSession,
     emb: DataFrame,
     k_clusters: int,
-    path: str,
-    tag: str = "",
-) -> tuple[DataFrame, DataFrame]:
-    """Materialize the IVF index at ``path``: vector assignments written
+    sf_dir: str,
+    ident,
+) -> tuple[DataFrame, DataFrame, dict]:
+    """Materialize the IVF index of ``emb`` as a scratch.source_cache
+    artifact of the fixture at ``sf_dir``: vector assignments written
     ``partitionBy("cluster_id")`` (one directory per cluster) plus the
-    centroid table. A meta file keys the layout on (k, iters, tag) so
-    repeated calls — every search, every bench run — reuse the files
-    instead of re-training; it also records the per-cluster row counts
-    OF THE FILES AS WRITTEN (counted from the read-back, not the
-    in-memory frame), so a search can verify the probed directories'
-    integrity without ever scanning the unprobed ones. Returns
-    (indexed, centroids) READ BACK from disk, so downstream cluster
-    filters prune directories.
+    centroid table. ``ident`` is the caller's identity of ``emb`` (the
+    source stamps of the tables it reads and its filters); the key adds
+    (k, iters), so repeated calls — every search, every bench run —
+    reuse the files instead of re-training. Returns (indexed,
+    centroids, info), the frames READ BACK from disk so downstream
+    cluster filters prune directories.
 
-    Builders are serialized across PROCESSES with an exclusive flock
-    (same hazard class as the streaming page cache). Data dirs are
-    VERSIONED by the key hash (``v_<hash>/vectors``): a rebuild under a
-    NEW key (e.g. a regenerated fixture changed the tag) writes a fresh
-    version dir and GCs everything except the new version and the one
-    the previous meta referenced — so a reader mid-scan on the old
-    version (warm readers never take the lock, by design) survives one
-    rebuild instead of having its files deleted under it."""
-    # meta_layout 4: versioned data dirs (above); the meta also carries
-    # the quantizer itself (k centroid vectors), an anchor row (the
-    # min-vec_id vector) and the read-back schemas — driver-resident
-    # index assets in the FAISS sense, so a cache-hit open/search needs
-    # ZERO Spark jobs (no centroid collect, no probe head, no
-    # footer-inference job) before the pruned scan itself
-    key = {"k": k_clusters, "iters": N_ITERS, "tag": tag, "meta_layout": 4}
-    meta_path = os.path.join(path, "_IVF_META.json")
-    vdir = _version_dir(key)
-    vectors_dir = os.path.join(path, vdir, "vectors")
-    centroids_dir = os.path.join(path, vdir, "centroids")
+    ``info`` holds the driver-resident index assets in the FAISS sense,
+    all computed from the files as written: ``counts`` (per-cluster row
+    counts, so a search can verify the probed directories without
+    scanning the unprobed ones), ``centroids`` (the quantizer — sorted
+    [cluster_id, vector] pairs), ``anchor`` (the min-vec_id row) and
+    the read-back schemas. A cache-hit open/search therefore needs ZERO
+    Spark jobs (no centroid collect, no probe head, no footer-inference
+    job) before the pruned scan itself."""
+    from pyspark.sql import types as T
 
-    def _meta_current() -> bool:
-        try:
-            with open(meta_path) as f:
-                return json.load(f).get("key") == key
-        except (FileNotFoundError, json.JSONDecodeError, AttributeError):
-            return False
+    from airflow_jira_etl_spark.scratch import source_cache
 
-    if not _meta_current():  # fast path: no lock traffic in steady state
-        import fcntl
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, ".lock"), "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            if not _meta_current():  # still stale: we are the builder
-                _build_index_files(
-                    spark, emb, k_clusters, key, path, meta_path,
-                    vectors_dir, centroids_dir,
-                )
+    key = {"k": k_clusters, "iters": N_ITERS, "source": ident}
+    path, info = source_cache(
+        "ivf_index",
+        sf_dir,
+        key,
+        lambda out: _build_index_files(spark, emb, k_clusters, out),
+    )
     # read back under the schemas RECORDED AT BUILD TIME: without an
     # explicit schema every warm open pays a distributed footer-
     # inference job before the first real scan
-    meta = read_meta(path)
-    from pyspark.sql import types as T
-
     return (
-        spark.read.schema(T.StructType.fromJson(meta["vectors_schema"])).parquet(
-            vectors_dir
+        spark.read.schema(T.StructType.fromJson(info["vectors_schema"])).parquet(
+            os.path.join(path, "vectors")
         ),
         spark.read.schema(
-            T.StructType.fromJson(meta["centroids_schema"])
-        ).parquet(centroids_dir),
+            T.StructType.fromJson(info["centroids_schema"])
+        ).parquet(os.path.join(path, "centroids")),
+        info,
     )
 
 
-def _version_dir(key: dict) -> str:
-    """Deterministic version-dir name for an index key."""
-    import hashlib
-
-    return "v_" + hashlib.sha1(
-        json.dumps(key, sort_keys=True).encode()
-    ).hexdigest()[:10]
-
-
 def _build_index_files(
-    spark: SparkSession,
-    emb: DataFrame,
-    k_clusters: int,
-    key: dict,
-    path: str,
-    meta_path: str,
-    vectors_dir: str,
-    centroids_dir: str,
-) -> None:
-    """The rebuild body of build_index — caller holds the flock."""
-    import shutil
-
+    spark: SparkSession, emb: DataFrame, k_clusters: int, path: str
+) -> dict:
+    """The build body of build_index: writes the index under ``path``
+    and returns its info."""
     from airflow_jira_etl_spark.session import scoped_conf
 
     if emb.head(1) == []:
@@ -187,12 +148,8 @@ def _build_index_files(
             "embedding frame is empty — cannot build an IVF index "
             "(truncated fixture or an over-restrictive filter?)"
         )
-    # the PREVIOUS meta's version dir gets one generation of grace (a
-    # reader that resolved it pre-rebuild keeps scanning valid files)
-    try:
-        keep_prev = read_meta(path).get("version_dir")
-    except (FileNotFoundError, json.JSONDecodeError):
-        keep_prev = None
+    vectors_dir = os.path.join(path, "vectors")
+    centroids_dir = os.path.join(path, "centroids")
     # small-key shuffles throughout (k clusters × dims scalars);
     # repartition by cluster so each directory gets ONE file
     with scoped_conf(
@@ -202,12 +159,12 @@ def _build_index_files(
         centroids = train_quantizer(emb_c, k_clusters).cache()
         assign_clusters(emb_c, centroids).repartition(
             k_clusters, "cluster_id"
-        ).write.mode("overwrite").partitionBy("cluster_id").parquet(vectors_dir)
-        centroids.write.mode("overwrite").parquet(centroids_dir)
+        ).write.partitionBy("cluster_id").parquet(vectors_dir)
+        centroids.write.parquet(centroids_dir)
         centroids.unpersist()
         emb_c.unpersist()
-    # every meta stat is computed from the READ-BACK files, not the
-    # in-memory frames: the meta must describe the bytes a later
+    # every info stat is computed from the READ-BACK files, not the
+    # in-memory frames: the info must describe the bytes a later
     # session will scan, bit-for-bit (JSON round-trips doubles exactly)
     on_disk = spark.read.parquet(vectors_dir)
     counts = {
@@ -221,57 +178,24 @@ def _build_index_files(
         (int(r["cluster_id"]), [float(x) for x in r["centroid"]])
         for r in cent_disk.collect()
     )
-    # asc_nulls_last: callers own the NULL-id filter (r14 convention),
-    # but the anchor must never resolve to an id int() cannot take
+    # asc_nulls_last: callers own the NULL-id filter (the NULL-key
+    # convention), but the anchor must never resolve to an id int()
+    # cannot take
     arow = (
         on_disk.orderBy(F.col("vec_id").asc_nulls_last())
         .select("vec_id", "embedding")
         .head()
     )
-    anchor = {
-        "vec_id": int(arow["vec_id"]),
-        "embedding": [float(x) for x in arow["embedding"]],
+    return {
+        "counts": counts,
+        "centroids": cent,
+        "anchor": {
+            "vec_id": int(arow["vec_id"]),
+            "embedding": [float(x) for x in arow["embedding"]],
+        },
+        "vectors_schema": on_disk.schema.jsonValue(),
+        "centroids_schema": cent_disk.schema.jsonValue(),
     }
-    # ATOMIC publish (temp + rename): the warm path reads this file
-    # OUTSIDE the flock (that is the whole point of the versioned
-    # layout — zero coordination on a cache hit), so a
-    # truncate-in-place write here would expose concurrent warm opens
-    # to a partial file
-    tmp_path = meta_path + ".tmp"
-    this_v = _version_dir(key)
-    with open(tmp_path, "w") as f:
-        json.dump(
-            {
-                "key": key,
-                "version_dir": this_v,
-                "counts": counts,
-                "centroids": cent,
-                "anchor": anchor,
-                "vectors_schema": on_disk.schema.jsonValue(),
-                "centroids_schema": cent_disk.schema.jsonValue(),
-            },
-            f,
-        )
-    os.replace(tmp_path, meta_path)
-    # GC superseded versions, sparing the one the previous meta named;
-    # also drop the pre-versioning flat layout (meta_layout <= 3)
-    for d in os.listdir(path):
-        if (d.startswith("v_") and d not in (this_v, keep_prev)) or d in (
-            "vectors",
-            "centroids",
-        ):
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-
-
-def read_meta(path: str) -> dict:
-    """Load an index's meta file: ``key`` (layout identity), ``counts``
-    (per-cluster row counts of the files as written), ``centroids``
-    (the quantizer — sorted [cluster_id, vector] pairs) and ``anchor``
-    (the min-vec_id row). Centroids/anchor are driver-resident index
-    assets: searches and self-checks read them here instead of running
-    Spark jobs against the centroid table."""
-    with open(os.path.join(path, "_IVF_META.json")) as f:
-        return json.load(f)
 
 
 def rank_probe_clusters(
@@ -323,13 +247,10 @@ def ivf_topk(
     k_clusters: int,
     top_k: int = 10,
     n_probe: int = 2,
-    index_path: str | None = None,
-    index_tag: str = "",
 ) -> DataFrame:
-    """End-to-end IVF search for one probe vector. With ``index_path``
-    the index is materialized/reused on disk (the scale path — the
-    cluster filter prunes partition directories); without it the index
-    is computed inline (self-contained, for ad-hoc frames)."""
+    """End-to-end IVF search for one probe vector over an index computed
+    inline (self-contained, for ad-hoc frames); the materialized,
+    directory-pruned index is build_index + search_index."""
     probe = emb.where(F.col("vec_id") == probe_id).select(
         F.col("embedding").alias("p")
     )
@@ -347,18 +268,15 @@ def ivf_topk(
             f"probe vec_id {probe_id} not found in the embedding frame"
         )
     probe = spark.createDataFrame(probe_rows, probe.schema)
-    if index_path is not None:
-        indexed, centroids = build_index(spark, emb, k_clusters, index_path, index_tag)
-    else:
-        # collapse the trained quantizer to a k-row LITERAL frame (the
-        # same driver-resident treatment build_index's meta gives it):
-        # Lloyd's deep iterative plan runs exactly once at the collect,
-        # and downstream actions re-read k in-plan rows instead of
-        # either recomputing the training (uncached) or leaking one
-        # orphaned cached frame per ad-hoc call (a .cache() nothing
-        # ever unpersisted — a long-lived driver accumulated one per
-        # search until the ContextCleaner's periodic GC)
-        trained = train_quantizer(emb, k_clusters)
-        centroids = spark.createDataFrame(trained.collect(), trained.schema)
-        indexed = assign_clusters(emb, centroids)
+    # collapse the trained quantizer to a k-row LITERAL frame (the same
+    # driver-resident treatment build_index's info gives it): Lloyd's
+    # deep iterative plan runs exactly once at the collect, and
+    # downstream actions re-read k in-plan rows instead of either
+    # recomputing the training (uncached) or leaking one orphaned
+    # cached frame per ad-hoc call (a .cache() nothing ever
+    # unpersisted — a long-lived driver accumulated one per search
+    # until the ContextCleaner's periodic GC)
+    trained = train_quantizer(emb, k_clusters)
+    centroids = spark.createDataFrame(trained.collect(), trained.schema)
+    indexed = assign_clusters(emb, centroids)
     return search_index(indexed, centroids, probe, probe_id, top_k, n_probe)

@@ -336,115 +336,62 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape under disabled broadcast — the 100 TB path the buckets
     exist for — is plan-asserted in tests/test_scale_patterns.py,
     where a conf scope can genuinely surround execution."""
-    import json
+    import hashlib
     import os
 
-    from airflow_jira_etl_spark.catalog import source_stamp, source_tag, table_path
-    from airflow_jira_etl_spark.scratch import SCRATCH
+    from airflow_jira_etl_spark.catalog import source_stamp, table_path
+    from airflow_jira_etl_spark.scratch import SCRATCH, source_cache
 
-    wh = os.path.join(SCRATCH, "bucketed_wh")
-    # identity = catalog.source_tag (basename + abspath hash, so two
-    # same-named fixtures at different paths get separate cache slots
-    # instead of thrashing one), made identifier-safe (sf dirs contain
-    # dots: sf0.01); content = catalog.source_stamp per table — a raw
-    # stat of the table path misses in-place part rewrites of a
-    # DIRECTORY-shaped source (its own mtime/size do not change), the
-    # staleness class every other shared cache already keys against
-    tag = source_tag(sf_dir).replace(".", "_")
-    meta_path = os.path.join(wh, f"_META_{tag}.json")
-    meta = {t: source_stamp(table_path(sf_dir, t)) for t in ("lineitem", "orders")}
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS buck_q LOCATION '{wh}'")
-    li_name, o_name = f"buck_q.lineitem_{tag}", f"buck_q.orders_{tag}"
+    # table -> (bucket key, the columns kept with their types)
+    tables = {
+        "lineitem": (
+            "l_orderkey",
+            {"l_orderkey": "BIGINT", "l_extendedprice": "DOUBLE", "l_discount": "DOUBLE"},
+        ),
+        "orders": ("o_orderkey", {"o_orderkey": "BIGINT", "o_orderpriority": "STRING"}),
+    }
 
-    def _files_current() -> bool:
-        try:
-            with open(meta_path) as f:
-                return json.load(f) == meta
-        except (FileNotFoundError, json.JSONDecodeError):
-            return False
+    def _name(t: str, out: str) -> str:
+        # one catalog name per version dir: a registration can never
+        # point at another fixture's or another version's files
+        return f"buck_q.{t}_{hashlib.sha256(out.encode()).hexdigest()[:12]}"
 
-    cached = _files_current()
-    lk = None
-    # every exit path after the flock is acquired must run through the
-    # finally below — an exception anywhere between acquisition and
-    # release (incl. the cached-path external-table registration) would
-    # otherwise leave the builder lock held for the session's lifetime
-    # (the traceback keeps the file object alive), wedging other
-    # sessions' builders
-    try:
-        if not cached:
-            # shared content-keyed cache, same hazard class as the event
-            # page cache: a concurrent session's rebuild would rmtree the
-            # bucket files under this session's lazily-returned join —
-            # serialize builders with a flock (held through the rebuild
-            # below) and re-validate inside it
-            import fcntl
-
-            os.makedirs(wh, exist_ok=True)
-            lk = open(wh + ".lock", "w")
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            cached = _files_current()
-        if cached and not (
-            spark.catalog.tableExists(li_name)
-            and spark.catalog.tableExists(o_name)
-        ):
-            # files from a prior session are current but the in-memory
-            # catalog forgot them — re-register as EXTERNAL bucketed
-            # tables over the existing bucket files instead of
-            # rewriting them
-            spark.sql(
-                f"""
-                CREATE TABLE IF NOT EXISTS {li_name}
-                (l_orderkey BIGINT, l_extendedprice DOUBLE, l_discount DOUBLE)
-                USING PARQUET
-                CLUSTERED BY (l_orderkey) SORTED BY (l_orderkey) INTO 8 BUCKETS
-                LOCATION '{os.path.join(wh, li_name.split(".")[1])}'
-                """
-            )
-            spark.sql(
-                f"""
-                CREATE TABLE IF NOT EXISTS {o_name}
-                (o_orderkey BIGINT, o_orderpriority STRING)
-                USING PARQUET
-                CLUSTERED BY (o_orderkey) SORTED BY (o_orderkey) INTO 8 BUCKETS
-                LOCATION '{os.path.join(wh, o_name.split(".")[1])}'
-                """
-            )
-        if not cached:
-            import shutil
-
-            # the session catalog is in-memory: a prior session's managed
-            # table dirs survive on disk unregistered — clear both name and
-            # location before rebuilding
-            for name in (li_name, o_name):
-                spark.sql(f"DROP TABLE IF EXISTS {name}")
-                shutil.rmtree(
-                    os.path.join(wh, name.split(".")[1]), ignore_errors=True
-                )
-            lineitem = catalog.load(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_extendedprice", "l_discount"
-            )
-            orders = catalog.load(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderpriority"
-            )
+    def build(out: str) -> dict:
+        for t, (key, cols) in tables.items():
             (
-                lineitem.write.bucketBy(8, "l_orderkey")
-                .sortBy("l_orderkey")
+                catalog.load(spark, sf_dir, t)
+                .select(*cols)
+                .write.bucketBy(8, key)
+                .sortBy(key)
+                .option("path", os.path.join(out, t))
                 .mode("overwrite")
-                .saveAsTable(li_name)
+                .saveAsTable(_name(t, out))
             )
-            (
-                orders.write.bucketBy(8, "o_orderkey")
-                .sortBy("o_orderkey")
-                .mode("overwrite")
-                .saveAsTable(o_name)
-            )
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
-    finally:
-        if lk is not None:
-            lk.close()  # releases the flock
-    li, o = spark.table(li_name), spark.table(o_name)
+        return {}
+
+    spark.sql(
+        "CREATE DATABASE IF NOT EXISTS buck_q "
+        f"LOCATION '{os.path.join(SCRATCH, 'bucketed_join')}'"
+    )
+    out, _ = source_cache(
+        "bucketed_join",
+        sf_dir,
+        {t: source_stamp(table_path(sf_dir, t)) for t in tables},
+        build,
+    )
+    # the session catalog is in-memory: files another session built are
+    # registered here as EXTERNAL bucketed tables over the version dir
+    for t, (key, cols) in tables.items():
+        spark.sql(
+            f"""
+            CREATE TABLE IF NOT EXISTS {_name(t, out)}
+            ({", ".join(f"{c} {ty}" for c, ty in cols.items())})
+            USING PARQUET
+            CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS
+            LOCATION '{os.path.join(out, t)}'
+            """
+        )
+    li, o = spark.table(_name("lineitem", out)), spark.table(_name("orders", out))
     # no broadcast-threshold toggling here: plans are lazy, so a conf
     # restored before the caller executes would not govern the run
     # anyway (and at 100 TB neither side broadcasts regardless). The
@@ -552,37 +499,25 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching directories is ever listed or read. At 100 TB this is THE
     star-join mechanism: date/tenant-partitioned facts are pruned by
     dimension predicates the fact table never mentions."""
-    import json
-    import os
+    from pyspark.sql import types as T
 
-    from airflow_jira_etl_spark.catalog import source_stamp, source_tag, table_path
-    from airflow_jira_etl_spark.scratch import session_scratch
+    from airflow_jira_etl_spark.catalog import source_stamp, table_path
+    from airflow_jira_etl_spark.scratch import source_cache
 
-    # cache identity: source_tag (basename + abspath hash — two
-    # same-named fixtures at different paths must not share a slot)
-    # plus a content stamp checked per call — a bare _SUCCESS
-    # existence check (the old form) served STALE partitions for an
-    # in-place fixture regen within one session, the staleness class
-    # every shared cache keys against (streaming/source._src_fingerprint)
-    out_dir = session_scratch("events_dpp", source_tag(sf_dir))
-    stamp_path = os.path.join(out_dir, "_SRC_STAMP.json")
-    stamp = source_stamp(table_path(sf_dir, "events"))
-    events = catalog.load(spark, sf_dir, "events").select(
-        "event_id", "user_id", fround(F.col("value")).alias("value"), "event_type"
+    def build(out: str) -> dict:
+        catalog.load(spark, sf_dir, "events").select(
+            "event_id", "user_id", fround(F.col("value")).alias("value"), "event_type"
+        ).write.partitionBy("event_type").parquet(out)
+        return {"schema": spark.read.parquet(out).schema.jsonValue()}
+
+    out, info = source_cache(
+        "dpp_events",
+        sf_dir,
+        {"events": source_stamp(table_path(sf_dir, "events"))},
+        build,
     )
-
-    def _current() -> bool:
-        try:
-            with open(stamp_path) as f:
-                return json.load(f) == stamp
-        except (FileNotFoundError, json.JSONDecodeError):
-            return False
-
-    if not (os.path.exists(os.path.join(out_dir, "_SUCCESS")) and _current()):
-        events.write.mode("overwrite").partitionBy("event_type").parquet(out_dir)
-        with open(stamp_path, "w") as f:
-            json.dump(stamp, f)
-    fact = spark.read.parquet(out_dir)
+    # the recorded schema spares every hit a footer-inference job
+    fact = spark.read.schema(T.StructType.fromJson(info["schema"])).parquet(out)
     dim = spark.createDataFrame(
         [("click", "Click"), ("view", "View"), ("error", "Error"),
          ("purchase", "Purchase"), ("signup", "Signup")],

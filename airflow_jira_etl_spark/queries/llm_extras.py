@@ -258,13 +258,13 @@ def _py_cos(a: list, b: list) -> float:
     #                   re-argmaxes (fresh, vs all k centroids) to its
     #                   stored cluster — catches corrupt assignments;
     #   count_parity  — probed-directory row count == the per-cluster
-    #                   counts persisted in the index meta at build
+    #                   counts persisted in the index info at build
     #                   time — catches truncated/duplicated files;
     #   k_exhausted   — |hits| == least(k, |candidates|), robust to a
     #                   skewed split leaving <k vectors in the probed
     #                   clusters (the old least(10, corpus-1) pin was
     #                   a latent fixture hazard).
-    # Source-data staleness is caught upstream by the mtime+size tag.
+    # Source-data staleness is caught upstream by the content-stamp key.
     # The probe is min(vec_id) rather than a hard-coded 0: a renumbered
     # fixture regen would have crashed the head() lookup (an err row,
     # unlike the sibling probes' symmetric-empty degradation); both
@@ -294,16 +294,8 @@ def llm_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|probed|·k), never a corpus scan. tests/test_operators.py
     additionally checks the raw hit list's determinism and true
     scores."""
-    import os
-
-    from airflow_jira_etl_spark.catalog import table_path
     from airflow_jira_etl_spark.functions.similarity import cosine
-    from airflow_jira_etl_spark.operators.ivf import (
-        build_index,
-        read_meta,
-        search_index,
-    )
-    from airflow_jira_etl_spark.scratch import SCRATCH
+    from airflow_jira_etl_spark.operators.ivf import build_index, search_index
 
     # un-embeddable rows cannot be indexed: a NULL vector AND a vector
     # carrying a NULL (or NaN) ELEMENT all cosine to NULL
@@ -319,34 +311,26 @@ def llm_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("embedding").isNotNull()
         & ~F.exists("embedding", lambda x: x.isNull() | F.isnan(x))
     )
-    # the tag fingerprints the SOURCE DATA — per-part for a directory-
-    # shaped fixture (catalog.source_stamp: a dir's own stat does not
-    # change when a part file is rewritten in place) — so regenerated
-    # fixtures at the same path invalidate the materialized index,
-    # never serve stale assignments; the index DIR is keyed by
-    # catalog.source_tag (basename + abspath hash) so two same-named
-    # fixtures at different paths cannot thrash one cache with
-    # alternating full rebuilds
-    src = table_path(sf_dir, "embeddings")
-    tag = f"{catalog.source_tag(sf_dir)}:{catalog.source_stamp(src)}"
-    index_dir = os.path.join(
-        SCRATCH, "ivf_index", catalog.source_tag(sf_dir) + "_k8"
+    # keyed by the embeddings' content stamp (scratch.source_cache):
+    # a regenerated fixture invalidates the materialized index, never
+    # serves stale assignments
+    stamp = catalog.source_stamp(catalog.table_path(sf_dir, "embeddings"))
+    indexed, centroids, info = build_index(
+        spark, emb, 8, sf_dir, {"embeddings": stamp}
     )
-    indexed, centroids = build_index(spark, emb, 8, index_dir, tag)
-    # the IVF "directory" is coordinator-resident by design — the meta
-    # file carries the quantizer (k centroid vectors, a constant, never
+    # the IVF "directory" is coordinator-resident by design — the info
+    # carries the quantizer (k centroid vectors, a constant, never
     # data-scaled) and the min-vec_id anchor row, both recorded from
-    # the read-back files at build time. Loading them here instead of
+    # the read-back files at build time. Reading them here instead of
     # collect()/head() Spark jobs means a warm-index search launches
     # exactly ONE job: the pruned scan itself. Driver-side centroids
     # also let the comparator's fresh argmax be a pure codegen
     # expression: no shuffle, no second pass.
-    meta = read_meta(index_dir)
-    cent = [(int(cid), [float(x) for x in v]) for cid, v in meta["centroids"]]
-    pid = int(meta["anchor"]["vec_id"])
-    pvec = [float(x) for x in meta["anchor"]["embedding"]]
+    cent = [(int(cid), [float(x) for x in v]) for cid, v in info["centroids"]]
+    pid = int(info["anchor"]["vec_id"])
+    pvec = [float(x) for x in info["anchor"]["embedding"]]
     probe = spark.createDataFrame([(pvec,)], "p array<double>")
-    # probe-cluster ranking over the meta-resident directory — identical
+    # probe-cluster ranking over the info-resident directory — identical
     # semantics to operators.ivf.rank_probe_clusters (argmax cosine,
     # ties to lowest cluster_id) without its extra Spark job; the
     # product API itself stays covered by ivf_topk and
@@ -359,11 +343,11 @@ def llm_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded comparator: read ONLY the probed directories (pruned
     # scan), re-argmax each row against the k centroid literals, and
     # verify (a) the stored assignment, (b) the on-disk row count vs
-    # the build-time meta, (c) top-k exactness over the verified rows.
+    # the build-time info, (c) top-k exactness over the verified rows.
     # Same double-accumulation fold as assign_clusters used at build
     # time, so a healthy index reproduces its argmax bit-for-bit;
     # first-position ties == assign_clusters' lowest-cluster_id break.
-    expected_disk = sum(meta["counts"].get(str(c), 0) for c in pc)
+    expected_disk = sum(info["counts"].get(str(c), 0) for c in pc)
     # single nested-array literals (ONE Literal node each, not k·dims
     # of them) keep the analysis/codegen cost of this expression flat —
     # per-column F.lit trees made Catalyst's optimizer passes the

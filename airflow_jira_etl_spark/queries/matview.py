@@ -22,8 +22,8 @@ from airflow_jira_etl_spark import catalog
 from airflow_jira_etl_spark.functions.rounding import fround
 from airflow_jira_etl_spark.registry import query
 from airflow_jira_etl_spark.sinks.parquet_upsert import ParquetUpsertTable
-from airflow_jira_etl_spark.scratch import SCRATCH, session_scratch
-from airflow_jira_etl_spark.streaming.source import pages_dir_for, write_event_pages
+from airflow_jira_etl_spark.scratch import session_scratch
+from airflow_jira_etl_spark.streaming.source import write_event_pages
 
 
 @query(
@@ -48,12 +48,11 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     be indistinguishable from recomputation. Raw sums live in the
     table; rounding happens once at read, so fold order can't compound
     rounding error."""
-    pages_dir = pages_dir_for(SCRATCH, sf_dir)
     # per-session (tag + pid): a concurrent session must not destroy()
     # this MV table mid-refresh (see airflow_jira_etl_spark.scratch)
     tag = os.path.basename(os.path.normpath(sf_dir))
     table_dir = session_scratch("mv_user_profile", tag)
-    write_event_pages(spark, sf_dir, pages_dir, n_pages=4)
+    pages_dir, _ = write_event_pages(spark, sf_dir, n_pages=4)
     # null_keys="group": user_id is a GROUP BY key, and SQL aggregation
     # has a NULL group — a drifted fixture with one NULL user_id must
     # fold into it like the oracle's GROUP BY does, not refuse the

@@ -25,14 +25,13 @@ from airflow_jira_etl_spark.functions.rounding import fround
 from airflow_jira_etl_spark.registry import query
 from airflow_jira_etl_spark.sinks.parquet_upsert import ParquetUpsertTable
 from airflow_jira_etl_spark.streaming.source import (
-    pages_dir_for,
     read_events_stream,
     run_available_now,
     run_to_completion,
     write_event_pages,
 )
 
-from airflow_jira_etl_spark.scratch import SCRATCH, session_scratch
+from airflow_jira_etl_spark.scratch import session_scratch
 
 
 def _ck(name: str) -> str:
@@ -275,8 +274,7 @@ def stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # same page layout as the foreachBatch/MV queries — one shared
     # materialization per sweep, not one per query
-    pages_dir = pages_dir_for(SCRATCH, sf_dir)
-    write_event_pages(spark, sf_dir, pages_dir, n_pages=4)
+    pages_dir, _ = write_event_pages(spark, sf_dir, n_pages=4)
     # pages are written from catalog.load output (layout v2): ts is a
     # real timestamp column regardless of the source fixture's unit
     stream = (
@@ -330,7 +328,6 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     observable."""
     from airflow_jira_etl_spark.sinks.parquet_upsert import range_bucketer
 
-    pages_dir = pages_dir_for(SCRATCH, sf_dir)
     # per-SESSION table dir (sf tag + pid): the returned DataFrame reads
     # these files lazily, so the dir must outlive this call — but a
     # shared name would let a concurrent session destroy() the table
@@ -339,7 +336,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_dir = session_scratch("upsert_tables", tag)
     # 4 pages = 4 real micro-batches: enough to exercise cross-batch
     # merge + manifest chaining; per-batch harness latency is the cost
-    page_size = write_event_pages(spark, sf_dir, pages_dir, n_pages=4)
+    pages_dir, page_size = write_event_pages(spark, sf_dir, n_pages=4)
     # bucket width = 1/8 page -> a page dirties ~8 buckets; ~32 total
     bucketer = range_bucketer(max(page_size // 8, 1))
     table = ParquetUpsertTable(

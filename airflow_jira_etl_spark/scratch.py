@@ -1,26 +1,32 @@
-"""Per-session scratch paths for sink/stream queries.
+"""Scratch paths: per-session state and shared fixture-derived caches.
 
 Sink and streaming queries materialize real on-disk state (upsert
 tables, checkpoint logs, written-out tables) under the scratch root
 (``SCRATCH`` below — a repo-keyed tmpfs dir by default, see
 ``_default_scratch``; ``SPARK_GRAFT_SCRATCH`` overrides). A
 FIXED path there is a concurrency bug: two sessions (a test run
-alongside a bench run — the scenario the page cache's flock already
-defends against) destroy()/overwrite each other's live state mid-query.
+alongside a bench run) would destroy()/overwrite each other's live
+state mid-query.
 
-The rule here: every such path is keyed by ``<tag>_<pid>`` so sessions
-are mutually invisible, and dirs whose owning process is gone are
-reaped on the next use of the same kind — bounded growth without ever
-touching a LIVE session's state. (Shared CACHES keyed by source
-content — the event page cache, the IVF index — stay shared by design
-and serialize builders with flocks instead.)
+Two kinds of path live here:
+
+- ``session_scratch``: per-session state keyed by ``<tag>_<pid>``, so
+  sessions are mutually invisible; dirs whose owning process is gone
+  are reaped on the next use of the same kind — bounded growth without
+  ever touching a LIVE session's state.
+- ``source_cache``: artifacts derived from a fixture (event pages, the
+  IVF index, the bucketed-join tables, the DPP table), keyed by the
+  fixture's content and shared by every session.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import shutil
 import stat
+from typing import Callable
 
 # world-writable tmpfs the default scratch root lives on
 _SHM = "/dev/shm"
@@ -31,7 +37,7 @@ _REPO_SCRATCH = os.path.join(
 
 
 def _default_scratch() -> str:
-    """Scratch root selection (r15 optimization round, guide §6).
+    """Scratch root selection.
 
     Everything under scratch is EPHEMERAL: per-session sink state that
     each query destroys and rebuilds, availableNow checkpoints that are
@@ -54,10 +60,8 @@ def _default_scratch() -> str:
     if env:
         return os.path.abspath(env)
     if os.path.isdir(_SHM) and os.access(_SHM, os.W_OK):
-        import hashlib
-
         # /dev/shm is world-writable shared tmp, so a predictable name
-        # is the classic pre-create/symlink-squat surface (ADVICE r15):
+        # is the classic pre-create/symlink-squat surface:
         # key the dir by UID as well, create it 0o700 up front, and
         # refuse anything that is a symlink or owned by someone else —
         # falling back to the repo-local root rather than reading or
@@ -145,3 +149,75 @@ def session_scratch(kind: str, tag: str = "") -> str:
         shutil.rmtree(path, ignore_errors=True)
         _CLAIMED.add(path)
     return path
+
+
+_CACHE_META = "_CACHE_META.json"
+
+
+def source_cache(
+    kind: str, sf_dir: str, ident, build: Callable[[str], dict]
+) -> tuple[str, dict]:
+    """The ``kind`` artifact derived from the fixture at ``sf_dir``:
+    ``SCRATCH/<kind>/<catalog.source_tag(sf_dir)>/v_<hash(ident)>``,
+    returned with the JSON ``info`` its build recorded.
+
+    ``ident`` (JSON-able) holds the ``catalog.source_stamp`` of every
+    table the artifact reads plus the caller's parameters; it is the
+    artifact's one invalidation rule. A hit — the meta file records the
+    same ident — costs a file read: no lock, no Spark job. A miss takes
+    an exclusive flock, re-checks, runs ``build(dir) -> info`` into a
+    fresh version dir (``build`` creates ``dir``), publishes the meta
+    with ``os.replace`` and deletes every version except the new one
+    and the one the previous meta named. Readers never lock, so a
+    reader that resolved the previous version keeps reading valid files
+    through one rebuild."""
+    from airflow_jira_etl_spark.catalog import source_tag
+
+    root = os.path.join(SCRATCH, kind, source_tag(sf_dir))
+    key = json.loads(json.dumps(ident))  # as the meta reads back
+    meta_path = os.path.join(root, _CACHE_META)
+
+    def _meta() -> dict | None:
+        try:
+            with open(meta_path) as f:
+                return json.load(f)
+        except (FileNotFoundError, json.JSONDecodeError):
+            return None
+
+    meta = _meta()
+    if meta is None or meta["ident"] != key:
+        import fcntl
+
+        os.makedirs(root, exist_ok=True)
+        with open(root + ".lock", "w") as lk:
+            fcntl.flock(lk, fcntl.LOCK_EX)
+            meta = _meta()
+            if meta is None or meta["ident"] != key:
+                meta = _build_version(root, meta, key, build)
+    return os.path.join(root, meta["version"]), meta["info"]
+
+
+def _build_version(root: str, prev: dict | None, key, build) -> dict:
+    """The miss path of source_cache; the caller holds the flock."""
+    version = "v_" + hashlib.sha256(
+        json.dumps(key, sort_keys=True).encode()
+    ).hexdigest()[:12]
+    out = os.path.join(root, version)
+    # a leftover of a crashed build, or a version two rebuilds old
+    shutil.rmtree(out, ignore_errors=True)
+    try:
+        info = build(out)
+    except BaseException:
+        shutil.rmtree(out, ignore_errors=True)
+        raise
+    text = json.dumps({"ident": key, "version": version, "info": info})
+    meta_path = os.path.join(root, _CACHE_META)
+    with open(meta_path + ".tmp", "w") as f:
+        f.write(text)
+    os.replace(meta_path + ".tmp", meta_path)
+    keep = {version, prev["version"] if prev else None}
+    for d in os.listdir(root):
+        if d.startswith("v_") and d not in keep:
+            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    # the hit path returns the info as JSON reads it back: so does this
+    return json.loads(text)

@@ -488,44 +488,24 @@ class ParquetUpsertTable:
 
     def _dirty_buckets(self, upd: DataFrame) -> list[int]:
         """The buckets a (checkpointed) multi-bucket batch hashes into:
-        <= n_buckets small (bucket, has_null_key) rows — a scalar
-        collect, same class as a COUNT, not a data collect. The null-KEY
-        flag rides the same job: with the default hash_bucketer a NULL
-        key still hashes to a valid bucket (xxhash64 of NULL is the
-        seed), so without this check all NULL-key rows would pass the
-        bucket guard and then silently COLLAPSE to one arbitrary row in
-        the upsert window — data loss, not an error. A NULL bucket id
-        is left to _written_buckets, which refuses the written
-        __HIVE_DEFAULT_PARTITION__ dir before commit."""
-        from functools import reduce
-        from operator import or_
-
+        <= n_buckets small rows — a scalar collect, same class as a
+        COUNT, not a data collect. A NULL key is refused inside the
+        merge write by the in-plan guard of upsert()/merge_aggregate()
+        (with the default hash_bucketer it still hashes to a valid
+        bucket); a NULL bucket id is left to _written_buckets, which
+        refuses the written __HIVE_DEFAULT_PARTITION__ dir before
+        commit."""
         from airflow_jira_etl_spark.session import scoped_conf
 
-        null_key = reduce(or_, [F.col(k).isNull() for k in self.keys])
-        # AQE off for THIS statement only (r15, guide §1.2/§2): the
-        # dirty-set aggregate's output is bounded by n_buckets rows at
-        # any scale, so AQE's runtime replanning buys nothing here while
-        # its per-query-stage materialization adds one scheduling
+        # AQE off for THIS statement only: the dirty-set aggregate's
+        # output is bounded by n_buckets rows at any scale, so AQE's
+        # runtime replanning buys nothing here while its
+        # per-query-stage materialization adds one scheduling
         # round-trip per MERGE batch (measured ~0.1 s per 4 applies at
         # sf0.1). The merge WRITE keeps AQE — there the partition
         # coalescing genuinely sizes output files.
         with scoped_conf(self.spark, "spark.sql.adaptive.enabled", "false"):
-            raw = (
-                upd.groupBy(_BUCKET)
-                .agg(F.max(null_key).alias("has_null_key"))
-                .collect()
-            )
-        if self.null_keys == "reject" and any(r["has_null_key"] for r in raw):
-            raise ValueError(
-                "upsert keys must be non-null: the batch carries "
-                "NULL in a key column — NULL keys would silently "
-                "collapse to one arbitrary row in the merge "
-                "(reference db_ops.py treats the key as a primary "
-                "key, which is NOT NULL by definition); for "
-                "GROUP-BY keys where NULL is a domain value, "
-                "open the table with null_keys='group'"
-            )
+            raw = upd.select(_BUCKET).distinct().collect()
         return sorted(r[0] for r in raw if r[0] is not None)
 
     # ------------------------------------------------- generation commit

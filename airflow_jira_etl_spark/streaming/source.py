@@ -25,76 +25,30 @@ from airflow_jira_etl_spark.catalog import (
     SCHEMAS,
     conform,
     file_schema,
+    source_stamp,
     table_path,
 )
-from airflow_jira_etl_spark.scratch import SCRATCH as _SCRATCH
+from airflow_jira_etl_spark.scratch import source_cache
 from airflow_jira_etl_spark.session import scoped_conf
 
 
-def _sf_tag(sf_dir: str) -> str:
-    """Identity tag for per-source scratch dirs (catalog.source_tag:
-    basename + abspath hash). Basename alone is not an identity — two
-    fixtures at /a/sf0.01 and /b/sf0.01 would share one staged-stream
-    dir and one page cache, and since their wanted-link-sets/meta
-    idents differ, every query would rebuild the shared dir under the
-    OTHER session's running stream (the flock serializes builders
-    against each other, not against a reader that already started)."""
-    from airflow_jira_etl_spark.catalog import source_tag
-
-    return source_tag(sf_dir)
+def _glob_escape(path: str) -> str:
+    """``path`` with Hadoop glob metacharacters escaped, so it matches
+    itself literally inside a glob pattern."""
+    return "".join("\\" + c if c in "\\*?[]{}" else c for c in path)
 
 
-def _staged_events_dir(sf_dir: str) -> str:
-    """The file stream source requires a DIRECTORY of data files; stage
-    the events parquet into one via symlinks (no copy).
-
-    The source LISTS the staged directory non-recursively, so a
-    directory-shaped events.parquet (Spark-style part-file output — a
-    layout a future fixture regeneration could ship) must be staged as
-    one link per data file; linking the directory itself makes the
-    stream silently read ZERO rows. Both layouts re-stage whenever the
-    expected link set changes."""
-    d = os.path.join(_SCRATCH, "stream_src", _sf_tag(sf_dir))
-    os.makedirs(d, exist_ok=True)
-    # absolute targets: a RELATIVE sf_dir would store the relative
-    # string in the link, which the kernel resolves against the link's
-    # own directory (.scratch/stream_src/<tag>/), not the cwd —
-    # dangling links that the _current()==wanted check would then
-    # consider "correctly staged" forever
+def _events_glob(sf_dir: str) -> str:
+    """A glob that matches the events fixture's data files. The file
+    stream source needs a directory or a glob: a plain file path fails
+    ("Option 'basePath' must be a directory"), so a file-shaped fixture
+    streams as ``<sf>/{events.parquet}`` and a directory-shaped one
+    (Spark part-file output) as ``<dir>/*.parquet``."""
     src = os.path.abspath(table_path(sf_dir, "events"))
     if os.path.isdir(src):
-        wanted = {
-            f"events_{f}": os.path.join(src, f)
-            for f in sorted(os.listdir(src))
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        }
-    else:
-        wanted = {"events.parquet": src}
-    def _current() -> dict:
-        return {
-            e: os.readlink(os.path.join(d, e))
-            for e in os.listdir(d)
-            if os.path.islink(os.path.join(d, e))
-        }
-
-    if _current() != wanted:
-        # same cross-process hazard class as write_event_pages: two
-        # fresh sessions racing the stage loop collide on os.symlink
-        # (FileExistsError), and a re-stage unlinks the whole set under
-        # another session's running stream — serialize with a flock and
-        # re-check inside it
-        import fcntl
-
-        with open(d + ".lock", "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            if _current() != wanted:
-                for e in os.listdir(d):
-                    p = os.path.join(d, e)
-                    if os.path.islink(p):
-                        os.remove(p)
-                for name, target in wanted.items():
-                    os.symlink(target, os.path.join(d, name))
-    return d
+        return os.path.join(_glob_escape(src), "*.parquet")
+    head, name = os.path.split(src)
+    return os.path.join(_glob_escape(head), "{" + name + "}")
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -107,157 +61,83 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from airflow_jira_etl_spark.session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)
-    staged = _staged_events_dir(sf_dir)
     # file_schema keys its cache on per-part stats for dir-shaped
     # sources (an in-place part rewrite leaves the dir stat unchanged),
     # so the sniff stays fresh across fixture regenerations here too
     actual = file_schema(spark, table_path(sf_dir, "events"))
-    raw = spark.readStream.schema(actual).parquet(staged)
+    raw = spark.readStream.schema(actual).parquet(_events_glob(sf_dir))
     return conform(raw, SCHEMAS["events"])
 
 
-def pages_dir_for(scratch: str, sf_dir: str) -> str:
-    """Per-source page directory. The page cache is keyed by source
-    mtime/size in its meta file, but two SESSIONS on different sources
-    sharing one directory would rewrite it back and forth under each
-    other's running streams — the dir name itself must carry the
-    source identity (_sf_tag: basename + abspath hash, so same-named
-    fixtures at different paths get distinct caches)."""
-    return os.path.join(scratch, f"event_pages_{_sf_tag(sf_dir)}")
-
-
-def _src_fingerprint(src: str) -> list:
-    """Content identity of the events source as (name, mtime_ns, size)
-    entries — one for a plain file, one PER PART FILE for a
-    directory-shaped parquet (whose own mtime does not reflect in-place
-    part rewrites)."""
-    if not os.path.isdir(src):
-        st = os.stat(src)
-        return [["", st.st_mtime_ns, st.st_size]]
-    out = []
-    for f in sorted(os.listdir(src)):
-        if f.startswith((".", "_")):
-            continue
-        st = os.stat(os.path.join(src, f))
-        out.append([f, st.st_mtime_ns, st.st_size])
-    return out
-
-
 def write_event_pages(
-    spark: SparkSession, sf_dir: str, out_dir: str, n_pages: int = 8
-) -> int:
+    spark: SparkSession, sf_dir: str, n_pages: int = 8
+) -> tuple[str, int]:
     """Materialize the events table as ordered page files (the
-    reference's paginated responses). Page COUNT is fixed and page
-    size scales with the table — each downstream micro-batch MERGE
-    rewrites the table once, so total work is O(n_pages · n), not the
-    O(n²/page_size) a fixed-size page would cost. Returns the page
-    size (rows per page). Rows with a NULL event_id are dropped — they
-    have no position in the id-derived layout (the NULL entity-key
-    convention; every consumer's oracle filters event_id IS NOT NULL
-    to match — see the in-body comment).
+    reference's paginated responses) and return ``(dir, page_size)``:
+    the pages are ``dir/page_NNNNN``, ``page_size`` rows of event_id
+    each. Page COUNT is fixed and page size scales with the table —
+    each downstream micro-batch MERGE rewrites the table once, so total
+    work is O(n_pages · n), not the O(n²/page_size) a fixed-size page
+    would cost. Rows with a NULL event_id are dropped — they have no
+    position in the id-derived layout (the NULL entity-key convention;
+    every consumer's oracle filters event_id IS NOT NULL to match — see
+    the in-body comment).
 
-    The page layout is deterministic in (source, n_pages), so an
-    existing directory with a matching meta file is reused as-is —
-    repeated streaming queries in one sweep pay the paging cost once.
-
-    Builders are serialized across PROCESSES with an exclusive flock:
-    two concurrent sessions (e.g. a test run alongside a bench run)
-    otherwise race the check-rebuild sequence — one rmtree's the pages
-    the other's running stream is reading mid-query. The loser of the
-    lock re-validates the meta and returns without rebuilding.
-
-    A cache HIT costs only os.stat calls — no Spark job: the meta's
-    identity fields (source fingerprint, n_pages, layout) are checked
-    first and the recorded total derives the page size, so the
-    max(event_id) scan runs only when a rebuild is actually needed."""
-    import json
-
+    The layout is deterministic in (source, n_pages), so it is a
+    scratch.source_cache artifact: repeated streaming queries pay the
+    paging cost once, and a hit runs no Spark job."""
     src = table_path(sf_dir, "events")
     ident = {
-        # the fingerprint covers DIRECTORY-shaped sources too (one entry
-        # per part file): a dir's own mtime does not change when a part
-        # file is overwritten in place, so stat'ing just the dir would
-        # serve stale pages after a fixture regeneration
-        "src": src,
-        "src_fp": _src_fingerprint(src),
+        "events": source_stamp(src),
         "n_pages": n_pages,
         # page-format version — bump when the written page schema
         # changes (v2: ts persisted as a real timestamp, not raw long;
         # v3: NULL-event_id rows dropped from the paged stream)
         "layout": 3,
     }
-    meta_path = os.path.join(out_dir, "_PAGES_META.json")
 
-    def _current_total() -> int | None:
-        try:
-            with open(meta_path) as f:
-                m = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None
-        return m["total"] if {k: m.get(k) for k in ident} == ident else None
+    def build(out_dir: str) -> dict:
+        from airflow_jira_etl_spark import catalog
 
-    total = _current_total()
-    if total is not None:  # fast path: zero Spark jobs, no lock traffic
-        return -(-total // n_pages)
-
-    from airflow_jira_etl_spark import catalog
-
-    # NULL-key convention (the entity-key analog of the docs
-    # corpus's NULL doc_id rule): a row with a NULL event_id has no
-    # position in the id-derived page layout — it cannot be paged,
-    # cursor-addressed, or upsert-addressed (the reference's unique-key
-    # contract, db_ops.py:29-43: a NULL unique_column row is
-    # unaddressable by MERGE). Such rows are DROPPED from the paged
-    # stream, on both engines: every oracle downstream of this source
-    # filters event_id IS NOT NULL to match. max/min skip NULLs, so the
-    # stats row already describes the kept rows.
-    events = catalog.load(spark, sf_dir, "events").where(
-        F.col("event_id").isNotNull()
-    )
-    stats = events.agg(F.max("event_id"), F.min("event_id")).collect()[0]
-    max_id, min_id = stats[0], stats[1]
-    if max_id is None:
-        raise ValueError(
-            f"events table at {src} is empty — cannot page a zero-row "
-            f"stream source"
+        # NULL-key convention (the entity-key analog of the docs
+        # corpus's NULL doc_id rule): a row with a NULL event_id has no
+        # position in the id-derived page layout — it cannot be paged,
+        # cursor-addressed, or upsert-addressed (the reference's
+        # unique-key contract, db_ops.py:29-43: a NULL unique_column
+        # row is unaddressable by MERGE). Such rows are DROPPED from
+        # the paged stream, on both engines: every oracle downstream of
+        # this source filters event_id IS NOT NULL to match. max/min
+        # skip NULLs, so the stats row already describes the kept rows.
+        events = catalog.load(spark, sf_dir, "events").where(
+            F.col("event_id").isNotNull()
         )
-    if min_id < 0:
-        # page ids derive from event_id: a negative id lands below page
-        # 0, outside the rename loop's range(n_pages), where the _tmp
-        # cleanup would DELETE the rows silently while the meta file
-        # commits the build as complete
-        raise ValueError(
-            f"events.event_id must be non-negative to page "
-            f"deterministically (min={min_id})"
-        )
-    total = int(max_id) + 1
-    page_size = -(-total // n_pages)  # ceil
-    meta = {**ident, "total": total}
-    import fcntl
+        stats = events.agg(F.max("event_id"), F.min("event_id")).collect()[0]
+        max_id, min_id = stats[0], stats[1]
+        if max_id is None:
+            raise ValueError(
+                f"events table at {src} is empty — cannot page a zero-row "
+                f"stream source"
+            )
+        if min_id < 0:
+            # page ids derive from event_id: a negative id lands below
+            # page 0, outside the rename loop's range(n_pages), where
+            # the _tmp cleanup would DELETE the rows silently
+            raise ValueError(
+                f"events.event_id must be non-negative to page "
+                f"deterministically (min={min_id})"
+            )
+        page_size = -(-(int(max_id) + 1) // n_pages)  # ceil
+        _write_pages(events, out_dir, n_pages, page_size)
+        return {"page_size": page_size}
 
-    os.makedirs(os.path.dirname(out_dir) or ".", exist_ok=True)
-    with open(out_dir + ".lock", "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        if _current_total() == total:  # built while we waited
-            return page_size
-        return _build_event_pages(
-            events, out_dir, meta, meta_path, n_pages, page_size
-        )
+    out_dir, info = source_cache("event_pages", sf_dir, ident, build)
+    return out_dir, info["page_size"]
 
 
-def _build_event_pages(
-    events: DataFrame,
-    out_dir: str,
-    meta: dict,
-    meta_path: str,
-    n_pages: int,
-    page_size: int,
-) -> int:
-    """The rebuild body of write_event_pages — caller holds the flock."""
-    import json
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
+def _write_pages(
+    events: DataFrame, out_dir: str, n_pages: int, page_size: int
+) -> None:
+    """The build body of write_event_pages."""
     # ONE job writes every page (hash-partition on the page id -> each
     # page's rows land in exactly one task -> one file per page dir),
     # instead of n_pages sequential full-table filter+write jobs
@@ -292,9 +172,6 @@ def _build_event_pages(
         for fn in os.listdir(dst_dir):
             os.utime(os.path.join(dst_dir, fn), (now + i, now + i))
     shutil.rmtree(tmp, ignore_errors=True)
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    return page_size
 
 
 STREAM_STATE_PARTITIONS = "4"

@@ -51,10 +51,9 @@ def main() -> None:
     for t in catalog.TABLES:
         catalog.load(spark, args.sf_dir, t).count()
     # same warmups bench.py runs for the streaming/paged families
-    from airflow_jira_etl_spark.queries.streaming_queries import SCRATCH
-    from airflow_jira_etl_spark.streaming.source import pages_dir_for, write_event_pages
+    from airflow_jira_etl_spark.streaming.source import write_event_pages
 
-    write_event_pages(spark, args.sf_dir, pages_dir_for(SCRATCH, args.sf_dir), n_pages=4)
+    write_event_pages(spark, args.sf_dir, n_pages=4)
     spark.range(0, 1024, 1, 32).mapInPandas(lambda it: it, "id long").count()
     tiny = os.path.join(os.path.dirname(os.path.normpath(args.sf_dir)), "sf0.001")
     if not os.path.isdir(tiny):

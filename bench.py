@@ -103,17 +103,16 @@ def main() -> None:
 
     for t in catalog.TABLES:
         catalog.load(spark, SF_DIR, t).count()
-    # pre-build the BUILD-ONCE artifacts (streamed page dirs, the
-    # materialized IVF index, the bucketed join's bucketBy tables):
-    # they are cached across runs, so steady state is the
-    # representative measurement; their build cost is reported here in
-    # warmup_sec, not hidden
-    from airflow_jira_etl_spark.queries.streaming_queries import SCRATCH
-    from airflow_jira_etl_spark.streaming.source import pages_dir_for, write_event_pages
+    # pre-build the shared fixture-derived artifacts (scratch.source_cache:
+    # event pages, the IVF index, the bucketed join's bucketBy tables,
+    # the DPP table): they persist across runs until the fixture
+    # changes, so steady state is the representative measurement; their
+    # build cost is reported here in warmup_sec, not hidden
+    from airflow_jira_etl_spark.streaming.source import write_event_pages
 
-    write_event_pages(spark, SF_DIR, pages_dir_for(SCRATCH, SF_DIR), n_pages=4)
-    registry.QUERIES["llm_sim_ivf_topk"](spark, SF_DIR).count()
-    registry.QUERIES["join_bucketed_colocated"](spark, SF_DIR).count()
+    write_event_pages(spark, SF_DIR, n_pages=4)
+    for name in ("llm_sim_ivf_topk", "join_bucketed_colocated", "join_dpp_partitioned"):
+        registry.QUERIES[name](spark, SF_DIR).count()
     # warm the Python worker pool: the first Python-backed query (a
     # pandas UDF or an Arrow-batched kernel) otherwise absorbs
     # the pool spin-up — session infrastructure, same class as JVM

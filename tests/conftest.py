@@ -21,3 +21,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def scratch_root(tmp_path, monkeypatch):
+    """A fresh scratch root for this test: source_cache artifacts built
+    here land under tmp_path, not in the shared root."""
+    from airflow_jira_etl_spark import scratch
+
+    root = tmp_path / "scratch"
+    monkeypatch.setattr(scratch, "SCRATCH", str(root))
+    return root

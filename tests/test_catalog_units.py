@@ -1,8 +1,8 @@
 """Fixture-layout robustness: the events table's ``ts`` physical unit
 has changed across driver fixture generations (TIMESTAMP(NANOS) in some,
 TIMESTAMP(MICROS) in others). The engine sniffs the footer per file
-instead of assuming a unit; these tests pin that behavior and the page
-cache's content-keyed invalidation."""
+instead of assuming a unit; these tests pin that behavior and the
+event pages' layout."""
 
 from __future__ import annotations
 
@@ -35,107 +35,11 @@ def test_events_ts_matches_arrow_read(spark, sf_dir):
     assert got == want
 
 
-def _write_events_fixture(dir_path: str, values: list[float]) -> None:
-    n = len(values)
-    table = pa.table(
-        {
-            "event_id": pa.array(range(n), pa.int64()),
-            "ts": pa.array(
-                [1_704_067_200_000_000 + i for i in range(n)],
-                pa.timestamp("us"),
-            ),
-            "user_id": pa.array([i % 3 for i in range(n)], pa.int64()),
-            "event_type": pa.array(["click"] * n),
-            "value": pa.array(values, pa.float64()),
-            "props": pa.array(["{}"] * n),
-        }
-    )
-    pq.write_table(table, os.path.join(dir_path, "events.parquet"))
-
-
-def test_event_pages_invalidate_on_regenerated_fixture(spark, tmp_path):
-    """A regenerated events fixture with the SAME max event_id (so the
-    same page count/size) must invalidate the cached pages — the meta is
-    keyed on source mtime+size, not just row count."""
-    src_dir = tmp_path / "sf"
-    src_dir.mkdir()
-    pages_dir = str(tmp_path / "pages")
-
-    _write_events_fixture(str(src_dir), [1.0] * 8)
-    write_event_pages(spark, str(src_dir), pages_dir, n_pages=2)
-    first = spark.read.parquet(os.path.join(pages_dir, "page_*")).collect()
-    assert {r.value for r in first} == {1.0}
-
-    # regenerate: same ids (same total), different content, bump mtime
-    _write_events_fixture(str(src_dir), [2.0] * 8)
-    os.utime(
-        os.path.join(str(src_dir), "events.parquet"),
-        ns=(1, 1),
-    )
-    write_event_pages(spark, str(src_dir), pages_dir, n_pages=2)
-    second = spark.read.parquet(os.path.join(pages_dir, "page_*")).collect()
-    assert {r.value for r in second} == {2.0}
-
-
-def test_event_pages_reuse_when_unchanged(spark, tmp_path):
-    """Unchanged source + params -> the pages directory is reused
-    byte-for-byte (no rewrite job)."""
-    src_dir = tmp_path / "sf"
-    src_dir.mkdir()
-    pages_dir = str(tmp_path / "pages")
-    _write_events_fixture(str(src_dir), [3.0] * 8)
-
-    write_event_pages(spark, str(src_dir), pages_dir, n_pages=2)
-
-    def tree_state(d):
-        out = {}
-        for root, _, files in os.walk(d):
-            for f in files:
-                p = os.path.join(root, f)
-                out[p] = os.stat(p).st_mtime_ns
-        return out
-
-    before = tree_state(pages_dir)
-    write_event_pages(spark, str(src_dir), pages_dir, n_pages=2)
-    assert tree_state(pages_dir) == before
-
-
-def test_event_pages_concurrent_builders_serialize(spark, tmp_path):
-    """Two builders racing a cold cache (the test-run-alongside-bench
-    scenario) must serialize on the build lock: both return, the pages
-    are intact, and exactly one build happened (the loser sees the
-    winner's meta and skips its own rmtree+rewrite)."""
-    import threading
-
-    src_dir = tmp_path / "sf"
-    src_dir.mkdir()
-    _write_events_fixture(str(src_dir), [7.0] * 8)
-    pages_dir = str(tmp_path / "pages")
-
-    errors = []
-
-    def build():
-        try:
-            write_event_pages(spark, str(src_dir), pages_dir, n_pages=2)
-        except Exception as exc:  # noqa: BLE001 — surface below
-            errors.append(exc)
-
-    threads = [threading.Thread(target=build) for _ in range(4)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors, errors
-    rows = spark.read.parquet(os.path.join(pages_dir, "page_*")).collect()
-    assert len(rows) == 8 and {r.value for r in rows} == {7.0}
-
-
-def test_pages_store_real_timestamps(spark, sf_dir, tmp_path):
+def test_pages_store_real_timestamps(spark, sf_dir, scratch_root):
     """Layout v2: page files persist ts as a real timestamp column (no
     raw-long plumbing), so page readers use the declared events schema
     directly and values survive the round trip."""
-    pages_dir = str(tmp_path / "pages")
-    write_event_pages(spark, sf_dir, pages_dir, n_pages=2)
+    pages_dir, _ = write_event_pages(spark, sf_dir, n_pages=2)
     paged = (
         spark.read.schema(catalog.SCHEMAS["events"])
         .parquet(os.path.join(pages_dir, "page_*"))

@@ -596,33 +596,6 @@ def test_pct_bucket_overflow_proof_for_any_int64_key(spark):
             assert b == (k * _HASH_A) % 100
 
 
-def test_ivf_rebuild_spares_previous_version_dir(spark, sf_dir, tmp_path):
-    """A rebuild under a NEW key (a changed tag — the regenerated-
-    fixture path) must leave the previous version's data dirs intact
-    for in-flight readers, and a third rebuild GCs the oldest."""
-    import os
-
-    from airflow_jira_etl_spark.operators.ivf import build_index, read_meta
-
-    emb = catalog.load(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf")
-    indexed_v1, _ = build_index(spark, emb, 8, path, tag="gen1")
-    v1 = read_meta(path)["version_dir"]
-    n_v1 = indexed_v1.count()
-
-    build_index(spark, emb, 8, path, tag="gen2")
-    v2 = read_meta(path)["version_dir"]
-    assert v2 != v1
-    assert os.path.isdir(os.path.join(path, v1))  # one generation of grace
-    # the pre-rebuild reader's frame still scans valid files
-    assert indexed_v1.count() == n_v1
-
-    build_index(spark, emb, 8, path, tag="gen3")
-    dirs = {d for d in os.listdir(path) if d.startswith("v_")}
-    assert v1 not in dirs  # oldest GC'd
-    assert read_meta(path)["version_dir"] in dirs and v2 in dirs
-
-
 def test_cosine_null_embedding_stays_null(spark):
     """A NULL input array must yield NULL (sorted last by DESC
     rankings, like the SQL side), not 0.0 — which would rank an absent

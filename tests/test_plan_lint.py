@@ -292,3 +292,26 @@ def test_package_env_reads_are_deployment_settings():
                 if key != "token_env" and key not in ok:
                     bad.append(f"{rel}:{node.lineno}: {key or 'unrecognised read'}")
     assert not bad, f"environment reads that are not deployment settings: {bad}"
+
+
+def test_flock_only_in_the_cache_and_the_commit_lock():
+    """Source lint: cross-process locking lives in two places —
+    scratch.source_cache (every fixture-derived artifact) and the
+    upsert sink's commit lock. A third ``fcntl.flock`` means a
+    build/lock/rebuild protocol was copied instead of calling
+    source_cache."""
+    import os
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "airflow_jira_etl_spark",
+    )
+    users = set()
+    for dirpath, _, files in os.walk(root):
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                with open(path, encoding="utf-8") as f:
+                    if "fcntl.flock" in f.read():
+                        users.add(os.path.relpath(path, root))
+    assert users == {"scratch.py", os.path.join("sinks", "parquet_upsert.py")}, users

@@ -121,7 +121,7 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir):
     assert "PartitionFilters: [" in plan
     assert "event_type" in plan.split("PartitionFilters:")[1][:200]
 
-def test_ivf_materialized_index_prunes_cluster_dirs(spark, sf_dir, tmp_path):
+def test_ivf_materialized_index_prunes_cluster_dirs(spark, sf_dir, scratch_root):
     """The materialized IVF index must (a) answer identically to the
     inline path and (b) serve searches via PartitionFilters on
     cluster_id — a directory-pruned scan, not a full scan + filter."""
@@ -129,52 +129,40 @@ def test_ivf_materialized_index_prunes_cluster_dirs(spark, sf_dir, tmp_path):
 
     emb = catalog.load(spark, sf_dir, "embeddings")
     inline = [(r.vec_id, r.cos_sim) for r in ivf_topk(spark, emb, 0, 8).collect()]
-    path = str(tmp_path / "ivf")
-    materialized_df = ivf_topk(spark, emb, 0, 8, index_path=path)
-    materialized = [(r.vec_id, r.cos_sim) for r in materialized_df.collect()]
-    assert materialized == inline
-
-    indexed, centroids = build_index(spark, emb, 8, path)  # meta hit: reuse
+    indexed, centroids, _ = build_index(spark, emb, 8, sf_dir, "t")
     probe = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("p"))
-    plan = (
-        search_index(indexed, centroids, probe, 0)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    hits = search_index(indexed, centroids, probe, 0)
+    assert [(r.vec_id, r.cos_sim) for r in hits.collect()] == inline
+
+    plan = hits._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
     seg = plan.split("PartitionFilters:")[1][:200]
     assert "cluster_id" in seg and " IN " in seg
 
 
-def test_ivf_meta_carries_quantizer_and_anchor(spark, sf_dir, tmp_path):
-    """The index meta must hold driver-resident copies of the quantizer
+def test_ivf_meta_carries_quantizer_and_anchor(spark, sf_dir, scratch_root):
+    """The index info must hold driver-resident copies of the quantizer
     (centroid vectors) and the min-vec_id anchor row, BIT-EXACT with the
-    read-back parquet — the warm search path trusts the meta instead of
-    launching collect()/head() jobs, so any build/meta divergence would
+    read-back parquet — the warm search path trusts the info instead of
+    launching collect()/head() jobs, so any build/info divergence would
     silently corrupt the self-verification contract."""
-    import json
-
-    from airflow_jira_etl_spark.operators.ivf import build_index, read_meta
+    from airflow_jira_etl_spark.operators.ivf import build_index
 
     emb = catalog.load(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf")
-    indexed, centroids = build_index(spark, emb, 8, path, tag="t")
-    meta = read_meta(path)
+    indexed, centroids, info = build_index(spark, emb, 8, sf_dir, "t")
     disk_cent = sorted(
         (int(r["cluster_id"]), [float(x) for x in r["centroid"]])
         for r in centroids.collect()
     )
-    assert [(int(c), [float(x) for x in v]) for c, v in meta["centroids"]] == disk_cent
+    assert [(int(c), [float(x) for x in v]) for c, v in info["centroids"]] == disk_cent
     arow = indexed.orderBy("vec_id").select("vec_id", "embedding").head()
-    assert int(meta["anchor"]["vec_id"]) == int(arow["vec_id"])
-    assert [float(x) for x in meta["anchor"]["embedding"]] == [
+    assert int(info["anchor"]["vec_id"]) == int(arow["vec_id"])
+    assert [float(x) for x in info["anchor"]["embedding"]] == [
         float(x) for x in arow["embedding"]
     ]
-    # and the JSON on disk round-trips those doubles exactly
-    with open(tmp_path / "ivf" / "_IVF_META.json") as f:
-        again = json.load(f)
-    assert again["centroids"] == meta["centroids"]
+    # and a warm open (info read back from the JSON on disk) round-trips
+    # those doubles exactly
+    assert build_index(spark, emb, 8, sf_dir, "t")[2] == info
 
 
 def test_ivf_warm_search_runs_no_bookkeeping_jobs(spark, sf_dir):
@@ -199,6 +187,29 @@ def test_ivf_warm_search_runs_no_bookkeeping_jobs(spark, sf_dir):
         "ivf-warm-probe"
     )
     assert len(jobs) <= 5, f"warm IVF search ran {len(jobs)} jobs: {jobs}"
+
+
+def test_warm_artifact_hits_run_no_jobs(spark, sf_dir):
+    """Once built, the event pages, the bucketed-join tables and the DPP
+    table are served from scratch.source_cache without a Spark job: the
+    page call and both queries' construction run none."""
+    from airflow_jira_etl_spark import registry
+    from airflow_jira_etl_spark.streaming.source import write_event_pages
+
+    registry.load_all_queries()
+    names = ("join_bucketed_colocated", "join_dpp_partitioned")
+    write_event_pages(spark, sf_dir, n_pages=4)
+    for name in names:
+        registry.QUERIES[name](spark, sf_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("warm-artifacts", "warm source_cache hits")
+    try:
+        write_event_pages(spark, sf_dir, n_pages=4)
+        for name in names:
+            registry.QUERIES[name](spark, sf_dir)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("warm-artifacts")) == []
 
 
 def test_decontaminate_broadcasts_eval_grams(spark, sf_dir):

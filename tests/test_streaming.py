@@ -213,7 +213,7 @@ def test_stateful_profile_all_null_values_emit_sql_null(spark):
     assert math.isnan(r["peak_value"]) and math.isnan(r["total_value"])
 
 
-def test_write_event_pages_drops_null_ids_rejects_negative(spark, tmp_path):
+def test_write_event_pages_drops_null_ids_rejects_negative(spark, tmp_path, scratch_root):
     """Page ids derive from event_id. The NULL entity-key
     convention: a NULL-id row has no position in the id-derived layout
     (the reference's unique-key contract — db_ops.py:29-43 — makes it
@@ -245,8 +245,7 @@ def test_write_event_pages_drops_null_ids_rejects_negative(spark, tmp_path):
         ],
         schema,
     ).write.mode("overwrite").parquet(os.path.join(fix, "events.parquet"))
-    pages = str(tmp_path / "pages_null")
-    write_event_pages(spark, fix, pages, n_pages=2)
+    pages, _ = write_event_pages(spark, fix, n_pages=2)
     paged = spark.read.parquet(os.path.join(pages, "page_*"))
     got = sorted(r.event_id for r in paged.select("event_id").collect())
     assert got == [0, 1, 2]  # the NULL-id row is gone, nothing else
@@ -258,37 +257,52 @@ def test_write_event_pages_drops_null_ids_rejects_negative(spark, tmp_path):
         [(-1, None, 1, "view", 1.0, "{}")], schema
     ).write.mode("overwrite").parquet(os.path.join(fix, "events.parquet"))
     with pytest.raises(ValueError, match="non-negative"):
-        write_event_pages(spark, fix, str(tmp_path / "pages"), n_pages=2)
+        write_event_pages(spark, fix, n_pages=2)
 
 
-def test_staged_stream_dir_is_identity_and_cwd_proof(tmp_path):
-    """Two fixtures sharing a BASENAME must stage to distinct dirs
-    (basename alone would let two sessions rebuild one shared dir
-    under each other's running streams), and a RELATIVE sf_dir must
-    produce absolute symlink targets (a relative target resolves
-    against the link's own directory — a dangling link the staleness
-    check would consider correctly staged forever)."""
+def test_events_stream_reads_the_fixture_through_a_glob(spark, tmp_path):
+    """The events stream reads the fixture itself through a glob: a
+    file-shaped and a directory-shaped fixture both stream every row,
+    and glob metacharacters in the fixture's path match literally."""
     import os
 
+    from airflow_jira_etl_spark.scratch import session_scratch
     from airflow_jira_etl_spark.streaming.source import (
-        _sf_tag,
-        _staged_events_dir,
+        _events_glob,
+        read_events_stream,
+        run_available_now,
     )
 
-    a = tmp_path / "a" / "sfX"
-    b = tmp_path / "b" / "sfX"
-    for d in (a, b):
-        os.makedirs(d)
-        with open(d / "events.parquet", "wb") as f:
-            f.write(b"stub")
-    assert _sf_tag(str(a)) != _sf_tag(str(b))
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string"
+    )
+    src = spark.createDataFrame(
+        [(i, None, i % 3, "view", float(i), "{}") for i in range(5)], schema
+    )
+    file_fix = tmp_path / "file"
+    src.coalesce(1).write.parquet(str(tmp_path / "one"))
+    file_fix.mkdir()
+    (part,) = (tmp_path / "one").glob("part-*.parquet")
+    os.rename(part, file_fix / "events.parquet")
+    dir_fix = tmp_path / "dir"
+    src.repartition(2).write.parquet(str(dir_fix / "events.parquet"))
+    for i, fix in enumerate((file_fix, dir_fix)):
+        out = run_available_now(
+            read_events_stream(spark, str(fix)).groupBy().count(),
+            session_scratch("checkpoints", f"glob_{i}"),
+            f"events_glob_{i}",
+        )
+        assert out.collect()[0][0] == 5, fix
 
-    rel = os.path.relpath(a, os.getcwd())
-    staged = _staged_events_dir(rel)
-    links = [
-        os.readlink(os.path.join(staged, e))
-        for e in os.listdir(staged)
-        if os.path.islink(os.path.join(staged, e))
-    ]
-    assert links and all(os.path.isabs(t) for t in links)
-    assert all(os.path.exists(t) for t in links)
+    # Hadoop's glob, as the stream source runs it, matches a fixture
+    # under a path full of metacharacters literally
+    odd = tmp_path / "a[1]{x,y}*?"
+    odd.mkdir()
+    (odd / "events.parquet").write_bytes(b"")
+    (tmp_path / "a1x").mkdir()
+    (tmp_path / "a1x" / "events.parquet").write_bytes(b"")
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(_events_glob(str(odd)))
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    hits = [st.getPath().toUri().getPath() for st in fs.globStatus(pattern)]
+    assert hits == [str(odd / "events.parquet")]
