@@ -18,7 +18,4 @@ Everything is DataFrame/SQL-first so Catalyst + Tungsten own the
 physical plan; Python only appears in explicitly-marked UDF surfaces.
 """
 
-from airflow_jira_etl_spark.session import get_spark  # noqa: F401
-from airflow_jira_etl_spark.registry import QUERIES, ORACLES  # noqa: F401
-
 __version__ = "0.1.0"

@@ -11,6 +11,7 @@ both slow (footer sampling) and unsafe; explicit schemas are free.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -128,18 +129,32 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def glob_escape(path: str) -> str:
+    """``path`` with Hadoop glob metacharacters escaped, so it matches
+    itself literally where Spark globs it: stream sources and batch
+    ``read.parquet`` both do."""
+    return "".join("\\" + c if c in "\\*?[]{}" else c for c in path)
+
+
+def glob_free(name: str) -> str:
+    """``name`` with every character outside ``[A-Za-z0-9._-]`` mapped
+    to ``_``: a path segment derived from a fixture's name that later
+    reads can pass to Spark unescaped."""
+    return re.sub(r"[^A-Za-z0-9._-]", "_", name)
+
+
 def source_tag(sf_dir: str) -> str:
-    """Identity tag for per-source scratch/cache directories: readable
-    basename plus a short hash of the ABSOLUTE path. Basename alone is
-    not an identity — two fixtures at /a/sf0.01 and /b/sf0.01 would
-    share one cache dir and, their content stamps differing, rebuild
-    it back and forth under each other (cache thrash at best, a
+    """Identity tag for per-source scratch/cache directories: readable,
+    glob-free basename plus a short hash of the ABSOLUTE path. Basename
+    alone is not an identity — two fixtures at /a/sf0.01 and /b/sf0.01
+    would share one cache dir and, their content stamps differing,
+    rebuild it back and forth under each other (cache thrash at best, a
     running reader's files unlinked at worst)."""
     import hashlib
 
     ap = os.path.abspath(os.path.normpath(sf_dir))
     return (
-        f"{os.path.basename(ap)}_"
+        f"{glob_free(os.path.basename(ap))}_"
         f"{hashlib.sha256(ap.encode()).hexdigest()[:8]}"
     )
 
@@ -188,7 +203,7 @@ def file_schema(spark: SparkSession, path: str) -> T.StructType:
     # a fix to the rule must not have a second copy to miss.
     key = (os.path.realpath(path), source_stamp(path))
     if key not in _FILE_SCHEMA_CACHE:
-        _FILE_SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+        _FILE_SCHEMA_CACHE[key] = spark.read.parquet(glob_escape(path)).schema
     return _FILE_SCHEMA_CACHE[key]
 
 
@@ -212,6 +227,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = table_path(sf_dir, name)
     declared = SCHEMAS[name]
     actual = file_schema(spark, path)
+    pattern = glob_escape(path)
     actual_types = {f.name: f.dataType for f in actual.fields}
     missing = [f.name for f in declared.fields if f.name not in actual_types]
     if missing:  # a column we can't invent — fail loudly, not with NULLs
@@ -223,7 +239,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         actual_types[f.name] == f.dataType for f in declared.fields
     ) and len(actual.fields) == len(declared.fields):
         # fast path: physical layout matches the declared contract
-        return spark.read.schema(declared).parquet(path)
+        return spark.read.schema(declared).parquet(pattern)
     # PHYSICAL TYPE DRIFT (the r04 events-nanos incident, generalized):
     # the fixture generator may re-emit a column with a different but
     # value-compatible physical type (int32↔int64, float↔double, a new
@@ -231,7 +247,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # reader would error or NULL-fill; instead read the file under its
     # OWN schema and cast to the declared logical types — queries keep
     # seeing the contract, whatever layout the round shipped.
-    return conform(spark.read.schema(actual).parquet(path), declared)
+    return conform(spark.read.schema(actual).parquet(pattern), declared)
 
 
 def conform(raw: DataFrame, declared: T.StructType) -> DataFrame:

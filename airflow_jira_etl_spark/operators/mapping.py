@@ -42,15 +42,15 @@ def _leaf_name(parent: str, mapped: str) -> str:
 
 def compile_mapping(
     mapping: Mapping,
-    schema: T.StructType | None = None,
+    schema: T.StructType,
     path: str = "",
     parent: str = "",
 ) -> list[Column]:
     """Compile a declarative MAPPING dict into select expressions.
 
-    ``schema`` (when given) is the StructType of the input at the current
-    nesting level; it is used to (a) emit NULL for paths absent from the
-    data and (b) detect array leaves that need the ``'//'`` join.
+    ``schema`` is the StructType of the input at the current nesting
+    level; it is used to (a) emit NULL for paths absent from the data
+    and (b) detect array leaves that need the ``'//'`` join.
     """
     if not path and not parent:
         # top-level call: reject duplicate FLAT output names up front.
@@ -73,35 +73,33 @@ def compile_mapping(
                 f"(the reference would silently keep only the last)"
             )
     cols: list[Column] = []
-    fields = {f.name: f for f in schema.fields} if schema is not None else None
+    fields = {f.name: f for f in schema.fields}
     for key, mapped in mapping.items():
         # raw API keys are arbitrary strings: backtick-quote every path
         # segment so a key containing '.' (or '`') resolves as ONE field,
         # not as extra nesting
         child_path = f"{path}.{_quote(key)}" if path else _quote(key)
-        field = fields.get(key) if fields is not None else None
+        field = fields.get(key)
         if isinstance(mapped, dict):
-            if fields is not None and (
-                field is None or not isinstance(field.dataType, T.StructType)
-            ):
-                # branch missing from the data, OR present but not a
-                # struct (API shape drift): the reference requires
-                # isinstance(value, dict) and otherwise SKIPS the key
-                # (jira_base_processor.py:94-96) — which surfaces as SQL
-                # NULLs, never as a crash on `a.b` over a non-struct
-                cols.extend(
-                    _null_leaves(mapped, _chain(parent, key))
-                )
-                continue
-            child_schema = field.dataType if field is not None else None
+            # branch missing from the data, OR present but not a struct
+            # (API shape drift): the reference requires isinstance(value,
+            # dict) and otherwise SKIPS the key (jira_base_processor.py
+            # :94-96) — which surfaces as SQL NULLs, never as a crash on
+            # `a.b` over a non-struct. An empty schema makes every leaf
+            # below it a missing (NULL) one.
+            child_schema = (
+                field.dataType
+                if field is not None and isinstance(field.dataType, T.StructType)
+                else T.StructType([])
+            )
             cols.extend(
                 compile_mapping(mapped, child_schema, child_path, _chain(parent, key))
             )
         else:
             name = _leaf_name(parent, mapped)
-            if fields is not None and field is None:
+            if field is None:
                 cols.append(F.lit(None).cast("string").alias(name))
-            elif field is not None and isinstance(field.dataType, T.ArrayType):
+            elif isinstance(field.dataType, T.ArrayType):
                 # concat_ws maps a NULL array to '' — but a missing
                 # path must stay NULL (the reference emits no column,
                 # which surfaces as SQL NULL; SURVEY.md §2A note).
@@ -136,23 +134,13 @@ def _chain(parent: str, key: str) -> str:
 
 def _flat_names(mapping: Mapping, parent: str) -> list[str]:
     """Every flat output name a mapping resolves to, in declaration
-    order — the same naming walk as compile_mapping/_null_leaves."""
+    order — the same naming walk as compile_mapping."""
     out: list[str] = []
     for key, mapped in mapping.items():
         if isinstance(mapped, dict):
             out.extend(_flat_names(mapped, _chain(parent, key)))
         else:
             out.append(_leaf_name(parent, mapped))
-    return out
-
-
-def _null_leaves(mapping: Mapping, parent: str) -> list[Column]:
-    out: list[Column] = []
-    for key, mapped in mapping.items():
-        if isinstance(mapped, dict):
-            out.extend(_null_leaves(mapped, _chain(parent, key)))
-        else:
-            out.append(F.lit(None).cast("string").alias(_leaf_name(parent, mapped)))
     return out
 
 

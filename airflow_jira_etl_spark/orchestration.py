@@ -1,15 +1,21 @@
 """Airflow-facing orchestration (the production deployment shape).
 
-The reference runs its pipelines as Airflow DAGs with
-``create_table >> fetch`` dependencies, @daily schedule, catchup off,
-1 retry / 5 min (``/root/reference/dags/fetch_jira_tempo_worklogs.py:15-26,97-114``).
+The reference runs its pipelines as Airflow DAGs with @daily schedule,
+catchup off, 1 retry / 5 min
+(``/root/reference/dags/fetch_jira_tempo_worklogs.py:15-26,97-114``).
 The engine keeps that layer: Airflow schedules, the cluster computes —
-each DAG task becomes a ``spark-submit`` of an engine entry point
-(the BASELINE "Airflow orchestrates Spark jobs for ETL" approach).
+each DAG is ONE task, a ``spark-submit`` of ``pipeline.main`` for its
+entity (the BASELINE "Airflow orchestrates Spark jobs for ETL"
+approach). The reference's ``create_table >> fetch`` edge is gone: a
+SQL table must exist before its INSERTs, but the engine's sink creates
+its table at the first commit, and ``Pipeline.run`` opens, ingests and
+merges in one process — a separate create task would only start a
+second JVM to make a directory.
 
 Airflow is not installed in this environment, so the DAG definitions
-are DECLARATIVE SPECS (plain data, fully testable); ``build_airflow_dags``
-materializes real DAG objects only when airflow imports.
+are DECLARATIVE SPECS (plain data, fully testable; importing this
+module loads no Spark); ``build_airflow_dags`` materializes real DAG
+objects only when airflow imports.
 """
 
 from __future__ import annotations
@@ -22,7 +28,6 @@ class TaskSpec:
     task_id: str
     entry_point: str  # importable module whose FILE spark-submit runs
     args: tuple[str, ...] = ()
-    upstream: tuple[str, ...] = ()
 
 
 @dataclass(frozen=True)
@@ -39,9 +44,11 @@ class DagSpec:
     tasks: tuple[TaskSpec, ...] = field(default_factory=tuple)
 
 
-def _entity_dag(entity: str, unique_column: str) -> DagSpec:
+def _entity_dag(entity: str) -> DagSpec:
     """One DAG per entity, mirroring the reference's three DAG files
-    and their defaults (@daily, catchup=False, 1 retry / 5 min)."""
+    and their defaults (@daily, catchup=False, 1 retry / 5 min). Its
+    one task runs the whole pipeline; the upsert key is the entity
+    builder's default, so no copy of it lives here."""
     return DagSpec(
         dag_id=f"fetch_jira_{entity}",
         schedule="@daily",
@@ -50,29 +57,9 @@ def _entity_dag(entity: str, unique_column: str) -> DagSpec:
         retry_delay_minutes=5,
         tasks=(
             TaskSpec(
-                task_id="ensure_table",
-                entry_point="airflow_jira_etl_spark.pipeline",
-                # --unique-column on BOTH tasks: they are separate
-                # spark-submit jobs, and the table's key contract must
-                # not depend on which one ran
-                args=(
-                    f"--entity={entity}",
-                    "--task=ensure_table",
-                    f"--unique-column={unique_column}",
-                ),
-            ),
-            TaskSpec(
-                # merge_upsert is each pipeline's terminal task; --task
-                # runs the chain up to it (ingest, then merge), mirroring
-                # the reference's create_table >> fetch_and_save split
                 task_id="ingest_and_merge",
                 entry_point="airflow_jira_etl_spark.pipeline",
-                args=(
-                    f"--entity={entity}",
-                    "--task=merge_upsert",
-                    f"--unique-column={unique_column}",
-                ),
-                upstream=("ensure_table",),
+                args=(f"--entity={entity}",),
             ),
         ),
     )
@@ -91,15 +78,16 @@ def entry_point_file(entry_point: str) -> str:
 
 def build_dag_specs() -> list[DagSpec]:
     return [
-        _entity_dag("tempo_worklogs", "tempo_worklog_id"),
-        _entity_dag("issues", "issue_id"),
-        _entity_dag("users", "account_id"),
+        _entity_dag("tempo_worklogs"),
+        _entity_dag("issues"),
+        _entity_dag("users"),
     ]
 
 
 def build_airflow_dags():  # pragma: no cover - needs airflow installed
-    """Materialize the specs as real Airflow DAGs (SparkSubmitOperator
-    per task). Import-gated: returns [] when airflow is absent."""
+    """Materialize the specs as real Airflow DAGs (one
+    SparkSubmitOperator per task). Import-gated: returns [] when
+    airflow is absent."""
     try:
         from datetime import datetime, timedelta
 
@@ -122,9 +110,8 @@ def build_airflow_dags():  # pragma: no cover - needs airflow installed
                 "start_date": datetime.fromisoformat(spec.start_date_iso),
             },
         )
-        ops = {}
         for t in spec.tasks:
-            ops[t.task_id] = SparkSubmitOperator(
+            SparkSubmitOperator(
                 task_id=t.task_id,
                 # spark-submit takes a FILE; resolve the module to its
                 # source path (the package ships with the job)
@@ -132,8 +119,5 @@ def build_airflow_dags():  # pragma: no cover - needs airflow installed
                 application_args=list(t.args),
                 dag=dag,
             )
-        for t in spec.tasks:
-            for up in t.upstream:
-                ops[up] >> ops[t.task_id]
         dags.append(dag)
     return dags

@@ -2,15 +2,17 @@
 
 The reference wires ``create_table >> fetch`` per entity in Airflow
 (``/root/reference/dags/fetch_jira_tempo_worklogs.py:97-114``; defaults
-:15-26). Production deployments keep Airflow and submit these as Spark
-jobs (one ``SparkSubmitOperator`` per pipeline — the BASELINE.json
-"spark_approach"); the engine itself only runs each pipeline's fixed
-task chain, so pipelines are testable without a scheduler.
+:15-26). Production deployments keep Airflow and submit each pipeline
+as ONE Spark job (one ``SparkSubmitOperator`` per pipeline — the
+BASELINE.json "spark_approach"; see ``orchestration``); the engine
+itself only runs the pipeline, so pipelines are testable without a
+scheduler.
 
-Every pipeline is the same chain over a shared context:
-  ensure_table >> ingest (paginated scan → flatten) >> merge_upsert
-which is exactly the reference's task graph, with the fetch/persist
-loop replaced by the engine's distributed operators.
+Every pipeline is the same run in one process:
+  open table >> ingest (paginated scan → flatten) >> merge >> vacuum
+The reference's separate create-table task has no counterpart: its SQL
+table had to exist before the INSERTs, while the sink here creates the
+table at its first commit.
 """
 
 from __future__ import annotations
@@ -73,54 +75,37 @@ ENTITY_N_BUCKETS = 1
 
 
 class Pipeline:
-    """One entity pipeline: the fixed chain ``ensure_table >> ingest >>
-    merge_upsert`` over a shared context. Airflow's retry/schedule layer
-    sits above this in production; correctness does not depend on it
-    (idempotent tasks).
-
-    ``ingest`` returns an iterable of flat batches; ``merge_upsert``
-    applies them in order to the keyed table ``ensure_table`` opened
-    (``context["table"]``)."""
-
-    tasks = ("ensure_table", "ingest", "merge_upsert")
+    """One entity pipeline: open the keyed table, merge every batch of
+    ``ingest()`` into it in order, then reclaim old generations.
+    Airflow's retry/schedule layer sits above this in production;
+    correctness does not depend on it (a re-run is an idempotent
+    replay)."""
 
     def __init__(
         self,
-        name: str,
         spark: SparkSession,
         table_path: str,
         key: str,
         ingest: Callable[[], Iterable[DataFrame]],
     ):
-        self.name = name
         self._spark = spark
         self._table_path = table_path
         self._key = key
-        self._ingest = ingest
+        # the flat batches to merge, in order; lazy where the scan is
+        self.ingest = ingest
 
-    def ensure_table(self, ctx: dict) -> None:
-        ctx["table"] = ParquetUpsertTable(
+    def run(self, context: dict) -> None:
+        """Open the table (``context["table"]``), merge every batch and
+        vacuum. Each apply into a one-bucket table writes a full copy as
+        a new generation, so without the vacuum storage grows by one
+        table copy per page, run over run; two generations keep the
+        previous state readable through the last commit."""
+        table = context["table"] = ParquetUpsertTable(
             self._spark, self._table_path, key=self._key, n_buckets=ENTITY_N_BUCKETS
         )
-
-    def ingest(self, ctx: dict) -> None:
-        ctx["batches"] = self._ingest()
-
-    def merge_upsert(self, ctx: dict) -> None:
-        for batch in ctx["batches"]:
-            ctx["table"].apply(batch)
-
-    def run(self, context: dict, only: str | None = None) -> list[str]:
-        """Run the chain, fail-fast. With ``only``, stop after that task
-        — the scheduler-facing ``--task`` contract."""
-        if only is not None and only not in self.tasks:
-            raise KeyError(
-                f"unknown task {only!r} in {self.name}; have {list(self.tasks)}"
-            )
-        chain = self.tasks[: self.tasks.index(only or self.tasks[-1]) + 1]
-        for name in chain:
-            getattr(self, name)(context)
-        return list(chain)
+        for batch in self.ingest():
+            table.apply(batch)
+        table.vacuum(retain_last=2)
 
 
 # The builders below call the scan and flatten functions through this
@@ -135,13 +120,13 @@ def worklog_pipeline(
     table_root: str,
     unique_column: str = "tempo_worklog_id",
 ) -> Pipeline:
-    """The worklogs DAG re-expressed: ensure table >> paginated ingest
-    >> keyed merge (unique key ``tempo_worklog_id``, mirroring the DDL's
+    """The worklogs DAG re-expressed: paginated ingest >> keyed merge
+    (unique key ``tempo_worklog_id``, mirroring the DDL's
     UNIQUE column at ``fetch_jira_tempo_worklogs.py:81``)."""
 
     def ingest():
         # LAZY: each cursor page becomes an (Arrow LocalRelation)
-        # DataFrame only when merge_upsert reaches it, so peak driver
+        # DataFrame only when the merge reaches it, so peak driver
         # memory stays O(page), matching the reference's
         # fetch-then-persist loop (worklog_processor.py:80-106)
         return (
@@ -150,13 +135,7 @@ def worklog_pipeline(
             if page
         )
 
-    return Pipeline(
-        "fetch_jira_tempo_worklogs",
-        spark,
-        os.path.join(table_root, "worklogs"),
-        unique_column,
-        ingest,
-    )
+    return Pipeline(spark, os.path.join(table_root, "worklogs"), unique_column, ingest)
 
 
 def issues_pipeline(
@@ -174,9 +153,7 @@ def issues_pipeline(
         raw = offset_scan_parallel(spark, fetcher, url, records_key="issues")
         return [raw_json_to_flat(raw, ISSUE_MAPPING, ISSUE_LEAF_TYPES)]
 
-    return Pipeline(
-        "fetch_jira_issues", spark, os.path.join(table_root, "issues"), unique_column, ingest
-    )
+    return Pipeline(spark, os.path.join(table_root, "issues"), unique_column, ingest)
 
 
 def users_pipeline(
@@ -191,9 +168,7 @@ def users_pipeline(
     def ingest():
         return [records_to_flat_df(spark, single_page_scan(fetcher, url), USER_MAPPING)]
 
-    return Pipeline(
-        "fetch_jira_users", spark, os.path.join(table_root, "users"), unique_column, ingest
-    )
+    return Pipeline(spark, os.path.join(table_root, "users"), unique_column, ingest)
 
 
 def parse_args(argv: list[str] | None = None):
@@ -205,11 +180,6 @@ def parse_args(argv: list[str] | None = None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--entity", required=True,
                     choices=["tempo_worklogs", "issues", "users"])
-    ap.add_argument(
-        "--task",
-        default="all",
-        help="run the chain up to and including this task ('all' = whole chain)",
-    )
     ap.add_argument("--url", default="https://api/search")
     ap.add_argument(
         "--fetcher",
@@ -218,9 +188,9 @@ def parse_args(argv: list[str] | None = None):
         "entity's SHAPE-matched in-repo emulator (production passes "
         "sources/paged_rest:http_fetcher_factory)",
     )
-    # absolute default: the DAG specs submit each task as its own
-    # spark-submit whose working directory is scheduler-dependent — a
-    # relative root would fragment one table across worker cwds
+    # absolute default: each DAG run is its own spark-submit whose
+    # working directory is scheduler-dependent — a relative root would
+    # fragment one table across worker cwds
     ap.add_argument(
         "--table-root",
         default=os.path.join(_SCRATCH_DEFAULT, "pipeline_tables"),
@@ -256,7 +226,7 @@ def main(argv: list[str] | None = None) -> None:
     }
     kwargs = {"unique_column": ns.unique_column} if ns.unique_column else {}
     pipeline = builders[ns.entity](spark, fetcher, ns.url, ns.table_root, **kwargs)
-    pipeline.run({}, only=None if ns.task == "all" else ns.task)
+    pipeline.run({})
 
 
 if __name__ == "__main__":

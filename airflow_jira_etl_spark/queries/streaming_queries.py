@@ -235,8 +235,8 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_stateful_profile",
-    # the NaN wraps pin the PANDAS-BRIDGE convention (round 12,
-    # measured; same contract as udaf_grouped_agg's oracle): the
+    # the NaN wraps pin the PANDAS-BRIDGE convention (measured; same
+    # contract as udaf_grouped_agg's oracle): the
     # stateful operator's per-user sums/maxes run in pandas, and a NaN
     # reaching the Arrow transfer back to Spark arrives as NULL, while
     # the SQL mirror keeps NaN — a drifted fixture with one NaN value
@@ -293,8 +293,8 @@ def stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_stateful_out",
         output_mode="update",
         # Python-compute-bound stateful stage: shards scale with cores
-        # (r15; see py_stateful_state_partitions — the JVM stateful
-        # queries keep the small state default)
+        # (see py_stateful_state_partitions — the JVM stateful queries
+        # keep the small state default)
         state_partitions=py_stateful_state_partitions(spark),
     )
     return out.groupBy("user_id").agg(

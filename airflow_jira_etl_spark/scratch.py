@@ -139,11 +139,17 @@ def session_scratch(kind: str, tag: str = "") -> str:
     on every caller destroying/overwriting first. (A dead dir whose
     pid was recycled to some OTHER live process survives reaping until
     that pid dies — bounded-growth erosion, not a correctness hazard,
-    since no live session ever reads it.)"""
+    since no live session ever reads it.)
+
+    ``tag`` is made glob-free (``catalog.glob_free``): callers pass a
+    fixture's basename, and the path is later handed to Spark, which
+    globs it."""
+    from airflow_jira_etl_spark.catalog import glob_free
+
     parent = os.path.join(SCRATCH, kind)
     os.makedirs(parent, exist_ok=True)
     reap_dead_session_dirs(parent)
-    name = f"{tag}_{os.getpid()}" if tag else str(os.getpid())
+    name = f"{glob_free(tag)}_{os.getpid()}" if tag else str(os.getpid())
     path = os.path.join(parent, name)
     if path not in _CLAIMED:
         shutil.rmtree(path, ignore_errors=True)
@@ -170,34 +176,66 @@ def source_cache(
     with ``os.replace`` and deletes every version except the new one
     and the one the previous meta named. Readers never lock, so a
     reader that resolved the previous version keeps reading valid files
-    through one rebuild."""
+    through one rebuild. The meta also records the fixture's absolute
+    path, so a later miss under the same ``kind`` can drop the slots of
+    fixtures that are gone (``_reap_orphan_slots``)."""
     from airflow_jira_etl_spark.catalog import source_tag
 
-    root = os.path.join(SCRATCH, kind, source_tag(sf_dir))
+    parent = os.path.join(SCRATCH, kind)
+    root = os.path.join(parent, source_tag(sf_dir))
     key = json.loads(json.dumps(ident))  # as the meta reads back
-    meta_path = os.path.join(root, _CACHE_META)
-
-    def _meta() -> dict | None:
-        try:
-            with open(meta_path) as f:
-                return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None
-
-    meta = _meta()
+    meta = _read_meta(root)
     if meta is None or meta["ident"] != key:
         import fcntl
 
         os.makedirs(root, exist_ok=True)
         with open(root + ".lock", "w") as lk:
             fcntl.flock(lk, fcntl.LOCK_EX)
-            meta = _meta()
+            meta = _read_meta(root)
             if meta is None or meta["ident"] != key:
-                meta = _build_version(root, meta, key, build)
+                fixture = os.path.abspath(os.path.normpath(sf_dir))
+                meta = _build_version(root, meta, key, build, fixture)
+        _reap_orphan_slots(parent)
     return os.path.join(root, meta["version"]), meta["info"]
 
 
-def _build_version(root: str, prev: dict | None, key, build) -> dict:
+def _read_meta(slot: str) -> dict | None:
+    try:
+        with open(os.path.join(slot, _CACHE_META)) as f:
+            return json.load(f)
+    except (FileNotFoundError, json.JSONDecodeError):
+        return None
+
+
+def _orphaned(slot: str) -> bool:
+    """True when ``slot``'s meta records a fixture that no longer
+    exists; a meta without the field never is."""
+    meta = _read_meta(slot) if os.path.isdir(slot) else None
+    return bool(meta) and "fixture" in meta and not os.path.exists(meta["fixture"])
+
+
+def _reap_orphan_slots(parent: str) -> None:
+    """Remove the slots under ``parent`` whose recorded fixture is gone: every temporary fixture (a test's tmp
+    dir) leaves one. A slot whose lock is held (a build is running in
+    it) is skipped. Its lock file goes with it: only a caller of that
+    vanished fixture could wait on it, and its build cannot succeed."""
+    import fcntl
+
+    for name in os.listdir(parent):
+        slot = os.path.join(parent, name)
+        if not _orphaned(slot):
+            continue
+        with open(slot + ".lock", "w") as lk:
+            try:
+                fcntl.flock(lk, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                continue
+            if _orphaned(slot):  # re-checked under the lock
+                shutil.rmtree(slot, ignore_errors=True)
+                os.remove(slot + ".lock")
+
+
+def _build_version(root: str, prev: dict | None, key, build, fixture: str) -> dict:
     """The miss path of source_cache; the caller holds the flock."""
     version = "v_" + hashlib.sha256(
         json.dumps(key, sort_keys=True).encode()
@@ -210,7 +248,9 @@ def _build_version(root: str, prev: dict | None, key, build) -> dict:
     except BaseException:
         shutil.rmtree(out, ignore_errors=True)
         raise
-    text = json.dumps({"ident": key, "version": version, "info": info})
+    text = json.dumps(
+        {"ident": key, "version": version, "info": info, "fixture": fixture}
+    )
     meta_path = os.path.join(root, _CACHE_META)
     with open(meta_path + ".tmp", "w") as f:
         f.write(text)

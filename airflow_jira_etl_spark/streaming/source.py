@@ -25,17 +25,12 @@ from airflow_jira_etl_spark.catalog import (
     SCHEMAS,
     conform,
     file_schema,
+    glob_escape,
     source_stamp,
     table_path,
 )
 from airflow_jira_etl_spark.scratch import source_cache
 from airflow_jira_etl_spark.session import scoped_conf
-
-
-def _glob_escape(path: str) -> str:
-    """``path`` with Hadoop glob metacharacters escaped, so it matches
-    itself literally inside a glob pattern."""
-    return "".join("\\" + c if c in "\\*?[]{}" else c for c in path)
 
 
 def _events_glob(sf_dir: str) -> str:
@@ -46,9 +41,9 @@ def _events_glob(sf_dir: str) -> str:
     (Spark part-file output) as ``<dir>/*.parquet``."""
     src = os.path.abspath(table_path(sf_dir, "events"))
     if os.path.isdir(src):
-        return os.path.join(_glob_escape(src), "*.parquet")
+        return os.path.join(glob_escape(src), "*.parquet")
     head, name = os.path.split(src)
-    return os.path.join(_glob_escape(head), "{" + name + "}")
+    return os.path.join(glob_escape(head), "{" + name + "}")
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -44,10 +44,10 @@ def _update_profile(
     # order-dependent under NaN) keep both aggregates SQL-faithful.
     # n_vals counts non-null values seen so far so "any value yet?"
     # survives checkpoint recovery; n counts ROWS (count(*) semantics).
-    # r15 optimization-round note: this body runs once per (key, batch)
-    # — ~6 000 invocations per bench run — so its per-call constant IS
-    # the operator's measured increment (PLANS.md streaming cost
-    # decomposition). The pandas-idiomatic form (Series boolean mask,
+    # This body runs once per (key, batch) — ~6 000 invocations per
+    # bench run — so its per-call constant IS the operator's measured
+    # increment (PLANS.md streaming cost decomposition). The
+    # pandas-idiomatic form (Series boolean mask,
     # DataFrame-from-dict-of-lists output) cost ~390 µs/call; the
     # numpy form below with ndarray-backed output columns costs
     # ~148 µs/call for identical results (guide §4.2: vectorized

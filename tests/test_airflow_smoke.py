@@ -1,12 +1,12 @@
 """Executes tools/airflow_smoke.py's validator under an Airflow-shaped
-stub (task_dict / downstream_task_ids / default_args — the attribute
-surface the real Airflow 2.x DAG and BaseOperator expose), so the CI
+stub (task_dict / default_args — the attribute surface the real
+Airflow 2.x DAG and BaseOperator expose), so the CI
 smoke script the VERDICT asked for has in-sandbox line coverage even
 though Airflow itself cannot be installed here.
 
-Reference behavior being smoked: the DAG wiring at
-/root/reference/dags/fetch_jira_tempo_worklogs.py:97-114
-(create_table >> fetch, @daily, catchup off, 1 retry / 5 min).
+Reference behavior being smoked: the DAG defaults at
+/root/reference/dags/fetch_jira_tempo_worklogs.py:15-26
+(@daily, catchup off, 1 retry / 5 min), one spark-submit task per DAG.
 """
 
 from __future__ import annotations
@@ -41,12 +41,7 @@ class FakeOp:
         self.application = application
         self.application_args = application_args
         self.dag = dag
-        self.downstream_task_ids = set()
         dag.task_dict[task_id] = self
-
-    def __rshift__(self, other):
-        self.downstream_task_ids.add(other.task_id)
-        return other
 
 
 @pytest.fixture()
@@ -106,7 +101,7 @@ def test_validator_catches_each_defect_class(stubbed_airflow):
     assert len(fails) == 1 and "dag_ids" in fails[0]
 
     # per-dag defects: schedule, catchup, retries, retry_delay,
-    # start_date, missing edge, wrong args, missing application file
+    # start_date, wrong args, missing application file
     dags = _materialize()
     dags[0].schedule_interval = "@hourly"
     dags[0].catchup = True
@@ -116,7 +111,6 @@ def test_validator_catches_each_defect_class(stubbed_airflow):
         "start_date": datetime(1999, 1, 1),
     }
     ops = dags[2].task_dict
-    ops["ensure_table"].downstream_task_ids = set()
     ops["ingest_and_merge"].application_args = ["--bogus"]
     ops["ingest_and_merge"].application = "/nonexistent/file.py"
     msgs = "\n".join(validate_materialized_dags(dags))
@@ -126,7 +120,6 @@ def test_validator_catches_each_defect_class(stubbed_airflow):
         "retries 9",
         "retry_delay",
         "start_date",
-        "downstream",
         "args",
         "not a file",
     ):

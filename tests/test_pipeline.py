@@ -1,9 +1,7 @@
-"""End-to-end pipeline test: the reference's worklogs DAG shape
-(create >> fetch >> upsert) against a fixture cursor API."""
+"""End-to-end pipeline test: the reference's worklogs DAG (fetch >>
+upsert) against a fixture cursor API."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_jira_etl_spark.pipeline import worklog_pipeline
 from tests.test_ingest import make_cursor_fetcher
@@ -27,8 +25,7 @@ def test_worklog_pipeline_end_to_end(spark, tmp_path):
     p = worklog_pipeline(
         spark, _worklog_fetcher(), "https://api/worklogs?page=0", str(tmp_path)
     )
-    order = p.run({})
-    assert order == ["ensure_table", "ingest", "merge_upsert"]
+    p.run({})
     # run a fresh pipeline again (the Airflow retry-from-scratch path):
     # state must be unchanged (idempotent replay)
     ctx2: dict = {}
@@ -41,10 +38,33 @@ def test_worklog_pipeline_end_to_end(spark, tmp_path):
     assert {"tempo_worklog_id", "issue_id", "author_id", "url"} <= cols
 
 
+def test_worklog_run_keeps_two_generations(spark, tmp_path):
+    """Each cursor page commits a full copy of a one-bucket table as a
+    new generation; the run ends with a vacuum, so a 3-page run leaves
+    at most 2 generations and no crashed writer's staging dir. A fresh
+    re-run (the Airflow retry) leaves the rows unchanged."""
+    import os
+
+    url = "https://api/worklogs?page=0"
+    crashed = tmp_path / "worklogs" / ".staging_gen_000009_dead"
+    crashed.mkdir(parents=True)
+    states = []
+    for _ in range(2):
+        ctx: dict = {}
+        worklog_pipeline(spark, _worklog_fetcher(n_pages=3), url, str(tmp_path)).run(ctx)
+        table = ctx["table"]
+        assert len(table.generations()) == 2
+        assert not [d for d in os.listdir(table.root) if d.startswith(".staging_")]
+        states.append(sorted(map(tuple, table.read().collect())))
+    assert len(states[0]) == 12 and states[1] == states[0]
+
+
 def test_dag_specs_mirror_reference_shape():
-    """Three entity DAGs, @daily/catchup-off/1-retry-5-min defaults,
-    ensure_table >> ingest dependency (the reference's DAG config at
-    fetch_jira_tempo_worklogs.py:15-26,114)."""
+    """Three entity DAGs with the reference's @daily/catchup-off/
+    1-retry-5-min defaults (fetch_jira_tempo_worklogs.py:15-26), each
+    ONE spark-submit task: the sink creates its table at the first
+    commit, so the reference's create_table >> fetch edge has no
+    counterpart."""
     from airflow_jira_etl_spark.orchestration import build_airflow_dags, build_dag_specs
 
     specs = build_dag_specs()
@@ -60,10 +80,26 @@ def test_dag_specs_mirror_reference_shape():
             1,
             5,
         )
-        deps = {t.task_id: t.upstream for t in s.tasks}
-        assert deps["ingest_and_merge"] == ("ensure_table",)
+        assert [t.task_id for t in s.tasks] == ["ingest_and_merge"]
     # airflow absent here: materialization degrades to []
     assert build_airflow_dags() == []
+
+
+def test_orchestration_import_loads_no_spark():
+    """An Airflow DAG file imports ``orchestration`` at every scheduler
+    parse: the specs are plain data, so that import must not load
+    pyspark."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, airflow_jira_etl_spark.orchestration\n"
+        "assert 'pyspark' not in sys.modules, "
+        "sorted(m for m in sys.modules if m.startswith('pyspark'))[:5]"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], cwd=repo, check=True)
 
 
 def test_issues_pipeline_offset_fanout(spark, tmp_path):
@@ -150,9 +186,7 @@ def test_ingest_starts_no_python_worker(spark, tmp_path):
         "users": users_pipeline(spark, _users_fetcher, "https://api/users", str(tmp_path)),
     }
     for entity, p in builds.items():
-        ctx: dict = {}
-        assert p.run(ctx, only="ingest") == ["ensure_table", "ingest"]
-        batches = list(ctx["batches"])
+        batches = list(p.ingest())
         assert batches, entity
         for batch in batches:
             assert python_nodes(batch) == [], entity
@@ -175,52 +209,26 @@ def test_users_pipeline_single_page(spark, tmp_path):
     assert table.count() == 2
     assert {"account_id", "display_name", "url"} <= set(table.columns)
 
-def test_spec_args_parse_and_name_real_tasks(spark, tmp_path):
-    """Every DAG spec's CLI args must (a) parse against pipeline.main's
-    argparse surface and (b) name a task that exists in the entity's
-    pipeline — the declarative layer must be runnable as specified."""
+def test_spec_args_parse_and_name_real_tasks():
+    """Every DAG spec's CLI args must parse against pipeline.main's
+    argparse surface and name a real entity — the declarative layer
+    must be runnable as specified."""
     from airflow_jira_etl_spark.orchestration import build_dag_specs
-    from airflow_jira_etl_spark.pipeline import (
-        issues_pipeline,
-        parse_args,
-        users_pipeline,
-    )
+    from airflow_jira_etl_spark.pipeline import parse_args
 
-    builders = {
-        "tempo_worklogs": worklog_pipeline,
-        "issues": issues_pipeline,
-        "users": users_pipeline,
-    }
+    entities = []
     for spec in build_dag_specs():
-        for t in spec.tasks:
-            ns = parse_args(list(t.args))  # SystemExit 2 on unknown arg
-            p = builders[ns.entity](
-                spark, lambda url, params=None: [], "https://api", str(tmp_path)
-            )
-            assert ns.task in p.tasks, (spec.dag_id, t.task_id, ns.task)
-
-
-def test_run_only_executes_upstream_closure(spark, tmp_path):
-    """--task=merge_upsert runs ensure_table >> ingest >> merge;
-    --task=ensure_table runs exactly that one task."""
-    from airflow_jira_etl_spark.pipeline import users_pipeline
-
-    def fetch(url, params=None):
-        return [{"self": "u1", "accountId": "a1", "displayName": "J", "active": "true"}]
-
-    p = users_pipeline(spark, fetch, "https://api/users", str(tmp_path / "a"))
-    assert p.run({}, only="ensure_table") == ["ensure_table"]
-    p2 = users_pipeline(spark, fetch, "https://api/users", str(tmp_path / "b"))
-    done = p2.run({}, only="merge_upsert")
-    assert done == ["ensure_table", "ingest", "merge_upsert"]
-    with pytest.raises(KeyError, match="unknown task"):
-        p2.run({}, only="nope")
+        (t,) = spec.tasks
+        ns = parse_args(list(t.args))  # SystemExit 2 on unknown arg
+        entities.append(ns.entity)
+        assert spec.dag_id == f"fetch_jira_{ns.entity}", spec.dag_id
+    assert entities == ["tempo_worklogs", "issues", "users"]
 
 
 def test_airflow_materialization_under_stub(monkeypatch):
     """build_airflow_dags with a stubbed airflow module: real DAG
-    objects carrying the reference defaults, a file-path application,
-    and the ensure_table >> ingest_and_merge edge."""
+    objects carrying the reference defaults and one operator each, with
+    a file-path application and no edge."""
     import os
     import sys
     import types
@@ -293,11 +301,10 @@ def test_airflow_materialization_under_stub(monkeypatch):
         # a real file spark-submit can run, not a '-m module' string
         assert os.path.isfile(op.application), op.application
         assert op.application.endswith("pipeline.py")
-    by_dag = {}
-    for op in captured_ops:
-        by_dag.setdefault(op.dag.dag_id, {})[op.task_id] = op
-    for ops in by_dag.values():
-        assert ops["ensure_table"].downstream == ["ingest_and_merge"]
+    assert [(op.dag.dag_id, op.task_id) for op in captured_ops] == [
+        (d.dag_id, "ingest_and_merge") for d in dags
+    ]
+    assert all(op.downstream == [] for op in captured_ops)
 
 
 def test_cli_defaults_run_every_entity_end_to_end(spark, tmp_path):
@@ -324,20 +331,16 @@ def test_cli_defaults_run_every_entity_end_to_end(spark, tmp_path):
         assert t.read().count() == n, entity
 
 
-def test_dag_specs_carry_start_date_and_key_on_both_tasks():
+def test_dag_specs_carry_start_date_and_no_key():
     """The reference's start_date default must materialize (a scheduled
-    Airflow DAG without one never runs), and --unique-column must reach
-    BOTH spark-submit jobs so the table's key contract cannot depend on
-    which task ran."""
+    Airflow DAG without one never runs). The task passes no upsert key:
+    the entity builder's default is the one source of it."""
     from airflow_jira_etl_spark.orchestration import build_dag_specs
 
     for spec in build_dag_specs():
         assert spec.start_date_iso == "2025-01-01"
         for t in spec.tasks:
-            assert any(a.startswith("--unique-column=") for a in t.args), (
-                spec.dag_id,
-                t.task_id,
-            )
+            assert not any(a.startswith("--unique-column") for a in t.args), spec.dag_id
 
 
 def test_entity_pipelines_create_one_bucket_tables(spark, tmp_path):

@@ -199,3 +199,29 @@ def test_failed_build_leaves_no_version(scratch_root, tmp_path):
     assert [e for e in os.listdir(os.path.dirname(d)) if e.startswith("v_")] == [
         os.path.basename(d)
     ]
+
+
+def test_slot_of_a_deleted_fixture_is_reaped_on_the_next_miss(scratch_root, tmp_path):
+    """Two builds from two temporary fixtures, the first deleted before
+    the second build, leave one slot; a slot whose meta records no
+    fixture is left alone."""
+    import json
+    import shutil
+
+    build = _Builds()
+    gone = _fixture(tmp_path / "gone")
+    d_gone, _ = scratch.source_cache("k", str(gone), _ident(gone), build)
+    shutil.rmtree(gone)
+    kind = scratch_root / "k"
+    legacy = kind / "legacy_0"
+    legacy.mkdir()
+    (legacy / "_CACHE_META.json").write_text(
+        json.dumps({"ident": {}, "version": "v_0", "info": {}})
+    )
+    kept = _fixture(tmp_path / "kept")
+    d, _ = scratch.source_cache("k", str(kept), _ident(kept), build)
+    slot = os.path.dirname(d)
+    assert sorted(e.name for e in kind.iterdir() if e.is_dir()) == sorted(
+        [os.path.basename(slot), "legacy_0"]
+    )
+    assert not os.path.exists(os.path.dirname(d_gone) + ".lock")

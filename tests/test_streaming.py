@@ -262,13 +262,11 @@ def test_write_event_pages_drops_null_ids_rejects_negative(spark, tmp_path, scra
 
 def test_events_stream_reads_the_fixture_through_a_glob(spark, tmp_path):
     """The events stream reads the fixture itself through a glob: a
-    file-shaped and a directory-shaped fixture both stream every row,
-    and glob metacharacters in the fixture's path match literally."""
+    file-shaped and a directory-shaped fixture both stream every row."""
     import os
 
     from airflow_jira_etl_spark.scratch import session_scratch
     from airflow_jira_etl_spark.streaming.source import (
-        _events_glob,
         read_events_stream,
         run_available_now,
     )
@@ -295,14 +293,34 @@ def test_events_stream_reads_the_fixture_through_a_glob(spark, tmp_path):
         )
         assert out.collect()[0][0] == 5, fix
 
-    # Hadoop's glob, as the stream source runs it, matches a fixture
-    # under a path full of metacharacters literally
-    odd = tmp_path / "a[1]{x,y}*?"
+
+
+def test_fixture_under_glob_metacharacters_is_oracle_green(
+    spark, sf_dir, tmp_path, scratch_root
+):
+    """Spark globs batch and stream paths alike, so a fixture under a
+    dir like ``a[1]{x,y}*`` must be read through escaped paths, and the
+    scratch paths derived from its name must be glob-free. Each query
+    family that reads the fixture or a derived path stays oracle-green
+    (the oracle reads the same files through the original path)."""
+    import os
+
+    from tests.oracle_check import compare, duckdb_conn
+
+    odd = tmp_path / "a[1]{x,y}*"
     odd.mkdir()
-    (odd / "events.parquet").write_bytes(b"")
-    (tmp_path / "a1x").mkdir()
-    (tmp_path / "a1x" / "events.parquet").write_bytes(b"")
-    pattern = spark._jvm.org.apache.hadoop.fs.Path(_events_glob(str(odd)))
-    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
-    hits = [st.getPath().toUri().getPath() for st in fs.globStatus(pattern)]
-    assert hits == [str(odd / "events.parquet")]
+    for name in catalog.TABLES:
+        os.symlink(
+            os.path.abspath(catalog.table_path(sf_dir, name)),
+            catalog.table_path(str(odd), name),
+        )
+    con = duckdb_conn(sf_dir)
+    for name in (
+        "scan_parquet",
+        "stream_tumbling_count",
+        "stream_foreachbatch_upsert",
+        "mv_incremental_refresh",
+        "sink_time_travel",
+    ):
+        r = compare(registry.QUERIES[name](spark, str(odd)), con, registry.ORACLES[name])
+        assert not r["errors"], (name, r["errors"])
