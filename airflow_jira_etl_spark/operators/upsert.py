@@ -153,7 +153,11 @@ def upsert(
     Only for inputs small enough for one task; its one caller is
     ``ParquetUpsertTable.apply`` on a one-bucket table, whose whole
     state is one file by construction. The ordinal is still computed
-    below the union, so batch order is unaffected.
+    below the union, so batch order is unaffected. The inputs should be
+    JVM-resident (a parquet scan, a ``LocalRelation``, every pipeline
+    batch): the one task computes every input partition in turn, so a
+    Python-RDD batch (``createDataFrame`` of a row list) runs its
+    partitions' Python workers one after another instead of in parallel.
 
     Both sides must carry the same column set (fixed-DDL sinks): a
     mismatch raises.

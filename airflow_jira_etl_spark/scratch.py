@@ -24,6 +24,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import shutil
 import stat
 from typing import Callable
@@ -70,7 +71,7 @@ def _default_scratch() -> str:
         # by the same lstat checks, and once our own directory exists
         # the sticky bit on /dev/shm stops another user from swapping it.
         tag = hashlib.sha256(_REPO_SCRATCH.encode()).hexdigest()[:8]
-        _remove_own_dir(os.path.join(_SHM, f"spark_graft_scratch_{tag}"))
+        _remove_own(os.path.join(_SHM, f"spark_graft_scratch_{tag}"))
         root = os.path.join(
             _SHM, f"spark_graft_scratch_{os.getuid()}_{tag}"
         )
@@ -85,20 +86,55 @@ def _default_scratch() -> str:
     return _REPO_SCRATCH
 
 
-def _remove_own_dir(path: str) -> None:
-    """Delete ``path`` if it is a real directory owned by this uid.
-    Used for this repo's old scratch root name (without the uid), which
-    nothing reads any more but which holds tmpfs RAM until removed. A
-    symlink or another user's entry under that name is left alone."""
+def _remove_own(path: str) -> None:
+    """Delete ``path`` if it is a real directory owned by this uid, or
+    a regular file owned by it (a lock file). Used for names nothing
+    reads any more but which hold tmpfs RAM until removed: this repo's
+    old scratch root name (without the uid) and the old cache layouts
+    (``_remove_old_layouts``). A symlink or another user's entry under
+    such a name is left alone."""
     try:
         st = os.lstat(path)
     except OSError:
         return
-    if stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid():
+    if st.st_uid != os.getuid():
+        return
+    if stat.S_ISDIR(st.st_mode):
         shutil.rmtree(path, ignore_errors=True)
+    elif stat.S_ISREG(st.st_mode):
+        try:
+            os.remove(path)
+        except FileNotFoundError:
+            pass  # another process importing this module removed it
+
+
+# Top-level names of cache layouts that source_cache replaced. No code
+# writes or reads them now: the event pages per fixture, the bucketed-
+# join warehouse, the DPP table and the streaming source dir.
+_OLD_LAYOUT_NAMES = ("bucketed_wh", "bucketed_wh.lock", "events_dpp", "stream_src")
+# old IVF index dirs: ivf_index/<source tag>_k8; a current slot name is
+# a source tag, which ends in its 8-hex hash
+_OLD_IVF_DIR = re.compile(r"_[0-9a-f]{8}_k8$")
+
+
+def _remove_old_layouts(root: str) -> None:
+    """Remove what the old cache layouts left under the scratch root."""
+    try:
+        names = os.listdir(root)
+    except OSError:
+        return
+    for name in names:
+        if name in _OLD_LAYOUT_NAMES or name.startswith("event_pages_"):
+            _remove_own(os.path.join(root, name))
+    ivf = os.path.join(root, "ivf_index")
+    if os.path.isdir(ivf) and not os.path.islink(ivf):
+        for name in os.listdir(ivf):
+            if _OLD_IVF_DIR.search(name):
+                _remove_own(os.path.join(ivf, name))
 
 
 SCRATCH = _default_scratch()
+_remove_old_layouts(SCRATCH)
 
 
 def reap_dead_session_dirs(parent: str) -> None:

@@ -59,9 +59,9 @@ from contextlib import contextmanager
 @contextmanager
 def scoped_conf(spark: SparkSession, key: str, value: str):
     """Temporarily set one runtime conf; restores the previous state on
-    exit — including the truly-UNSET state (ADVICE r15: ``conf.get``
-    raises for a key with no session value and no default, and blindly
-    re-setting a string would leave a previously-unset key set).
+    exit — including the truly-UNSET state (``conf.get`` raises for a
+    key with no session value and no default, and blindly re-setting a
+    string would leave a previously-unset key set).
     Session-wide while held: the engine runs queries sequentially per
     session."""
     old = spark.conf.get(key, None)
@@ -85,8 +85,8 @@ def get_spark(app_name: str = "airflow_jira_etl_spark") -> SparkSession:
         .config(map=RUNTIME_CONFS)
         .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Local checkpoint I/O without Hadoop's ChecksumFs wrapper (r16,
-        # guide §6): streaming offset-WAL/commit-log writes and state
+        # Local checkpoint I/O without Hadoop's ChecksumFs wrapper:
+        # streaming offset-WAL/commit-log writes and state
         # store checkpoints go through the FileContext-based checkpoint
         # file manager, whose default local binding (LocalFs extends
         # ChecksumFs) writes a sibling .crc per file — temp file,

@@ -384,9 +384,9 @@ class ParquetUpsertTable:
             # collected dirty set, whose stored rows the merge would
             # then never read as its base. A plain persist does NOT
             # guarantee that: an evicted/uncached block RECOMPUTES
-            # through the source (the ranking family hit exactly this
-            # class, operators/ranking.py round 11); a checkpointed
-            # block cannot recompute — loss fails loudly.
+            # through the source (the same hazard operators/ranking.py
+            # guards against); a checkpointed block cannot recompute —
+            # loss fails loudly.
             upd = upd.localCheckpoint(eager=False)
         try:
             dirty = [0] if one_bucket else self._dirty_buckets(upd)

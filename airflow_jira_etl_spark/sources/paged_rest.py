@@ -31,10 +31,21 @@ all JVM-side after the fetch. Every fetch runs on the driver, and the
 records it returns (a cursor page, the single page, the offset scan's
 pages) enter Spark as an Arrow ``LocalRelation`` (``_raw_frame``), not
 a Python-backed RDD, so no ingest batch starts a Python worker.
+
+The batch's leaf is that ``LocalRelation`` behind an observation, not
+the bare relation. Over a bare one, Catalyst's ``ConvertToLocalRelation``
+rule folds the flatten into a new ``LocalRelation`` whenever a plan over
+the batch is optimized: the parse then runs interpreted on one driver
+thread (at 200 issue pages on a 4-core host, the issues apply took about
+three times as long). Behind the observation the rule cannot fire, and
+the parse runs once, inside the task of the apply that consumes the
+batch. ``_raw_frame`` is the only place that turns fetched records into
+a frame.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import time
@@ -252,14 +263,25 @@ def raw_json_to_flat(
     return parsed.select(*compile_mapping(mapping, schema))
 
 
+# one observation name per frame: Spark refuses a plan that unions two
+# frames observed under the same name (a self-union is fine)
+_FRAME_IDS = itertools.count()
+
+
 def _raw_frame(spark: SparkSession, raws: list[str]) -> DataFrame:
     """Driver-held JSON strings as a one-column ``raw`` frame. Built
     from a ``pyarrow`` table, so Spark plans it as a JVM
     ``LocalRelation`` whether or not the Arrow conf is on; a
     ``createDataFrame(list)`` frame is a Python-backed RDD instead, and
     every action over it starts Python worker tasks to re-pickle the
-    rows."""
-    return spark.createDataFrame(pa.table({"raw": pa.array(raws, pa.string())}))
+    rows.
+
+    The relation is observed (a row count, ``CollectMetrics``) so that
+    the optimizer cannot fold the parse and flatten above it into a
+    driver-side ``LocalRelation`` (see the module docstring). The count
+    rides on the consuming task's accumulators: no job or stage."""
+    raw = spark.createDataFrame(pa.table({"raw": pa.array(raws, pa.string())}))
+    return raw.observe(f"raw_frame_{next(_FRAME_IDS)}", F.count(F.lit(1)))
 
 
 def records_to_flat_df(

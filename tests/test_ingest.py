@@ -65,6 +65,19 @@ def _analyzed_leaves(df) -> list[str]:
     return sorted(leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size()))
 
 
+def optimized_leaves(df) -> list[tuple[str, list[str]]]:
+    """(class name, output column names) of each leaf of the optimized
+    plan."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        cols = leaf.output()
+        names = [cols.apply(j).name() for j in range(cols.size())]
+        out.append((leaf.getClass().getSimpleName(), names))
+    return sorted(out)
+
+
 def _physical_nodes(node) -> list:
     """``node`` and every node below it, pre-order."""
     out = [node]
@@ -304,6 +317,7 @@ def test_records_to_flat_df_is_local_relation_with_same_rows(spark, page):
     records = _CURSOR_PAGES[page]
     flat = records_to_flat_df(spark, records, WORKLOG_MAPPING)
     assert _analyzed_leaves(flat) == ["LocalRelation"]
+    assert optimized_leaves(flat) == [("LocalRelation", ["raw"])]
     with scoped_conf(spark, "spark.sql.execution.arrow.pyspark.enabled", "false"):
         no_arrow_conf = records_to_flat_df(spark, records, WORKLOG_MAPPING)
         assert _analyzed_leaves(no_arrow_conf) == ["LocalRelation"]

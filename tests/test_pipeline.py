@@ -168,10 +168,14 @@ def test_issues_pipeline_later_page_wins(spark, tmp_path):
 def test_ingest_starts_no_python_worker(spark, tmp_path):
     """Every ingest batch of the three entity pipelines runs on the
     JVM: its plan reads an Arrow LocalRelation and evaluates no Python
-    (no pandas/Arrow kernel, no Python UDF)."""
+    (no pandas/Arrow kernel, no Python UDF). The optimizer leaves the
+    flatten in the plan: the optimized plan still parses (from_json)
+    above the one-column LocalRelation of raw JSON, so the parse runs
+    in the task that consumes the batch, not folded into a new
+    LocalRelation on the driver."""
     from airflow_jira_etl_spark.pipeline import issues_pipeline, users_pipeline
     from airflow_jira_etl_spark.sources import fixture_fetchers
-    from tests.test_ingest import _analyzed_leaves, python_nodes
+    from tests.test_ingest import _analyzed_leaves, optimized_leaves, python_nodes
 
     builds = {
         "worklogs": worklog_pipeline(
@@ -191,6 +195,24 @@ def test_ingest_starts_no_python_worker(spark, tmp_path):
         for batch in batches:
             assert python_nodes(batch) == [], entity
             assert _analyzed_leaves(batch) == ["LocalRelation"], entity
+            assert optimized_leaves(batch) == [("LocalRelation", ["raw"])], entity
+            optimized = batch._jdf.queryExecution().optimizedPlan().toString()
+            assert "from_json" in optimized, entity
+
+
+def test_unioned_flat_batches_analyze_and_count(spark):
+    """Each batch observes its relation under its own name, so two
+    batches (and a batch with itself) union, analyze and count."""
+    from airflow_jira_etl_spark.entities import WORKLOG_MAPPING
+    from airflow_jira_etl_spark.sources.paged_rest import records_to_flat_df
+
+    fetch = _worklog_fetcher(n_pages=2, page_size=3)
+    pages = [fetch(f"https://api/worklogs?page={i}")["results"] for i in range(2)]
+    a, b = (records_to_flat_df(spark, page, WORKLOG_MAPPING) for page in pages)
+    both = a.unionByName(b)
+    assert both.count() == 6
+    assert sorted(r.tempo_worklog_id for r in both.collect()) == [str(i) for i in range(6)]
+    assert both.unionByName(a.limit(0)).count() == 6
 
 
 def _users_fetcher(url, params=None):

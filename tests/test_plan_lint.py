@@ -315,3 +315,38 @@ def test_flock_only_in_the_cache_and_the_commit_lock():
                     if "fcntl.flock" in f.read():
                         users.add(os.path.relpath(path, root))
     assert users == {"scratch.py", os.path.join("sinks", "parquet_upsert.py")}, users
+
+
+
+def test_arrow_frames_only_in_the_batch_constructor():
+    """Source lint: ``spark.createDataFrame(pa.table(...))`` appears
+    only in ``sources/paged_rest._raw_frame``, which observes the
+    relation so that the optimizer cannot fold the flatten above it
+    into a driver-side LocalRelation. A second constructor of Arrow
+    batches would skip that barrier."""
+    import ast
+    import os
+
+    call = "createDataFrame(pa.table("
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "airflow_jira_etl_spark",
+    )
+    hits = {}
+    for dirpath, _, files in os.walk(root):
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                with open(path, encoding="utf-8") as f:
+                    text = f.read()
+                n = "".join(text.split()).count(call)
+                if n:
+                    hits[os.path.relpath(path, root)] = (n, text)
+    assert list(hits) == [os.path.join("sources", "paged_rest.py")], list(hits)
+    n, text = hits[os.path.join("sources", "paged_rest.py")]
+    (frame,) = [
+        node
+        for node in ast.walk(ast.parse(text))
+        if isinstance(node, ast.FunctionDef) and node.name == "_raw_frame"
+    ]
+    assert n == 1 and call in "".join(ast.get_source_segment(text, frame).split())

@@ -42,6 +42,44 @@ def test_old_format_symlink_is_left_alone(shm, tmp_path):
     assert (target / "keep").read_text() == "x"
 
 
+def test_old_cache_layouts_are_removed(tmp_path):
+    """What the layouts before source_cache left in the scratch root
+    goes: the event pages per fixture with their lock files, the
+    bucketed-join warehouse, the DPP table, the streaming source dir and
+    the ``<tag>_k8`` IVF index dirs. Current kinds and slots, a symlink
+    under an old name and its target stay."""
+    root = tmp_path / "root"
+    old = [
+        "event_pages_sf0.01_3fb06346",
+        "bucketed_wh",
+        "events_dpp/sf0.01_3fb06346_123",
+        "stream_src/sf0.01_3fb06346",
+        "ivf_index/sf0.01_3fb06346_k8",
+    ]
+    kept = ["event_pages/sf0.01_3fb06346", "ivf_index/sf0.01_3fb06346", "upsert_tables/x_1"]
+    for d in old + kept:
+        (root / d).mkdir(parents=True)
+        (root / d / "part").write_text("x")
+    for f in ["event_pages_sf0.01_3fb06346.lock", "bucketed_wh.lock", "ivf_index/sf0.01_3fb06346.lock"]:
+        (root / f).write_text("")
+    target = tmp_path / "elsewhere"
+    target.mkdir()
+    (target / "keep").write_text("x")
+    os.symlink(target, root / "event_pages_linked")
+
+    scratch._remove_old_layouts(str(root))
+
+    assert sorted(os.listdir(root)) == [
+        "event_pages", "event_pages_linked", "ivf_index", "upsert_tables"
+    ]
+    assert sorted(os.listdir(root / "ivf_index")) == [
+        "sf0.01_3fb06346", "sf0.01_3fb06346.lock"
+    ]
+    for d in kept:
+        assert (root / d / "part").read_text() == "x"
+    assert (target / "keep").read_text() == "x"
+
+
 @pytest.mark.skipif(os.geteuid() != 0, reason="chown to another uid needs root")
 def test_old_format_dir_of_another_user_is_left_alone(shm):
     root, old = shm

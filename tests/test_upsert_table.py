@@ -902,6 +902,29 @@ def test_one_bucket_apply_is_one_job_without_exchange(spark, tmp_path):
     got = {r.k: r.v for r in t1.read().collect()}
     assert len(got) == 300 and got[0] == "a" and got[100] == "b"
 
+    # a pipeline batch, the MAPPING flatten of raw JSON records: the
+    # parse stays in the written plan and runs inside the one task
+    from airflow_jira_etl_spark.entities import WORKLOG_MAPPING
+    from airflow_jira_etl_spark.sources.paged_rest import records_to_flat_df
+
+    def page(keys, desc):
+        return records_to_flat_df(
+            spark,
+            [{"tempoWorklogId": str(k), "self": f"w{k}", "description": desc} for k in keys],
+            WORKLOG_MAPPING,
+        )
+
+    tw = ParquetUpsertTable(spark, str(tmp_path / "tw"), key="tempo_worklog_id", n_buckets=1)
+    tw.apply(page(range(200), "a"))
+    jobs, stages, tasks, plan = _apply_counts(
+        spark, tw, page(range(100, 300), "b"), "apply-one-bucket-flat"
+    )
+    assert (jobs, stages, tasks) == (1, 1, 1), (jobs, stages, tasks)
+    assert "Exchange" not in plan, plan
+    assert "from_json" in plan, plan
+    got = {r.tempo_worklog_id: r.description for r in tw.read().collect()}
+    assert len(got) == 300 and got["0"] == "a" and got["100"] == "b"
+
     t4 = ParquetUpsertTable(spark, str(tmp_path / "t4"), key="k", n_buckets=4)
     t4.apply(spark.createDataFrame(rows, schema))
     jobs, _, _, _ = _apply_counts(
